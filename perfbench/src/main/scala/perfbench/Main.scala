@@ -22,16 +22,23 @@ object Main {
   private val Tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
   /** Passes before the timed ones; the first, cold one also writes every
-    * query's output for the oracle check that follows the run. Passes keep
-    * getting a few percent faster after these, the same way in every run;
-    * a warm-up until passes stop falling would not fit the run budget.
+    * query's output for the oracle check that follows the run. On 4 cores
+    * passes fall fast for the first five (14 s, then about 4 s, then 3.5 s)
+    * and then by a few percent more over the next minute, while the JIT is
+    * still compiling. A warm-up until they stop falling would not fit the
+    * run budget.
     */
-  private val WarmupPasses = 3
-  /** Least passes timed whatever the seconds: three for a median, or two
-    * per half in a traced run (an untraced half, then a traced half).
+  private val WarmupPasses = 5
+  /** Least passes an untraced run times whatever the seconds: three for a
+    * median.
     */
   private val MinTimedPasses = 3
-  private val MinTracedPasses = 2
+  /** A traced run alternates untraced (U) and traced (T) passes in blocks
+    * of U T T U, at least one block, so that the passes still getting
+    * faster slow both sides alike and `trace_overhead` compares like with
+    * like.
+    */
+  private val TracedBlock = Seq(false, true, true, false)
 
   def main(args: Array[String]): Unit = {
     val Array(data, out, secondsArg, traceArg, queryList) = args
@@ -65,17 +72,25 @@ object Main {
     val setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
     log(f"setup ${setupS}%.2f s (session $sessionS%.2f, warm-up ${warmup.map(w => f"$w%.2f").mkString(" ")})")
 
-    val (timedSeconds, minPasses) =
-      if (traced) (seconds / 2, MinTracedPasses) else (seconds, MinTimedPasses)
-    def timed(from: Int, tracer: Option[Tracer]): Seq[PassResult] = {
-      val start = System.nanoTime()
-      val passes = mutable.ArrayBuffer[PassResult]()
-      while (passes.size < minPasses || (System.nanoTime() - start) / 1e9 < timedSeconds)
-        passes += bench.pass(from + passes.size, tracer)
-      passes.toSeq
+    val tracer = if (traced) Some(new Tracer(spark)) else None
+    val untraced, tracedPasses = mutable.ArrayBuffer[PassResult]()
+    val start = System.nanoTime()
+    def elapsed = (System.nanoTime() - start) / 1e9
+    var n = 0
+    tracer match {
+      case None =>
+        while (n < MinTimedPasses || elapsed < seconds) { untraced += bench.pass(1000 + n, None); n += 1 }
+      case Some(t) =>
+        while (n < TracedBlock.size || n % TracedBlock.size != 0 || elapsed < seconds) {
+          if (TracedBlock(n % TracedBlock.size)) {
+            t.install()
+            try tracedPasses += bench.pass(1000 + n, tracer) finally t.remove()
+          } else untraced += bench.pass(1000 + n, None)
+          n += 1
+        }
     }
-    val untraced = timed(1000, None)
-    log(f"timed passes ${untraced.map(p => f"${p.wall}%.2f").mkString(" ")}")
+    log(f"timed passes ${untraced.map(p => f"${p.wall}%.2f").mkString(" ")}" +
+      (if (traced) f", traced ${tracedPasses.map(p => f"${p.wall}%.2f").mkString(" ")}" else ""))
 
     val result = mutable.LinkedHashMap[String, Any](
       "cores" -> cores,
@@ -85,17 +100,13 @@ object Main {
       "warmup_s" -> warmup,
       "setup_s" -> setupS,
       "peak_heap_mb" -> first.heapMb,
-      "untraced" -> passRecords(untraced))
+      "untraced" -> passRecords(untraced.toSeq))
 
-    if (traced) {
-      val tracer = new Tracer(spark)
-      tracer.install()
-      val tracedPasses = try timed(2000, Some(tracer)) finally tracer.remove()
-      val counters = tracedPasses.map(p => tracer.passMetrics(p.index, cores))
-      result("traced") = passRecords(tracedPasses)
-      result("traced_counters") = counters
+    tracer.foreach { t =>
+      result("traced") = passRecords(tracedPasses.toSeq)
+      result("traced_counters") = tracedPasses.map(p => t.passMetrics(p.index, cores))
       result("kernels") = Kernels.probe(spark, data)
-      writeJson(s"$out/spans.json", tracer.spanRecords)
+      writeJson(s"$out/spans.json", Map("spans" -> t.spanRecords, "jobs" -> t.jobRecords))
     }
 
     writeJson(s"$out/oracle_sql.json", queries.flatMap(q => graft.SparkEntry.oracleSql.get(q).map(q -> _)).toMap)
@@ -159,15 +170,22 @@ final class Bench(spark: SparkSession, data: String, queries: Seq[String]) {
     }
   }
 
-  /** Heap occupancy after a full GC, once Spark's cleaner has dropped the
-    * blocks (broadcasts, cached partitions) of what that GC found
-    * unreachable: a second GC then frees them too.
+  /** Heap occupancy after full GCs, once Spark's cleaner has dropped the
+    * blocks (broadcasts, cached partitions) of what the previous GC found
+    * unreachable: GCs 200 ms apart until one frees less than 1 MB, at most
+    * five. The cleaner works asynchronously, and a fixed two GCs read
+    * 100 or 115 MB on the same workload from run to run.
     */
   private def settledHeapMb(): Double = {
-    System.gc()
-    Thread.sleep(200)
-    System.gc()
-    memory.getHeapMemoryUsage.getUsed / mb
+    def gc(): Double = { System.gc(); memory.getHeapMemoryUsage.getUsed / mb }
+    var (prev, used, n) = (Double.MaxValue, gc(), 1)
+    while (prev - used >= 1.0 && n < 5) {
+      Thread.sleep(200)
+      prev = used
+      used = gc()
+      n += 1
+    }
+    used
   }
 
   private def build(q: String): DataFrame = graft.SparkEntry.queries(q)(spark, data)

@@ -46,6 +46,8 @@ final class Tracer(spark: SparkSession) {
   private val counters = mutable.Map[Long, Counters]()
   private val stageSpan = mutable.Map[Int, Long]()
   private val taskIntervals = mutable.ArrayBuffer[(Long, Long)]()
+  // every job the traced passes ran, for finding the ones that come and go
+  private val jobs = mutable.LinkedHashMap[Int, mutable.Map[String, Any]]()
   // streaming run id -> (span, rows held in state after its latest batch)
   private val stateRows = mutable.Map[java.util.UUID, (Long, Long)]()
 
@@ -76,10 +78,17 @@ final class Tracer(spark: SparkSession) {
 
   private val sparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = Tracer.this.synchronized {
-      val prop = Option(e.properties).flatMap(p => Option(p.getProperty(SpanKey)))
+      def property(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      val prop = property(SpanKey)
       val id = prop.map(_.toLong).getOrElse(spanAt(e.time))
       e.stageIds.foreach(stageSpan(_) = id)
       at(id).jobs += 1
+      jobs(e.jobId) = mutable.Map("job" -> e.jobId, "span" -> id,
+        "span_by" -> (if (prop.isDefined) "property" else "time"), "stages" -> e.stageIds.size,
+        "sql_execution" -> property("spark.sql.execution.id").orNull)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = Tracer.this.synchronized {
+      jobs.get(e.jobId).foreach(_("result") = e.jobResult.toString)
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = Tracer.this.synchronized {
       at(stageSpan.getOrElse(e.stageInfo.stageId, 0L)).stages += 1
@@ -225,6 +234,8 @@ final class Tracer(spark: SparkSession) {
     */
   def selfSeconds(s: Span): Double =
     s.seconds - spans.filter(_.parent == s.id).map(_.seconds).sum
+
+  def jobRecords: Seq[Map[String, Any]] = synchronized(jobs.values.map(_.toMap).toSeq)
 
   def spanRecords: Seq[Map[String, Any]] = synchronized {
     spans.toSeq.map(s => Map(

@@ -1,5 +1,5 @@
 """Smoke test of the benchmark: every workload in both modes on the sf0.001
-fixture itself (scale 1) with one-second runs. Each run must pass its
+fixture with one-second runs. Each run must pass its
 oracle check and print, as its last line, every metric `BENCHMARK.json`
 names for that mode, with the declared unit.
 
@@ -26,7 +26,7 @@ class SmokeTest(unittest.TestCase):
     def run_bench(self, workload, trace):
         p = subprocess.run(
             [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-             "--seed", "7", "--seconds", "1", "--trace", str(trace), "--scale", "1"],
+             "--seed", "7", "--seconds", "1", "--trace", str(trace)],
             cwd=ROOT, capture_output=True, text=True, timeout=600)
         self.assertEqual(p.returncode, 0, p.stderr[-3000:])
         return json.loads(p.stdout.strip().splitlines()[-1])
