@@ -23,6 +23,33 @@ object SparkEntry {
     LaraQueries.covariance(spark, "/root/testdata/sf0.001")
   }
 
+  /** The hash-derived Graph500-style fixture every graph query runs on:
+    * lineitem keys portable-hashed into a 20011-node space, directed
+    * (src, dst) edges that both engines derive identically. The RAW scan is
+    * rebalanced before the md5 derivation: lineitem is one parquet file and
+    * the projection runs below the first exchange, so unspread a single
+    * task would hash every row.
+    */
+  private def hashGraph(s: SparkSession, d: String): DataFrame =
+    pipeline.Dedup.rebalance(
+      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
+      .select(
+        pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
+          lit(20011L)).as("src"),
+        pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
+          lit(20011L)).as("dst"))
+
+  /** DuckDB twin of [[hashGraph]]: the directed edges as `(s, t)`. */
+  private val HashEdgesSql =
+    """SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
+              ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
+       FROM lineitem"""
+
+  /** The canonical undirected edges `(a, b)`, a < b, of [[HashEdgesSql]]. */
+  private val HashUndSql =
+    s"""SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM ($HashEdgesSql)
+        WHERE s <> t"""
+
   /** The retrieval_eval query batch — shared between the Spark plan and
     * the generated DuckDB oracle so the two can never drift.
     */
@@ -358,125 +385,45 @@ object SparkEntry {
     "interval_overlap" -> ((s, d) => RelationalQueries.intervalOverlap(s, d)),
     // --- k-core peeling over the hash-derived graph fixture; oracle CTE
     // chain generated by the same Scala loop ---
-    "kcore" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.kCore(e, k = 3, rounds = 8)
-    }),
+    "kcore" -> ((s, d) =>
+      sources.GraphLoader.kCore(hashGraph(s, d), k = 3, rounds = 8)),
     // --- k-truss edge peel (support ≥ k−2 triangles) over the hash-derived
     // graph; oracle CTE chain generated from the same parameters ---
-    "ktruss" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.kTruss(e, k = 3, rounds = 6)
-    }),
+    "ktruss" -> ((s, d) =>
+      sources.GraphLoader.kTruss(hashGraph(s, d), k = 3, rounds = 6)),
     // --- fixed-round BFS hop levels over the hash-derived graph; oracle
     // CTE chain generated by the same Scala loop ---
-    "bfs_levels" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.bfsLevels(e, rounds = 6)
-    }),
+    "bfs_levels" -> ((s, d) =>
+      sources.GraphLoader.bfsLevels(hashGraph(s, d), rounds = 6)),
     // --- hop plot / effective-diameter curve: multi-seed BFS distance
     // distribution over the same hash-derived graph ---
-    "hop_plot" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.hopPlot(e, rounds = 4)
-    }),
+    "hop_plot" -> ((s, d) =>
+      sources.GraphLoader.hopPlot(hashGraph(s, d), rounds = 4)),
     // --- multi-source shortest-path counting (Brandes forward pass,
     // integer-exact σ) over the same hash-derived graph ---
-    "path_counts" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.pathCounts(e, rounds = 3)
-    }),
+    "path_counts" -> ((s, d) =>
+      sources.GraphLoader.pathCounts(hashGraph(s, d), rounds = 3)),
     // --- per-vertex seed-distance histogram (sampled-landmark harmonic
     // centrality ingredients) over the same hash-derived graph ---
-    "seed_distances" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.seedDistances(e, rounds = 4)
-    }),
+    "seed_distances" -> ((s, d) =>
+      sources.GraphLoader.seedDistances(hashGraph(s, d), rounds = 4)),
     // --- per-edge common-neighbor / degree counts (neighborhood Jaccard
     // components) via the degree-oriented wedge join ---
-    "neighbor_jaccard" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.neighborJaccard(e)
-    }),
+    "neighbor_jaccard" -> ((s, d) =>
+      sources.GraphLoader.neighborJaccard(hashGraph(s, d))),
     // --- per-vertex local clustering coefficient components (2·tri /
     // deg·(deg−1) is the client-side division) over the hash-derived graph ---
-    "clustering_coeff" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.clusteringCoefficient(e)
-    }),
+    "clustering_coeff" -> ((s, d) =>
+      sources.GraphLoader.clusteringCoefficient(hashGraph(s, d))),
     // --- degree assortativity: one row of exact Pearson component sums
     // over ordered edge endpoint pairs ---
-    "degree_assort" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.degreeAssortativity(e)
-    }),
+    "degree_assort" -> ((s, d) =>
+      sources.GraphLoader.degreeAssortativity(hashGraph(s, d))),
     // --- frequency-vote label propagation (community detection) over the
     // hash-derived graph; fixed synchronous rounds, min-label ties; oracle
     // CTE chain generated by the same Scala loop ---
-    "label_propagation" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.labelPropagation(e, rounds = 4)
-    }),
+    "label_propagation" -> ((s, d) =>
+      sources.GraphLoader.labelPropagation(hashGraph(s, d), rounds = 4)),
     // --- within-radius spatial self-join via grid-cell decomposition over
     // hash-derived integer coordinates; exact BIGINT squared distances;
     // oracle is the definitional quadratic join on the same subset ---
@@ -493,16 +440,8 @@ object SparkEntry {
     }),
     // --- community quality readout composed on label_propagation: size /
     // internal edges / degree sum / integer-scaled modularity term ---
-    "community_stats" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.communityStats(e, rounds = 4)
-    }),
+    "community_stats" -> ((s, d) =>
+      sources.GraphLoader.communityStats(hashGraph(s, d), rounds = 4)),
     // --- association rules: integer confidence/lift components at ≥5%
     // cross-multiplied support ---
     "assoc_rules" -> RelationalQueries.assocRules _,
@@ -540,13 +479,7 @@ object SparkEntry {
     // --- weighted shortest paths: Bellman–Ford relaxation rounds over
     // hash-derived integer weights; generated oracle CTE chain ---
     "sssp" -> ((s, d) => {
-      val und = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
+      val und = hashGraph(s, d)
         .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
         .distinct().filter(col("a") =!= col("b"))
         .withColumn("wt",
@@ -866,16 +799,8 @@ object SparkEntry {
       pipeline.Similarity.hardNegatives(emb, pipeline.Ivf.annQueries(emb), 5)
     }),
     // --- deterministic hash-probed negative edges (link-prediction pairs) ---
-    "negative_edges" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.negativeEdges(e, k = 3)
-    }),
+    "negative_edges" -> ((s, d) =>
+      sources.GraphLoader.negativeEdges(hashGraph(s, d), k = 3)),
     // PORTABLE IVF: integer-quantized Lloyd (ONE fixed iteration — k=16
     // converges in one round and every extra round is a full-corpus
     // assignment pass; centroids = exact integer sum vectors — cosine is
@@ -927,57 +852,22 @@ object SparkEntry {
     // --- triangle counting: degree-oriented wedge join over a synthetic
     // graph (lineitem keys portable-hashed into a 20011-node space — both
     // engines derive identical edges) ---
-    "triangle_count" -> ((s, d) => {
-      // rebalance the RAW scan before the md5 derivation: lineitem is one
-      // parquet file, and the projection runs below the first exchange —
-      // unspread, a single task would hash every row
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.triangleCount(e)
-    }),
+    "triangle_count" -> ((s, d) =>
+      sources.GraphLoader.triangleCount(hashGraph(s, d))),
     // --- portable integer-mass PageRank over the same hash-derived
     // Graph500-style fixture as triangle_count: fixed 3 iterations, all
     // BIGINT arithmetic, the DuckDB oracle unrolls the identical rounds ---
-    "pagerank" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.pageRankPortable(e, iters = 3)
-    }),
+    "pagerank" -> ((s, d) =>
+      sources.GraphLoader.pageRankPortable(hashGraph(s, d), iters = 3)),
     // --- personalized (seed-teleport) PageRank over the same directed
     // hash graph: teleport mass returns only to {v : v mod 17 = 0};
     // oracle CTE chain generated from the same parameters ---
-    "ppr_seeds" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.pageRankPersonalized(e, iters = 3, seedMod = 17L)
-    }),
+    "ppr_seeds" -> ((s, d) =>
+      sources.GraphLoader.pageRankPersonalized(hashGraph(s, d), iters = 3, seedMod = 17L)),
     // --- portable integer-mass HITS over the same directed hash graph;
     // oracle CTE chain generated from the same parameters ---
-    "hits_scores" -> ((s, d) => {
-      val e = pipeline.Dedup.rebalance(
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-        .select(
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-            lit(20011L)).as("src"),
-          pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-            lit(20011L)).as("dst"))
-      sources.GraphLoader.hitsPortable(e, iters = 2)
-    }),
+    "hits_scores" -> ((s, d) =>
+      sources.GraphLoader.hitsPortable(hashGraph(s, d), iters = 2)),
     // --- relational frontend (SURVEY §3.2): op-tree lowered to Catalyst ---
     "raco_frontend" -> ((s, d) => {
       import plans.Relational._
@@ -2627,12 +2517,7 @@ object SparkEntry {
     // join is orientation-independent, so it checks the engine's
     // degree-oriented plan exactly.
     "triangle_count" ->
-      """WITH und AS (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t)
+      s"""WITH und AS ($HashUndSql)
          SELECT e1.a AS vertex, count(*)::BIGINT AS n_triangles
          FROM und e1
          JOIN und e2 ON e1.b = e2.a
@@ -2643,12 +2528,7 @@ object SparkEntry {
     // Portable HITS: unrolled hub/authority half-rounds with floor-division
     // renormalization, generated from the same parameters as the engine.
     "hits_scores" ->
-      s"""WITH ed AS (
-           SELECT DISTINCT s, t FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH ed AS (SELECT DISTINCT s, t FROM ($HashEdgesSql) WHERE s <> t),
          ${sources.GraphLoader.hitsOracleCtes(iters = 2, scale = 1000000L)}
          SELECT n.v AS vertex, coalesce(h.m, 0)::BIGINT AS hub_mass,
                 coalesce(a.m, 0)::BIGINT AS auth_mass
@@ -2656,12 +2536,7 @@ object SparkEntry {
          LEFT JOIN h2 h ON n.v = h.v
          LEFT JOIN a2 a ON n.v = a.v""",
     "pagerank" ->
-      """WITH ed AS (
-           SELECT DISTINCT s, t FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH ed AS (SELECT DISTINCT s, t FROM ($HashEdgesSql) WHERE s <> t),
          nodes AS (SELECT DISTINCT v FROM (SELECT s AS v FROM ed UNION ALL SELECT t FROM ed)),
          od AS (SELECT s, count(*)::BIGINT AS deg FROM ed GROUP BY s),
          m0 AS (SELECT v, 1000000::BIGINT AS m FROM nodes),
@@ -2681,12 +2556,7 @@ object SparkEntry {
     // Personalized PageRank: same directed hash graph, teleport mass only
     // to seeds {v % 17 = 0}; rounds generated from the engine's parameters.
     "ppr_seeds" ->
-      s"""WITH ed AS (
-           SELECT DISTINCT s, t FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH ed AS (SELECT DISTINCT s, t FROM ($HashEdgesSql) WHERE s <> t),
          ${sources.GraphLoader.pprOracleCtes(iters = 3, seedMod = 17L,
              dampNum = 85L, dampDen = 100L, base = 150000L, init = 1000000L)}
          SELECT n.v AS vertex, coalesce(m.m, 0)::BIGINT AS rank_mass
@@ -3311,35 +3181,20 @@ object SparkEntry {
     // that drives the engine's iterations (the duckdbZValue anti-drift
     // pattern); 8 unrolled rounds ⊇ the fixpoint on this fixture.
     "kcore" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.kCoreOracleCtes(k = 3, rounds = 8)}
          SELECT v AS vertex, count(*)::BIGINT AS core_deg FROM adj8 GROUP BY v""",
     // k-truss: unrolled definitional support-and-peel rounds generated
     // from the same parameters as the engine (anti-drift pattern).
     "ktruss" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.kTrussOracleCtes(k = 3, rounds = 6)}
          SELECT a, b, sup::BIGINT AS support FROM e6""",
     // Label propagation: unrolled frequency-vote rounds generated by the
     // same Scala loop that drives the engine (anti-drift pattern); the
     // argmax is the portable max-then-join-back idiom on both sides.
     "label_propagation" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.lpaOracleCtes(rounds = 4)}
          SELECT v AS vertex, lbl AS label FROM l4""",
     // Spatial within-radius join: the oracle is the DEFINITIONAL quadratic
@@ -3359,12 +3214,7 @@ object SparkEntry {
     // Community stats: LPA label CTE chain (same generated loop) + exact
     // integer modularity decomposition 4·m·e_c − d_c².
     "community_stats" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.lpaOracleCtes(rounds = 4)},
          mm AS (SELECT count(*)::BIGINT AS m FROM und),
          ie AS (SELECT x.lbl AS label, count(*)::BIGINT AS internal_edges
@@ -3609,32 +3459,17 @@ object SparkEntry {
     // BFS levels: unrolled relaxation rounds generated by the same Scala
     // loop that drives the engine (bfsOracleCtes anti-drift pattern).
     "bfs_levels" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.bfsOracleCtes(rounds = 6)}
          SELECT v AS vertex, dist FROM d6""",
     // Hop plot: the multi-seed BFS chain generated by the same Scala loop.
     "hop_plot" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.hopPlotOracleCtes(rounds = 4)}
          SELECT dist AS hop, count(*)::BIGINT AS n_pairs FROM h4 GROUP BY 1""",
     // Path counting: the generated frontier/σ chain; per-vertex aggregate.
     "path_counts" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.pathCountsOracleCtes(rounds = 3)}
          SELECT v AS vertex, count(*)::BIGINT AS n_seeds, min(dist)::BIGINT AS min_dist,
                 sum(sigma)::BIGINT AS total_paths
@@ -3642,23 +3477,13 @@ object SparkEntry {
     // Seed-distance histogram: the same generated multi-seed BFS chain,
     // pivoted per vertex on exact first-reach distance.
     "seed_distances" ->
-      s"""WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          ${sources.GraphLoader.hopPlotOracleCtes(rounds = 4)}
          ${sources.GraphLoader.seedDistancesOracleSelect(rounds = 4)}""",
     // Neighborhood Jaccard components: the oracle is the definitional
     // common-neighbor join over the full adjacency.
     "neighbor_jaccard" ->
-      """WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          adj AS MATERIALIZED (SELECT a AS v, b AS w FROM und UNION ALL SELECT b, a FROM und),
          deg AS (SELECT v, count(*)::BIGINT AS deg FROM adj GROUP BY 1),
          com AS (
@@ -3676,12 +3501,7 @@ object SparkEntry {
     // Local clustering components: definitional a<b<c triangle join fanned
     // to its three corners, degrees from the doubled adjacency.
     "clustering_coeff" ->
-      """WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          adj AS (SELECT a AS v, b AS w FROM und UNION ALL SELECT b, a FROM und),
          deg AS (SELECT v, count(*)::BIGINT AS deg FROM adj GROUP BY 1),
          tri AS MATERIALIZED (
@@ -3702,12 +3522,7 @@ object SparkEntry {
     // Assortativity components over ordered endpoint pairs: by symmetry one
     // pass over canonical edges with both degree roles doubles out.
     "degree_assort" ->
-      """WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          adj AS (SELECT a AS v, b AS w FROM und UNION ALL SELECT b, a FROM und),
          deg AS (SELECT v, count(*)::BIGINT AS deg FROM adj GROUP BY 1)
          SELECT (count(*) * 2)::BIGINT AS n_pairs,
@@ -3737,11 +3552,7 @@ object SparkEntry {
                   ('0x' || substring(md5('wt_' || a::VARCHAR || '_' || b::VARCHAR), 1, 15))::BIGINT
                     % 9 + 1 AS wt
            FROM (
-             SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-               SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                      ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-               FROM lineitem)
-             WHERE s <> t)),
+             $HashUndSql)),
          ${sources.GraphLoader.ssspOracleCtes(rounds = 8)}
          SELECT v AS vertex, dist FROM s8""",
     // EWMA: the same 16 power-of-two lag terms, generated once in Scala
@@ -4365,12 +4176,7 @@ object SparkEntry {
     // Negative edges: replay the hash probes, keep existing-vertex hits
     // that are not existing edges.
     "negative_edges" ->
-      """WITH und AS MATERIALIZED (
-           SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM (
-             SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-                    ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
-             FROM lineitem)
-           WHERE s <> t),
+      s"""WITH und AS MATERIALIZED ($HashUndSql),
          verts AS MATERIALIZED (
            SELECT DISTINCT x AS id FROM (SELECT a AS x FROM und UNION ALL SELECT b FROM und)),
          probes AS (

@@ -20,16 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * shuffle-keyed on node/label ids only (three longs wide); signatures,
   * text and embeddings never enter the loop.
   *
-  * The driver sees one scalar per round (the changed-label count — the
-  * reference's Reducer side-channel pattern, `opt/Reducer.kt:25-59`).
-  * Each round's label frame is EAGERLY `localCheckpoint`ed: the pointer
-  * jump references the round's frame twice, so without truncation the
-  * logical plan doubles every round (2^rounds nodes — the classic
-  * iterative-DataFrame blow-up); the checkpoint materializes the round and
-  * cuts lineage to a leaf, after which the previous round's storage is
-  * released. `localCheckpoint` trades executor-loss tolerance for speed —
-  * a long-running production job on a flaky cluster should switch to
-  * reliable `checkpoint()` with a checkpoint dir, same structure.
+  * The rounds run on [[Loops.fixpoint]]; the driver sees one progress bit
+  * per round (did any label change). The pointer jump references the
+  * round's frame twice, so the per-round checkpoint is what keeps the
+  * logical plan from doubling every round (2^rounds nodes — the classic
+  * iterative-DataFrame blow-up).
   */
 object Components {
 
@@ -47,10 +42,10 @@ object Components {
     * still changing: the partial labels would silently mis-assign documents
     * to clusters (and the wrong documents would be kept/dropped downstream).
     */
-  final class NonConvergenceException(iters: Int, lastChanged: Long)
+  final class NonConvergenceException(iters: Int)
     extends IllegalStateException(
       s"connectedComponents did not converge after $iters iterations " +
-      s"($lastChanged labels still changing). The graph is deeper than " +
+      "(labels still changing). The graph is deeper than " +
       s"2^$iters — raise maxIter (pointer jumping doubles reachable depth " +
       "per round, so +1 iteration doubles the supported diameter).")
 
@@ -71,7 +66,7 @@ object Components {
     // init = the first propagation round for free: one groupBy gives each
     // node its closed-neighborhood min (replaces a distinct() that would
     // have cost the same shuffle for labels == id)
-    var labels = edges.groupBy(col("s").as("id")).agg(min(col("t")).as("m"))
+    val labels0 = edges.groupBy(col("s").as("id")).agg(min(col("t")).as("m"))
       .select(col("id"), least(col("id"), col("m")).as("label"))
       .localCheckpoint(true)
 
@@ -93,45 +88,25 @@ object Components {
         .select(prop("id"), prop("prev"), coalesce(col("jlabel"), col("label")).as("label"))
     }
 
-    var iter = 0
-    var converged = false
-    var lastChanged = 0L
-    // AQE off for the round loop only (sub-second stages over the cached
-    // pre-partitioned edge list, nothing to adapt — guide §2.1); the
-    // caller's final plan keeps the session setting
-    Loops.withAqeOff(pairs.sparkSession) {
-    while (!converged && iter < maxIter) {
-      // ONE round per checkpoint + driver sync. Round batching (two rounds
-      // per cut) was MEASURED SLOWER here both ways: uncheckpointed, round
-      // 2's three references re-run round 1's two-join plan (no cross-
-      // reference CSE — 6.6 s vs 3.9 s at sf0.1); with a mid-batch persist
-      // the extra storage materialization still nets +0.2 s. On graphs
-      // that converge in 2-3 pointer-jump rounds the loop's fixed cost is
-      // dominated by candidate generation, not the cut.
-      val start = labels.withColumn("prev", col("label"))
-      // materialized + lineage cut HERE (see scaladoc): the round
-      // references its input twice (neighbor-min + jump) — an
-      // uncheckpointed plan would double every round. The changed-count
-      // rides the SAME materialization pass (fused checkpoint+count, r13)
-      // instead of a second driver-synchronized job per round; accumulator
-      // counts can only over-count on task retry, never turn a nonzero
-      // count zero, so the convergence test (changed == 0) is exact.
-      // Output ordinals of round(): (id=0, prev=1, label=2), all longs.
+    // ONE round per checkpoint. Round batching (two rounds per cut) was
+    // MEASURED SLOWER here both ways: uncheckpointed, round 2's three
+    // references re-run round 1's two-join plan (no cross-reference CSE —
+    // 6.6 s vs 3.9 s at sf0.1); with a mid-batch persist the extra storage
+    // materialization still nets +0.2 s. On graphs that converge in 2-3
+    // pointer-jump rounds the loop's fixed cost is dominated by candidate
+    // generation, not the cut.
+    val (labels, converged) = Loops.fixpoint(pairs.sparkSession,
+        Loops.Round(labels0, progress = true, Seq(labels0)), maxIter) { (labels, _) =>
       val (stepped, changed) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
-        round(start), r => r.getLong(2) < r.getLong(1))
-      labels.unpersist() // stepped is materialized — the old round can go
-      labels = stepped.drop("prev")
-      converged = changed == 0L
-      lastChanged = changed
-      iter += 1
-    }
+        round(labels.withColumn("prev", col("label"))), col("label") < col("prev"))
+      val next = stepped.drop("prev")
+      Loops.Round(next, progress = changed > 0L, Seq(next))
     }
     edges.unpersist()
     p.unpersist()
     // exhausting maxIter with labels still moving means the labels are
     // PARTIAL — fail loudly rather than hand wrong clusters downstream
-    // (the changed-count is already on the driver; this check is free)
-    if (!converged) { labels.unpersist(); throw new NonConvergenceException(maxIter, lastChanged) }
+    if (!converged) { labels.unpersist(); throw new NonConvergenceException(maxIter) }
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"),
       (col("id") === col("label")).as("is_canonical"))
   }

@@ -1,9 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.lara._
+import graft.pipeline.{InternalCaches, Loops}
+import graft.pipeline.Loops.Round
 
 /** Graph fixtures as associative tables — the reference's Graph500 /
   * D4M-adjacency surface (`util/TripleFileWriter.kt:19-25`, fixture files
@@ -56,19 +60,6 @@ object GraphLoader {
       .agg(Seq("row", "col2"), Map("v" -> PlusFn(0, c => sum(c).cast("int"), _ + _)))
   }
 
-  /** PageRank over an edge list (src, dst) — fixed damping power
-    * iteration, the repeated sparse TableMult the reference's Graphulo
-    * layer exists for, expressed as the iterative-DataFrame pattern
-    * proven in `pipeline.Components`: per round one join + one
-    * aggregation (rank mass along out-edges), eager `localCheckpoint`
-    * cutting the per-round lineage, previous round's storage released.
-    * Dangling mass is redistributed uniformly (the standard correction),
-    * so ranks sum to ~1 every round.
-    *
-    * Returns (id, rank) for every vertex after `iters` rounds. Spec-gated
-    * against an in-memory power iteration (no DuckDB oracle: float SUM
-    * combine order is engine-local).
-    */
   /** Triangle counting via degree-ordered edge orientation — the standard
     * bounded-fan-out formulation: each undirected edge is directed from its
     * lower-(degree, id) endpoint to the higher, which caps every vertex's
@@ -97,11 +88,71 @@ object GraphLoader {
     * fixtures) plus a distinct, each read repeats the scan AND the
     * shuffle.
     */
-  private def bothDirections(und: DataFrame): DataFrame = und
+  private def bothDirections(und: DataFrame, carry: String*): DataFrame = und
     .select(explode(array(
-      struct(col("a").as("v"), col("b").as("w")),
-      struct(col("b").as("v"), col("a").as("w")))).as("e"))
-    .select(col("e.v").as("v"), col("e.w").as("w"))
+      struct(col("a").as("v") +: col("b").as("w") +: carry.map(col): _*),
+      struct(col("b").as("v") +: col("a").as("w") +: carry.map(col): _*))).as("e"))
+    .select(col("e.v").as("v") +: col("e.w").as("w") +: carry.map(c => col(s"e.$c").as(c)): _*)
+
+  /** Canonical undirected edges (a < b) of a (src, dst) frame: direction,
+    * multi-edges and self-loops dropped. The self-loop filter runs AFTER
+    * distinct, on attributes: filtering the projection would push a
+    * predicate below it that re-evaluates the caller's src/dst expressions
+    * once more per comparison side.
+    */
+  private def canonical(edges: DataFrame): DataFrame = edges
+    .select(least(col("src"), col("dst")).cast("long").as("a"),
+      greatest(col("src"), col("dst")).cast("long").as("b"))
+    .distinct().filter(col("a") =!= col("b"))
+
+  /** The loop adjacency: [[bothDirections]] of canonical edges (plus any
+    * `carry` columns), partitioned on v and checkpointed once, reused by
+    * every round.
+    */
+  private def adjacency(und: DataFrame, carry: String*): DataFrame =
+    bothDirections(und, carry: _*).repartition(col("v")).localCheckpoint(true)
+
+  /** Deduped directed edges `ed(s, t)` without self-loops, persisted and
+    * partitioned on s, plus their checkpointed vertex set `nodes(v)`. ONE
+    * shuffle, not two: repartition on s first, THEN dedup —
+    * HashPartitioning(s) already clusters every (s,t) group, so the
+    * dropDuplicates aggregation plans no exchange of its own. s is also the
+    * key every round's mass join probes; only the (small) mass side moves
+    * per round.
+    */
+  private def directed(edges: DataFrame): (DataFrame, DataFrame) = {
+    val ed = edges.select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
+      .filter(col("s") =!= col("t"))
+      .repartition(col("s")).dropDuplicates(Seq("s", "t")).persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = ed.select(col("s").as("v")).union(ed.select(col("t").as("v")))
+      .distinct().localCheckpoint(true)
+    (ed, nodes)
+  }
+
+  /** Vertex degrees `(id, deg)` of canonical undirected edges. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("id")).union(und.select(col("b").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
+
+  /** Degree orientation of canonical edges carrying their endpoint degrees
+    * (da, db): each edge points from its lower-(degree, id) endpoint `u`
+    * to `v`, which caps every vertex's out-degree at O(√m).
+    */
+  private def orient(withDeg: DataFrame): DataFrame = {
+    val fromA = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
+    withDeg.select(when(fromA, col("a")).otherwise(col("b")).as("u"),
+      when(fromA, col("b")).otherwise(col("a")).as("v"))
+  }
+
+  /** Every triangle once as (u, v, w): wedges of the oriented list (u the
+    * source, v < w its out-pair), closed against the canonical edges.
+    */
+  private def triangles(oriented: DataFrame, und: DataFrame): DataFrame = {
+    val wedges = oriented.join(oriented.select(col("u"), col("v").as("w")), Seq("u"))
+      .filter(col("v") < col("w")) // each unordered out-pair once; (v,w) canonical
+    wedges.join(und, wedges("v") === und("a") && wedges("w") === und("b"))
+      .select(col("u"), col("v"), col("w"))
+  }
 
   /** The three canonical edges (a < b) of every (u, v, w) triangle in ONE
     * pass — an explode, NOT a three-branch union: a union of three selects
@@ -136,39 +187,22 @@ object GraphLoader {
     * expensive per-row expressions over a few source files: apply
     * Dedup.rebalance to the RAW scan before the derivation, or one task
     * computes every edge (the projection stays below whatever exchange
-    * follows it). The self-loop filter runs AFTER distinct, on attributes:
-    * filtering the projection would push a predicate below it that
-    * re-evaluates the caller's src/dst expressions once more per
-    * comparison side.
+    * follows it).
     */
   private def orientedTriangles(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // canonical undirected edges (a < b), self-loops and multi-edges
-    // dropped; consumed by degrees, orientation and the closing join
-    val und = graft.pipeline.InternalCaches.register(edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b")).persist(lvl))
-    val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    val oriented = graft.pipeline.InternalCaches.register(und
+    // consumed by degrees, orientation and the closing join
+    val und = InternalCaches.register(canonical(edges).persist(StorageLevel.MEMORY_AND_DISK))
+    val deg = degrees(und)
+    val oriented = InternalCaches.register(orient(und
       .join(deg.select(col("id").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b"))
-      .select(when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("a")).otherwise(col("b")).as("u"),
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")), col("b")).otherwise(col("a")).as("v"))
+      .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b")))
       // pre-partitioned on the wedge self-join key: both join children read
       // the SAME cached partitioning, so the self-join plans zero exchanges
       // (the Components edge-cache trick) — without this the oriented list
       // shuffles twice on u before fanning out
       .repartition(col("u"))
-      .persist(lvl)) // both sides of the wedge self-join; released via InternalCaches
-    val wedges = oriented.join(oriented.select(col("u"), col("v").as("w")), Seq("u"))
-      .filter(col("v") < col("w")) // each unordered out-pair once; (v,w) canonical
-    val tri = wedges.join(und, wedges("v") === und("a") && wedges("w") === und("b"))
-      .select(col("u"), col("v"), col("w"))
-    (und, deg, tri)
+      .persist(StorageLevel.MEMORY_AND_DISK)) // both wedge sides; released via InternalCaches
+    (und, deg, triangles(oriented, und))
   }
 
   /** Per-vertex local clustering readout: each vertex's incident-triangle
@@ -224,33 +258,38 @@ object GraphLoader {
     * CTE chain agree exactly, bit for bit, with no floating point anywhere.
     * The floor loses ≤1 mass unit per edge per round — with init=10^6 a
     * relative error ≤ ~10^-4 vs real-valued PageRank, invisible to ranking
-    * use and a price worth paying for a driver-verifiable contract
-    * ([[pageRank]] stays as the real-valued variant with dangling-mass
-    * redistribution, spec-gated against an in-memory power iteration).
+    * use and a price worth paying for a driver-verifiable contract.
     *
-    * Same iterative-DataFrame discipline as [[pageRank]]/`Components`:
-    * edges pre-partitioned on the probe key and persisted once, one join +
-    * one aggregation per round, eager `localCheckpoint` lineage cut.
-    * Returns (vertex, rank_mass).
+    * Edges pre-partitioned on the probe key and persisted once, one join +
+    * one aggregation per round ([[rankMass]]). Returns (vertex, rank_mass).
     */
   def pageRankPortable(edges: DataFrame, iters: Int = 3,
                        dampNum: Long = 85L, dampDen: Long = 100L,
                        base: Long = 150000L, init: Long = 1000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
-      .filter(col("s") =!= col("t"))
-    // ONE shuffle, not two: repartition on s first, THEN dedup —
-    // HashPartitioning(s) already clusters every (s,t) group, so the
-    // dropDuplicates aggregation plans no exchange of its own. s is also
-    // the key every round's contribution join probes; only the (small)
-    // mass side moves per round.
-    val ed = e.repartition(col("s")).dropDuplicates(Seq("s", "t")).persist(lvl)
-    val nodes = ed.select(col("s").as("v")).union(ed.select(col("t").as("v")))
-      .distinct().localCheckpoint(true)
+    val (ed, nodes) = directed(edges)
+    val (mass, cuts) = rankMass(ed, nodes.select(col("v"), lit(init).as("m")),
+      nodes.select(col("v"), lit(base).as("c")), iters, dampNum, dampDen)
+    val out = mass.select(col("v").as("vertex"), col("m").as("rank_mass"))
+      .localCheckpoint(true) // materialize before releasing the edge cache
+    cuts.foreach(_.unpersist())
+    ed.unpersist()
+    out
+  }
+
+  /** The integer-mass rounds shared by [[pageRankPortable]] and
+    * [[pageRankPersonalized]]: `iters` fixed rounds of
+    * mass(v) = base(v) + Σ_{(u,v)∈ed} (mass(u)·dampNum) div (dampDen·outdeg(u)),
+    * where `baseRows(v, c)` holds the per-vertex base mass. Returns the
+    * last mass frame (lazy) and the checkpoints cut along the way, which
+    * the caller releases once the result is materialized.
+    */
+  private def rankMass(ed: DataFrame, init: DataFrame, baseRows: DataFrame, iters: Int,
+                       dampNum: Long, dampDen: Long): (DataFrame, Seq[DataFrame]) = {
     val od = ed.groupBy(col("s")).agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    var mass = nodes.select(col("v"), lit(init).as("m"))
-    val cuts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (i <- 1 to iters) {
+    // AQE stays on: a round only builds a lazy plan; the periodic cut is
+    // the one job a round may run
+    Loops.fixpoint(ed.sparkSession, Round((init, Vector.empty[DataFrame]), progress = true),
+        iters, aqeOff = false) { case ((mass, cuts), i) =>
       // ed ⋈ od re-plans per round but od is broadcast-sized — measured:
       // hoisting it into its own persisted frame cost MORE (one extra
       // 600k-row cache materialization) than three broadcast re-joins.
@@ -263,24 +302,19 @@ object GraphLoader {
         .select(col("t").as("v"),
           expr(s"(m * ${dampNum}L) div (${dampDen}L * deg)").as("c"))
       // ONE shuffle per round: the per-vertex base is a row in the same
-      // aggregation (base + Σ contribs ≡ the old left-join + coalesce,
-      // exactly — vertices with no in-edges sum just their base row),
-      // replacing [agg shuffle + nodes left-join shuffle] per round. The
-      // one-row-per-vertex mass side stays broadcast-sized for AQE, so
-      // the contribution join itself is partition-local on the edge cache.
-      mass = contribs.union(nodes.select(col("v"), lit(base).as("c")))
-        .groupBy(col("v")).agg(sum(col("c")).as("m"))
-      // each round references the previous mass ONCE (no convergence
-      // check — iterations are fixed), so lineage grows LINEARLY, not
-      // exponentially: no per-round materialization needed. Cut every 4
-      // rounds only to bound plan depth for large `iters`.
-      if (i % 4 == 0 && i < iters) { mass = mass.localCheckpoint(true); cuts += mass }
-    }
-    val out = mass.select(col("v").as("vertex"), col("m").as("rank_mass"))
-      .localCheckpoint(true) // materialize before releasing the edge cache
-    cuts.foreach(_.unpersist())
-    ed.unpersist()
-    out
+      // aggregation (base + Σ contribs ≡ a left-join + coalesce, exactly —
+      // vertices with no in-edges sum just their base row). The
+      // one-row-per-vertex mass side stays broadcast-sized, so the
+      // contribution join itself is partition-local on the edge cache.
+      val next = contribs.union(baseRows).groupBy(col("v")).agg(sum(col("c")).as("m"))
+      // each round references the previous mass ONCE, so lineage grows
+      // LINEARLY: no per-round materialization needed. Cut every 4 rounds
+      // only to bound plan depth for large `iters`.
+      if (i % 4 == 0 && i < iters) {
+        val cut = next.localCheckpoint(true)
+        Round((cut, cuts :+ cut), progress = true)
+      } else Round((next, cuts), progress = true)
+    }._1
   }
 
   /** PERSONALIZED [[pageRankPortable]]: teleport mass returns only to the
@@ -300,28 +334,13 @@ object GraphLoader {
   def pageRankPersonalized(edges: DataFrame, iters: Int = 3, seedMod: Long = 17L,
                            dampNum: Long = 85L, dampDen: Long = 100L,
                            base: Long = 150000L, init: Long = 1000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
-      .filter(col("s") =!= col("t"))
-    val ed = e.repartition(col("s")).dropDuplicates(Seq("s", "t")).persist(lvl)
-    val nodes = ed.select(col("s").as("v")).union(ed.select(col("t").as("v")))
-      .distinct().localCheckpoint(true)
+    val (ed, nodes) = directed(edges)
     val seeds = nodes.filter(pmod(col("v"), lit(seedMod)) === 0).localCheckpoint(true)
-    val od = ed.groupBy(col("s")).agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    var mass = seeds.select(col("v"), lit(init).as("m"))
-    val cuts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (i <- 1 to iters) {
-      val contribs = ed.join(broadcast(od), Seq("s"))
-        .join(broadcast(mass.withColumnRenamed("v", "s")), Seq("s"))
-        .select(col("t").as("v"),
-          expr(s"(m * ${dampNum}L) div (${dampDen}L * deg)").as("c"))
-      // the mass frame only ever holds vertices with nonzero mass — absent
-      // rows ARE exact zeros (0-mass contributes floor(0) = 0 next round),
-      // so the walk's frontier stays small on seed-sparse graphs
-      mass = contribs.union(seeds.select(col("v"), lit(base).as("c")))
-        .groupBy(col("v")).agg(sum(col("c")).as("m"))
-      if (i % 4 == 0 && i < iters) { mass = mass.localCheckpoint(true); cuts += mass }
-    }
+    // the mass frame only ever holds vertices with nonzero mass — absent
+    // rows ARE exact zeros (0-mass contributes floor(0) = 0 next round),
+    // so the walk's frontier stays small on seed-sparse graphs
+    val (mass, cuts) = rankMass(ed, seeds.select(col("v"), lit(init).as("m")),
+      seeds.select(col("v"), lit(base).as("c")), iters, dampNum, dampDen)
     val out = nodes
       .join(mass.select(col("v"), col("m")), Seq("v"), "left")
       .select(col("v").as("vertex"), coalesce(col("m"), lit(0L)).as("rank_mass"))
@@ -376,11 +395,7 @@ object GraphLoader {
     */
   def negativeEdges(edges: DataFrame, k: Int = 3,
                     modulus: Long = 20011L): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-      .localCheckpoint(true)
+    val und = canonical(edges).localCheckpoint(true)
     val verts = bothDirections(und).select(col("v").as("id")).distinct()
       .localCheckpoint(true)
     val probes = verts.select(col("id").as("v"),
@@ -426,32 +441,26 @@ object GraphLoader {
     */
   def hitsPortable(edges: DataFrame, iters: Int = 2,
                    scale: Long = 1000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
-      .filter(col("s") =!= col("t"))
-    val ed = e.repartition(col("s")).dropDuplicates(Seq("s", "t")).persist(lvl)
-    val nodes = ed.select(col("s").as("v")).union(ed.select(col("t").as("v")))
-      .distinct().localCheckpoint(true)
+    val (ed, nodes) = directed(edges)
     def renorm(raw: DataFrame): DataFrame = {
       val r = raw.localCheckpoint(true) // vertex-sized; computed once, read twice
       r.crossJoin(r.agg(greatest(sum(col("r")), lit(1L)).as("tot")))
         .select(col("v"), expr(s"(r * ${scale}L) div tot").as("m"))
     }
-    var hub = nodes.select(col("v"), lit(scale).as("m"))
-    var auth = hub.limit(0)
+    val hub0 = nodes.select(col("v"), lit(scale).as("m"))
     // EXPLICIT broadcast of the vertex-sized mass frames (id-domain-bounded
     // in every contract caller — the communityStats precondition): without
     // the hint the planner sees a stat-less checkpoint scan and plans a
     // sort-merge join, whose edge-side shuffle map write runs even when AQE
     // later converts to broadcast — and the auth half-round would re-sort
     // the s-partitioned edge cache on t every iteration.
-    graft.pipeline.Loops.withAqeOff(edges.sparkSession) {
-      for (_ <- 1 to iters) {
-        auth = renorm(ed.join(broadcast(hub.withColumnRenamed("v", "s")), Seq("s"))
-          .groupBy(col("t").as("v")).agg(sum(col("m")).as("r")))
-        hub = renorm(ed.join(broadcast(auth.withColumnRenamed("v", "t")), Seq("t"))
-          .groupBy(col("s").as("v")).agg(sum(col("m")).as("r")))
-      }
+    val ((hub, auth), _) = Loops.fixpoint(edges.sparkSession,
+        Round((hub0, hub0.limit(0)), progress = true), iters) { case ((hub, _), _) =>
+      val auth = renorm(ed.join(broadcast(hub.withColumnRenamed("v", "s")), Seq("s"))
+        .groupBy(col("t").as("v")).agg(sum(col("m")).as("r")))
+      val next = renorm(ed.join(broadcast(auth.withColumnRenamed("v", "t")), Seq("t"))
+        .groupBy(col("s").as("v")).agg(sum(col("m")).as("r")))
+      Round((next, auth), progress = true)
     }
     val out = nodes
       .join(hub.select(col("v"), col("m").as("hub_mass")), Seq("v"), "left")
@@ -506,45 +515,30 @@ object GraphLoader {
     * both land on the identical set whether or not the budget sufficed.
     *
     * Plan per round: one map-side-combined degree aggregation + two
-    * left-semi joins, every shuffle carrying id longs only; the adjacency
-    * is eagerly localCheckpointed per round (the Components lineage-cut
-    * discipline) and the previous round's checkpoint released. Returns
-    * (vertex, core_deg) — survivors with their induced degree.
+    * left-semi joins, every shuffle carrying id longs only; the peeled
+    * adjacency is checkpointed per round. Returns (vertex, core_deg) —
+    * survivors with their induced degree.
     */
   def kCore(edges: DataFrame, k: Int = 3, rounds: Int = 8): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-    var adj = bothDirections(und) // one und read, not a two-read self-union
-      .repartition(col("v"))
-      .localCheckpoint(true)
-    var survivors = -1L
-    var r = 0
-    var done = false
-    graft.pipeline.Loops.withAqeOff(edges.sparkSession) {
-    while (r < rounds && !done) {
-      // ONE fused checkpoint+count job (the survivor count used to be a
-      // second job); the adjacency is partitioned on v, so the degree
-      // aggregate is exchange-free, and the vertex-bounded keep set
-      // BROADCASTS into both semi-joins (the communityStats rationale) so
-      // the peeled adjacency never shuffles either
-      val (keep, n) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
+    val adj0 = adjacency(canonical(edges))
+    // the adjacency is partitioned on v, so the degree aggregate is
+    // exchange-free, and the vertex-bounded keep set BROADCASTS into both
+    // semi-joins (the communityStats rationale) so the peeled adjacency
+    // never shuffles either
+    val ((adj, _), _) = Loops.fixpoint(edges.sparkSession,
+        Round((adj0, -1L), progress = true, Seq(adj0)), rounds) { case ((adj, survivors), _) =>
+      val (keep, n) = bridge.localCheckpointCounted(
         adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select(col("v")))
-      if (n == survivors) done = true // monotone ⇒ same count = same set
+      if (n == survivors) Round((adj, n), progress = false, Seq(adj)) // monotone ⇒ same set
       else {
-        survivors = n
-        val prev = adj
-        adj = adj
+        val peeled = adj
           .join(broadcast(keep), Seq("v"), "left_semi")
           .join(broadcast(keep.select(col("v").as("w"))), Seq("w"), "left_semi")
           .select(col("v"), col("w")) // keep (v, w) column order
           .localCheckpoint(true)
-        prev.unpersist()
+        Round((peeled, n), progress = true, Seq(peeled))
       }
-      r += 1
-    }
     }
     adj.groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
       .select(col("v").as("vertex"), col("core_deg"))
@@ -588,65 +582,37 @@ object GraphLoader {
     * fan-out at O(√m) out-degree — the power-law killer the oracle's
     * definitional triple join would hit), each triangle fanned to its
     * three canonical edges, one map-side-combined count. Every shuffle
-    * carries id longs only; the per-round adjacency and support frames
-    * are localCheckpointed eagerly and the previous round's released (the
-    * Components lineage-cut discipline, no InternalCaches entries
-    * accumulated across rounds).
+    * carries id longs only; no InternalCaches entries accumulate across
+    * rounds.
     */
   def kTruss(edges: DataFrame, k: Int = 4, rounds: Int = 6): DataFrame = {
-    var und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-      .localCheckpoint(true)
-    var backing = und // the checkpoint the current `und` plan rides on
-    var nEdges = -1L
-    var r = 0
-    var done = false
-    var lastSup = und.select(col("a"), col("b"), lit(0L).as("support")).limit(0)
-    // NO AQE-off here (unlike the vertex-frontier loops): the wedge
+    val und0 = canonical(edges).localCheckpoint(true)
+    val none = und0.select(col("a"), col("b"), lit(0L).as("support")).limit(0)
+    // AQE stays ON here (unlike the vertex-frontier loops): the wedge
     // self-join and triangle-closing join sizes are round-dependent and
     // not statically hinted — AQE's runtime sizing earns its replanning
-    // cost (measured: wrapping this loop cost 0.78×). The vertex-bounded
+    // cost (measured: turning it off cost 0.78×). The vertex-bounded
     // degree lookups DO get explicit broadcasts so the edge list never
     // shuffles for them.
-    while (r < rounds && !done) {
-      val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      val oriented = und
-        .join(broadcast(deg.select(col("id").as("a"), col("deg").as("da"))), Seq("a"))
-        .join(broadcast(deg.select(col("id").as("b"), col("deg").as("db"))), Seq("b"))
-        .select(when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")), col("a")).otherwise(col("b")).as("u"),
-          when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")), col("b")).otherwise(col("a")).as("v"))
-        .repartition(col("u"))
-        .localCheckpoint(true) // both wedge self-join sides; released below
-      val wedges = oriented.join(oriented.select(col("u"), col("v").as("w")), Seq("u"))
-        .filter(col("v") < col("w"))
-      val tri = wedges.join(und, wedges("v") === und("a") && wedges("w") === und("b"))
-        .select(col("u"), col("v"), col("w"))
-      val sup = triangleEdges(tri)
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-      // ONE fused checkpoint+count job — the survivor count used to be a
-      // second driver-synchronized job per round
-      val (kept, n) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
-        sup.filter(col("support") >= k - 2))
-      oriented.unpersist()
-      if (n == nEdges) done = true // monotone ⇒ same count = same set
-      else {
-        nEdges = n
+    val ((_, _, sup), _) = Loops.fixpoint(edges.sparkSession,
+        Round((und0, -1L, none), progress = true, Seq(und0)), rounds, aqeOff = false) {
+      case ((und, nEdges, _), _) =>
+        val deg = degrees(und)
+        val oriented = orient(und
+          .join(broadcast(deg.select(col("id").as("a"), col("deg").as("da"))), Seq("a"))
+          .join(broadcast(deg.select(col("id").as("b"), col("deg").as("db"))), Seq("b")))
+          .repartition(col("u"))
+          .localCheckpoint(true) // both wedge self-join sides; released below
+        val (kept, n) = bridge.localCheckpointCounted(triangleEdges(triangles(oriented, und))
+          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+          .filter(col("support") >= k - 2))
+        oriented.unpersist()
         // next round's edge list is a PROJECTION of the already-checkpointed
         // support frame — a second eager checkpoint here would re-materialize
         // the whole edge list once more per round for nothing
-        und = kept.select(col("a"), col("b"))
-        backing.unpersist()
-        backing = kept
-      }
-      lastSup = kept
-      r += 1
+        Round((kept.select(col("a"), col("b")), n, kept), progress = n != nEdges, Seq(kept))
     }
-    lastSup
+    sup
   }
 
   /** The DuckDB twin of [[kTruss]]'s loop, generated from the same
@@ -682,18 +648,10 @@ object GraphLoader {
     * `rounds` rounds; the engine runs the result-identical FRONTIER form
     * below and exits at the fixpoint (past it every budgeted round is the
     * identity — see the in-body argument). Vertices not reached within
-    * `rounds` hops simply don't emit. The adjacency is checkpointed once
-    * and reused every round; each round's frontier checkpoint releases the
-    * previous (the Components lineage-cut discipline).
+    * `rounds` hops simply don't emit.
     */
   def bfsLevels(edges: DataFrame, rounds: Int): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-    val adj = bothDirections(und) // one und read, not a two-read self-union
-      .repartition(col("v"))
-      .localCheckpoint(true)
+    val adj = adjacency(canonical(edges))
     // FRONTIER form of the fixed-round relaxation — result-identical to the
     // full `min(dist, min over ALL reached neighbors + 1)` sweep the oracle
     // unrolls: a vertex whose level was assigned in round r proposes the
@@ -706,35 +664,22 @@ object GraphLoader {
     // early-exit argument), so the loop stops instead of paying
     // `rounds − diameter` full-edge sweeps that change nothing.
     //
-    // Round shape (r13): the frontier is vertex-bounded (id-domain-bounded
-    // in every contract caller — the communityStats broadcast rationale),
-    // so it BROADCASTS into the adjacency join instead of shuffling the
-    // cached edge list to meet it; the per-round driver work is ONE fused
-    // checkpoint+count job ([[bridge.localCheckpointCounted]] — the
-    // isEmpty probe used to be a second job); and the reached set
-    // accumulates as a UNION of the checkpointed per-round deltas instead
-    // of being re-copied through a second checkpoint every round (the old
-    // form materialized O(|reached|) rows per round, this is O(|delta|)).
-    var dist = adj.agg(min(col("v")).as("v")).select(col("v"), lit(0L).as("dist"))
+    // The frontier is vertex-bounded (id-domain-bounded in every contract
+    // caller — the communityStats broadcast rationale), so it BROADCASTS
+    // into the adjacency join instead of shuffling the cached edge list to
+    // meet it; and the reached set accumulates as a UNION of the
+    // checkpointed per-round deltas, O(|delta|) materialized per round
+    // rather than O(|reached|).
+    val seed = adj.agg(min(col("v")).as("v")).select(col("v"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    var frontier = dist
-    var frontierN = 1L // the single seed row
-    var r = 0
-    // AQE off for the round loop only (sub-second hinted stages, nothing
-    // to adapt — guide §2.1); the caller's final plan keeps the session
-    // setting
-    graft.pipeline.Loops.withAqeOff(edges.sparkSession) {
-      while (r < rounds && frontierN > 0L) {
-        val (newly, n) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
-          adj.join(broadcast(frontier), Seq("v"))
-            .select(col("w").as("v"), (col("dist") + 1L).as("dist"))
-            .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-            .join(dist.select(col("v")), Seq("v"), "left_anti"))
-        dist = dist.unionByName(newly)
-        frontier = newly
-        frontierN = n
-        r += 1
-      }
+    val ((dist, _), _) = Loops.fixpoint(edges.sparkSession,
+        Round((seed, seed), progress = true), rounds) { case ((dist, frontier), _) =>
+      val (newly, n) = bridge.localCheckpointCounted(
+        adj.join(broadcast(frontier), Seq("v"))
+          .select(col("w").as("v"), (col("dist") + 1L).as("dist"))
+          .groupBy(col("v")).agg(min(col("dist")).as("dist"))
+          .join(dist.select(col("v")), Seq("v"), "left_anti"))
+      Round((dist.unionByName(newly), newly), progress = n > 0L)
     }
     adj.unpersist()
     dist.select(col("v").as("vertex"), col("dist"))
@@ -756,36 +701,18 @@ object GraphLoader {
   def hopPlot(edges: DataFrame, rounds: Int, seedMod: Long = 2003L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-    val adj = bothDirections(und)
-      .repartition(col("v"))
-      .localCheckpoint(true)
+    val adj = adjacency(canonical(edges))
     // Bit-parallel multi-source BFS (the ANF trick, Palmer et al. KDD'02):
     // ONE row per vertex carrying a 64-bit mask of the seeds that reached
     // it — state is |V| longs, NOT |seeds|·|V| pairs, and a round is one
     // |E|-row join + a bit_or aggregate (the pair formulation was measured
     // 2.6× slower at sf0.1 (12.9 vs 5.0 s isolated): its proposals frame is |E|·|seeds| rows per round).
-    // Precondition: seed index v div seedMod < 64 for every seed (callers
-    // pick seedMod ≥ domain/64; the contract instance has domain 20011,
-    // seedMod 2003 → 10 seeds, bits 0..9).
-    // enforce the seed-bit precondition LOUDLY: shiftleft wraps its shift
-    // amount mod 64, so an out-of-range seed index would silently alias
-    // two seeds onto one bit and produce wrong hop counts — raise instead
-    var state = adj.select(col("v")).distinct()
-      .select(col("v"), when(pmod(col("v"), lit(seedMod)) === 0L,
-        expr(s"""if(v div $seedMod >= 64,
-                    raise_error(concat('hopPlot: seed index v div $seedMod >= 64 for v=',
-                                       cast(v as string))),
-                    shiftleft(1L, cast(v div $seedMod as int)))"""))
-        .otherwise(0L).as("mask"))
+    val state0 = adj.select(col("v")).distinct()
+      .select(col("v"), seedMask(seedMod, "hopPlot").as("mask"))
       .repartition(col("v"))
       .localCheckpoint(true)
     // hop h count = Σ_v popcount(newly-set bits in round h); round scalars
-    // to the driver are bounded (one long per round — the Components
-    // changed-count discipline).
+    // to the driver are bounded (one long per round).
     // DELTA propagation — result-identical to OR-ing full neighbor masks:
     // bits a neighbor carried before its last change were already OR-ed in
     // during earlier rounds (OR is monotone), so propagating only each
@@ -794,35 +721,52 @@ object GraphLoader {
     // count is the fixpoint (masks stop changing), and trailing zero
     // counts are filtered from the output anyway — exit the loop there
     // instead of paying identity rounds.
-    val counts = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    counts += 0L -> state.agg(sum(bit_count(col("mask")))).head().getLong(0)
-    var frontier = state.filter(col("mask") =!= 0L)
-    var backing = state // the checkpoint the current state/frontier ride on
-    var i = 1
-    graft.pipeline.Loops.withAqeOff(edges.sparkSession) {
-    while (i <= rounds && counts.last._2 > 0L) {
-      // frontier is vertex-bounded (id-domain-bounded in every contract
-      // caller): broadcast it into the edge join instead of shuffling the
-      // cached adjacency to meet it (the communityStats rationale)
-      val prop = adj.join(broadcast(frontier.withColumnRenamed("mask", "fb")), Seq("v"))
-        .groupBy(col("w").as("v")).agg(expr("bit_or(fb)").as("nbrmask"))
-      val step = state.join(prop, Seq("v"), "left")
-        .select(col("v"), col("mask"),
-          coalesce(col("nbrmask"), lit(0L)).bitwiseAND(expr("~mask")).as("newbits"))
-        .localCheckpoint(true)
-      counts += i.toLong -> step.agg(sum(bit_count(col("newbits")))).head().getLong(0)
-      state = step.select(col("v"),
-        col("mask").bitwiseOR(col("newbits")).as("mask"))
-      frontier = step.filter(col("newbits") =!= 0L)
-        .select(col("v"), col("newbits").as("mask"))
-      backing.unpersist()
-      backing = step
-      i += 1
-    }
+    val n0 = state0.agg(sum(bit_count(col("mask")))).head().getLong(0)
+    val ((_, _, last, counts), _) = Loops.fixpoint(spark,
+        Round((state0, state0.filter(col("mask") =!= 0L), state0, Vector(0L -> n0)),
+          progress = n0 > 0L, Seq(state0)), rounds) { case ((state, frontier, _, counts), i) =>
+      val step = propagateMasks(adj, state, frontier).localCheckpoint(true)
+      val n = step.agg(sum(bit_count(col("newbits")))).head().getLong(0)
+      Round((step.select(col("v"), col("mask").bitwiseOR(col("newbits")).as("mask")),
+        step.filter(col("newbits") =!= 0L).select(col("v"), col("newbits").as("mask")),
+        step, counts :+ (i.toLong -> n)), progress = n > 0L, Seq(step))
     }
     adj.unpersist()
-    backing.unpersist()
-    counts.toSeq.filter(_._2 > 0).toDF("hop", "n_pairs")
+    last.unpersist()
+    counts.filter(_._2 > 0).toDF("hop", "n_pairs")
+  }
+
+  /** Seed bit of vertex `v` for the bit-parallel BFS of [[hopPlot]] and
+    * [[seedDistances]]: seeds are {v : v ≡ 0 (mod seedMod)}, seed v owns bit
+    * v div seedMod. Precondition: that index is < 64 for every seed
+    * (callers pick seedMod ≥ domain/64; the contract instance has domain
+    * 20011, seedMod 2003 → 10 seeds, bits 0..9). Enforced LOUDLY:
+    * shiftleft wraps its shift amount mod 64, so an out-of-range seed
+    * index would silently alias two seeds onto one bit and produce wrong
+    * hop counts — raise instead.
+    */
+  private def seedMask(seedMod: Long, op: String): Column =
+    when(pmod(col("v"), lit(seedMod)) === 0L,
+      expr(s"""if(v div $seedMod >= 64,
+                  raise_error(concat('$op: seed index v div $seedMod >= 64 for v=',
+                                     cast(v as string))),
+                  shiftleft(1L, cast(v div $seedMod as int)))"""))
+      .otherwise(0L)
+
+  /** One bit-parallel BFS round: each vertex's (v, mask) state with the
+    * seed bits it newly receives from the frontier's masks (`newbits`),
+    * plus the `carry` columns of `state`. The frontier is vertex-bounded
+    * (id-domain-bounded in every contract caller): it broadcasts into the
+    * edge join instead of shuffling the cached adjacency to meet it (the
+    * communityStats rationale).
+    */
+  private def propagateMasks(adj: DataFrame, state: DataFrame, frontier: DataFrame,
+                             carry: Seq[Column] = Nil): DataFrame = {
+    val prop = adj.join(broadcast(frontier.withColumnRenamed("mask", "fb")), Seq("v"))
+      .groupBy(col("w").as("v")).agg(expr("bit_or(fb)").as("nbrmask"))
+    state.join(prop, Seq("v"), "left")
+      .select(Seq(col("v"), col("mask"),
+        coalesce(col("nbrmask"), lit(0L)).bitwiseAND(expr("~mask")).as("newbits")) ++ carry: _*)
   }
 
   /** Per-vertex seed-distance histogram — the harmonic/closeness-centrality
@@ -841,69 +785,39 @@ object GraphLoader {
     * histogram column is popcount(new bits) — no extra shuffle.
     */
   def seedDistances(edges: DataFrame, rounds: Int, seedMod: Long = 2003L): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-    val adj = bothDirections(und)
-      .repartition(col("v"))
-      .localCheckpoint(true)
+    val adj = adjacency(canonical(edges))
     // seed state: the fused checkpoint+count ALSO answers the "any seeds at
-    // all?" probe (mask ≠ 0 rows) that used to be its own isEmpty job
-    val (state0, seedN) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
+    // all?" probe (mask ≠ 0 rows)
+    val (state0, seedN) = bridge.localCheckpointCounted(
       adj.select(col("v")).distinct()
-        .select(col("v"), when(pmod(col("v"), lit(seedMod)) === 0L,
-          expr(s"""if(v div $seedMod >= 64,
-                      raise_error(concat('seedDistances: seed index v div $seedMod >= 64 for v=',
-                                         cast(v as string))),
-                      shiftleft(1L, cast(v div $seedMod as int)))"""))
-          .otherwise(0L).as("mask"))
+        .select(col("v"), seedMask(seedMod, "seedDistances").as("mask"))
         .repartition(col("v")),
-      r => r.getLong(1) != 0L)
-    var state = state0
+      col("mask") =!= 0L)
     // DELTA propagation + fixpoint exit (the hopPlot argument verbatim:
     // OR-monotonicity makes new-bits-only propagation mask-identical, and
     // once no vertex gains a bit every remaining round's h_i is exactly 0
     // for every vertex — emitted as literal zero columns so the fixed
-    // h1…h<rounds> contract schema is unchanged). Per round (r13): ONE
-    // fused checkpoint+count job — the frontier probe (any newbits?) is an
-    // accumulator over the same materialization pass, and the frontier
-    // BROADCASTS into the edge join (vertex-bounded, the communityStats
-    // rationale) instead of shuffling the cached adjacency to meet it.
-    val histCols = scala.collection.mutable.ArrayBuffer[String]()
-    var frontier = state.filter(col("mask") =!= 0L)
-    var backing = state
-    var i = 1
-    var converged = seedN == 0L
-    graft.pipeline.Loops.withAqeOff(edges.sparkSession) {
-    while (i <= rounds && !converged) {
-      val prop = adj.join(broadcast(frontier.withColumnRenamed("mask", "fb")), Seq("v"))
-        .groupBy(col("w").as("v")).agg(expr("bit_or(fb)").as("nbrmask"))
-      val kept = histCols.map(col).toSeq
-      val (step, frontN) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
-        state.join(prop, Seq("v"), "left")
-          .select(Seq(col("v"), col("mask"),
-            coalesce(col("nbrmask"), lit(0L)).bitwiseAND(expr("~mask")).as("newbits")) ++
-            kept: _*),
-        r => r.getLong(2) != 0L)
-      state = step.select(Seq(col("v"),
-        col("mask").bitwiseOR(col("newbits")).as("mask"),
-        bit_count(col("newbits")).cast("long").as(s"h$i")) ++ kept: _*)
-      frontier = step.filter(col("newbits") =!= 0L)
-        .select(col("v"), col("newbits").as("mask"))
-      histCols += s"h$i"
-      backing.unpersist()
-      backing = step
-      converged = frontN == 0L
-      i += 1
-    }
+    // h1…h<rounds> contract schema is unchanged). The frontier probe (any
+    // newbits?) rides the round's checkpoint pass.
+    val ((state, _, hist), _) = Loops.fixpoint(edges.sparkSession,
+        Round((state0, state0.filter(col("mask") =!= 0L), Vector.empty[String]),
+          progress = seedN > 0L, Seq(state0)), rounds) { case ((state, frontier, hist), i) =>
+      val kept = hist.map(col)
+      val (step, frontN) = bridge.localCheckpointCounted(
+        propagateMasks(adj, state, frontier, kept), col("newbits") =!= 0L)
+      Round((step.select(Seq(col("v"),
+          col("mask").bitwiseOR(col("newbits")).as("mask"),
+          bit_count(col("newbits")).cast("long").as(s"h$i")) ++ kept: _*),
+        step.filter(col("newbits") =!= 0L).select(col("v"), col("newbits").as("mask")),
+        hist :+ s"h$i"), progress = frontN > 0L, Seq(step))
     }
     // rounds past the fixpoint reach nothing: exact-0 histogram columns
-    while (i <= rounds) { state = state.withColumn(s"h$i", lit(0L)); histCols += s"h$i"; i += 1 }
+    val zeros = (hist.size + 1 to rounds).map(i => s"h$i")
+    val histCols = hist ++ zeros
     adj.unpersist()
     val total = histCols.map(col).reduce(_ + _)
-    state.filter(total > 0L)
-      .select((col("v").as("vertex") +: histCols.map(col)).toSeq: _*)
+    zeros.foldLeft(state)((s, h) => s.withColumn(h, lit(0L))).filter(total > 0L)
+      .select(col("v").as("vertex") +: histCols.map(col): _*)
   }
 
   /** Multi-source shortest-path COUNTING (σ) — the exact integer core of
@@ -924,49 +838,36 @@ object GraphLoader {
     * ~10¹⁸ paths.
     */
   def pathCounts(edges: DataFrame, rounds: Int, seedMod: Long = 2003L): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-    val adj = bothDirections(und)
-      .repartition(col("v"))
-      .localCheckpoint(true)
-    // Round shape (r13): ONE fused checkpoint+count job per round — the
-    // reached set accumulates as a UNION of the checkpointed per-round
-    // deltas instead of being re-copied through a second checkpoint every
-    // round (O(|delta|) materialized per round, not O(|reached|)), and the
+    val adj = adjacency(canonical(edges))
+    // The reached set accumulates as a UNION of the checkpointed per-round
+    // deltas (O(|delta|) materialized per round, not O(|reached|)), and the
     // count that rides the delta's materialization gives a FREE fixpoint
     // exit: an empty frontier proposes nothing in every later round
     // (first-reach-only σ is monotone), so the remaining budgeted rounds
     // are the identity — the bfsLevels/kCore early-exit argument. State
     // stays (seed, v) pairs and is NEVER broadcast (|seeds|·|V|-bounded,
     // not vertex-bounded).
-    val (reached0, seedN) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
+    val (reached0, seedN) = bridge.localCheckpointCounted(
       adj.select(col("v")).distinct()
         .filter(pmod(col("v"), lit(seedMod)) === 0L)
         .select(col("v").as("seed"), col("v"), lit(0L).as("dist"), lit(1L).as("sigma")))
-    var reached = reached0
-    var frontier = reached0
-    var frontierN = seedN
-    var i = 1
-    // NO AQE-off here (unlike the vertex-frontier loops): the per-round
+    // AQE stays ON here (unlike the vertex-frontier loops): the per-round
     // frames are (seed, v)-pair-sized, not vertex-bounded, so no static
     // broadcast hint applies — AQE's runtime conversion of the anti-join
-    // build side is the win (measured: wrapping this loop cost 0.89×).
-    while (i <= rounds && frontierN > 0L) {
-      val proposals = adj
-        .join(frontier.select(col("seed"), col("v"), col("sigma")), Seq("v"))
-        .groupBy(col("seed"), col("w"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("seed"), col("w").as("v"), col("sigma"))
-      val (newly, n) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
-        proposals
-          .join(reached.select(col("seed"), col("v")), Seq("seed", "v"), "left_anti")
-          .select(col("seed"), col("v"), lit(i.toLong).as("dist"), col("sigma")))
-      reached = reached.unionByName(newly)
-      frontier = newly
-      frontierN = n
-      i += 1
+    // build side is the win (measured: turning it off cost 0.89×).
+    val ((reached, _), _) = Loops.fixpoint(edges.sparkSession,
+        Round((reached0, reached0), progress = seedN > 0L), rounds, aqeOff = false) {
+      case ((reached, frontier), i) =>
+        val proposals = adj
+          .join(frontier.select(col("seed"), col("v"), col("sigma")), Seq("v"))
+          .groupBy(col("seed"), col("w"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .select(col("seed"), col("w").as("v"), col("sigma"))
+        val (newly, n) = bridge.localCheckpointCounted(
+          proposals
+            .join(reached.select(col("seed"), col("v")), Seq("seed", "v"), "left_anti")
+            .select(col("seed"), col("v"), lit(i.toLong).as("dist"), col("sigma")))
+        Round((reached.unionByName(newly), newly), progress = n > 0L)
     }
     adj.unpersist()
     reached.groupBy(col("v").as("vertex"))
@@ -1062,13 +963,7 @@ object GraphLoader {
   def sssp(weighted: DataFrame, rounds: Int): DataFrame = {
     // one read of the caller's weighted frame (md5-derived in the contract
     // fixture), not a two-read self-union
-    val adj = weighted
-      .select(explode(array(
-        struct(col("a").as("v"), col("b").as("w"), col("wt")),
-        struct(col("b").as("v"), col("a").as("w"), col("wt")))).as("e"))
-      .select(col("e.v").as("v"), col("e.w").as("w"), col("e.wt").as("wt"))
-      .repartition(col("v"))
-      .localCheckpoint(true)
+    val adj = adjacency(weighted, "wt")
     // FRONTIER (delta) form of the fixed-round Bellman–Ford sweep —
     // result-identical to the full relaxation the oracle unrolls: a vertex
     // whose dist did NOT improve in round r re-proposes in round r+1
@@ -1078,38 +973,27 @@ object GraphLoader {
     // and an empty frontier is the fixpoint (every remaining budgeted
     // round is the identity) — the loop stops there instead of paying
     // `rounds − convergence` full-edge sweeps.
-    var dist = adj.agg(min(col("v")).as("v")).select(col("v"), lit(0L).as("dist"))
+    val dist0 = adj.agg(min(col("v")).as("v")).select(col("v"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    var frontier = dist
-    var frontierN = 1L // the single source row
-    var backing = dist // the checkpoint the current dist/frontier ride on
-    var r = 0
-    graft.pipeline.Loops.withAqeOff(weighted.sparkSession) {
-    while (r < rounds && frontierN > 0L) {
+    val ((dist, _), _) = Loops.fixpoint(weighted.sparkSession,
+        Round((dist0, dist0), progress = true, Seq(dist0)), rounds) { case ((dist, frontier), _) =>
       // frontier is vertex-bounded (id-domain-bounded in every contract
       // caller): broadcast it into the edge join instead of shuffling the
       // cached adjacency to meet it (the communityStats rationale)
       val prop = adj.join(broadcast(frontier.withColumnRenamed("dist", "fd")), Seq("v"))
         .groupBy(col("w").as("v")).agg(min(col("fd") + col("wt")).as("p"))
-      // ONE fused checkpoint+count job carries both next-round frames AND
-      // the convergence probe: the new dist is the per-vertex least of
-      // (old dist, best frontier proposal), the new frontier the rows that
-      // actually improved (least skips nulls), and the improved-row count
-      // rides the materialization pass (the isEmpty probe used to be a
-      // second driver-synchronized job per round)
-      val (step, improvedN) = org.apache.spark.sql.graft.bridge.localCheckpointCounted(
+      // one checkpoint carries both next-round frames: the new dist is the
+      // per-vertex least of (old dist, best frontier proposal), the new
+      // frontier the rows that actually improved (least skips nulls)
+      val (step, improvedN) = bridge.localCheckpointCounted(
         dist.join(prop, Seq("v"), "full_outer")
           .select(col("v"), least(col("dist"), col("p")).as("nd"),
             (col("dist").isNull ||
               (col("p").isNotNull && col("p") < col("dist"))).as("improved")),
-        r => r.getBoolean(2))
-      dist = step.select(col("v"), col("nd").as("dist"))
-      frontier = step.filter(col("improved")).select(col("v"), col("nd").as("dist"))
-      backing.unpersist()
-      backing = step
-      frontierN = improvedN
-      r += 1
-    }
+        col("improved"))
+      Round((step.select(col("v"), col("nd").as("dist")),
+        step.filter(col("improved")).select(col("v"), col("nd").as("dist"))),
+        progress = improvedN > 0L, Seq(step))
     }
     adj.unpersist()
     dist.select(col("v").as("vertex"), col("dist"))
@@ -1147,9 +1031,6 @@ object GraphLoader {
     * Per-round shape: one equi-join (edges × BROADCAST labels) + two hash
     * aggregates, both exchange-free on the v-partitioned cached adjacency
     * (min label among max count folds into one lexicographic struct-max).
-    * The adjacency is checkpointed once and reused; each round's label
-    * checkpoint releases the previous (the Components lineage-cut
-    * discipline).
     *
     * Scale PRECONDITION: the label frame is vertex-sized and broadcast
     * every round, so the vertex set must fit a broadcast relation (hard
@@ -1160,10 +1041,7 @@ object GraphLoader {
     * the driver.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
-    labelPropagationOn(edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b")), rounds)
+    labelPropagationOn(canonical(edges), rounds)
 
   /** [[labelPropagation]] over an ALREADY-CANONICAL undirected edge frame
     * (a < b, distinct, no self-loops) — composing operators
@@ -1184,29 +1062,25 @@ object GraphLoader {
     // over the cached adjacency plus a vertex-sized broadcast, zero
     // edge-sized shuffles (the old w-partitioned shape paid the |E|-row
     // (v, lbl) frequency exchange every round).
-    val adj = bothDirections(und)
-      .repartition(col("v"))
-      .localCheckpoint(true)
-    var labels = adj.select(col("v")).distinct()
+    val adj = adjacency(und)
+    val labels0 = adj.select(col("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
       .localCheckpoint(true)
-    graft.pipeline.Loops.withAqeOff(und.sparkSession) {
-    for (_ <- 1 to rounds) {
+    val (labels, _) = Loops.fixpoint(und.sparkSession,
+        Round(labels0, progress = true, Seq(labels0)), rounds) { (labels, _) =>
       val freq = adj.join(broadcast(labels.withColumnRenamed("v", "w")), Seq("w"))
         .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
-      val prev = labels
       // min label among max count in ONE aggregation: max over the
       // (c, −lbl) lexicographic struct — the freq→best→rejoin formulation
       // evaluates the |E|-row adjacency join TWICE per round (freq is a
       // lazy plan read by both sides); this evaluates it once. Exact:
       // labels are non-negative longs, so max(−lbl) = min(lbl).
-      labels = freq
+      val next = freq
         .groupBy(col("v"))
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("v"), (-col("m.nl")).as("lbl"))
         .localCheckpoint(true)
-      prev.unpersist()
-    }
+      Round(next, progress = true, Seq(next))
     }
     adj.unpersist()
     labels.select(col("v").as("vertex"), col("lbl").as("label"))
@@ -1257,11 +1131,7 @@ object GraphLoader {
     // expressions (the md5 hash fixtures) would recompute that projection
     // every time. labelPropagationOn takes the canonical frame directly
     // (no re-canonicalization distinct).
-    val und = graft.pipeline.InternalCaches.register(edges
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct().filter(col("a") =!= col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val und = InternalCaches.register(canonical(edges).persist(StorageLevel.MEMORY_AND_DISK))
     val lab = labelPropagationOn(und, rounds)
       .select(col("vertex").as("v"), col("label").as("lbl"))
     val mDf = und.agg(count(lit(1)).as("m"))
@@ -1315,35 +1185,5 @@ object GraphLoader {
       .join(perEdge, Seq("a", "b"), "left")
       .select(col("a"), col("b"), coalesce(col("common"), lit(0L)).as("common"),
         col("deg_a"), col("deg_b"))
-  }
-
-  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    val n = verts.count()
-    val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    var ranks = verts.select(col("id"), lit(1.0d / n).as("rank")).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val withDeg = ranks.join(outDeg, Seq("id"), "left")
-      // dangling vertices (no out-edges) spread their mass uniformly
-      val danglingMass = withDeg.filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0d))).head().getDouble(0)
-      val contribs = withDeg.filter(col("deg").isNotNull)
-        .join(e, col("id") === e("src"))
-        .select(e("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("in_mass"))
-      val next = verts.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("in_mass"), lit(0.0d)) + lit(danglingMass / n))).as("rank"))
-        .localCheckpoint(true)
-      ranks.unpersist()
-      ranks = next
-    }
-    e.unpersist()
-    ranks
   }
 }

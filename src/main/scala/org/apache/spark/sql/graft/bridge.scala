@@ -1,8 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Predicate}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
@@ -28,34 +27,45 @@ object bridge {
     * preserved, lineage cut) — but surfaces the count, halving the
     * driver round-trips of every fixed-point loop.
     *
-    * `pred`: optional per-row predicate evaluated DURING the
-    * materialization pass and counted via an accumulator; the second
-    * element of the result is its count (or the row count when `pred` is
-    * null). Accumulator counts from re-run tasks can double-count ON
-    * RETRY, which can only inflate a nonzero count, never turn zero
-    * nonzero or nonzero zero (rows either exist or don't) — callers use
-    * it strictly for zero/progress convergence tests, NEVER as a result
-    * value (the hopPlot per-round histogram count stays a real aggregate
-    * for exactly this reason).
+    * `pred`: optional Boolean column evaluated DURING the materialization
+    * pass and counted via an accumulator; the second element of the result
+    * is its count (or the row count when `pred` is null). The column is
+    * resolved against the frame by NAME and bound to the executed plan's
+    * output, so reordering the frame's columns cannot change what it
+    * counts. Accumulator counts from re-run tasks can double-count on retry,
+    * which can only inflate a nonzero count, never turn zero nonzero or
+    * nonzero zero — callers use it strictly as a progress test, never as a
+    * result value.
     */
-  def localCheckpointCounted(df: DataFrame,
-                             pred: InternalRow => Boolean = null): (DataFrame, Long) = {
+  def localCheckpointCounted(df: DataFrame, pred: Column = null): (DataFrame, Long) = {
     val ds = df.asInstanceOf[Dataset[Row]]
     val spark = ds.sparkSession
     val qe = ds.queryExecution
+    // the analyzer resolves the column's names against ds's output
+    val cond = Option(pred).map { p =>
+      ds.select(p).queryExecution.analyzed.expressions.head match {
+        case Alias(e, _) => e
+        case e => e
+      }
+    }
     SQLExecution.withNewExecutionId(qe, Some("graftLocalCheckpointCounted")) {
-      val acc =
-        if (pred == null) null
-        else spark.sparkContext.longAccumulator("graft.checkpointPredCount")
       val base = qe.executedPlan.execute()
-      val rdd =
-        if (acc == null) base.map(_.copy())
-        else base.map { r => if (pred(r)) acc.add(1L); r.copy() }
+      val output = qe.executedPlan.output
+      val (rdd, acc) = cond match {
+        case None => (base.map(_.copy()), None)
+        case Some(c) =>
+          val acc = spark.sparkContext.longAccumulator("graft.checkpointPredCount")
+          (base.mapPartitionsWithIndex { (i, rows) =>
+            val p = Predicate.create(c, output)
+            p.initialize(i)
+            rows.map { r => if (p.eval(r)) acc.add(1L); r.copy() }
+          }, Some(acc))
+      }
       rdd.localCheckpoint()
       val total = rdd.count() // ONE job: materializes the checkpoint AND counts
       val out = Dataset.ofRows(spark,
         LogicalRDD.fromDataset(rdd, ds, isStreaming = false).newInstance())
-      (out, if (acc == null) total else acc.value)
+      (out, acc.fold(total)(_.value))
     }
   }
 }

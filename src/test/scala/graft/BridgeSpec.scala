@@ -27,10 +27,22 @@ class BridgeSpec extends AnyFunSuite {
   test("localCheckpointCounted counts a per-row predicate instead") {
     val df = spark.range(0L, 100L, 1L, 3)
       .selectExpr("id", "id < 10 as small")
-    val (out, n) = bridge.localCheckpointCounted(df, r => r.getBoolean(1))
+    val (out, n) = bridge.localCheckpointCounted(df, col("small"))
     assert(n === 10L)
     assert(out.count() === 100L) // predicate never filters the data
     assert(TestSpark.rowSet(out) === TestSpark.rowSet(df))
+  }
+
+  test("predicate binds by column name: reordering the select cannot flip convergence") {
+    // every row changed (label < prev); an ordinal reading of a reordered
+    // frame would compare prev < label and report convergence instead
+    val base = spark.range(0L, 50L, 1L, 3).selectExpr("id", "id AS label", "id + 1 AS prev")
+    for (order <- Seq(Seq("id", "prev", "label"), Seq("id", "label", "prev"),
+                      Seq("prev", "label", "id"))) {
+      val (_, n) = bridge.localCheckpointCounted(
+        base.select(order.map(col): _*), col("label") < col("prev"))
+      assert(n === 50L, s"column order $order")
+    }
   }
 
   test("localCheckpointCounted of an empty frame counts zero") {

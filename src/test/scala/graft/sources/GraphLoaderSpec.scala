@@ -29,33 +29,6 @@ class GraphLoaderSpec extends AnyFunSuite {
     assert(rowSet(deg.df) == Set(Seq[Any](0L, 3), Seq[Any](1L, 1), Seq[Any](2L, 1)))
   }
 
-  test("pageRank matches an in-memory power iteration (dangling + disconnected)") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    // 0→1, 0→2, 1→2, 2→0 (cycle + hub), 3→4 with 4 dangling, 5↔6 island
-    val es = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 4L), (5L, 6L), (6L, 5L))
-    val st = new StructType().add("src", LongType).add("dst", LongType)
-    val d = df(st, es.map(e => Row(e._1, e._2)))
-    val iters = 12; val damp = 0.85
-    val got = GraphLoader.pageRank(d, iters, damp).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-
-    // reference power iteration, same dangling redistribution
-    val vs = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val n = vs.size
-    val out = es.groupBy(_._1).view.mapValues(_.size).toMap
-    var rank = vs.map(_ -> 1.0 / n).toMap
-    for (_ <- 1 to iters) {
-      val dangling = vs.filterNot(out.contains).map(rank).sum
-      val in = es.groupBy(_._2).view.mapValues(_.map(e => rank(e._1) / out(e._1)).sum).toMap
-      rank = vs.map(v => v ->
-        ((1.0 - damp) / n + damp * (in.getOrElse(v, 0.0) + dangling / n))).toMap
-    }
-    assert(got.keySet == vs.toSet)
-    vs.foreach(v => assert(math.abs(got(v) - rank(v)) < 1e-9, s"vertex $v"))
-    assert(math.abs(got.values.sum - 1.0) < 1e-9) // mass conserved
-  }
-
   test("pageRankPortable matches an exact in-memory integer-mass iteration") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
