@@ -148,31 +148,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions scale with DATA on a real cluster, not with one
-    // box's core count — the r11 sf10 lesson (32 partitions OOM where 320
-    // pass). Scale rehearsals override; the sf0.1 artifact runs keep the
-    // default = cores.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufParts)
-        // local-mode scan sizing: the driver's testdata tables arrive as one
-        // parquet file each (sf1.0 lineitem ≈ 80 MB), and the 128 MB default
-        // would plan such a scan as a single task — one core doing all the IO
-        // and partial aggregation while 31 idle. 16 MB keeps ≥ #cores splits
-        // once a table is big enough to matter; a real cluster reading
-        // many-file tables keeps the default.
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(Tables.eventsConf._1, Tables.eventsConf._2)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    // AQE is Spark's default; pinned so this artifact's session conf stays
+    // the one earlier rounds recorded
+    def newSession(): SparkSession =
+      Harness.session(extra = Seq("spark.sql.adaptive.enabled" -> "true"))
     // Fresh-session isolation mode (the batched replacement for one-JVM-per-
     // isolated-query, r9 review "wrong" #5): each query gets a brand-new
     // SparkContext (codegen/broadcast/cache state reset) inside ONE child
@@ -191,9 +170,8 @@ object Bench {
     if (!freshSession) queries.foreach { case (_, fn) =>
       // same cache discipline as the timed loop — without it, queries
       // caching the same frame trip "already cached" warnings here
-      spark.sharedState.cacheManager.clearCache()
-      graft.pipeline.InternalCaches.release()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Harness.release(spark)
+      try Harness.noop(fn(spark, sfDir))
       catch { case _: Throwable => }
     }
     // Each query runs repsOf(name) times and reports the per-query MEDIAN
@@ -214,10 +192,7 @@ object Bench {
     val repsOverride = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt.max(1))
     def repsOf(name: String): Int =
       repsOverride.getOrElse(if (baselineQueries(name)) 5 else 3)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    import Harness.median
     def cv(xs: Seq[Double]): Double = {
       val m = median(xs)
       if (xs.size < 2 || m == 0.0) 0.0
@@ -236,9 +211,8 @@ object Bench {
         val t0 = System.nanoTime()
         // pmod keeps the ANSI-mode sum far from long overflow (the raw
         // product sum over 2^30 rows would throw under Spark 4 defaults)
-        spark.range(0L, 1L << 30, 1L, cpus.toInt)
-          .selectExpr("sum(pmod(id * 2654435761, 1000)) as s")
-          .write.format("noop").mode("overwrite").save()
+        Harness.noop(spark.range(0L, 1L << 30, 1L, Harness.cpus)
+          .selectExpr("sum(pmod(id * 2654435761, 1000)) as s"))
         (System.nanoTime() - t0) / 1e9
       }
       once() // untimed JIT warm-up of the canary itself
@@ -254,7 +228,7 @@ object Bench {
         graft.pipeline.InternalCaches.release()
         spark.stop()
         spark = newSession()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try Harness.noop(fn(spark, sfDir))
         catch { case _: Throwable => } // untimed per-query warm-up
       }
       def oneRep(): Option[Double] = {
@@ -262,12 +236,11 @@ object Bench {
         // query is measured, cross-query cache leakage and its GC pressure
         // are not. InternalCaches.release() also empties the registry so
         // thousands of rep-scoped Dataset/plan objects don't pin driver heap.
-        spark.sharedState.cacheManager.clearCache()
-        graft.pipeline.InternalCaches.release()
+        Harness.release(spark)
         System.gc()
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          try { Harness.noop(fn(spark, sfDir)); true }
           catch { case e: Throwable =>
             // a swallowed failure would masquerade as a fast query — record
             // it AND exclude the rep from the median (a query failing fast
@@ -324,11 +297,10 @@ object Bench {
       else queries.keys.filter(_.startsWith("streaming_")).toSeq.sorted.map { name =>
         val fn = queries(name)
         def rep(): Option[Double] = {
-          spark.sharedState.cacheManager.clearCache()
-          graft.pipeline.InternalCaches.release()
+          Harness.release(spark)
           System.gc()
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          try { Harness.noop(fn(spark, sfDir))
                 Some((System.nanoTime() - t0) / 1e9) }
           catch { case _: Throwable => None }
         }
@@ -344,10 +316,6 @@ object Bench {
     // map restricted to the round-1 baseline set — the queries the judge
     // compares against BASELINE. The COMPLETE per-query map goes to
     // BENCH_FULL.json next to this build (committed per round).
-    def fmt(v: Double): String =
-      if (v.isNaN) "null" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def qmap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
     val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filterNot(_.isNaN).sum
@@ -438,8 +406,8 @@ object Bench {
         pb.environment().put("SPARK_GRAFT_OUT", out.toString)
         pb.environment().put("SPARK_GRAFT_ISOLATE", "0")
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-        pb.environment().put("SPARK_GRAFT_SHUFFLE_PARTS", shufParts)
+        pb.environment().put("SPARK_GRAFT_CPUS", Harness.cpus.toString)
+        pb.environment().put("SPARK_GRAFT_SHUFFLE_PARTS", Harness.shufflePartitions())
         pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
         pb.redirectError(ProcessBuilder.Redirect.INHERIT)
         val proc = pb.start()
@@ -489,13 +457,23 @@ object Bench {
     // round). Worst case (43 baseline entries + 3 capped errors) ≈ 1.7 KB.
     val errsCapped = errors.take(3)
       .map { case (k, v) => jstr(k) + ":" + jstr(v.take(40)) }.mkString("{", ",", "}")
-    val stdoutLine =
+    val line =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":${repsOf("q1_agg")},"reps_tail":${repsOf("__tail")},"n_queries":${results.size},"baseline_total":${fmt(headline.map(_._2).filterNot(_.isNaN).sum)},"queries":${qmap(headline)},"isolated_n":${isolated.size},"isolated_failed_n":${isolatedFailed.size},"escalated_n":${escalated.size},"baseline_breach_n":${baselineBreach.size},"prior_movers_n":${priorMovers.size}$calibJson,"failed":${errors.size},"errors":$errsCapped,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
-    if (stdoutLine.length > 1900)
-      // belt-and-braces: never regress the parse again — fall back to the
-      // minimal contract fields (value + full per-query map lives on disk)
-      println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(headline)},"failed":${errors.size},"full":"BENCH_FULL.json","sf":"$sfDir"}""")
-    else println(stdoutLine)
+    println(stdoutLine(line, total, errors.size, sfDir))
     spark.stop()
   }
+
+  private[graft] def fmt(v: Double): String =
+    if (v.isNaN) "null" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private[graft] def qmap(rs: Seq[(String, Double)]): String =
+    rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
+  /** `line`, or — when it would exceed 1,900 chars — only the minimal
+    * contract fields, so the parse can never regress again: the value, its
+    * unit, the failure count and where the full per-query map lives.
+    */
+  private[graft] def stdoutLine(line: String, total: Double, failed: Int, sfDir: String): String =
+    if (line.length <= 1900) line
+    else s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
 }

@@ -24,20 +24,21 @@ object SparkEntry {
   }
 
   /** The hash-derived Graph500-style fixture every graph query runs on:
-    * lineitem keys portable-hashed into a 20011-node space, directed
-    * (src, dst) edges that both engines derive identically. The RAW scan is
-    * rebalanced before the md5 derivation: lineitem is one parquet file and
-    * the projection runs below the first exchange, so unspread a single
-    * task would hash every row.
+    * lineitem keys portable-hashed into a `modulus`-node space (20011 for
+    * the contract queries), directed (src, dst) edges that both engines
+    * derive identically. The RAW scan is rebalanced before the md5
+    * derivation: lineitem is one parquet file and the projection runs below
+    * the first exchange, so unspread a single task would hash every row.
+    * The scaling tools pass a modulus that grows with the data.
     */
-  private def hashGraph(s: SparkSession, d: String): DataFrame =
+  private[graft] def hashGraph(s: SparkSession, d: String, modulus: Long = 20011L): DataFrame =
     pipeline.Dedup.rebalance(
       Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
       .select(
         pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-          lit(20011L)).as("src"),
+          lit(modulus)).as("src"),
         pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-          lit(20011L)).as("dst"))
+          lit(modulus)).as("dst"))
 
   /** DuckDB twin of [[hashGraph]]: the directed edges as `(s, t)`. */
   private val HashEdgesSql =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,7 +8,6 @@ object Verify {
     // optional extra args: restrict to the named queries (local iteration;
     // the driver always calls with exactly two args → full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the master for multi-process rehearsal:
     // `local-cluster[2, 16, 6144]` runs the full oracle gate on two REAL
     // executor processes — closure serialization, broadcast lifecycle and
@@ -17,30 +15,14 @@ object Verify {
     // local mode shares one JVM between driver and executors and can hide
     // all three (r11 verdict item 1; needs SPARK_HOME + SPARK_SCALA_VERSION
     // in the env and a real java -cp classpath, see tools/FaultProbe).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-file testdata tables must still fan out to parallel scan
-      // tasks — see the same setting in Bench for the full rationale
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.eventsConf._1, Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      // executors are separate processes — they need this JVM's classpath
-      builder.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sys.env.get("SPARK_GRAFT_MASTER").fold(Harness.session())(Harness.session(_))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       // queries caching the same frames would otherwise trip
-      // "already cached" warnings across the sequential run; release() also
-      // drops the per-query InternalCaches registry entries (driver heap)
-      spark.sharedState.cacheManager.clearCache()
-      graft.pipeline.InternalCaches.release()
+      // "already cached" warnings across the sequential run
+      Harness.release(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -16,10 +16,11 @@ import org.apache.spark.sql.Dataset
   *    drop all operator-internal executor storage at once. Releasing early
   *    is always SAFE — an unpersisted frame recomputes from lineage — it
   *    only costs time.
-  * `Bench`/`Verify` call [[release]] per query in addition to
-  * `cacheManager.clearCache()` — the latter frees executor storage but not
-  * registry entries, and a 70-query × 5-rep run would otherwise accumulate
-  * thousands of Dataset/plan objects on the driver heap.
+  * `graft.Harness.release`, which every main calls per query, pairs
+  * [[release]] with `cacheManager.clearCache()` — the latter frees executor
+  * storage but not registry entries, and a 70-query × 5-rep run would
+  * otherwise accumulate thousands of Dataset/plan objects on the driver
+  * heap.
   *
   * Identity-keyed: registering the same frame twice is a no-op. References
   * are deliberately STRONG: Spark's CacheManager pins the cached plan and
@@ -28,8 +29,8 @@ import org.apache.spark.sql.Dataset
   * storage it exists to free lives on — release() would silently skip it
   * (measured: the internal frames of a consumed `minhashPairs` are
   * unreachable by the time release() runs). Driver-heap growth across a
-  * many-query run is instead bounded by calling [[release]] per query,
-  * which Bench and Verify both do.
+  * many-query run is instead bounded by calling [[release]] per query
+  * through `Harness.release`.
   */
 object InternalCaches {
   private val registry = new java.util.IdentityHashMap[Dataset[_], Unit]()

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Harness
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Boilerplate hot-shingle stress for the dedup/text family (tool, not
@@ -36,26 +37,11 @@ object BoilerStress {
     "use of cookies and acknowledge our privacy policy terms of service " +
     "and licensing agreement all rights reserved"
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.eventsConf._1, graft.Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = args(0) match {
     case "gen" =>
       val (src, out) = (args(1), args(2))
       val pct = args.lift(3).map(_.toInt).getOrElse(30)
-      val s = session()
+      val s = Harness.session()
       val docs = s.read.parquet(s"$src/documents.parquet")
       docs.withColumn("text",
           when(pmod(col("doc_id"), lit(100L)) < pct,
@@ -71,7 +57,7 @@ object BoilerStress {
       val valvesOn = args(2) == "on"
       val families = if (args.length > 3) args.drop(3).toSeq
         else Seq("jaccard", "minhash", "simhash", "dupfrac", "spans", "heavy_hitters")
-      val s = session()
+      val s = Harness.session()
       val docs = graft.Tables.documents(s, dir)
       def one(family: String): DataFrame = family match {
         case "jaccard" =>
@@ -92,8 +78,7 @@ object BoilerStress {
       families.foreach { fam =>
         // warm + timed, cache-cold per rep (the Bench discipline)
         (0 to 1).foreach { rep =>
-          s.sharedState.cacheManager.clearCache()
-          graft.pipeline.InternalCaches.release()
+          Harness.release(s)
           val t0 = System.nanoTime()
           val rows = one(fam).count()
           val sec = (System.nanoTime() - t0) / 1e9
@@ -106,7 +91,7 @@ object BoilerStress {
 
     case "account" =>
       val dir = args(1)
-      val s = session()
+      val s = Harness.session()
       val docs = graft.Tables.documents(s, dir)
       val hot = graft.pipeline.Dedup.hotShingles(docs, k = 3, maxDf = 100L)
       val hotStats = hot.agg(count(lit(1)).as("n"), max(col("df")).as("max_df")).collect().head

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.Harness
+import graft.Harness.resultHash
 
 /** Concurrent-session stress (tool, not contract surface): a real cluster
   * serves many users from one SparkSession-per-app, but every harness run
@@ -15,10 +15,8 @@ import org.apache.spark.sql.functions._
   *      concurrency equals its serial hash,
   *   3. tail latency vs serial (per-query wall times both ways).
   *
-  * The result hash is order-independent and computed distributed: the
-  * DECIMAL(38,0) sum of per-row xxhash64 over the JSON of the full row
-  * (ANSI-safe — a BIGINT sum of hashes would overflow-throw). Nothing is
-  * collected but the one scalar.
+  * The result hash is [[graft.Harness.resultHash]]: order-independent,
+  * computed distributed; nothing is collected but the one scalar.
   *
   * Usage: java -cp … graft.tools.ConcurrentProbe <sfDir> [q1,q2,…]
   * Default mix deliberately overlaps shared machinery: two streaming
@@ -32,38 +30,20 @@ object ConcurrentProbe {
     "triangle_count",                                  // cached edge frame
     "q5_multijoin", "window_topk", "corpus_prepare")   // joins/windows/capstone
 
-  private def resultHash(df: DataFrame): String =
-    df.select(sum(xxhash64(to_json(struct(df.columns.map(col).toIndexedSeq: _*)))
-        .cast("decimal(38,0)")).as("h"),
-        count(lit(1)).as("n"))
-      .collect().headOption.map(r => s"${r.get(0)}/${r.getLong(1)}").getOrElse("empty")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = if (args.length > 1) args.drop(1).flatMap(_.split(",")).map(_.trim).toSeq
                 else defaultMix
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config(graft.Tables.eventsConf._1, graft.Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(extra = Seq("spark.scheduler.mode" -> "FAIR"))
     val queries = names.map(n => n -> graft.SparkEntry.queries(n))
 
     // warm-up (JIT/codegen/page cache) so serial vs concurrent is not
     // measuring first-execution tax on whichever pass goes first
     queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Harness.noop(fn(spark, sfDir))
       catch { case _: Throwable => () }
     }
-    spark.sharedState.cacheManager.clearCache()
-    graft.pipeline.InternalCaches.release()
+    Harness.release(spark)
 
     // serial pass: per-query time + canonical hash
     val serial = queries.map { case (name, fn) =>
@@ -71,8 +51,7 @@ object ConcurrentProbe {
       val h = resultHash(fn(spark, sfDir))
       name -> (((System.nanoTime() - t0) / 1e9), h)
     }.toMap
-    spark.sharedState.cacheManager.clearCache()
-    graft.pipeline.InternalCaches.release()
+    Harness.release(spark)
 
     // concurrent pass: one thread per query, each in its own FAIR pool;
     // cloned sessions give each thread its own SQLConf/temp-view space

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.Harness
+import graft.Harness.resultHash
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -97,16 +99,6 @@ object FaultProbe {
       speculative.incrementAndGet()
   }
 
-  /** Order-independent result hash (same scheme as ConcurrentProbe): the
-    * DECIMAL(38,0) sum of per-row xxhash64 over the row's JSON, plus the
-    * row count. Distributed; only the scalar reaches the driver.
-    */
-  def resultHash(df: DataFrame): String =
-    df.select(sum(xxhash64(to_json(struct(df.columns.map(col).toIndexedSeq: _*)))
-        .cast("decimal(38,0)")).as("h"),
-        count(lit(1)).as("n"))
-      .collect().headOption.map(r => s"${r.get(0)}/${r.getLong(1)}").getOrElse("empty")
-
   private def hashFile: java.nio.file.Path = java.nio.file.Paths.get(
     sys.env.getOrElse("SPARK_GRAFT_FAULT_HASHES", "/tmp/faultprobe_clean_hashes.json"))
 
@@ -115,7 +107,7 @@ object FaultProbe {
     val mode = args(1)
     val names = if (args.length > 2) args.drop(2).flatMap(_.split(",")).map(_.trim).toSeq
                 else defaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Harness.cpus
     val master = mode match {
       // maxFailures=4 gives injected EXCEPTIONS retry room too; TaskKilled
       // alone would not need it
@@ -123,31 +115,18 @@ object FaultProbe {
       case "spec" | "execloss" => s"local-cluster[2, ${math.max(2, cpus / 2)}, 6144]"
       case other => sys.error(s"unknown mode $other")
     }
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.eventsConf._1, graft.Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-    if (mode == "spec" || mode == "execloss")
-      // executors are separate processes in local-cluster mode — they need
-      // this JVM's classpath (sbt target dirs + /opt/spark jars)
-      b.config("spark.executor.extraClassPath", sys.props("java.class.path"))
-    if (mode == "spec")
-      b.config("spark.speculation", "true")
-        .config("spark.speculation.multiplier", "1.0")
-        .config("spark.speculation.quantile", "0.05")
-        .config("spark.speculation.interval", "5ms")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val speculation =
+      if (mode == "spec") Seq("spark.speculation" -> "true",
+        "spark.speculation.multiplier" -> "1.0",
+        "spark.speculation.quantile" -> "0.05",
+        "spark.speculation.interval" -> "5ms")
+      else Nil
+    val spark = Harness.session(master, speculation)
     val injector = new KillInjector(spark.sparkContext)
     spark.sparkContext.addSparkListener(injector)
 
     def runClean(fn: (SparkSession, String) => DataFrame): (Double, String) = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.pipeline.InternalCaches.release()
+      Harness.release(spark)
       val t0 = System.nanoTime()
       val h = resultHash(fn(spark, sfDir))
       ((System.nanoTime() - t0) / 1e9, h)
@@ -159,12 +138,11 @@ object FaultProbe {
         var allMatch = true
         for (name <- names) {
           val fn = graft.SparkEntry.queries(name)
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          try Harness.noop(fn(spark, sfDir))
           catch { case NonFatal(_) => () } // warm-up
           val (cleanSec, cleanHash) = runClean(fn)
           clean(name) = cleanHash
-          spark.sharedState.cacheManager.clearCache()
-          graft.pipeline.InternalCaches.release()
+          Harness.release(spark)
           val (a0, c0) = (injector.attempted.get, injector.confirmed.get)
           injector.enabled = true
           val t0 = System.nanoTime()
@@ -202,8 +180,7 @@ object FaultProbe {
           val s0 = injector.speculative.get
           val t0 = System.nanoTime()
           val h =
-            try { spark.sharedState.cacheManager.clearCache()
-                  graft.pipeline.InternalCaches.release()
+            try { Harness.release(spark)
                   resultHash(fn(spark, sfDir)) }
             catch { case NonFatal(e) =>
               s"ERR:${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}" }
@@ -258,8 +235,7 @@ object FaultProbe {
           killer.start()
           val t0 = System.nanoTime()
           val h =
-            try { spark.sharedState.cacheManager.clearCache()
-                  graft.pipeline.InternalCaches.release()
+            try { Harness.release(spark)
                   resultHash(fn(spark, sfDir)) }
             catch { case NonFatal(e) =>
               s"ERR:${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}" }

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Harness
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Constant-degree graph-scaling probe (round-8 measurement, not public
@@ -24,23 +25,9 @@ object GraphScaleProbe {
     val d = args(0)
     val m = args(1).toLong
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.eventsConf._1, graft.Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
-    def edges: DataFrame = graft.pipeline.Dedup.rebalance(
-      graft.Tables.lineitem(spark, d).select(col("l_orderkey"), col("l_partkey")))
-      .select(
-        pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-          lit(m)).as("src"),
-        pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-          lit(m)).as("dst"))
+    def edges: DataFrame = graft.SparkEntry.hashGraph(spark, d, m)
     def weightedUnd: DataFrame = edges
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
       .distinct().filter(col("a") =!= col("b"))
@@ -69,26 +56,20 @@ object GraphScaleProbe {
       "label_propagation" -> (() => GL.labelPropagation(edges, rounds = 4)),
       "neighbor_jaccard" -> (() => GL.neighborJaccard(edges)))
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
     // JIT warm (cheapest two fixed-round ops touch most codegen paths)
     Seq("pagerank", "bfs_levels").foreach { n =>
-      spark.sharedState.cacheManager.clearCache()
-      graft.pipeline.InternalCaches.release()
-      queries.toMap.apply(n)().write.format("noop").mode("overwrite").save()
+      Harness.release(spark)
+      Harness.noop(queries.toMap.apply(n)())
     }
     val results = queries.map { case (name, fn) =>
       val ts = (1 to reps).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        graft.pipeline.InternalCaches.release()
+        Harness.release(spark)
         System.gc()
         val t0 = System.nanoTime()
-        fn().write.format("noop").mode("overwrite").save()
+        Harness.noop(fn())
         (System.nanoTime() - t0) / 1e9
       }
-      val med = median(ts)
+      val med = Harness.median(ts)
       println(f"[gsp] $name%-20s $med%8.2f s  (reps=$reps)")
       name -> med
     }

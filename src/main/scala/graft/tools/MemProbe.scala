@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Harness
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -58,15 +59,8 @@ object MemProbe {
     * spill-path exercise this box can produce, and the rehearsal runs one.
     */
   def graphPlans(s: SparkSession, d: String): Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.functions._
     val m = sys.env.getOrElse("SPARK_GRAFT_GRAPH_MOD", "200003").toLong
-    def edges = graft.pipeline.Dedup.rebalance(
-      graft.Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))
-      .select(
-        pmod(graft.functions.PortableHash.hash60(concat(lit("tv_"), col("l_orderkey"))),
-          lit(m)).as("src"),
-        pmod(graft.functions.PortableHash.hash60(concat(lit("tw_"), col("l_partkey"))),
-          lit(m)).as("dst"))
+    def edges = graft.SparkEntry.hashGraph(s, d, m)
     import graft.sources.{GraphLoader => GL}
     Map(
       "triangle_count_p" -> ((_, _) => GL.triangleCount(edges)),
@@ -80,14 +74,6 @@ object MemProbe {
     val names =
       if (args.length > 1) args.drop(1).flatMap(_.split(",")).map(_.trim).toSeq
       else heavyTail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle-partition override for the ×N-data rehearsals: a real cluster
-    // job carries partition counts that scale with DATA, not with one box's
-    // core count — holding 32 partitions at sf10 grows per-task shuffle
-    // state 10× past the heap envelope the sf1.0 rehearsal proved (measured:
-    // the wedge merge OOMs in spill read-ahead buffers, r11). Default stays
-    // = cores for the sf1.0 comparisons.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
     // SPARK_GRAFT_AUTOCACHE=0 disables the Lara DSL's fan-out auto-persist
     // for the whole probe run — the r12 A/B: auto-cache registers MORE
     // MEMORY_AND_DISK frames, and the claim "caching never loses under
@@ -95,16 +81,7 @@ object MemProbe {
     // assumed (r11 verdict item 4). Default leaves the production ON state.
     sys.env.get("SPARK_GRAFT_AUTOCACHE")
       .foreach(v => graft.lara.LaraTable.autoCache = v == "1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.eventsConf._1, graft.Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val spillMem = new AtomicLong(0L)
     val spillDisk = new AtomicLong(0L)
@@ -127,13 +104,12 @@ object MemProbe {
         case None => println(s"""{"query":"$name","ok":false,"err":"unknown query"}""")
         case Some(fn) =>
           def rep(): (Double, Boolean, String) = {
-            spark.sharedState.cacheManager.clearCache()
-            graft.pipeline.InternalCaches.release()
+            Harness.release(spark)
             System.gc()
             spillMem.set(0L); spillDisk.set(0L); peakExec.set(0L)
             val t0 = System.nanoTime()
             try {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              Harness.noop(fn(spark, sfDir))
               ((System.nanoTime() - t0) / 1e9, true, "")
             } catch {
               case e: Throwable =>

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Harness
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: replicates a driver testdata directory
@@ -38,14 +39,7 @@ object ScaleUp {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "skew"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.eventsConf._1, graft.Tables.eventsConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def tbl(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def maxKey(df: DataFrame, k: String): Long =

@@ -1,19 +1,23 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Predicate}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Bridge into `private[sql]` surface: Column ↔ Expression conversion for
-  * custom Catalyst expressions, and an eager local checkpoint fused with
-  * its materialization count. Namespaced under org.apache.spark.sql by
+  * custom Catalyst expressions, an eager local checkpoint fused with its
+  * materialization count, and a listener-bus drain for profiling tools. Namespaced under org.apache.spark.sql by
   * necessity (the standard pattern for Spark extension libraries);
   * contains no query logic.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Blocks until every event posted so far has reached every listener. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** Eager local checkpoint that RETURNS the count of the materialization
     * job. `Dataset.localCheckpoint(eager = true)` already materializes the
