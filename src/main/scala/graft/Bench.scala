@@ -8,24 +8,6 @@ import org.apache.spark.sql.SparkSession
   * computation for scan-shaped queries, understating real cost.
   */
 object Bench {
-  /** The round-1 baseline query set (the per-query names recorded in
-    * BENCH_r01.json): these are the queries graded against BASELINE round
-    * over round, so they get per-query detail on the size-capped stdout
-    * line. Frozen by definition — round 1 is immutable history.
-    */
-  val baselineQueries: Set[String] = Set(
-    "ann_ivf", "ann_lsh", "ann_topk", "approx_distinct", "bpe_tokens",
-    "conditional_pivot", "cube_agg", "date_agg", "dedup_exact",
-    "dedup_jaccard", "dedup_minhash", "dedup_simhash", "distinct_agg",
-    "embed_neardup", "events_bin", "filter_pushdown", "having_filter",
-    "lara_agg", "lara_covariance", "lara_ext_wordcount", "lara_join_times",
-    "lara_map_replace", "lara_union_plus", "media_features",
-    "outer_join_defaults", "percentiles", "q1_agg", "q3_join",
-    "q5_multijoin", "raco_frontend", "rollup_agg", "semi_anti_join",
-    "sessionize_batch", "set_ops", "string_funcs", "text_fingerprint",
-    "text_langid", "text_quality", "text_quality_score", "text_rolling_fp",
-    "top_orders", "window_running", "window_topk")
-
   /** Per-query round-1 seconds (BENCH_r01.json — frozen history; the
     * driver's 2x gate grades against these). Any baseline query whose
     * co-run median exceeds 1.8x its r1 number escalates into the in-run
@@ -51,6 +33,13 @@ object Bench {
     "text_langid" -> 0.292, "text_quality" -> 0.457,
     "text_quality_score" -> 0.474, "text_rolling_fp" -> 0.189,
     "top_orders" -> 0.187, "window_running" -> 0.495, "window_topk" -> 0.505)
+
+  /** The round-1 baseline query set (the per-query names recorded in
+    * BENCH_r01.json): these are the queries graded against BASELINE round
+    * over round, so they get per-query detail on the size-capped stdout
+    * line. Frozen by definition — round 1 is immutable history.
+    */
+  val baselineQueries: Set[String] = baselineR1.keySet
 
   /** Per-query round-11 co-run medians (BENCH_FULL.json as committed at
     * r11 — frozen, like [[baselineR1]]). Round-over-round mover
@@ -158,11 +147,13 @@ object Bench {
     // JVM. JIT profile carry-over is the only contamination channel left —
     // measured equivalent to per-JVM isolation within rep noise (NOTES_r10).
     val freshSession = sys.env.get("SPARK_GRAFT_FRESH_SESSION").contains("1")
-    var spark = newSession()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run — for isolating one query's
-    // cost without the rest of the suite (same JSON contract either way)
+    // cost without the rest of the suite (same JSON contract either way);
+    // a name that is no contract fails here, before any session starts
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    val queries = SparkEntry.contractsNamed(only.getOrElse(Set.empty))
+      .map(c => c.name -> c.plan).toMap
+    var spark = newSession()
     // JIT/page-cache warm-up pass (not timed): first execution of a stage
     // pays codegen + JIT compilation, which would randomly tax whichever
     // query runs first. Under fresh-session mode the warm-up instead runs

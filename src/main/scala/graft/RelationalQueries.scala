@@ -16,7 +16,7 @@ import org.apache.spark.sql.expressions.Window
   * collects or loops on the driver.
   *
   * All double-valued outputs are rounded identically in the DuckDB oracle
-  * (see SparkEntry.oracleSql) so hash comparison is robust to fp summation
+  * (see SparkEntry.contracts) so hash comparison is robust to fp summation
   * order across 32 partitions.
   */
 object RelationalQueries {

@@ -1,13 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import com.fasterxml.jackson.databind.ObjectMapper
+import SparkEntry.Contract
+/** Driver-run correctness dump: each contract's plan result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: restrict to the named queries (local iteration;
-    // the driver always calls with exactly two args → full run)
-    val only = args.drop(2).toSet
+    // the driver always calls with exactly two args → full run); a name
+    // that is no contract fails here, before the session starts
+    val selected = SparkEntry.contractsNamed(args.drop(2).toSet)
     // SPARK_GRAFT_MASTER overrides the master for multi-process rehearsal:
     // `local-cluster[2, 16, 6144]` runs the full oracle gate on two REAL
     // executor processes — closure serialization, broadcast lifecycle and
@@ -17,34 +20,28 @@ object Verify {
     // in the env and a real java -cp classpath, see tools/FaultProbe).
     val spark = sys.env.get("SPARK_GRAFT_MASTER").fold(Harness.session())(Harness.session(_))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { c =>
       // queries caching the same frames would otherwise trip
       // "already cached" warnings across the sequential run
       Harness.release(spark)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try c.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${c.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${c.name} failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(selected))
     spark.stop()
+  }
+
+  /** `oracle_sql.json`: each contract's name → its DuckDB SQL, in `cs`
+    * order. Jackson escapes quotes, backslashes and every control char — a
+    * tab or CR left raw would make the driver's json.load fail and silently
+    * zero the round's correctness.
+    */
+  def oracleJson(cs: Seq[Contract]): String = {
+    val m = new java.util.LinkedHashMap[String, String]()
+    cs.foreach(c => m.put(c.name, c.oracle))
+    new ObjectMapper().writeValueAsString(m)
   }
 }

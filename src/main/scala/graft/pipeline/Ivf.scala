@@ -121,7 +121,7 @@ object Ivf {
   //
   // Fixed iteration count (no convergence test), seeds = the k lowest
   // vec_ids, ties on argmax broken toward the lowest cell — all replayable
-  // in SQL. See the `ann_ivf` oracle in SparkEntry.oracleSql.
+  // in SQL. See the `ann_ivf` entry of SparkEntry.contracts.
   // -------------------------------------------------------------------
 
   /** Integer quantization of a float-array embedding (array<long>):

@@ -67,8 +67,12 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("queries and oracles are consistently keyed") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet),
-      "oracle without query: " + (SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet))
+    // each contract carries its own oracle; the one slip left is a
+    // duplicated name, which the `.toMap` views would silently collapse
+    val names = SparkEntry.contracts.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, "duplicated: " + names.diff(names.distinct))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 242)
   }
 
   test("entry flagship returns rows") {

@@ -1,5 +1,5 @@
 # Reformulated DuckDB oracles for the sf1.0 full-surface rehearsal.
-# IDENTICAL semantics to the SparkEntry.oracleSql brute-force forms (which
+# IDENTICAL semantics to the SparkEntry.contracts brute-force oracles (which
 # stay the driver-gate oracles at sf0.01) — only the pair-generation step
 # changes from an N^2 cross-compare to the banded/inverted equi-join that
 # the semantics themselves define, so the oracle's work follows the same
