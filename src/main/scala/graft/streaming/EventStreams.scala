@@ -861,31 +861,30 @@ object EventStreams {
         col("fin.n").as("n"), col("fin.sum_cents").as("sum_cents"))
   }
 
-  /** Shared machinery of the streaming-replay contract queries: stage the
-    * normalized events to a temp parquet dir, run `build`'s streaming plan
-    * over a file stream of it into a memory sink, then append two
-    * far-future sentinel batches (user −7, type "__wm", +100h/+101h) so
-    * the watermark sweeps every real window closed (two, because a
-    * watermark-gated emission fires only in a batch AFTER the watermark
-    * advanced — the differential specs' proven sentinel pattern). Returns
-    * the sink as a batch frame; callers filter the sentinel rows. The only
-    * driver transfer is the 1-row max-ts scalar; sink contents are
-    * aggregate-sized.
+  /** The replay inputs of one source dir, staged once per JVM: `events`,
+    * the normalized events; `sentinels`, the two far-future sentinel files
+    * in the order they are fed; `schema`, the events schema the file stream
+    * reads them with.
     */
-  /** One staged copy of the normalized events per source dir: the six
-    * replays' staging writes are byte-identical, so the write (and the
-    * max-ts scan) run once per JVM and each replay HARD-LINKS the
-    * immutable part files into its own source dir. Each replay still owns
-    * its dir because it appends its own sentinel batches — a shared dir
-    * would put replay A's far-future watermark sentinels into replay B's
-    * first batch. Returns (staged path, max event ts in ms).
-    */
-  private val stagedEvents =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private final case class Staged(events: String, sentinels: Seq[String],
+                                  schema: org.apache.spark.sql.types.StructType)
 
-  private def stageEventsShared(s: org.apache.spark.sql.SparkSession,
-                                dir: String): (String, Long) =
-    stagedEvents.computeIfAbsent(dir, _ => {
+  private val staged = new java.util.concurrent.ConcurrentHashMap[String, Staged]()
+
+  /** Stages the replay inputs of `dir` on the first call and returns them on
+    * every later one: the normalized events, both sentinel files (user −7,
+    * type "__wm", ids −1 and −2, +100h and +101h past the last event) and
+    * the events schema. Every replay's staging is byte-identical, so the
+    * three write jobs, the max-ts scan and the parquet schema-inference job
+    * run once per JVM; each replay HARD-LINKS the immutable part files into
+    * its own source dir ([[linkParts]]). Each replay still owns that dir
+    * because it feeds the sentinels in batch by batch — a shared dir would
+    * put replay A's far-future watermark sentinels into replay B's first
+    * batch.
+    */
+  private def stageEventsShared(s: org.apache.spark.sql.SparkSession, dir: String): Staged =
+    staged.computeIfAbsent(dir, _ => {
+      import s.implicits._
       val ev = graft.Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
           col("value").cast("double").as("value"))
@@ -898,40 +897,66 @@ object EventStreams {
             .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
         } catch { case scala.util.control.NonFatal(_) => () }
       }))
-      val shared = root.toString + "/in"
-      ev.write.parquet(shared)
+      ev.write.parquet(s"$root/in")
       val maxMs = ev.agg(max(col("ts"))).head().getTimestamp(0).getTime
-      (shared, maxMs)
+      val sentinels = Seq(-1L -> 100L, -2L -> 101L).map { case (id, hours) =>
+        val out = s"$root/wm$hours"
+        Seq(Event(id, new Timestamp(maxMs + hours * 3600000L), -7L, "__wm", 0.0)).toDS()
+          .write.parquet(out)
+        out
+      }
+      Staged(s"$root/in", sentinels, ev.schema)
     })
 
-  /** `stateStoreProvider`: optional override of
-    * `spark.sql.streaming.stateStore.providerClass` for this one replay —
-    * applied on a session CLONE (own SQLConf, shared SparkContext), so a
-    * concurrent replay on the parent session never sees the flipped conf.
-    * The production choice at 100 TB streaming state is RocksDB (state
+  /** Hard-links the part files of staged dir `from` into `to`, copying
+    * where links fail. IOException covers both no-hard-link filesystems
+    * and cross-device links (FileSystemException EXDEV, when
+    * java.io.tmpdir spans devices).
+    */
+  private def linkParts(from: String, to: String): Unit =
+    new java.io.File(from).listFiles().filter(_.getName.startsWith("part-")).foreach { f =>
+      val dst = java.nio.file.Paths.get(to, f.getName)
+      try java.nio.file.Files.createLink(dst, f.toPath)
+      catch {
+        case _: UnsupportedOperationException | _: java.io.IOException =>
+          java.nio.file.Files.copy(f.toPath, dst)
+      }
+    }
+
+  /** Shared machinery of the streaming-replay contract queries: run
+    * `build`'s streaming plan over a file stream of the staged events
+    * ([[stageEventsShared]]) into a memory sink, then feed the two
+    * far-future sentinel files so the watermark sweeps every real window
+    * closed (two, because a watermark-gated emission fires only in a batch
+    * AFTER the watermark advanced — the differential specs' proven sentinel
+    * pattern). Returns the sink as a batch frame on `s0`; callers filter
+    * the sentinel rows. A replay collects nothing; sink contents are
+    * aggregate-sized.
+    *
+    * Every replay runs on a private clone of `s0` (own SQLConf, shared
+    * SparkContext) that starts with a copy of `s0`'s runtime conf, so a
+    * replay and its provider twin compare two providers, not two configs,
+    * and no conf is ever set on `s0`. The clone writes its checkpoint
+    * through [[LocalCheckpointFileManager]]; `stateStoreProvider`
+    * overrides `spark.sql.streaming.stateStore.providerClass` on it. The
+    * production choice at 100 TB streaming state is RocksDB (state
     * off-heap + on-disk, bounded executor heap); the replay certificates
     * default to the HDFS-backed in-memory provider and the `_rocksdb`
     * contract twins pin provider-equivalence through the driver's gate.
+    * `s0`'s streaming listeners are added to the clone while the query
+    * runs and removed once the listener bus has delivered its last event,
+    * so each of them sees every replay batch exactly once.
     */
   private def replayEvents(s0: org.apache.spark.sql.SparkSession, dir: String,
                            tag: String, mode: String = "append",
                            stateStoreProvider: Option[String] = None)
                           (build: Dataset[Event] => DataFrame): DataFrame = {
-    val s = stateStoreProvider.fold(s0) { p =>
-      val clone = s0.newSession()
-      // newSession() seeds its SQLConf from the SparkContext conf only —
-      // runtime confs set AFTER the parent session came up (tuned shuffle
-      // partitions, a flipped AQE knob) would silently differ between the
-      // provider-override twin and its default-provider sibling, making
-      // the provider-equivalence certificate compare two configs instead
-      // of two providers. Copy the parent's runtime conf onto the clone
-      // first; static/non-modifiable entries throw on set and are already
-      // inherited via the context conf, so they are skipped.
-      s0.conf.getAll.foreach { case (k, v) =>
-        try clone.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      clone.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+    import org.apache.spark.sql.graft.bridge
+    val s = bridge.cloneSession(s0)
+    s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[LocalCheckpointFileManager].getName)
+    stateStoreProvider.foreach { p =>
+      s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       // Changelog checkpointing (r13): the RocksDB provider's default
       // commit uploads a FULL state snapshot per micro-batch per partition;
       // changelog mode uploads just the batch's delta and snapshots in the
@@ -940,45 +965,31 @@ object EventStreams {
       // of tiny deltas). State content, batch count and emitted rows are
       // unchanged — the provider-equivalence certificate still compares
       // the same two providers, one IO strategy cheaper.
-      clone.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      clone
+      s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     }
-    import s.implicits._
-    // schema only — no job runs on this frame; data comes from the shared
-    // staged copy
-    val ev = graft.Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value").cast("double").as("value"))
-    val (shared, maxMs) = stageEventsShared(s, dir)
+    val inputs = stageEventsShared(s, dir)
     val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
     val src = s"$tmp/in"
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(src))
-    new java.io.File(shared).listFiles()
-      .filter(_.getName.startsWith("part-")).foreach { f =>
-        val dst = java.nio.file.Paths.get(src, f.getName)
-        // IOException covers both no-hard-link filesystems
-        // (UnsupportedOperationException) and cross-device links
-        // (FileSystemException EXDEV, when java.io.tmpdir spans devices)
-        try java.nio.file.Files.createLink(dst, f.toPath)
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(f.toPath, dst)
-        }
-      }
-    val in = s.readStream.schema(ev.schema).parquet(src).as[Event]
+    linkParts(inputs.events, src)
+    import s.implicits._
+    val in = s.readStream.schema(inputs.schema).parquet(src).as[Event]
     val qname = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = build(in).writeStream.format("memory").queryName(qname)
-      .outputMode(mode).option("checkpointLocation", s"$tmp/ckpt").start()
+    val listeners = s0.streams.listListeners()
+    listeners.foreach(s.streams.addListener)
     try {
-      q.processAllAvailable() // the real events
-      Seq(Event(-1L, new Timestamp(maxMs + 100L * 3600000L), -7L, "__wm", 0.0)).toDS()
-        .write.mode("append").parquet(src)
-      q.processAllAvailable() // watermark passes every real window
-      Seq(Event(-2L, new Timestamp(maxMs + 101L * 3600000L), -7L, "__wm", 0.0)).toDS()
-        .write.mode("append").parquet(src)
-      q.processAllAvailable() // fires the now-expired emissions
-    } finally q.stop()
+      val q = build(in).writeStream.format("memory").queryName(qname)
+        .outputMode(mode).option("checkpointLocation", s"$tmp/ckpt").start()
+      try {
+        q.processAllAvailable() // the real events
+        // the first sentinel moves the watermark past every real window; the
+        // second fires the emissions that expired with it
+        inputs.sentinels.foreach { wm => linkParts(wm, src); q.processAllAvailable() }
+      } finally q.stop()
+    } finally if (listeners.nonEmpty) {
+      bridge.drainListeners(s)
+      listeners.foreach(s.streams.removeListener)
+    }
     // the memory sink lives in the session, not on disk — the replay's
     // private source links + checkpoint are dead weight once the query
     // stops (same per-invocation leak class the r9 certification-staging
@@ -992,7 +1003,9 @@ object EventStreams {
       java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
         .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
     } catch { case scala.util.control.NonFatal(_) => () }
-    s.table(qname)
+    // the sink's temp view lives in the clone; `.logical` would re-resolve
+    // it there, the analyzed plan holds the sink itself
+    bridge.onSession(s0, s.table(qname))
   }
 
   final case class FirstTouch(user_id: Long, fday: Long)

@@ -7,13 +7,30 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Bridge into `private[sql]` surface: Column ↔ Expression conversion for
   * custom Catalyst expressions, an eager local checkpoint fused with its
-  * materialization count, and a listener-bus drain for profiling tools. Namespaced under org.apache.spark.sql by
+  * materialization count, session cloning, and a listener-bus drain for
+  * profiling tools and streaming replays. Namespaced under org.apache.spark.sql by
   * necessity (the standard pattern for Spark extension libraries);
   * contains no query logic.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A private session on the same SparkContext that starts with a copy of
+    * `spark`'s runtime conf, temp views and registered functions; confs set
+    * on the clone never reach `spark`. (`newSession()` starts from the
+    * context conf only.)
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `spark`. That plan already holds
+    * what `df`'s temp views resolved to, so it stays valid on a session
+    * where those views do not exist.
+    */
+  def onSession(spark: SparkSession, df: DataFrame): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.asInstanceOf[Dataset[Row]].queryExecution.analyzed)
 
   /** Blocks until every event posted so far has reached every listener. */
   def drainListeners(spark: SparkSession): Unit =

@@ -333,22 +333,82 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("RocksDB state-store replays equal their default-provider twins row-for-row") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
     val sf = "/root/testdata/sf0.001"
-    def rows(d: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    // (replay tag, batch id) of every progress event with state operators
+    // that a listener on the CALLER's session sees; the tag is the query
+    // name minus its `_<uuid>` suffix
+    val seen = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.stateOperators.nonEmpty)
+          seen.synchronized(seen += e.progress.name.dropRight(33) -> e.progress.batchId)
+    }
+    def rows(d: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = {
+      assert(d.sparkSession eq spark, "the replay's frame must be on the caller's session")
       d.collect().map(_.toSeq).toSet
-    val dedupDefault = rows(EventStreams.streamingDedupReplay(spark, sf))
-    val dedupRocks = rows(EventStreams.streamingDedupReplayRocksDb(spark, sf))
-    assert(dedupDefault.nonEmpty)
-    assert(dedupRocks == dedupDefault,
-      s"provider changed the chained dedup→agg result: ${dedupRocks.size} vs ${dedupDefault.size} rows")
-    val sessDefault = rows(EventStreams.streamingSessionsReplay(spark, sf))
-    val sessRocks = rows(EventStreams.streamingSessionsReplayRocksDb(spark, sf))
-    assert(sessDefault.nonEmpty)
-    assert(sessRocks == sessDefault,
-      s"provider changed the session-window result: ${sessRocks.size} vs ${sessDefault.size} rows")
-    // the override must not leak into the parent session's conf
+    }
+    spark.streams.addListener(listener)
+    try {
+      val dedupDefault = rows(EventStreams.streamingDedupReplay(spark, sf))
+      val dedupRocks = rows(EventStreams.streamingDedupReplayRocksDb(spark, sf))
+      assert(dedupDefault.nonEmpty)
+      assert(dedupRocks == dedupDefault,
+        s"provider changed the chained dedup→agg result: ${dedupRocks.size} vs ${dedupDefault.size} rows")
+      val sessDefault = rows(EventStreams.streamingSessionsReplay(spark, sf))
+      val sessRocks = rows(EventStreams.streamingSessionsReplayRocksDb(spark, sf))
+      assert(sessDefault.nonEmpty)
+      assert(sessRocks == sessDefault,
+        s"provider changed the session-window result: ${sessRocks.size} vs ${sessDefault.size} rows")
+      assert(rows(EventStreams.streamingCountsReplay(spark, sf)).nonEmpty)
+    } finally spark.streams.removeListener(listener)
+    // each replay returns only after the listener bus has delivered its
+    // batches, and the listener sees each batch once: the counts replay
+    // runs three (events, two sentinels); a watermarked replay adds a
+    // no-data batch after each, on either provider
+    def batches(tag: String): Seq[Long] = seen.synchronized(seen.collect { case (`tag`, b) => b }.toSeq)
+    assert(batches("counts_replay").sorted == Seq(0L, 1L, 2L), seen)
+    val twin = batches("dedup_replay_rocksdb")
+    assert(twin.size >= 3 && twin.sorted == (0L until twin.size.toLong), seen)
+    assert(twin.size == batches("dedup_replay").size, seen)
+    // the overrides must not leak into the parent session's conf
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       != EventStreams.RocksDbProvider)
+    assert(spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty)
+  }
+
+  test("a staged replay launches no chmod, readlink or stat process") {
+    // Hadoop's local filesystem without libhadoop forks these per checkpoint
+    // file; LocalCheckpointFileManager and the once-staged sentinels avoid
+    // every one. Trivially green where libhadoop is loaded.
+    import scala.jdk.CollectionConverters._
+    val sf = "perfbench/fixture" // the sf0.001 tables, relative to the build root
+    EventStreams.streamingCountsReplay(spark, sf).collect() // stages the inputs
+    val jfr = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      EventStreams.streamingCountsReplay(spark, sf).collect()
+      // one known process, so an empty recording cannot pass for a clean one
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      rec.dump(jfr)
+      val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .map(_.getString("command")).toSeq
+      val names = commands.map(_.trim.takeWhile(_ != ' ').split('/').last)
+      assert(names.contains("true"), commands)
+      val forks = commands.zip(names).collect {
+        case (c, n) if Set("chmod", "readlink", "stat")(n) => c
+      }
+      assert(forks.isEmpty, s"${forks.size} forks, e.g. ${forks.take(5)}")
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(jfr)
+    }
   }
 
   test("checkpoint restart recovery: a killed windowed-agg query resumes exactly-once into a file sink") {
