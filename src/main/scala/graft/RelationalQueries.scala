@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import java.util.concurrent.TimeUnit
 
 /** Relational query surface: scan/filter/project/join/agg/window/distinct —
   * the capabilities the reference exposes through its Raco/Myria frontend
@@ -323,10 +324,6 @@ object RelationalQueries {
           .as("v_trailing"))
   }
 
-  /** Contract instance over the events table. */
-  def rollingHourQuery(s: SparkSession, d: String): DataFrame =
-    rollingHourRange(events(s, d))
-
   /** Distinct aggregates: suppliers and parts per order. */
   def distinctAgg(s: SparkSession, d: String): DataFrame =
     lineitem(s, d)
@@ -373,6 +370,33 @@ object RelationalQueries {
         max(col("tms")).as("session_end"),
         count(lit(1)).as("n_events"),
         Num.centsSumExact(col("value")).as("total_value"))
+  }
+
+  /** DuckDB twin of [[sessionizeBatch]]'s gap rule as three CTEs: `e`, the
+    * events with an integer time column; `s`, where `ns` = 1 when the gap
+    * to the user's previous event EXCEEDS `gapMs`; `t`, the running session
+    * number `sessionCol`. `unit` is the time grain: MILLISECONDS (`tms`,
+    * the sessionizeBatch grain) or MICROSECONDS (`tus`, the grain that
+    * replays [[sessionWindowAgg]] without mis-splitting sub-ms gaps).
+    */
+  private[graft] def sessionizeOracleCtes(gapMs: Long, unit: TimeUnit,
+                                          sessionCol: String): String = {
+    val (t, time) = unit match {
+      case TimeUnit.MILLISECONDS => ("tms", "epoch_ns(ts) // 1000000")
+      case TimeUnit.MICROSECONDS => ("tus", "epoch_us(ts)")
+      case u => throw new IllegalArgumentException(s"sessionize oracle: no $u grain")
+    }
+    s"""e AS (
+           SELECT user_id, event_id, $time AS $t, value FROM events),
+         s AS (
+           SELECT *, CASE WHEN $t - lag($t) OVER
+               (PARTITION BY user_id ORDER BY $t, event_id) > ${unit.convert(gapMs, TimeUnit.MILLISECONDS)}
+             THEN 1 ELSE 0 END AS ns
+           FROM e),
+         t AS (
+           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY $t, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS $sessionCol
+           FROM s)"""
   }
 
   /** Sessionization via Spark's NATIVE `session_window` (the engine's own
@@ -489,11 +513,6 @@ object RelationalQueries {
       .otherwise(acc)).getField("stage").cast("long").as("funnel_stage")
   }
 
-
-  /** Contract instance: view → click → purchase over the events table. */
-  def funnelQuery(s: SparkSession, d: String): DataFrame =
-    funnelStages(events(s, d), Seq("view", "click", "purchase"))
-
   /** Funnel with TIME-TO-CONVERT: depth plus the exact microseconds from
     * the stage-1 completion to the deepest completed stage (NULL below
     * depth 2 — no interval exists). Same greedy fold with the accumulator
@@ -522,9 +541,34 @@ object RelationalQueries {
           .as("convert_us"))
   }
 
-  /** Contract instance of [[funnelTiming]]. */
-  def funnelTimingQuery(s: SparkSession, d: String): DataFrame =
-    funnelTiming(events(s, d), Seq("view", "click", "purchase"))
+  /** DuckDB twin of [[funnelStages]] (and, with `timing`, of
+    * [[funnelTiming]]), generated from the same stages: the classic stage
+    * chain — `s<i>` is each user's earliest stage-i event strictly after
+    * their `s<i-1>` — then per user the deepest completed stage and, with
+    * `timing`, the µs from the stage-1 event to the deepest one.
+    */
+  private[graft] def funnelOracleSql(stages: Seq[String], timing: Boolean): String = {
+    val n = stages.length
+    val chain = stages.map(_.replace("'", "''")).zipWithIndex.map {
+      case (st, 0) => s"""s1 AS (SELECT user_id, min(ts) AS t FROM events
+                WHERE event_type = '$st' GROUP BY 1)"""
+      case (st, i) => s"""s${i + 1} AS (SELECT e.user_id, min(e.ts) AS t FROM events e
+                JOIN s$i ON e.user_id = s$i.user_id AND e.ts > s$i.t
+                WHERE e.event_type = '$st' GROUP BY 1)"""
+    }.mkString(",\n         ")
+    def cases(from: Int, value: Int => String): String = (n to from by -1)
+      .map(i => s"WHEN s$i.user_id IS NOT NULL THEN ${value(i)}").mkString("\n                      ")
+    val convert = if (!timing) "" else s""",
+                (CASE ${cases(2, i => s"epoch_us(s$i.t) - epoch_us(s1.t)")}
+                      ELSE NULL END)::BIGINT AS convert_us"""
+    s"""WITH u AS (SELECT DISTINCT user_id FROM events),
+         $chain
+         SELECT u.user_id,
+                (CASE ${cases(1, _.toString)}
+                      ELSE 0 END)::BIGINT AS funnel_stage$convert
+         FROM u
+         ${(1 to n).map(i => s"LEFT JOIN s$i ON u.user_id = s$i.user_id").mkString("\n         ")}"""
+  }
 
   /** Cohort retention: users grouped by first-seen day; for each (cohort
     * day, day offset), how many of the cohort's users were active. Day
@@ -541,10 +585,6 @@ object RelationalQueries {
       .groupBy(col("cohort_day"), (col("d") - col("cohort_day")).as("offset_days"))
       .agg(count(lit(1)).as("n_users"))
   }
-
-  /** Contract instance over the events table. */
-  def cohortQuery(s: SparkSession, d: String): DataFrame =
-    cohortRetention(events(s, d))
 
   /** Event-rate anomaly detection: per (event_type, hour) counts scored
     * against the trailing 24-hour window — z = (n − mean)/sd, the
@@ -580,10 +620,6 @@ object RelationalQueries {
         when(col("sd") === 0d, lit(null).cast("double"))
           .otherwise((col("n") - col("mean")) / col("sd")).as("z"))
   }
-
-  /** Contract instance over the events table. */
-  def rateAnomalyQuery(s: SparkSession, d: String): DataFrame =
-    rateAnomaly(events(s, d))
 
   /** Skyline (Pareto frontier): parts not dominated on
     * (minimize p_retailprice, maximize p_size) — the multi-objective
@@ -630,10 +666,6 @@ object RelationalQueries {
         "left_semi")
       .select(col("p_partkey"), col("p_retailprice"), col("p_size").cast("long").as("p_size"))
   }
-
-  /** Contract instance over the part table. */
-  def skylineQuery(s: SparkSession, d: String): DataFrame =
-    skyline(part(s, d))
 
   /** THREE-dimensional skyline (minimize price, maximize size and a third
     * metric) — the [[skyline]] bucket argument generalized one dimension
@@ -706,10 +738,6 @@ object RelationalQueries {
         "left_semi")
   }
 
-  /** Contract instance over the part table. */
-  def skyline3dQuery(s: SparkSession, d: String): DataFrame =
-    skyline3d(part(s, d))
-
   /** First-order Markov transition counts over each user's event sequence
     * (ordered by ts, event_id) — the path-analysis complement to the
     * funnel queries: which step follows which, corpus-wide. One
@@ -746,10 +774,6 @@ object RelationalQueries {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Contract instance over the events table. */
-  def eventPathsQuery(s: SparkSession, d: String): DataFrame =
-    eventPaths(events(s, d))
-
   /** Period-over-period deltas: per (event_type, day) the event count
     * and exact cents volume next to the PREVIOUS day-with-data's values
     * (absent days don't emit rows, so "previous" is the previous
@@ -772,10 +796,6 @@ object RelationalQueries {
         col("cents"), col("prev_cents"),
         (col("cents") - col("prev_cents")).as("delta_cents"))
   }
-
-  /** Contract instance over the events table. */
-  def periodOverPeriodQuery(s: SparkSession, d: String): DataFrame =
-    periodOverPeriod(events(s, d))
 
   /** Gaps-and-islands: merge each user's overlapping intervals into
     * maximal islands. Intervals are VARIABLE length (duration derived
@@ -807,10 +827,6 @@ object RelationalQueries {
       .agg(min(col("s_ms")).as("start_ms"), max(col("e_ms")).as("end_ms"),
         count(lit(1)).as("n_events"))
   }
-
-  /** Contract instance over the events table. */
-  def intervalMergeQuery(s: SparkSession, d: String): DataFrame =
-    intervalMerge(events(s, d))
 
   /** Cumulative distinct active users per observed day: a rolling
     * COUNT(DISTINCT) made linear by the first-touch identity — the
@@ -855,10 +871,6 @@ object RelationalQueries {
       .groupBy(coalesce(col("att"), lit("none")).as("att_type"))
       .agg(count(lit(1)).as("n_purchases"), sum(col("cents")).as("cents"))
   }
-
-  /** Contract instance over the events table. */
-  def attributionQuery(s: SparkSession, d: String): DataFrame =
-    attributionLastTouch(events(s, d))
 
   /** Referential-integrity audit across the star schema: per FK
     * relationship, the child rows whose key has no parent (orphans) and
@@ -917,10 +929,6 @@ object RelationalQueries {
         count(lit(1)).as("n"))
   }
 
-  /** Contract instance over the events table. */
-  def ohlcQuery(s: SparkSession, d: String): DataFrame =
-    ohlcDownsample(events(s, d))
-
   /** Gap-fill with carry-forward (LOCF): densify each event_type's hourly
     * series over its own [min, max] hour span, filling missing hours with
     * the last observed closing value — the resample-then-interpolate step
@@ -950,10 +958,6 @@ object RelationalQueries {
       .select(col("event_type"), col("h"),
         col("v").isNotNull.cast("long").as("observed"), col("fv"))
   }
-
-  /** Contract instance over the events table. */
-  def gapFillQuery(s: SparkSession, d: String): DataFrame =
-    gapFill(events(s, d))
 
   /** Winsorization: clip each value into its event_type's [p_lo, p_hi]
     * discrete-percentile band — outlier taming before any moment-based
@@ -1021,10 +1025,6 @@ object RelationalQueries {
         max(when(col("q") === "hi", col("value"))).as("vhi"))
   }
 
-  /** Contract instance over the events table. */
-  def winsorizeQuery(s: SparkSession, d: String): DataFrame =
-    winsorize(events(s, d))
-
   /** The value at integer rank `rankSql` (a SQL expression over the
     * per-type count `n`, e.g. `"(n + 1) div 2"`) per event_type of
     * `vals(event_type, value)` — the histogram-decomposed rank pick
@@ -1079,10 +1079,6 @@ object RelationalQueries {
           .as("n_outliers"))
   }
 
-  /** Contract instance over the events table. */
-  def robustZscoreQuery(s: SparkSession, d: String): DataFrame =
-    robustZscore(events(s, d))
-
   /** Time-weighted average per (event_type, day): each observation holds
     * until the type's next event; a day's last observation holds into
     * the next day-with-events, the whole interval assigned to the day it
@@ -1122,10 +1118,6 @@ object RelationalQueries {
         count(lit(1)).as("n_holds"))
   }
 
-  /** Contract instance over the events table. */
-  def twapQuery(s: SparkSession, d: String): DataFrame =
-    twap(events(s, d))
-
   /** EWMA (α = ½) over each type's hourly closing values, emitted as the
     * EXACT integer pair num = Σ_{k=0..15} close_cents_{i−k} · 2^{15−k},
     * den = Σ 2^{15−k} over the lags that exist — the quotient num/den is
@@ -1154,10 +1146,6 @@ object RelationalQueries {
       num.as("ewma_num"), den.as("ewma_den"))
   }
 
-  /** Contract instance over the events table. */
-  def ewmaQuery(s: SparkSession, d: String): DataFrame =
-    ewmaSmooth(events(s, d))
-
   /** Semi-structured extraction: the JSON `props` payload parsed per row
     * (`get_json_object` — codegen'd, no UDF), the extracted integer
     * aggregated per event_type with rows that fail to parse counted, not
@@ -1171,10 +1159,6 @@ object RelationalQueries {
       .agg(count(lit(1)).as("n"), count(col("k")).as("n_parsed"),
         sum(col("k")).as("sum_k"), min(col("k")).as("min_k"), max(col("k")).as("max_k"),
         countDistinct(col("k")).as("ndv_k"))
-
-  /** Contract instance over the events table. */
-  def jsonExtractQuery(s: SparkSession, d: String): DataFrame =
-    jsonExtractStats(events(s, d))
 
   /** Maximum drawdown per (event_type, day): the largest drop from any
     * earlier (global, cross-day) running peak to a value in the day —
@@ -1205,10 +1189,6 @@ object RelationalQueries {
       .agg(max(col("run_max") - col("cents")).as("max_drawdown_cents"),
         count(lit(1)).as("n"))
   }
-
-  /** Contract instance over the events table. */
-  def maxDrawdownQuery(s: SparkSession, d: String): DataFrame =
-    maxDrawdown(events(s, d))
 
   /** Quantile (rank) normalization: every value mapped to its tie-aware
     * percent rank (rank−1)/(n−1) within its event_type — the ML
@@ -1246,10 +1226,6 @@ object RelationalQueries {
             (col("n") - 1).cast("double"))
           .otherwise(lit(0.5d)).as("qnorm"))
   }
-
-  /** Contract instance over the events table. */
-  def quantileNormalizeQuery(s: SparkSession, d: String): DataFrame =
-    quantileNormalize(events(s, d))
 
   /** Equi-DEPTH histogram: the k−1 interior quantile boundaries per
     * event_type, each the PICKED value at discrete rank ⌈j·n/k⌉ (exact
@@ -1292,10 +1268,6 @@ object RelationalQueries {
       .filter(col("rn") === col("local_rank"))
       .select(col("event_type"), col("j").as("decile"), col("value").as("boundary"))
   }
-
-  /** Contract instance over the events table. */
-  def equiDepthQuery(s: SparkSession, d: String): DataFrame =
-    equiDepth(events(s, d))
 
   /** Distinct (order, brand) basket frame shared by [[basketPairs]] and
     * [[assocRules]] — computed ONCE and persisted via `InternalCaches`
@@ -2401,10 +2373,6 @@ object RelationalQueries {
         col("k_eff"), col("inter_k"), col("kth_hash"))
   }
 
-  /** Contract instance over the events table. */
-  def kmvOverlapQuery(s: SparkSession, d: String): DataFrame =
-    kmvOverlap(events(s, d))
-
   /** Functional-dependency audit — the data-profiling complement of
     * ref_integrity's FK check: for each CANDIDATE determinant→dependent
     * pair, the number of determinant values mapping to more than one
@@ -2726,6 +2694,13 @@ object RelationalQueries {
   private def abArm: org.apache.spark.sql.Column =
     when(pmod(graft.functions.PortableHash.hash60(
       concat(lit("ab_"), col("user_id"))), lit(2L)) === 0L, "A").otherwise("B")
+
+  /** DuckDB twin of [[abArm]]: `armA` where the salted user hash is even,
+    * else `armB` (SQL expressions: the arm labels or 1/0 indicators).
+    */
+  private[graft] def abArmSql(armA: String, armB: String): String =
+    s"""CASE WHEN ${graft.functions.PortableHash.duckdbHash60("'ab_' || user_id::VARCHAR")} % 2 = 0
+                     THEN $armA ELSE $armB END"""
 
   /** χ² test of independence (2×2, per event type): does arm membership
     * predict conversion (event value ≥ $50)? The four cell counts are one
@@ -3228,10 +3203,10 @@ object RelationalQueries {
       }
     val lo = (0.025 * bootstrapB).ceil.toInt.max(1)
     val hi = (0.975 * bootstrapB).ceil.toInt.min(bootstrapB)
+    val h = graft.functions.PortableHash.duckdbHash60("'boot_' || event_id::VARCHAR || '_' || b::VARCHAR")
     s"""WITH fan AS (
           SELECT event_type, round(value * 100)::BIGINT AS cents,
-                 (('0x' || substring(md5('boot_' || event_id::VARCHAR || '_' || b::VARCHAR),
-                    1, 15))::BIGINT % ${1L << 60})::DOUBLE / ${(1L << 60).toDouble} AS u,
+                 ($h % ${1L << 60})::DOUBLE / ${(1L << 60).toDouble} AS u,
                  b
           FROM events, (SELECT unnest(range(0, $bootstrapB)) AS b)),
         cells AS (

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.CosineSimilarity.duckdbCos
+import graft.functions.PortableHash.duckdbHash60
+import java.util.concurrent.TimeUnit
 
 /** Driver contract — see SURVEY.md §7.
   *
@@ -43,14 +46,24 @@ object SparkEntry {
 
   /** DuckDB twin of [[hashGraph]]: the directed edges as `(s, t)`. */
   private val HashEdgesSql =
-    """SELECT ('0x' || substring(md5('tv_' || l_orderkey::VARCHAR), 1, 15))::BIGINT % 20011 AS s,
-              ('0x' || substring(md5('tw_' || l_partkey::VARCHAR), 1, 15))::BIGINT % 20011 AS t
+    s"""SELECT ${duckdbHash60("'tv_' || l_orderkey::VARCHAR")} % 20011 AS s,
+              ${duckdbHash60("'tw_' || l_partkey::VARCHAR")} % 20011 AS t
        FROM lineitem"""
 
   /** The canonical undirected edges `(a, b)`, a < b, of [[HashEdgesSql]]. */
   private val HashUndSql =
     s"""SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM ($HashEdgesSql)
         WHERE s <> t"""
+
+  /** The query terms bm25_score and hybrid_search score, shared by their
+    * plans and generated oracles.
+    */
+  private val SearchTerms = Seq("spark", "join", "vector")
+
+  /** The funnel_stages and funnel_timing stages, shared by their plans and
+    * generated oracles.
+    */
+  private val FunnelStages = Seq("view", "click", "purchase")
 
   /** The retrieval_eval query batch — shared between the Spark plan and
     * the generated DuckDB oracle so the two can never drift.
@@ -114,6 +127,61 @@ object SparkEntry {
          FROM ($union)"""
   }
 
+  // --- oracles shared by a batch contract and its streaming replays: a
+  // replay must land on exactly its batch twin's answer, so both entries
+  // hold the same value (ContractsSpec pins the pairing) ---
+
+  /** ohlc_downsample and streaming_ohlc_replay. */
+  private val OhlcSql =
+    """WITH b AS (
+         SELECT event_type, (floor(epoch(ts) / 3600))::BIGINT AS h,
+                ts, event_id, value
+         FROM events),
+       r AS (
+         SELECT event_type, h, value,
+                row_number() OVER (PARTITION BY event_type, h
+                                   ORDER BY ts, event_id) AS ra,
+                row_number() OVER (PARTITION BY event_type, h
+                                   ORDER BY ts DESC, event_id DESC) AS rd
+         FROM b)
+       SELECT event_type, h,
+              max(CASE WHEN ra = 1 THEN value END) AS o,
+              max(CASE WHEN rd = 1 THEN value END) AS c,
+              min(value) AS lo, max(value) AS hi, count(*)::BIGINT AS n
+       FROM r GROUP BY 1, 2"""
+
+  /** events_bin and streaming_bin_replay. */
+  private val EventsBinSql =
+    """SELECT (floor(epoch(ts) / 3600) * 3600)::BIGINT AS bin, event_type,
+              sum(round(value * 100)::BIGINT) / 100.0 AS sum_value, count(*)::BIGINT AS n
+       FROM events GROUP BY 1, 2"""
+
+  /** click_purchase_join and streaming_join_replay. */
+  private val ClickPurchaseSql =
+    """SELECT b.event_id AS purchase_id, c.event_id AS click_id,
+              (epoch_us(b.ts) - epoch_us(c.ts))::BIGINT AS gap_us
+       FROM events b JOIN events c
+         ON c.user_id = b.user_id
+        AND c.ts >= b.ts - INTERVAL 1 HOUR AND c.ts <= b.ts
+       WHERE b.event_type = 'purchase' AND c.event_type = 'click'"""
+
+  /** session_window_agg and both streaming_sessions_replay providers: the
+    * 30-minute gap in µs, window end = last event + gap.
+    */
+  private val SessionWindowSql =
+    s"""WITH ${RelationalQueries.sessionizeOracleCtes(1800000L, TimeUnit.MICROSECONDS, "sid")}
+       SELECT user_id, min(tus) AS session_start_us,
+              max(tus) + 1800000000 AS session_end_us,
+              count(*)::BIGINT AS n_events,
+              sum(round(value * 100)::BIGINT) / 100.0 AS total_value
+       FROM t GROUP BY user_id, sid"""
+
+  /** Both streaming_dedup_replay providers: distinct users per (UTC day, type). */
+  private val DailyUsersSql =
+    """SELECT (floor(epoch(ts) / 86400) * 86400)::BIGINT AS day, event_type,
+              count(DISTINCT user_id)::BIGINT AS n_users
+       FROM events GROUP BY 1, 2"""
+
   /** One contract query: its Spark plan over (session, sf dir) and the
     * DuckDB SQL that must return the same rows over the same parquet.
     */
@@ -140,8 +208,9 @@ object SparkEntry {
   }
 
   /** Every contract query, in section order. Declared after [[HashEdgesSql]],
-    * [[HashUndSql]] and [[evalQueries]]: a forward reference inside an
-    * object reads null, which would end up inside the oracle SQL.
+    * [[HashUndSql]], [[evalQueries]] and the shared twin oracles: a forward
+    * reference inside an object reads null, which would end up inside the
+    * oracle SQL.
     */
   val contracts: Seq[Contract] = Seq(
     // --- Lara core (SURVEY §2.1): Ext / Map / Union / Agg / Join / Rename ---
@@ -545,27 +614,22 @@ object SparkEntry {
     // native stream-stream join) ---
     Contract("click_purchase_join", RelationalQueries.clickPurchaseJoin _,
       // Interval join: equi-join on user with the time band as residual.
-      """SELECT b.event_id AS purchase_id, c.event_id AS click_id,
-                (epoch_us(b.ts) - epoch_us(c.ts))::BIGINT AS gap_us
-         FROM events b JOIN events c
-           ON c.user_id = b.user_id
-          AND c.ts >= b.ts - INTERVAL 1 HOUR AND c.ts <= b.ts
-         WHERE b.event_type = 'purchase' AND c.event_type = 'click'"""),
+      ClickPurchaseSql),
     // --- hashing-trick featurizer: token → signed bucket, sparse output ---
     Contract("feature_hash", (s, d) =>
       pipeline.TextAnalysis.featureHash(Tables.documents(s, d)),
       // Hashing-trick featurizer: both hash roles replayed; exactly-cancelled
       // buckets dropped on both sides.
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-                  unnest(list_filter(string_split_regex(text, '\s+'), w -> w <> '')) AS tok
+                  unnest(list_filter(string_split_regex(text, '\\s+'), w -> w <> '')) AS tok
            FROM documents)
          SELECT doc_id,
-                ('0x' || substring(md5('fh_' || tok), 1, 15))::BIGINT % 256 AS bucket,
-                sum(CASE WHEN ('0x' || substring(md5('fs_' || tok), 1, 15))::BIGINT % 2 = 0
+                ${duckdbHash60("'fh_' || tok")} % 256 AS bucket,
+                sum(CASE WHEN ${duckdbHash60("'fs_' || tok")} % 2 = 0
                          THEN 1 ELSE -1 END)::BIGINT AS weight
          FROM t GROUP BY 1, 2
-         HAVING sum(CASE WHEN ('0x' || substring(md5('fs_' || tok), 1, 15))::BIGINT % 2 = 0
+         HAVING sum(CASE WHEN ${duckdbHash60("'fs_' || tok")} % 2 = 0
                          THEN 1 ELSE -1 END) <> 0"""),
     // --- per-language tokenizer fertility (subwords per word) totals ---
     Contract("tokenizer_fertility", (s, d) =>
@@ -709,18 +773,13 @@ object SparkEntry {
       pipeline.TrainingData.randomProjection(Tables.embeddings(s, d)),
       // JL sparse projection: replay the quantization rule and the
       // hash-derived density-⅓ sign matrix, then the exact integer dot.
-      """WITH e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         s AS (
-           SELECT vec_id, e,
-                  CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
-           FROM (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e)),
+      s"""WITH ${pipeline.TrainingData.int8ScaleCtes("vec_id")},
          q AS (
            SELECT vec_id, list_transform(e, x -> floor(x / scale + 0.5)::BIGINT) AS qv
            FROM s),
          sg AS (
            SELECT k, i,
-                  CASE (('0x' || substring(md5('rp_' || k::VARCHAR || '_' || i::VARCHAR), 1, 15))::BIGINT % 6)
+                  CASE (${duckdbHash60("'rp_' || k::VARCHAR || '_' || i::VARCHAR")} % 6)
                     WHEN 0 THEN 1::BIGINT WHEN 1 THEN -1::BIGINT ELSE 0::BIGINT END AS sgn
            FROM range(8) t1(k), range(64) t2(i)),
          u AS (
@@ -771,12 +830,7 @@ object SparkEntry {
     },
       // Grid-density clusters: replay quantization for the first two dims,
       // core cells ≥ 3 points, 8-adjacency components by recursive min-label.
-      """WITH RECURSIVE e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         s AS (
-           SELECT vec_id, e,
-                  CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
-           FROM (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e)),
+      s"""WITH RECURSIVE ${pipeline.TrainingData.int8ScaleCtes("vec_id")},
          pt AS (
            SELECT vec_id, floor(e[1] / scale + 0.5)::BIGINT + 127 AS x,
                   floor(e[2] / scale + 0.5)::BIGINT + 127 AS y
@@ -820,10 +874,8 @@ object SparkEntry {
     // --- hash-armed A/B readout as exact integer moment components ---
     Contract("ab_split_stats", RelationalQueries.abSplitQuery _,
       // A/B readout: hash-armed, exact integer moments only.
-      """SELECT event_type,
-                CASE WHEN ('0x' || substring(md5('ab_' || user_id::VARCHAR), 1, 15))::BIGINT
-                          % 2 = 0
-                     THEN 'A' ELSE 'B' END AS arm,
+      s"""SELECT event_type,
+                ${RelationalQueries.abArmSql("'A'", "'B'")} AS arm,
                 count(*)::BIGINT AS n,
                 sum(round(value * 100)::BIGINT)::BIGINT AS sum_cents,
                 sum(round(value * 100)::BIGINT * round(value * 100)::BIGINT)::BIGINT
@@ -833,11 +885,9 @@ object SparkEntry {
     Contract("chi2_independence", RelationalQueries.chi2Query _,
       // χ²: exact BIGINT cell counts; the statistic is the same scalar
       // expression tree as the Spark side (same op order → same IEEE double).
-      """WITH armed AS (
+      s"""WITH armed AS (
            SELECT event_type,
-                  CASE WHEN ('0x' || substring(md5('ab_' || user_id::VARCHAR), 1, 15))::BIGINT
-                            % 2 = 0
-                       THEN 'A' ELSE 'B' END AS arm,
+                  ${RelationalQueries.abArmSql("'A'", "'B'")} AS arm,
                   round(value * 100)::BIGINT >= 5000 AS conv
            FROM events),
          cells AS (
@@ -860,11 +910,9 @@ object SparkEntry {
     Contract("mann_whitney", RelationalQueries.mannWhitneyQuery _,
       // Mann–Whitney: doubled average ranks (2·avg-rank is integral under
       // ties) keep every output BIGINT-exact; window over tie groups only.
-      """WITH armed AS (
+      s"""WITH armed AS (
            SELECT event_type, round(value * 100)::BIGINT AS cents,
-                  CASE WHEN ('0x' || substring(md5('ab_' || user_id::VARCHAR), 1, 15))::BIGINT
-                            % 2 = 0
-                       THEN 1 ELSE 0 END AS isa
+                  ${RelationalQueries.abArmSql("1", "0")} AS isa
            FROM events),
          cells AS (
            SELECT event_type, cents, sum(isa)::BIGINT AS na, count(*)::BIGINT AS nv
@@ -999,11 +1047,9 @@ object SparkEntry {
     // --- two-sample Kolmogorov–Smirnov, integer numerator on n_a·n_b ---
     Contract("ks_test", RelationalQueries.ksTestQuery _,
       // KS: D's integer numerator on the common denominator n_a·n_b.
-      """WITH armed AS (
+      s"""WITH armed AS (
            SELECT event_type, round(value * 100)::BIGINT AS cents,
-                  CASE WHEN ('0x' || substring(md5('ab_' || user_id::VARCHAR), 1, 15))::BIGINT
-                            % 2 = 0
-                       THEN 1 ELSE 0 END AS isa
+                  ${RelationalQueries.abArmSql("1", "0")} AS isa
            FROM events),
          cells AS (
            SELECT event_type, cents, sum(isa)::BIGINT AS na_v,
@@ -1301,9 +1347,7 @@ object SparkEntry {
                 count(DISTINCT l_partkey)::BIGINT AS n_part
          FROM lineitem GROUP BY l_orderkey"""),
     Contract("events_bin", RelationalQueries.eventsBin _,
-      """SELECT (floor(epoch(ts) / 3600) * 3600)::BIGINT AS bin, event_type,
-                sum(round(value * 100)::BIGINT) / 100.0 AS sum_value, count(*)::BIGINT AS n
-         FROM events GROUP BY 1, 2"""),
+      EventsBinSql),
     Contract("set_ops", RelationalQueries.setOps _,
       """SELECT c_custkey AS custkey, 'never_ordered' AS status FROM customer
          WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
@@ -1316,17 +1360,7 @@ object SparkEntry {
                 sum(l_quantity) AS sum_qty, count(*)::BIGINT AS n
          FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""),
     Contract("sessionize_batch", (s, d) => RelationalQueries.sessionizeBatch(s, d),
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_ns(ts) // 1000000 AS tms, value FROM events),
-         s AS (
-           SELECT *, CASE WHEN tms - lag(tms) OVER
-               (PARTITION BY user_id ORDER BY tms, event_id) > 1800000
-             THEN 1 ELSE 0 END AS ns
-           FROM e),
-         t AS (
-           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY tms, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-           FROM s)
+      s"""WITH ${RelationalQueries.sessionizeOracleCtes(1800000L, TimeUnit.MILLISECONDS, "session_id")}
          SELECT user_id, session_id, min(tms) AS session_start,
                 max(tms) AS session_end, count(*)::BIGINT AS n_events,
                 sum(round(value * 100)::BIGINT) / 100.0 AS total_value
@@ -1336,25 +1370,11 @@ object SparkEntry {
       // Native session_window: split when the µs gap EXCEEDS the duration
       // (an event exactly at session end still merges — spec-pinned);
       // window end = last event + gap.
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, value FROM events),
-         s AS (
-           SELECT *, CASE WHEN tus - lag(tus) OVER
-               (PARTITION BY user_id ORDER BY tus, event_id) > 1800000000
-             THEN 1 ELSE 0 END AS ns
-           FROM e),
-         t AS (
-           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS sid
-           FROM s)
-         SELECT user_id, min(tus) AS session_start_us,
-                max(tus) + 1800000000 AS session_end_us,
-                count(*)::BIGINT AS n_events,
-                sum(round(value * 100)::BIGINT) / 100.0 AS total_value
-         FROM t GROUP BY user_id, sid"""),
+      SessionWindowSql),
     // --- RANGE-frame trailing-hour rolling count/sum per user (the
     // window class ROWS frames can't express) ---
-    Contract("rolling_hour_range", RelationalQueries.rollingHourQuery _,
+    Contract("rolling_hour_range", (s, d) =>
+      RelationalQueries.rollingHourRange(Tables.events(s, d)),
       // RANGE-frame trailing hour: equal-µs events are frame peers in both
       // engines; cents sums keep the value exact.
       """WITH e AS (
@@ -1377,57 +1397,22 @@ object SparkEntry {
          GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())"""),
     // --- ordered funnel: deepest strictly-time-increasing stage prefix
     // per user, ONE shuffle (the SQL chain joins the fact table per stage) ---
-    Contract("funnel_stages", RelationalQueries.funnelQuery _,
+    Contract("funnel_stages", (s, d) =>
+      RelationalQueries.funnelStages(Tables.events(s, d), FunnelStages),
       // Funnel: the classic stage-chain formulation — min completion time of
       // each prefix, each stage strictly after the previous stage's earliest
       // completion. Greedy earliest-match subsequence (the Spark fold) and
       // this chain compute the same depth.
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-         s1 AS (SELECT user_id, min(ts) AS t FROM events
-                WHERE event_type = 'view' GROUP BY 1),
-         s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-                JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t
-                WHERE e.event_type = 'click' GROUP BY 1),
-         s3 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-                JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t
-                WHERE e.event_type = 'purchase' GROUP BY 1)
-         SELECT u.user_id,
-                (CASE WHEN s3.user_id IS NOT NULL THEN 3
-                      WHEN s2.user_id IS NOT NULL THEN 2
-                      WHEN s1.user_id IS NOT NULL THEN 1
-                      ELSE 0 END)::BIGINT AS funnel_stage
-         FROM u
-         LEFT JOIN s1 ON u.user_id = s1.user_id
-         LEFT JOIN s2 ON u.user_id = s2.user_id
-         LEFT JOIN s3 ON u.user_id = s3.user_id"""),
+      RelationalQueries.funnelOracleSql(FunnelStages, timing = false)),
     // --- funnel with exact time-to-convert (integer microseconds) ---
-    Contract("funnel_timing", RelationalQueries.funnelTimingQuery _,
+    Contract("funnel_timing", (s, d) =>
+      RelationalQueries.funnelTiming(Tables.events(s, d), FunnelStages),
       // Funnel timing: the stage-chain's earliest per-stage completion
       // timestamps subtract in exact integer microseconds; NULL below
       // depth 2 (no interval exists).
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-         s1 AS (SELECT user_id, min(ts) AS t FROM events
-                WHERE event_type = 'view' GROUP BY 1),
-         s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-                JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t
-                WHERE e.event_type = 'click' GROUP BY 1),
-         s3 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-                JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t
-                WHERE e.event_type = 'purchase' GROUP BY 1)
-         SELECT u.user_id,
-                (CASE WHEN s3.user_id IS NOT NULL THEN 3
-                      WHEN s2.user_id IS NOT NULL THEN 2
-                      WHEN s1.user_id IS NOT NULL THEN 1
-                      ELSE 0 END)::BIGINT AS funnel_stage,
-                (CASE WHEN s3.user_id IS NOT NULL THEN epoch_us(s3.t) - epoch_us(s1.t)
-                      WHEN s2.user_id IS NOT NULL THEN epoch_us(s2.t) - epoch_us(s1.t)
-                      ELSE NULL END)::BIGINT AS convert_us
-         FROM u
-         LEFT JOIN s1 ON u.user_id = s1.user_id
-         LEFT JOIN s2 ON u.user_id = s2.user_id
-         LEFT JOIN s3 ON u.user_id = s3.user_id"""),
+      RelationalQueries.funnelOracleSql(FunnelStages, timing = true)),
     // --- cohort retention: first-seen-day cohorts × active-day offsets ---
-    Contract("cohort_retention", RelationalQueries.cohortQuery _,
+    Contract("cohort_retention", (s, d) => RelationalQueries.cohortRetention(Tables.events(s, d)),
       // Cohort retention: integer epoch-day arithmetic on both engines.
       """WITH ud AS (SELECT DISTINCT user_id,
                 (floor(epoch(ts) / 86400))::BIGINT AS d FROM events),
@@ -1438,7 +1423,7 @@ object SparkEntry {
          GROUP BY 1, 2"""),
     // --- event-rate anomaly: trailing-window z-score from exact integer
     // sums (monitoring over the ingest feed itself) ---
-    Contract("rate_anomaly", RelationalQueries.rateAnomalyQuery _,
+    Contract("rate_anomaly", (s, d) => RelationalQueries.rateAnomaly(Tables.events(s, d)),
       // Rate anomaly: trailing-ROWS window of exact integer sums, then one
       // fixed IEEE double sequence (mean/sd/z) — bit-identical unrounded;
       // the sd=0 branch decided by exact integer equality.
@@ -1461,7 +1446,7 @@ object SparkEntry {
          FROM w WHERE k >= 12"""),
     // --- skyline (Pareto frontier) via bucket-decomposed running max —
     // no O(n²) dominance join ---
-    Contract("skyline", RelationalQueries.skylineQuery _,
+    Contract("skyline", (s, d) => RelationalQueries.skyline(Tables.part(s, d)),
       // Skyline: the oracle states the DEFINITION — a quadratic NOT-EXISTS
       // dominance test over distinct points — while the Spark plan is the
       // bucket-decomposed running max; agreement proves the decomposition.
@@ -1486,126 +1471,55 @@ object SparkEntry {
          SELECT event_type AS from_type, to_type, count(*)::BIGINT AS n
          FROM nx WHERE to_type IS NOT NULL GROUP BY 1, 2"""),
     // --- OHLC time-series downsample (picked doubles, engine-exact) ---
-    Contract("ohlc_downsample", RelationalQueries.ohlcQuery _,
+    Contract("ohlc_downsample", (s, d) => RelationalQueries.ohlcDownsample(Tables.events(s, d)),
       // OHLC: first/last by deterministic (ts, event_id) rank; values are
       // picked, never summed — exact across engines.
-      """WITH b AS (
-           SELECT event_type, (floor(epoch(ts) / 3600))::BIGINT AS h,
-                  ts, event_id, value
-           FROM events),
-         r AS (
-           SELECT event_type, h, value,
-                  row_number() OVER (PARTITION BY event_type, h
-                                     ORDER BY ts, event_id) AS ra,
-                  row_number() OVER (PARTITION BY event_type, h
-                                     ORDER BY ts DESC, event_id DESC) AS rd
-           FROM b)
-         SELECT event_type, h,
-                max(CASE WHEN ra = 1 THEN value END) AS o,
-                max(CASE WHEN rd = 1 THEN value END) AS c,
-                min(value) AS lo, max(value) AS hi, count(*)::BIGINT AS n
-         FROM r GROUP BY 1, 2"""),
+      OhlcSql),
     // --- the SAME aggregation run through the real streaming engine
     // (file source → watermark → flatMapGroupsWithState → memory sink),
     // returned as a batch frame: the oracle certifies the streaming path
     // end-to-end, not just its batch twin ---
     Contract("streaming_ohlc_replay", streaming.EventStreams.streamingOhlcReplay _,
-      // The streaming replay must land on EXACTLY the batch answer — same
-      // oracle text as ohlc_downsample (that equality is the whole point).
-      """WITH b AS (
-           SELECT event_type, (floor(epoch(ts) / 3600))::BIGINT AS h,
-                  ts, event_id, value
-           FROM events),
-         r AS (
-           SELECT event_type, h, value,
-                  row_number() OVER (PARTITION BY event_type, h
-                                     ORDER BY ts, event_id) AS ra,
-                  row_number() OVER (PARTITION BY event_type, h
-                                     ORDER BY ts DESC, event_id DESC) AS rd
-           FROM b)
-         SELECT event_type, h,
-                max(CASE WHEN ra = 1 THEN value END) AS o,
-                max(CASE WHEN rd = 1 THEN value END) AS c,
-                min(value) AS lo, max(value) AS hi, count(*)::BIGINT AS n
-         FROM r GROUP BY 1, 2"""),
+      // The streaming replay must land on EXACTLY the batch answer — it
+      // shares ohlc_downsample's oracle (that equality is the whole point).
+      OhlcSql),
     // --- native streaming session windows (the session-window state
     // store), replayed to a batch frame the same way — certified by the
     // batch session_window_agg oracle ---
     Contract("streaming_sessions_replay", streaming.EventStreams.streamingSessionsReplay _,
       // The streaming session replay must land on EXACTLY the batch
-      // answer — same oracle text as session_window_agg.
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, value FROM events),
-         s AS (
-           SELECT *, CASE WHEN tus - lag(tus) OVER
-               (PARTITION BY user_id ORDER BY tus, event_id) > 1800000000
-             THEN 1 ELSE 0 END AS ns
-           FROM e),
-         t AS (
-           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS sid
-           FROM s)
-         SELECT user_id, min(tus) AS session_start_us,
-                max(tus) + 1800000000 AS session_end_us,
-                count(*)::BIGINT AS n_events,
-                sum(round(value * 100)::BIGINT) / 100.0 AS total_value
-         FROM t GROUP BY user_id, sid"""),
+      // answer — it shares session_window_agg's oracle.
+      SessionWindowSql),
     // --- streaming windowed-aggregation state store (tumbling windows,
     // append mode), replayed the same way — the third certified streaming
     // engine path; cents sums are order-independent so the streamed rows
     // are bit-equal to events_bin's oracle ---
     Contract("streaming_bin_replay", streaming.EventStreams.streamingBinReplay _,
       // The streaming windowed-agg replay must land on EXACTLY the batch
-      // answer — same oracle text as events_bin.
-      """SELECT (floor(epoch(ts) / 3600) * 3600)::BIGINT AS bin, event_type,
-                sum(round(value * 100)::BIGINT) / 100.0 AS sum_value, count(*)::BIGINT AS n
-         FROM events GROUP BY 1, 2"""),
+      // answer — it shares events_bin's oracle.
+      EventsBinSql),
     // --- CHAINED stateful streaming (dedup store → windowed-agg store in
     // one query), replayed the same way: daily distinct users per type,
     // certified by a batch count(DISTINCT) oracle ---
     Contract("streaming_dedup_replay", streaming.EventStreams.streamingDedupReplay _,
       // Chained dedup→agg streaming replay: the batch truth is a plain
       // count(DISTINCT user) per (UTC day, type).
-      """SELECT (floor(epoch(ts) / 86400) * 86400)::BIGINT AS day, event_type,
-                count(DISTINCT user_id)::BIGINT AS n_users
-         FROM events GROUP BY 1, 2"""),
+      DailyUsersSql),
     // --- the same two state-heaviest replays on the RocksDB state-store
     // provider (the 100 TB-state production choice): gate rows certify
     // provider-equivalence against the SAME batch oracles ---
     Contract("streaming_dedup_replay_rocksdb", streaming.EventStreams.streamingDedupReplayRocksDb _,
       // RocksDB-provider twin: the state-store provider must be invisible in
-      // the result — same oracle text as streaming_dedup_replay.
-      """SELECT (floor(epoch(ts) / 86400) * 86400)::BIGINT AS day, event_type,
-                count(DISTINCT user_id)::BIGINT AS n_users
-         FROM events GROUP BY 1, 2"""),
+      // the result — it shares streaming_dedup_replay's oracle.
+      DailyUsersSql),
     Contract("streaming_sessions_replay_rocksdb", streaming.EventStreams.streamingSessionsReplayRocksDb _,
-      // RocksDB-provider twin of the session replay — same oracle text.
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_us(ts) AS tus, value FROM events),
-         s AS (
-           SELECT *, CASE WHEN tus - lag(tus) OVER
-               (PARTITION BY user_id ORDER BY tus, event_id) > 1800000000
-             THEN 1 ELSE 0 END AS ns
-           FROM e),
-         t AS (
-           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS sid
-           FROM s)
-         SELECT user_id, min(tus) AS session_start_us,
-                max(tus) + 1800000000 AS session_end_us,
-                count(*)::BIGINT AS n_events,
-                sum(round(value * 100)::BIGINT) / 100.0 AS total_value
-         FROM t GROUP BY user_id, sid"""),
+      // RocksDB-provider twin of the session replay — same oracle.
+      SessionWindowSql),
     // --- stream-stream interval join state store, replayed — certified
     // by the batch click_purchase_join oracle ---
     Contract("streaming_join_replay", streaming.EventStreams.streamingJoinReplay _,
-      // Stream-stream join replay: same truth as the batch interval join.
-      """SELECT b.event_id AS purchase_id, c.event_id AS click_id,
-                (epoch_us(b.ts) - epoch_us(c.ts))::BIGINT AS gap_us
-         FROM events b JOIN events c
-           ON c.user_id = b.user_id
-          AND c.ts >= b.ts - INTERVAL 1 HOUR AND c.ts <= b.ts
-         WHERE b.event_type = 'purchase' AND c.event_type = 'click'"""),
+      // Stream-stream join replay: shares the batch interval join's oracle.
+      ClickPurchaseSql),
     // --- update-mode unwindowed keyed aggregation, final-state argmax ---
     Contract("streaming_counts_replay", streaming.EventStreams.streamingCountsReplay _,
       // Update-mode replay: the final state per type is the batch count
@@ -1621,7 +1535,7 @@ object SparkEntry {
          FROM events e JOIN customer c ON e.user_id = c.c_custkey
          GROUP BY 1, 2"""),
     // --- LOCF gap-fill over the per-type hourly axis ---
-    Contract("gap_fill", RelationalQueries.gapFillQuery _,
+    Contract("gap_fill", (s, d) => RelationalQueries.gapFill(Tables.events(s, d)),
       // Gap-fill: dense hourly axis from each type's span, LOCF via
       // last_value IGNORE NULLS — both engines carry the same picked double.
       """WITH b AS (
@@ -1644,7 +1558,7 @@ object SparkEntry {
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fv
          FROM j"""),
     // --- winsorization: clip to per-type discrete-percentile bands ---
-    Contract("winsorize", RelationalQueries.winsorizeQuery _,
+    Contract("winsorize", (s, d) => RelationalQueries.winsorize(Tables.events(s, d)),
       // Winsorize: thresholds picked by the discrete rank rule, clip via
       // least/greatest — no double arithmetic anywhere.
       """WITH v AS (SELECT event_type, event_id, value FROM events),
@@ -1699,17 +1613,7 @@ object SparkEntry {
       // Concurrency peak: sweep-line over session boundaries; the oracle
       // runs ONE global running sum (single-node is fine for DuckDB), the
       // Spark plan decomposes it day-locally + hierarchical carry.
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_ns(ts) // 1000000 AS tms, value FROM events),
-         s AS (
-           SELECT *, CASE WHEN tms - lag(tms) OVER
-               (PARTITION BY user_id ORDER BY tms, event_id) > 1800000
-             THEN 1 ELSE 0 END AS ns
-           FROM e),
-         t AS (
-           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY tms, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-           FROM s),
+      s"""WITH ${RelationalQueries.sessionizeOracleCtes(1800000L, TimeUnit.MILLISECONDS, "session_id")},
          sess AS (
            SELECT user_id, session_id, min(tms) AS st, max(tms) AS en
            FROM t GROUP BY 1, 2),
@@ -1723,7 +1627,7 @@ object SparkEntry {
          SELECT tms // 86400000 AS day, max(c) AS peak FROM r GROUP BY 1"""),
     // --- equi-DEPTH histogram: decile boundaries per type, picked at
     // integer-ceil ranks via the winsorize bucket-rank decomposition ---
-    Contract("histogram_equidepth", RelationalQueries.equiDepthQuery _,
+    Contract("histogram_equidepth", (s, d) => RelationalQueries.equiDepth(Tables.events(s, d)),
       // Equi-depth histogram: boundary j is the value at integer-ceil rank
       // (j·n + 9) // 10 — a picked double, deterministic under ties.
       """WITH v AS (SELECT event_type, value FROM events),
@@ -1736,7 +1640,8 @@ object SparkEntry {
          FROM r JOIN generate_series(1, 9) AS g(j) ON rn = (j * n + 9) // 10"""),
     // --- per-row percent-rank normalization via the bucket-decomposed
     // range sort (no whole-type sort task) ---
-    Contract("quantile_normalize", RelationalQueries.quantileNormalizeQuery _,
+    Contract("quantile_normalize", (s, d) =>
+      RelationalQueries.quantileNormalize(Tables.events(s, d)),
       // Quantile normalization: percent_rank's definition — one IEEE
       // division of identical integers per row.
       """SELECT event_id, event_type,
@@ -1748,13 +1653,13 @@ object SparkEntry {
                FROM events)"""),
     // --- 3-dim skyline: per-dimension staircase decomposition, third
     // dimension synthesized by portable hash ---
-    Contract("skyline_3d", RelationalQueries.skyline3dQuery _,
+    Contract("skyline_3d", (s, d) => RelationalQueries.skyline3d(Tables.part(s, d)),
       // 3-dim skyline: the oracle states the DEFINITION (quadratic
       // NOT-EXISTS dominance over distinct points, third dim from the same
       // portable hash) — agreement proves the staircase decomposition.
-      """WITH pts AS (
+      s"""WITH pts AS (
            SELECT DISTINCT p_retailprice AS price, p_size::BIGINT AS size,
-                  ('0x' || substring(md5('sky_' || p_partkey::VARCHAR), 1, 15))::BIGINT % 1000 AS rv
+                  ${duckdbHash60("'sky_' || p_partkey::VARCHAR")} % 1000 AS rv
            FROM part),
          sky AS (
            SELECT price, size, rv FROM pts b
@@ -1763,26 +1668,16 @@ object SparkEntry {
              WHERE a.price <= b.price AND a.size >= b.size AND a.rv >= b.rv
                AND (a.price < b.price OR a.size > b.size OR a.rv > b.rv)))
          SELECT p.p_partkey, p.p_retailprice, p.p_size::BIGINT AS p_size,
-                ('0x' || substring(md5('sky_' || p.p_partkey::VARCHAR), 1, 15))::BIGINT % 1000 AS rv
+                ${duckdbHash60("'sky_' || p.p_partkey::VARCHAR")} % 1000 AS rv
          FROM part p JOIN sky s
            ON p.p_retailprice = s.price AND p.p_size = s.size
-          AND ('0x' || substring(md5('sky_' || p.p_partkey::VARCHAR), 1, 15))::BIGINT % 1000 = s.rv"""),
+          AND ${duckdbHash60("'sky_' || p.p_partkey::VARCHAR")} % 1000 = s.rv"""),
     // --- interval×interval overlap join over sessionized events (cell
     // decomposition, count-once-at-later-start-cell) ---
     Contract("interval_overlap", (s, d) => RelationalQueries.intervalOverlap(s, d),
       // Interval overlap: the definitional inequality join (DuckDB IEJoin);
       // closed intervals — touching counts, matching concurrency_peak.
-      """WITH e AS (
-           SELECT user_id, event_id, epoch_ns(ts) // 1000000 AS tms, value FROM events),
-         s AS (
-           SELECT *, CASE WHEN tms - lag(tms) OVER
-               (PARTITION BY user_id ORDER BY tms, event_id) > 1800000
-             THEN 1 ELSE 0 END AS ns
-           FROM e),
-         t AS (
-           SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY tms, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS session_id
-           FROM s),
+      s"""WITH ${RelationalQueries.sessionizeOracleCtes(1800000L, TimeUnit.MILLISECONDS, "session_id")},
          sess AS (
            SELECT user_id, session_id, min(tms) AS st, max(tms) AS en
            FROM t GROUP BY 1, 2)
@@ -1936,12 +1831,12 @@ object SparkEntry {
       // Spatial within-radius join: the oracle is the DEFINITIONAL quadratic
       // inequality join over the same hash-derived point subset — proving the
       // grid decomposition loses no pair and invents none.
-      """WITH pts AS MATERIALIZED (
+      s"""WITH pts AS MATERIALIZED (
            SELECT event_id AS id,
-                  ('0x' || substring(md5('gx_' || event_id::VARCHAR), 1, 15))::BIGINT % 1000000 AS x,
-                  ('0x' || substring(md5('gy_' || event_id::VARCHAR), 1, 15))::BIGINT % 1000000 AS y
+                  ${duckdbHash60("'gx_' || event_id::VARCHAR")} % 1000000 AS x,
+                  ${duckdbHash60("'gy_' || event_id::VARCHAR")} % 1000000 AS y
            FROM events
-           WHERE ('0x' || substring(md5('gp_' || event_id::VARCHAR), 1, 15))::BIGINT % 37 = 0)
+           WHERE ${duckdbHash60("'gp_' || event_id::VARCHAR")} % 37 = 0)
          SELECT a.id AS a_id, b.id AS b_id,
                 ((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))::BIGINT AS dist2
          FROM pts a JOIN pts b ON a.id < b.id
@@ -2079,11 +1974,9 @@ object SparkEntry {
     Contract("cuped_adjust", RelationalQueries.cupedAdjust _,
       // CUPED: per-user (pre, post) cents pairs split at the fixed midpoint,
       // then per-(type, arm) exact moments; arm = the ab_split_stats hash.
-      """WITH per_user AS (
+      s"""WITH per_user AS (
            SELECT event_type,
-                  CASE WHEN ('0x' || substring(md5('ab_' || user_id::VARCHAR), 1, 15))::BIGINT
-                            % 2 = 0
-                       THEN 'A' ELSE 'B' END AS arm,
+                  ${RelationalQueries.abArmSql("'A'", "'B'")} AS arm,
                   user_id,
                   sum(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN round(value * 100)::BIGINT
                            ELSE 0 END)::BIGINT AS x,
@@ -2098,16 +1991,15 @@ object SparkEntry {
     Contract("tf_cosine", (s, d) =>
       pipeline.Dedup.tfCosinePairs(Tables.documents(s, d), k = 3, tauPct = 80L),
       // tf-cosine pairs: definitional 3-word-shingle tf join (the
-      // dedup_jaccard oracle's shingle construction WITHOUT list_distinct —
-      // multiplicity is the payload); HUGEINT cross-multiply mirrors the
-      // engine's decimal(38,0) comparison.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      // Dedup.shinglesSql shingles WITHOUT list_distinct — multiplicity is
+      // the payload); HUGEINT cross-multiply mirrors the engine's
+      // decimal(38,0) comparison.
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          tok AS (
            SELECT doc_id, unnest(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS w
+             ${pipeline.Dedup.shinglesSql(3)}) AS w
            FROM toks),
          tf AS (SELECT doc_id, w, count(*)::BIGINT AS tf FROM tok GROUP BY 1, 2),
          nrm AS (SELECT doc_id, sum(tf * tf)::BIGINT AS nsq FROM tf GROUP BY 1),
@@ -2128,13 +2020,13 @@ object SparkEntry {
                 count(*)::BIGINT AS cnt
          FROM orders GROUP BY 1"""),
     // --- KMV sketch-merge audience overlap per event-type pair ---
-    Contract("kmv_overlap", RelationalQueries.kmvOverlapQuery _,
+    Contract("kmv_overlap", (s, d) => RelationalQueries.kmvOverlap(Tables.events(s, d)),
       // KMV overlap: replay both per-type bottom-256 sketches, merge to the
       // union's bottom-256, count two-sided members (sketch membership is
       // set membership below the union's k-th hash).
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT DISTINCT event_type,
-                  ('0x' || substring(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
+                  ${duckdbHash60("user_id::VARCHAR")} AS hv
            FROM events),
          r AS (SELECT event_type, hv,
                  row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
@@ -2240,14 +2132,14 @@ object SparkEntry {
       // the portable hash of the canonical edge.
       s"""WITH wund AS MATERIALIZED (
            SELECT a, b,
-                  ('0x' || substring(md5('wt_' || a::VARCHAR || '_' || b::VARCHAR), 1, 15))::BIGINT
+                  ${duckdbHash60("'wt_' || a::VARCHAR || '_' || b::VARCHAR")}
                     % 9 + 1 AS wt
            FROM (
              $HashUndSql)),
          ${sources.GraphLoader.ssspOracleCtes(rounds = 8)}
          SELECT v AS vertex, dist FROM s8"""),
     // --- EWMA over hourly closes as exact integer (num, den) pairs ---
-    Contract("ewma_smooth", RelationalQueries.ewmaQuery _, {
+    Contract("ewma_smooth", (s, d) => RelationalQueries.ewmaSmooth(Tables.events(s, d)), {
       // EWMA: the same 16 power-of-two lag terms, generated once in Scala
       // for both dialects (anti-drift).
       val num = (1 to 15)
@@ -2270,7 +2162,7 @@ object SparkEntry {
          FROM hourly WINDOW w AS (PARTITION BY event_type ORDER BY h)"""
     }),
     // --- JSON payload extraction feeding exact per-type integer stats ---
-    Contract("json_extract", RelationalQueries.jsonExtractQuery _,
+    Contract("json_extract", (s, d) => RelationalQueries.jsonExtractStats(Tables.events(s, d)),
       // JSON extraction: ->> '$.k' is DuckDB's text-extract; both engines
       // yield NULL (counted, not dropped) on unparsable rows.
       """WITH p AS (
@@ -2293,7 +2185,7 @@ object SparkEntry {
                 sum(round(value * 100)::BIGINT)::BIGINT AS sum_cents
          FROM events GROUP BY 1"""),
     // --- max drawdown via the hierarchical prefix-MAX carry ---
-    Contract("max_drawdown", RelationalQueries.maxDrawdownQuery _,
+    Contract("max_drawdown", (s, d) => RelationalQueries.maxDrawdown(Tables.events(s, d)),
       // Max drawdown: the oracle states the GLOBAL running max the
       // engine's day-local + carry decomposition must reproduce.
       """WITH b AS (
@@ -2353,7 +2245,7 @@ object SparkEntry {
          FROM documents d LEFT JOIN per USING (doc_id)"""),
     // --- robust median/MAD dispersion + outlier counts (two histogram
     // rank picks, no global sort) ---
-    Contract("robust_zscore", RelationalQueries.robustZscoreQuery _,
+    Contract("robust_zscore", (s, d) => RelationalQueries.robustZscore(Tables.events(s, d)),
       // Robust median/MAD: lower-median rank picks; |x−med| and 3·mad are
       // single IEEE ops on identical inputs — engine-exact.
       """WITH v AS (SELECT event_type, value FROM events),
@@ -2382,7 +2274,7 @@ object SparkEntry {
          GROUP BY 1, 2, 3"""),
     // --- time-weighted average components per (type, day): day-local
     // lead + bounded day-axis stitch, exact BIGINT cents·ms ---
-    Contract("twap", RelationalQueries.twapQuery _,
+    Contract("twap", (s, d) => RelationalQueries.twap(Tables.events(s, d)),
       // TWAP components: the oracle states the global per-type lead; the
       // engine's day-local lead + day-axis stitch must agree exactly.
       """WITH e AS (
@@ -2411,7 +2303,7 @@ object SparkEntry {
          SELECT a.nm AS name_a, b.nm AS name_b
          FROM n a JOIN n b ON a.nm < b.nm AND levenshtein(a.nm, b.nm) <= 1"""),
     // --- 3-step path mining (transitions one step deeper) ---
-    Contract("event_paths", RelationalQueries.eventPathsQuery _,
+    Contract("event_paths", (s, d) => RelationalQueries.eventPaths(Tables.events(s, d)),
       // 3-step paths: two leads over the deterministic per-user order.
       """WITH nx AS (
            SELECT event_type AS step1,
@@ -2422,7 +2314,8 @@ object SparkEntry {
          SELECT step1, step2, step3, count(*)::BIGINT AS n
          FROM nx WHERE step3 IS NOT NULL GROUP BY 1, 2, 3"""),
     // --- period-over-period daily deltas (bounded day-axis lag) ---
-    Contract("period_over_period", RelationalQueries.periodOverPeriodQuery _,
+    Contract("period_over_period", (s, d) =>
+      RelationalQueries.periodOverPeriod(Tables.events(s, d)),
       // Period-over-period: lag over observed days only; exact cents.
       """WITH daily AS (
            SELECT event_type, epoch_ns(ts) // 1000000 // 86400000 AS day,
@@ -2438,7 +2331,7 @@ object SparkEntry {
          FROM l"""),
     // --- gaps-and-islands merge of variable-length intervals (running
     // max-of-end break test — not the sessionize prev-row gap) ---
-    Contract("interval_merge", RelationalQueries.intervalMergeQuery _,
+    Contract("interval_merge", (s, d) => RelationalQueries.intervalMerge(Tables.events(s, d)),
       // Gaps-and-islands: the oracle states the same running-max-of-end
       // break test; durations are integer ms derived from cents (the
       // double-% dance keeps negative values portable).
@@ -2477,7 +2370,7 @@ object SparkEntry {
                 (SELECT count(*) FROM fd WHERE fd.fday <= od.day)::BIGINT AS cum_actives
          FROM od LEFT JOIN np ON od.day = np.fday"""),
     // --- last-touch attribution of purchases to the prior event type ---
-    Contract("attribution", RelationalQueries.attributionQuery _,
+    Contract("attribution", (s, d) => RelationalQueries.attributionLastTouch(Tables.events(s, d)),
       // Last-touch attribution: strictly-prior frame, ignore-nulls last.
       """WITH w AS (
            SELECT user_id, ts, event_id, event_type,
@@ -2563,11 +2456,11 @@ object SparkEntry {
       pipeline.TrainingData.groupSplit(Tables.documents(s, d), "source"),
       // Group split: the split bucket hashes the GROUP value, so groups
       // never straddle splits.
-      """SELECT doc_id, source,
+      s"""SELECT doc_id, source,
                 CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
                      ELSE 'test' END AS split
          FROM (SELECT doc_id, source,
-                 ('0x' || substring(md5('split_' || source), 1, 15))::BIGINT % 100 AS b
+                 ${duckdbHash60("'split_' || source")} % 100 AS b
                FROM documents)"""),
     Contract("windowed_covariance", (s, d) => RelationalQueries.windowedCovariancePortable(s, d),
       // Portable windowed covariance: cent-quantized exact bin sums, then
@@ -2633,9 +2526,9 @@ object SparkEntry {
       // the exact count) — row_number over hash order ≤ k, estimate =
       // floor((k-1)·2^60 / h_k), every constant exactly representable in
       // double and the one division IEEE-identical on both engines.
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT DISTINCT event_type,
-                  ('0x' || substring(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
+                  ${duckdbHash60("user_id::VARCHAR")} AS hv
            FROM events),
          r AS (
            SELECT event_type, hv,
@@ -2658,9 +2551,9 @@ object SparkEntry {
       // KMV-sample quantile replay: the oracle re-draws the identical
       // bottom-k-by-hash sample and reads the same sorted positions.
       // Colliding hashes keep min(v) — the buffer's order-independent rule.
-      """WITH h AS (
+      s"""WITH h AS (
            SELECT l_returnflag AS g, l_extendedprice AS v,
-                  ('0x' || substring(md5('q_' || l_orderkey::VARCHAR || '_' || l_linenumber::VARCHAR), 1, 15))::BIGINT AS hv
+                  ${duckdbHash60("'q_' || l_orderkey::VARCHAR || '_' || l_linenumber::VARCHAR")} AS hv
            FROM lineitem),
          d AS (SELECT g, hv, min(v) AS v FROM h GROUP BY g, hv),
          r AS (SELECT g, hv, v, row_number() OVER (PARTITION BY g ORDER BY hv) AS rn FROM d),
@@ -2723,42 +2616,28 @@ object SparkEntry {
       // universal-hash family (a_i·x + c_i mod 2³¹−1) with md5-derived
       // coefficients — the oracle recomputes identical signatures and
       // brute-forces band agreement (8 bands × 4 rows).
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END AS s
+             ${pipeline.Dedup.shinglesSql(3)} AS s
            FROM toks),
-         bs AS (
-           SELECT doc_id, [('0x' || substring(md5(x), 1, 15))::BIGINT for x in s] AS b
-           FROM sh),
-         sig AS (
-           SELECT doc_id,
-             [list_min([((('0x' || substring(md5('a_' || i::VARCHAR), 1, 15))::BIGINT % 2147483646 + 1)
-                         * (h % 2147483647)
-                         + ('0x' || substring(md5('b_' || i::VARCHAR), 1, 15))::BIGINT % 2147483647)
-                        % 2147483647
-                        for h in b])
-              for i in range(0, 32)] AS sg
-           FROM bs)
+         ${pipeline.Dedup.minhashOracleCtes(numHashes = 32)}
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 len([i for i in range(1, 33) if a.sg[i] = b.sg[i]])::DOUBLE / 32.0 AS est_jaccard
          FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE len([bb for bb in range(0, 8)
-                    if a.sg[bb*4+1 : bb*4+4] = b.sg[bb*4+1 : bb*4+4]]) > 0"""),
+         WHERE ${pipeline.Dedup.bandMatchSql(bands = 8, rows = 4)}"""),
     Contract("dedup_jaccard", (s, d) => pipeline.Dedup.jaccardJoin(Tables.documents(s, d)),
       // Exact inverted-index jaccard join: the oracle brute-forces all pairs
       // over *string* shingle sets (the Spark side hashes shingles — jaccard
       // is invariant up to 64-bit collisions).
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toks)
          SELECT doc_a, doc_b, jaccard FROM (
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -2782,13 +2661,12 @@ object SparkEntry {
       // shingles, union sizes stay full-set (matches jaccardJoin's
       // n-from-full-set semantics). String shingles; jaccard is invariant
       // to the Spark side's 64-bit hashing up to collisions.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toks),
          ex AS (SELECT doc_id, unnest(s) AS h FROM sh),
          hot AS (SELECT h FROM ex GROUP BY h
@@ -2814,13 +2692,12 @@ object SparkEntry {
     },
       // Valve accounting, hash-free: dropped-shingle count per document
       // frequency (df > max(5, N/100) — the relative cap; 5 at the sf0.01 gate).
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toks),
          ex AS (SELECT doc_id, unnest(s) AS h FROM sh),
          dfs AS (SELECT h, count(*)::BIGINT AS df FROM ex GROUP BY h
@@ -2832,13 +2709,12 @@ object SparkEntry {
       // Asymmetric containment: same string-shingle brute force as the
       // dedup_jaccard oracle, ordered pairs, integer cross-multiplied
       // threshold (shared·1000 ≥ 600·n_a).
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toks)
          SELECT doc_a, doc_b, shared, n_a, n_b FROM (
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -2858,41 +2734,28 @@ object SparkEntry {
       // Incremental replay: full-corpus banded pairs restricted to those
       // with >= 1 endpoint in the delta (doc_id % 5 = 0) — exactly the
       // new-vs-old + new-vs-new set the index probe discovers.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END AS s
+             ${pipeline.Dedup.shinglesSql(3)} AS s
            FROM toks),
-         bs AS (
-           SELECT doc_id, [('0x' || substring(md5(x), 1, 15))::BIGINT for x in s] AS b
-           FROM sh),
-         sig AS (
-           SELECT doc_id,
-             [list_min([((('0x' || substring(md5('a_' || i::VARCHAR), 1, 15))::BIGINT % 2147483646 + 1)
-                         * (h % 2147483647)
-                         + ('0x' || substring(md5('b_' || i::VARCHAR), 1, 15))::BIGINT % 2147483647)
-                        % 2147483647
-                        for h in b])
-              for i in range(0, 32)] AS sg
-           FROM bs)
+         ${pipeline.Dedup.minhashOracleCtes(numHashes = 32)}
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                 len([i for i in range(1, 33) if a.sg[i] = b.sg[i]])::DOUBLE / 32.0 AS est_jaccard
          FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE len([bb for bb in range(0, 8)
-                    if a.sg[bb*4+1 : bb*4+4] = b.sg[bb*4+1 : bb*4+4]]) > 0
+         WHERE ${pipeline.Dedup.bandMatchSql(bands = 8, rows = 4)}
            AND (a.doc_id % 5 = 0 OR b.doc_id % 5 = 0)"""),
     Contract("dedup_simhash", (s, d) => pipeline.Dedup.simhashPairs(Tables.documents(s, d)),
       // Portable SimHash; for maxHamming=3 the 16-bit banding is lossless
       // (pigeonhole), so brute-force pairs within the Hamming radius are the
       // exact expected result.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          th AS (
-           SELECT doc_id, [('0x' || substring(md5(x), 1, 15))::BIGINT for x in t] AS h
+           SELECT doc_id, [${duckdbHash60("x")} for x in t] AS h
            FROM toks),
          sig AS (
            SELECT doc_id,
@@ -2907,34 +2770,22 @@ object SparkEntry {
     // --- near-dup pairs resolved into clusters (connected components):
     // the keep/drop decision a dedup pipeline actually ships ---
     Contract("dedup_clusters", (s, d) => pipeline.Components.duplicateClusters(Tables.documents(s, d)),
-      // Same portable minhash pair derivation as dedup_minhash, resolved
-      // into connected components by a recursive CTE (min reachable id per
-      // node ≡ the engine's min-label fixpoint).
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      // The dedup_minhash pairs (Dedup.minhashOracleCtes signatures,
+      // Dedup.bandMatchSql banding), resolved into connected components by
+      // a recursive CTE (min reachable id per node ≡ the engine's min-label
+      // fixpoint).
+      s"""WITH RECURSIVE toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END AS s
+             ${pipeline.Dedup.shinglesSql(3)} AS s
            FROM toks),
-         bs AS (
-           SELECT doc_id, [('0x' || substring(md5(x), 1, 15))::BIGINT for x in s] AS b
-           FROM sh),
-         sig AS (
-           SELECT doc_id,
-             [list_min([((('0x' || substring(md5('a_' || i::VARCHAR), 1, 15))::BIGINT % 2147483646 + 1)
-                         * (h % 2147483647)
-                         + ('0x' || substring(md5('b_' || i::VARCHAR), 1, 15))::BIGINT % 2147483647)
-                        % 2147483647
-                        for h in b])
-              for i in range(0, 32)] AS sg
-           FROM bs),
+         ${pipeline.Dedup.minhashOracleCtes(numHashes = 32)},
          pairs AS (
            SELECT a.doc_id AS da, b.doc_id AS db
            FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-           WHERE len([bb for bb in range(0, 8)
-                      if a.sg[bb*4+1 : bb*4+4] = b.sg[bb*4+1 : bb*4+4]]) > 0),
+           WHERE ${pipeline.Dedup.bandMatchSql(bands = 8, rows = 4)}),
          edges AS (
            SELECT da AS s, db AS t FROM pairs
            UNION ALL SELECT db, da FROM pairs),
@@ -3032,20 +2883,19 @@ object SparkEntry {
       """SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
          FROM documents"""),
     Contract("text_rolling_fp", (s, d) => pipeline.TextAnalysis.rollingFingerprint(Tables.documents(s, d)),
-      """SELECT doc_id,
+      s"""SELECT doc_id,
                 list_reduce(list_prepend(0::BIGINT,
-                  [('0x' || substring(md5(x), 1, 15))::BIGINT % 2147483647 for x in
-                   list_filter(string_split_regex(text, '\s+'), w -> w <> '')]),
+                  [${duckdbHash60("x")} % 2147483647 for x in
+                   list_filter(string_split_regex(text, '\\s+'), w -> w <> '')]),
                   (a, h) -> (a * 1000003 + h) % 2147483647) AS rolling_fp
          FROM documents"""),
     Contract("text_repetition", (s, d) => pipeline.TextAnalysis.repetitionStats(Tables.documents(s, d)),
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id,
-             CASE WHEN len(t) <= 2 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+1], ' ') for i in range(1, len(t))] END AS s
+             ${pipeline.Dedup.shinglesSql(2)} AS s
            FROM toks),
          bg AS (SELECT doc_id, unnest(s) AS b FROM sh),
          c AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY doc_id, b)
@@ -3053,62 +2903,24 @@ object SparkEntry {
                 round(max(c)::DOUBLE / sum(c), 6) AS top_share
          FROM c GROUP BY doc_id"""),
     Contract("bm25_score", (s, d) =>
-      pipeline.Ranking.bm25(Tables.documents(s, d), Seq("spark", "join", "vector")),
+      pipeline.Ranking.bm25(Tables.documents(s, d), SearchTerms),
       // BM25: avgdl from an exact integer sum; per-doc total folds term
       // scores in sorted-term order (both engines sequential-fold — SUM()
       // combine order would not be portable); round(6) absorbs ln() ulps.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
-           FROM documents),
-         stats AS (SELECT count(*)::BIGINT AS n, sum(len(t))::BIGINT AS sdl FROM toks),
-         postings AS (
-           SELECT doc_id, len(t)::BIGINT AS dl, x AS term, count(*)::BIGINT AS tf
-           FROM toks, unnest(t) AS u(x)
-           WHERE x IN ('spark', 'join', 'vector')
-           GROUP BY 1, 2, 3),
-         dfreq AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY term),
-         sc AS (
-           SELECT p.doc_id, p.term,
-             ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5))
-               * (p.tf * (1.2 + 1.0))
-               / (p.tf + 1.2 * (1.0 - 0.75 + 0.75 * p.dl / (s.sdl::DOUBLE / s.n))) AS sc
-           FROM postings p JOIN dfreq d USING (term) CROSS JOIN stats s)
-         SELECT doc_id, count(*)::BIGINT AS n_matched,
-           round(list_reduce(list_prepend(0.0::DOUBLE,
-               [z.sc for z in list_sort(list(struct_pack(term := term, sc := sc)))]),
-             (a, h) -> a + h), 6) AS bm25
-         FROM sc GROUP BY doc_id"""),
+      s"""WITH ${pipeline.Ranking.bm25OracleCtes(SearchTerms)}
+         ${pipeline.Ranking.bm25OracleAgg}"""),
     // --- RAG composition: BM25 top-100 retrieve → exact cosine rerank
     // against doc 7's embedding → top-20 ---
     Contract("hybrid_search", (s, d) =>
       pipeline.Ranking.hybridSearch(Tables.documents(s, d), Tables.embeddings(s, d),
-        Seq("spark", "join", "vector"), queryVecId = 7L, kRetrieve = 100, kFinal = 20),
+        SearchTerms, queryVecId = 7L, kRetrieve = 100, kFinal = 20),
       // Hybrid retrieve-then-rerank: the bm25_score pipeline cut to its
       // top-100 (bm25 desc, doc_id ties), reranked by the ann_topk cosine
       // against vec 7's embedding, cut to top-20 — both cuts replayed with
       // identical tie-breaks.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
-           FROM documents),
-         stats AS (SELECT count(*)::BIGINT AS n, sum(len(t))::BIGINT AS sdl FROM toks),
-         postings AS (
-           SELECT doc_id, len(t)::BIGINT AS dl, x AS term, count(*)::BIGINT AS tf
-           FROM toks, unnest(t) AS u(x)
-           WHERE x IN ('spark', 'join', 'vector')
-           GROUP BY 1, 2, 3),
-         dfreq AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY term),
-         sc AS (
-           SELECT p.doc_id, p.term,
-             ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5))
-               * (p.tf * (1.2 + 1.0))
-               / (p.tf + 1.2 * (1.0 - 0.75 + 0.75 * p.dl / (s.sdl::DOUBLE / s.n))) AS sc
-           FROM postings p JOIN dfreq d USING (term) CROSS JOIN stats s),
+      s"""WITH ${pipeline.Ranking.bm25OracleCtes(SearchTerms)},
          bm AS (
-           SELECT doc_id, count(*)::BIGINT AS n_matched,
-             round(list_reduce(list_prepend(0.0::DOUBLE,
-                 [z.sc for z in list_sort(list(struct_pack(term := term, sc := sc)))]),
-               (a, h) -> a + h), 6) AS bm25
-           FROM sc GROUP BY doc_id),
+           ${pipeline.Ranking.bm25OracleAgg}),
          cand AS (
            SELECT doc_id, n_matched, bm25 FROM (
              SELECT *, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rk FROM bm)
@@ -3132,15 +2944,14 @@ object SparkEntry {
       pipeline.Dedup.duplicatedNgramStats(Tables.documents(s, d)),
       // Cross-doc duplicated-trigram fraction: identical portable trigram
       // hashes on both engines (collisions included), exact integer division.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toks),
-         ng AS (SELECT doc_id, ('0x' || substring(md5(x), 1, 15))::BIGINT AS ng
+         ng AS (SELECT doc_id, ${duckdbHash60("x")} AS ng
                 FROM sh, unnest(s) AS u(x)),
          dfreq AS (SELECT ng, count(*)::BIGINT AS df FROM ng GROUP BY ng)
          SELECT doc_id, count(*)::BIGINT AS n_ngrams,
@@ -3153,20 +2964,19 @@ object SparkEntry {
     // the cleaned text and must land on the same fingerprint ---
     Contract("dedup_spans", (s, d) =>
       pipeline.Dedup.removeDuplicatedSpans(Tables.documents(s, d)),
-      // Duplicated-span removal replay: positional trigram hashes (same
-      // shingle construction as ngram_dupfrac, WITHOUT the distinct),
+      // Duplicated-span removal replay: positional trigram hashes (the
+      // Dedup.shinglesSql shingles, WITHOUT the distinct),
       // df >= 5 hot set, coverage positions, then rebuild the cleaned text
       // and fingerprint it. coalesce('') because DuckDB's
       // array_to_string([]) is NULL where Spark's array_join is ''.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, t,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END AS s
+             ${pipeline.Dedup.shinglesSql(3)} AS s
            FROM toks),
-         ph AS (SELECT doc_id, t, [('0x' || substring(md5(x), 1, 15))::BIGINT for x in s] AS ph FROM sh),
+         ph AS (SELECT doc_id, t, [${duckdbHash60("x")} for x in s] AS ph FROM sh),
          np AS (SELECT doc_id, u.s['ng'] AS ng, u.s['pos'] AS pos
                 FROM ph, unnest([{'ng': ph[i+1], 'pos': i} for i in range(0, len(ph))]) AS u(s)),
          dfreq AS (SELECT ng, count(DISTINCT doc_id) AS df FROM np GROUP BY ng),
@@ -3185,7 +2995,7 @@ object SparkEntry {
            FROM cl)
          SELECT doc_id, len(t)::BIGINT AS n_tokens,
                 (len(t) - len(clean))::BIGINT AS n_removed,
-                ('0x' || substring(md5(coalesce(array_to_string(clean, ' '), '')), 1, 15))::BIGINT AS clean_fp
+                ${duckdbHash60("coalesce(array_to_string(clean, ' '), '')")} AS clean_fp
          FROM fin"""),
     // --- corpus vocabulary: token → (tf, df), deterministic top-k ---
     Contract("vocab_topk", (s, d) =>
@@ -3231,20 +3041,19 @@ object SparkEntry {
     Contract("heavy_hitters", (s, d) =>
       pipeline.TextAnalysis.heavyHitters(Tables.documents(s, d)),
       // Count-min heavy hitters: replay the SKETCH (4 salted md5-hash rows ×
-      // 1024 buckets over trigram shingles — same shingle construction as
-      // ngram_dupfrac, without the per-doc distinct), estimate = min over
+      // 1024 buckets over the Dedup.shinglesSql trigram shingles, without
+      // the per-doc distinct), estimate = min over
       // rows, top-100 by (estimate desc, ngram asc) — a total order.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
-           SELECT CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END AS s
+           SELECT ${pipeline.Dedup.shinglesSql(3)} AS s
            FROM toks),
          tri AS (SELECT x AS ngram FROM sh, unnest(s) AS u(x)),
          sketch AS (
            SELECT j.j AS row,
-                  ('0x' || substring(md5('cms' || j.j::VARCHAR || '|' || ngram), 1, 15))::BIGINT % 1024 AS bucket,
+                  ${duckdbHash60("'cms' || j.j::VARCHAR || '|' || ngram")} % 1024 AS bucket,
                   count(*)::BIGINT AS cnt
            FROM tri, generate_series(0, 3) AS j(j) GROUP BY 1, 2),
          cand AS (SELECT DISTINCT ngram FROM tri),
@@ -3253,7 +3062,7 @@ object SparkEntry {
            FROM cand c
            CROSS JOIN generate_series(0, 3) AS j(j)
            JOIN sketch s ON s.row = j.j
-            AND s.bucket = ('0x' || substring(md5('cms' || j.j::VARCHAR || '|' || c.ngram), 1, 15))::BIGINT % 1024
+            AND s.bucket = ${duckdbHash60("'cms' || j.j::VARCHAR || '|' || c.ngram")} % 1024
            GROUP BY 1)
          SELECT ngram, cms_count FROM est
          ORDER BY cms_count DESC, ngram LIMIT 100"""),
@@ -3354,8 +3163,8 @@ object SparkEntry {
         defaultPpm = 50000L).select(col("doc_id"), col("source")),
       // Mixture sampling: integer ppm thresholds (float rates would round
       // differently across engines); hash is positive so % ≡ pmod.
-      """SELECT doc_id, source FROM documents
-         WHERE ('0x' || substring(md5('mix_' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000 <
+      s"""SELECT doc_id, source FROM documents
+         WHERE ${duckdbHash60("'mix_' || doc_id::VARCHAR")} % 1000000 <
                CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 500000
                            WHEN 'src2' THEN 250000 WHEN 'src3' THEN 125000
                            ELSE 50000 END"""),
@@ -3368,21 +3177,19 @@ object SparkEntry {
       // Cross-corpus 5-shingle overlap; the engine joins on 64-bit shingle
       // hashes, the oracle on shingle strings — equal counts (same reliance
       // on collision-freedom as dedup_jaccard).
-      """WITH tr AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH tr AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents WHERE doc_id % 50 <> 0),
          ev AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents WHERE doc_id % 50 = 0),
          tsh AS (
            SELECT doc_id AS train_doc,
-             unnest(list_distinct(CASE WHEN len(t) <= 5 THEN [array_to_string(t, ' ')]
-               ELSE [array_to_string(t[i:i+4], ' ') for i in range(1, len(t) - 3)] END)) AS g
+             unnest(list_distinct(${pipeline.Dedup.shinglesSql(5)})) AS g
            FROM tr),
          esh0 AS (
            SELECT doc_id AS eval_doc,
-             list_distinct(CASE WHEN len(t) <= 5 THEN [array_to_string(t, ' ')]
-               ELSE [array_to_string(t[i:i+4], ' ') for i in range(1, len(t) - 3)] END) AS sh
+             list_distinct(${pipeline.Dedup.shinglesSql(5)}) AS sh
            FROM ev),
          esh AS (SELECT eval_doc, len(sh)::BIGINT AS n_eval, unnest(sh) AS g FROM esh0)
          SELECT eval_doc, train_doc, count(*)::BIGINT AS shared,
@@ -3404,20 +3211,18 @@ object SparkEntry {
       // docs sharing NO distinct 5-shingle with any eval doc. Same
       // string-shingle construction as `decontaminate` (engine joins 64-bit
       // shingle hashes, oracle joins shingle strings).
-      """WITH tr AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH tr AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents WHERE doc_id % 50 <> 0),
          ev AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents WHERE doc_id % 50 = 0),
          tsh AS (
            SELECT doc_id AS train_doc,
-             unnest(list_distinct(CASE WHEN len(t) <= 5 THEN [array_to_string(t, ' ')]
-               ELSE [array_to_string(t[i:i+4], ' ') for i in range(1, len(t) - 3)] END)) AS g
+             unnest(list_distinct(${pipeline.Dedup.shinglesSql(5)})) AS g
            FROM tr),
          esh AS (
-           SELECT DISTINCT unnest(list_distinct(CASE WHEN len(t) <= 5 THEN [array_to_string(t, ' ')]
-               ELSE [array_to_string(t[i:i+4], ' ') for i in range(1, len(t) - 3)] END)) AS g
+           SELECT DISTINCT unnest(list_distinct(${pipeline.Dedup.shinglesSql(5)})) AS g
            FROM ev),
          dirty AS (SELECT DISTINCT train_doc FROM tsh JOIN esh USING (g))
          SELECT doc_id, source FROM documents
@@ -3426,10 +3231,10 @@ object SparkEntry {
     // --- per-source quota sampling (hash-ranked, engine-portable) ---
     Contract("quota_sample", (s, d) =>
       pipeline.TrainingData.quotaSample(Tables.documents(s, d), "source", 50),
-      """SELECT doc_id, source, rk FROM (
+      s"""SELECT doc_id, source, rk FROM (
            SELECT doc_id, source,
              row_number() OVER (PARTITION BY source
-               ORDER BY ('0x' || substring(md5('quota_' || doc_id::VARCHAR), 1, 15))::BIGINT
+               ORDER BY ${duckdbHash60("'quota_' || doc_id::VARCHAR")}
                         % 1000000007, doc_id) AS rk
            FROM documents) WHERE rk <= 50"""),
     // --- weighted sampling without replacement (Efraimidis–Spirakis via
@@ -3438,12 +3243,12 @@ object SparkEntry {
       pipeline.TrainingData.weightedSample(Tables.documents(s, d)),
       // Weighted sample: max-of-w portable hashes = Efraimidis–Spirakis
       // u^(1/w) key in pure integers; top-k by (key desc, doc_id).
-      """WITH wdoc AS (
+      s"""WITH wdoc AS (
            SELECT doc_id, (1 + least(3, n_chars // 150))::BIGINT AS w FROM documents),
          ex AS (SELECT doc_id, w, unnest(range(1, w + 1)) AS j FROM wdoc),
          keys AS (
            SELECT doc_id, w,
-                  max(('0x' || substring(md5('ws_' || doc_id::VARCHAR || '_' || j::VARCHAR), 1, 15))::BIGINT) AS sample_key
+                  max(${duckdbHash60("'ws_' || doc_id::VARCHAR || '_' || j::VARCHAR")}) AS sample_key
            FROM ex GROUP BY 1, 2)
          SELECT doc_id, w, sample_key FROM keys
          ORDER BY sample_key DESC, doc_id LIMIT 100"""),
@@ -3494,7 +3299,7 @@ object SparkEntry {
       // CDC merge: latest-seq change per key (U revises, D deletes, I
       // inserts the %3=2 keys absent from base), full-outer merge, portable
       // hash of the merged payload.
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 2),
+      s"""WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 2),
          chg AS (
            SELECT doc_id, 'U' AS op, text || ' [rev]' AS text, 1 AS seq
            FROM documents WHERE doc_id % 5 = 0 AND doc_id % 3 <> 2
@@ -3515,44 +3320,31 @@ object SparkEntry {
                        ELSE 'updated' END AS status
            FROM base b FULL OUTER JOIN latest l ON b.doc_id = l.doc_id
            WHERE l.op IS NULL OR l.op <> 'D')
-         SELECT doc_id, ('0x' || substring(md5(text), 1, 15))::BIGINT AS h, status
+         SELECT doc_id, ${duckdbHash60("text")} AS h, status
          FROM merged"""),
     // --- the capstone composition: lang filter → exact dedup → near-dup
     // clusters → split, end-to-end as ONE oracle-checked plan ---
     Contract("corpus_prepare", (s, d) => pipeline.TrainingData.prepareCorpus(Tables.documents(s, d)),
       // The full preparation chain in one recursive query: English docs,
-      // exact-dedup canonical survivors, minhash-pair components (same sig
-      // family as dedup_minhash/dedup_clusters), cluster-canonical keeps,
-      // hash split.
-      """WITH RECURSIVE en AS (
+      // exact-dedup canonical survivors, minhash-pair components (the
+      // Dedup.minhashOracleCtes signatures and banding of dedup_minhash),
+      // cluster-canonical keeps, hash split.
+      s"""WITH RECURSIVE en AS (
            SELECT doc_id, text FROM documents WHERE lang = 'en'),
          ex AS (SELECT min(doc_id) AS doc_id FROM en GROUP BY md5(text)),
          sv AS (SELECT en.doc_id, en.text FROM en JOIN ex USING (doc_id)),
          toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM sv),
          sh AS (
            SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END AS s
+             ${pipeline.Dedup.shinglesSql(3)} AS s
            FROM toks),
-         bs AS (
-           SELECT doc_id, [('0x' || substring(md5(x), 1, 15))::BIGINT for x in s] AS b
-           FROM sh),
-         sig AS (
-           SELECT doc_id,
-             [list_min([((('0x' || substring(md5('a_' || i::VARCHAR), 1, 15))::BIGINT % 2147483646 + 1)
-                         * (h % 2147483647)
-                         + ('0x' || substring(md5('b_' || i::VARCHAR), 1, 15))::BIGINT % 2147483647)
-                        % 2147483647
-                        for h in b])
-              for i in range(0, 32)] AS sg
-           FROM bs),
+         ${pipeline.Dedup.minhashOracleCtes(numHashes = 32)},
          pairs AS (
            SELECT a.doc_id AS da, b.doc_id AS db
            FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-           WHERE len([bb for bb in range(0, 8)
-                      if a.sg[bb*4+1 : bb*4+4] = b.sg[bb*4+1 : bb*4+4]]) > 0),
+           WHERE ${pipeline.Dedup.bandMatchSql(bands = 8, rows = 4)}),
          edges AS (
            SELECT da AS s, db AS t FROM pairs
            UNION ALL SELECT db, da FROM pairs),
@@ -3567,7 +3359,7 @@ object SparkEntry {
          SELECT doc_id,
                 CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-                 ('0x' || substring(md5('split_' || doc_id::VARCHAR), 1, 15))::BIGINT % 100 AS b
+                 ${duckdbHash60("'split_' || doc_id::VARCHAR")} % 100 AS b
                FROM kept)"""),
     // --- the round-3 curation capstone: mixture sample → PII scrub →
     // cross-doc boilerplate filter → split, as ONE oracle-checked plan ---
@@ -3580,27 +3372,26 @@ object SparkEntry {
       // Boilerplate stats are computed WITHIN the sampled corpus, as the
       // operator does. Redaction is a no-op on this corpus (no PII in the
       // synthetic text) but the oracle still applies it for fidelity.
-      """WITH sampled AS (
+      s"""WITH sampled AS (
            SELECT doc_id, text FROM documents
-           WHERE ('0x' || substring(md5('mix_' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000 <
+           WHERE ${duckdbHash60("'mix_' || doc_id::VARCHAR")} % 1000000 <
                  CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 500000
                              WHEN 'src2' THEN 250000 WHEN 'src3' THEN 125000
                              ELSE 50000 END),
          clean AS (
            SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-               '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g') AS text
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+               '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g'),
+               '\\b\\d{3}-\\d{3}-\\d{4}\\b', '<PHONE>', 'g') AS text
            FROM sampled),
          toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM clean),
          sh AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toks),
-         ng AS (SELECT doc_id, ('0x' || substring(md5(x), 1, 15))::BIGINT AS ng
+         ng AS (SELECT doc_id, ${duckdbHash60("x")} AS ng
                 FROM sh, unnest(s) AS u(x)),
          dfreq AS (SELECT ng, count(*)::BIGINT AS df FROM ng GROUP BY ng),
          stats AS (
@@ -3612,7 +3403,7 @@ object SparkEntry {
            CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
            dup_frac
          FROM (SELECT doc_id, dup_frac,
-                 ('0x' || substring(md5('split_' || doc_id::VARCHAR), 1, 15))::BIGINT % 100 AS b
+                 ${duckdbHash60("'split_' || doc_id::VARCHAR")} % 100 AS b
                FROM stats WHERE dup_frac < 0.9)"""),
     // --- skew-salted join: result contract = the plain equi-join, which
     // is exactly what the oracle computes ---
@@ -3670,18 +3461,18 @@ object SparkEntry {
          GROUP BY b.band"""),
     // --- training-data pipeline: dataset preparation ---
     Contract("corpus_split", (s, d) => pipeline.TrainingData.splitAssign(Tables.documents(s, d)),
-      """SELECT doc_id,
+      s"""SELECT doc_id,
                 CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-                 ('0x' || substring(md5('split_' || doc_id::VARCHAR), 1, 15))::BIGINT % 100 AS b
+                 ${duckdbHash60("'split_' || doc_id::VARCHAR")} % 100 AS b
                FROM documents)"""),
     // --- RAG-style overlapping chunk windows, fingerprint-exact ---
     Contract("chunk_docs", (s, d) => pipeline.TrainingData.chunkDocuments(Tables.documents(s, d)),
       // Deterministic portable-hash split: same md5 bucket formula.
       // Chunk replay: same integer chunk count, same 1-based clamped list
       // slices, same re-joined fingerprint per window.
-      """WITH t AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH t AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          n AS (
            SELECT doc_id, t,
@@ -3691,7 +3482,7 @@ object SparkEntry {
            SELECT doc_id, k, t[k*48 + 1 : k*48 + 64] AS chunk
            FROM n, LATERAL (SELECT unnest(range(nc)) AS k) ks(k))
          SELECT doc_id, k::BIGINT AS chunk_idx, len(chunk)::BIGINT AS n_tokens,
-                ('0x' || substring(md5(array_to_string(chunk, ' ')), 1, 15))::BIGINT AS chunk_fp
+                ${duckdbHash60("array_to_string(chunk, ' ')")} AS chunk_fp
          FROM c"""),
     Contract("seq_packing", (s, d) => pipeline.TrainingData.packSequences(Tables.documents(s, d)),
       // Concat-then-chunk packing: global token offsets in doc_id order and
@@ -3714,12 +3505,7 @@ object SparkEntry {
     Contract("embed_quantize", (s, d) => pipeline.TrainingData.quantizeEmbeddings(Tables.embeddings(s, d)),
       // Symmetric int8 quantization: identical double formula both engines
       // (floor(x/scale + 0.5) — explicit tie rule), scalar digests compared.
-      """WITH e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         s AS (
-           SELECT vec_id, e,
-                  CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
-           FROM (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e)),
+      s"""WITH ${pipeline.TrainingData.int8ScaleCtes("vec_id")},
          q AS (
            SELECT vec_id, scale,
                   list_transform(e, x -> floor(x / scale + 0.5)::BIGINT) AS qv
@@ -3734,12 +3520,7 @@ object SparkEntry {
       // Per-label quantized Gram: replay the embed_quantize rule, expand the
       // upper triangle over the 64 fixed dimensions (the ann_lsh dim
       // convention), exact integer sums.
-      """WITH e AS (
-           SELECT label, embedding::DOUBLE[] AS e FROM embeddings),
-         s AS (
-           SELECT label, e,
-                  CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
-           FROM (SELECT label, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e)),
+      s"""WITH ${pipeline.TrainingData.int8ScaleCtes("label")},
          q AS (
            SELECT label, list_transform(e, x -> floor(x / scale + 0.5)::BIGINT) AS qv
            FROM s),
@@ -3756,12 +3537,7 @@ object SparkEntry {
       // PCA power iteration: replay the quantization + FULL (mirrored) Gram,
       // mean-normalize with the sign-split floor division, then the
       // generated integer renormalized matrix-vector rounds.
-      s"""WITH e AS (
-           SELECT label, embedding::DOUBLE[] AS e FROM embeddings),
-         s AS (
-           SELECT label, e,
-                  CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
-           FROM (SELECT label, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e)),
+      s"""WITH ${pipeline.TrainingData.int8ScaleCtes("label")},
          q AS (
            SELECT label, list_transform(e, x -> floor(x / scale + 0.5)::BIGINT) AS qv
            FROM s),
@@ -3805,22 +3581,9 @@ object SparkEntry {
       pipeline.Similarity.lshTopK(emb, pipeline.Ivf.annQueries(emb), 5)
     },
       // Banded sign-LSH top-k: hyperplanes are md5-derived doubles
-      // (graft.pipeline.Similarity.plane), recomputed here; sign bits and
-      // scores are sequential double folds on both engines.
-      """WITH pl AS (
-           SELECT p, [(('0x' || substring(md5(p::VARCHAR || '_' || j::VARCHAR), 1, 15))::BIGINT
-                       % 2000001 - 1000000) / 1000000.0 for j in range(0, 64)] AS v
-           FROM range(0, 16) t(p)),
-         pls AS (SELECT list(v ORDER BY p) AS planes FROM pl),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS ce FROM embeddings),
-         bk AS (
-           SELECT vec_id, ce,
-             [8 * (CASE WHEN list_dot_product(ce, planes[b*4+1]) > 0 THEN 1 ELSE 0 END)
-            + 4 * (CASE WHEN list_dot_product(ce, planes[b*4+2]) > 0 THEN 1 ELSE 0 END)
-            + 2 * (CASE WHEN list_dot_product(ce, planes[b*4+3]) > 0 THEN 1 ELSE 0 END)
-            +     (CASE WHEN list_dot_product(ce, planes[b*4+4]) > 0 THEN 1 ELSE 0 END)
-              for b in range(0, 4)] AS bks
-           FROM e CROSS JOIN pls),
+      // (Similarity.plane), recomputed by Similarity.lshBucketOracleCtes;
+      // sign bits and scores are sequential double folds on both engines.
+      s"""WITH ${pipeline.Similarity.lshBucketOracleCtes("vec_id")},
          s AS (
            SELECT query_id, vec_id,
                   round(CASE WHEN na = 0 OR nb = 0 THEN 0.0
@@ -3840,13 +3603,12 @@ object SparkEntry {
     Contract("doc_keyphrases", (s, d) =>
       pipeline.TextAnalysis.docKeyphrases(Tables.documents(s, d), k = 3),
       // Keyphrases: 2-word-shingle tf vs corpus df, integer floor-div score.
-      """WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      s"""WITH toks AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          sh AS (
            SELECT doc_id, unnest(
-             CASE WHEN len(t) <= 2 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+1], ' ') for i in range(1, len(t))] END) AS p
+             ${pipeline.Dedup.shinglesSql(2)}) AS p
            FROM toks),
          tf AS (SELECT doc_id, p, count(*)::BIGINT AS tf FROM sh GROUP BY 1, 2),
          df AS (SELECT p, count(*)::BIGINT AS df FROM tf GROUP BY 1),
@@ -3890,7 +3652,7 @@ object SparkEntry {
            SELECT DISTINCT x AS id FROM (SELECT a AS x FROM und UNION ALL SELECT b FROM und)),
          probes AS (
            SELECT v.id AS v, t.j,
-                  ('0x' || substring(md5('neg_' || v.id::VARCHAR || '_' || t.j::VARCHAR), 1, 15))::BIGINT
+                  ${duckdbHash60("'neg_' || v.id::VARCHAR || '_' || t.j::VARCHAR")}
                     % 20011 AS neg
            FROM verts v, range(1, 4) t(j))
          SELECT p.v, p.neg, p.j
@@ -3910,7 +3672,9 @@ object SparkEntry {
       pipeline.Ivf.ivfTopKPortable(emb, pipeline.Ivf.annQueries(emb), 5,
         nCells = 16, nProbe = 4, iters = 1)
     },
-      // Portable IVF replayed step by step: quantize (floor(x*1000+0.5)),
+      // Portable IVF replayed step by step (Ivf.quantizedCte and
+      // Ivf.ivfChainCtes generate the chain from the plan's nCells and
+      // iters): quantize (floor(x*1000+0.5)),
       // seed with the 16 lowest vec_ids, ONE Lloyd round with INTEGER-SUM
       // centroids (scale-invariant under cosine — no division anywhere),
       // assign (first-max ties → lowest cell), probe top-4 cells (reverse-
@@ -3918,42 +3682,7 @@ object SparkEntry {
       // the original embeddings. All doubles are sequential folds in element
       // order on both engines → bit-identical sims, identical cells, probes
       // and rankings.
-      """WITH e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS ce,
-                  list_transform(embedding::DOUBLE[], x -> floor(x * 1000 + 0.5)) AS qv
-           FROM embeddings),
-         c0 AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, qv AS cent
-           FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
-         sim1 AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c0 c),
-         a1 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM sim1) WHERE rn = 1),
-         s1 AS (
-           SELECT a1.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
-           FROM a1 JOIN e USING (vec_id), LATERAL (SELECT unnest(range(64)) AS pos) p
-           GROUP BY a1.cell, p.pos),
-         c1l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM s1 GROUP BY cell),
-         c1 AS (SELECT c0.cell, coalesce(c1l.cent, c0.cent) AS cent
-                FROM c0 LEFT JOIN c1l USING (cell)),
-         simf AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c1 c),
-         af AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM simf) WHERE rn = 1),
+      s"""WITH ${pipeline.Ivf.quantizedCte}${pipeline.Ivf.ivfChainCtes(16, rounds = 1, 64, "")},
          qp AS (
            SELECT vec_id AS query_id, cell FROM (
              SELECT vec_id, cell,
@@ -3961,9 +3690,7 @@ object SparkEntry {
              FROM simf WHERE vec_id < 10) WHERE rn <= 4),
          sc AS (
            SELECT qp.query_id, af.vec_id,
-             round(CASE WHEN list_dot_product(q.ce, q.ce) = 0 OR list_dot_product(c.ce, c.ce) = 0 THEN 0.0
-                        ELSE list_dot_product(q.ce, c.ce)
-                             / (sqrt(list_dot_product(q.ce, q.ce)) * sqrt(list_dot_product(c.ce, c.ce))) END, 6) AS cos_sim
+             round(${duckdbCos("q.ce", "c.ce")}, 6) AS cos_sim
            FROM qp JOIN af USING (cell)
            JOIN e q ON q.vec_id = qp.query_id
            JOIN e c ON c.vec_id = af.vec_id
@@ -3976,27 +3703,10 @@ object SparkEntry {
       pipeline.Similarity.embeddingNearDup(Tables.embeddings(s, d), 0.4),
       // Sign-LSH near-duplicate pairs: candidates agree on ≥1 band, verified
       // by exact cosine ≥ 0.4.
-      """WITH pl AS (
-           SELECT p, [(('0x' || substring(md5(p::VARCHAR || '_' || j::VARCHAR), 1, 15))::BIGINT
-                       % 2000001 - 1000000) / 1000000.0 for j in range(0, 64)] AS v
-           FROM range(0, 16) t(p)),
-         pls AS (SELECT list(v ORDER BY p) AS planes FROM pl),
-         e AS (SELECT vec_id, embedding::DOUBLE[] AS ce FROM embeddings),
-         bk AS (
-           SELECT vec_id, ce,
-             [8 * (CASE WHEN list_dot_product(ce, planes[b*4+1]) > 0 THEN 1 ELSE 0 END)
-            + 4 * (CASE WHEN list_dot_product(ce, planes[b*4+2]) > 0 THEN 1 ELSE 0 END)
-            + 2 * (CASE WHEN list_dot_product(ce, planes[b*4+3]) > 0 THEN 1 ELSE 0 END)
-            +     (CASE WHEN list_dot_product(ce, planes[b*4+4]) > 0 THEN 1 ELSE 0 END)
-              for b in range(0, 4)] AS bks
-           FROM e CROSS JOIN pls)
+      s"""WITH ${pipeline.Similarity.lshBucketOracleCtes("vec_id")}
          SELECT id_a, id_b, cos_sim FROM (
            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                  round(CASE WHEN list_dot_product(a.ce, a.ce) = 0
-                               OR list_dot_product(b.ce, b.ce) = 0 THEN 0.0
-                             ELSE list_dot_product(a.ce, b.ce) /
-                                  (sqrt(list_dot_product(a.ce, a.ce)) *
-                                   sqrt(list_dot_product(b.ce, b.ce))) END, 6) AS cos_sim
+                  round(${duckdbCos("a.ce", "b.ce")}, 6) AS cos_sim
            FROM bk a JOIN bk b
              ON a.vec_id < b.vec_id
             AND len([i for i in range(1, 5) if a.bks[i] = b.bks[i]]) > 0)
@@ -4008,28 +3718,20 @@ object SparkEntry {
     },
       // MRL truncation fidelity: two ranked retrievals (full / first-16
       // dims), id-overlap per query.
-      """WITH q AS (
+      s"""WITH q AS (
            SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id < 10),
          c AS (SELECT vec_id, embedding::DOUBLE[] AS ce FROM embeddings),
          sf_ AS (
            SELECT query_id, vec_id,
                   row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
            FROM (SELECT q.query_id, c.vec_id,
-                        round(CASE WHEN list_dot_product(q.qe, q.qe) = 0
-                                     OR list_dot_product(c.ce, c.ce) = 0 THEN 0.0
-                                   ELSE list_dot_product(q.qe, c.ce)
-                                        / (sqrt(list_dot_product(q.qe, q.qe))
-                                           * sqrt(list_dot_product(c.ce, c.ce))) END, 6) AS cos_sim
+                        round(${duckdbCos("q.qe", "c.ce")}, 6) AS cos_sim
                  FROM q CROSS JOIN c WHERE c.vec_id <> q.query_id)),
          st AS (
            SELECT query_id, vec_id,
                   row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
            FROM (SELECT q.query_id, c.vec_id,
-                        round(CASE WHEN list_dot_product(q.qe[1:16], q.qe[1:16]) = 0
-                                     OR list_dot_product(c.ce[1:16], c.ce[1:16]) = 0 THEN 0.0
-                                   ELSE list_dot_product(q.qe[1:16], c.ce[1:16])
-                                        / (sqrt(list_dot_product(q.qe[1:16], q.qe[1:16]))
-                                           * sqrt(list_dot_product(c.ce[1:16], c.ce[1:16]))) END, 6) AS cos_sim
+                        round(${duckdbCos("q.qe[1:16]", "c.ce[1:16]")}, 6) AS cos_sim
                  FROM q CROSS JOIN c WHERE c.vec_id <> q.query_id)),
          ov AS (
            SELECT a.query_id, count(*)::BIGINT AS n_common
@@ -4072,73 +3774,11 @@ object SparkEntry {
     // quantizer AND the keep/drop decision exactly ---
     Contract("semantic_dedup", (s, d) =>
       pipeline.Similarity.semanticDedup(Tables.embeddings(s, d), 0.4),
-      // SemDedup replay: same integer-Lloyd CTE chain as ann_ivf up to the
-      // final assignment `af`, then within-cell lower-id pairs at cosine ≥ τ
+      // SemDedup replay, generated by Similarity.semanticDedupOracleCtes
+      // from the plan's parameters: the integer-Lloyd chain up to the final
+      // assignment `af`, then within-cell lower-id pairs at cosine ≥ τ
       // resolved to min dup_of — the keep/drop decision bit-matches.
-      """WITH e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS ce,
-                  list_transform(embedding::DOUBLE[], x -> floor(x * 1000 + 0.5)) AS qv
-           FROM embeddings),
-         c0 AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, qv AS cent
-           FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
-         sim1 AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c0 c),
-         a1 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM sim1) WHERE rn = 1),
-         s1 AS (
-           SELECT a1.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
-           FROM a1 JOIN e USING (vec_id), LATERAL (SELECT unnest(range(64)) AS pos) p
-           GROUP BY a1.cell, p.pos),
-         c1l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM s1 GROUP BY cell),
-         c1 AS (SELECT c0.cell, coalesce(c1l.cent, c0.cent) AS cent
-                FROM c0 LEFT JOIN c1l USING (cell)),
-         sim2 AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c1 c),
-         a2 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM sim2) WHERE rn = 1),
-         s2 AS (
-           SELECT a2.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
-           FROM a2 JOIN e USING (vec_id), LATERAL (SELECT unnest(range(64)) AS pos) p
-           GROUP BY a2.cell, p.pos),
-         c2l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM s2 GROUP BY cell),
-         c2 AS (SELECT c1.cell, coalesce(c2l.cent, c1.cent) AS cent
-                FROM c1 LEFT JOIN c2l USING (cell)),
-         simf AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c2 c),
-         af AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM simf) WHERE rn = 1),
-         p AS (
-           SELECT a.vec_id, min(b.vec_id) AS dup_of
-           FROM af a JOIN af b USING (cell)
-           JOIN e ea ON ea.vec_id = a.vec_id
-           JOIN e eb ON eb.vec_id = b.vec_id
-           WHERE b.vec_id < a.vec_id
-             AND round(CASE WHEN list_dot_product(ea.ce, ea.ce) = 0 OR list_dot_product(eb.ce, eb.ce) = 0 THEN 0.0
-                            ELSE list_dot_product(ea.ce, eb.ce)
-                                 / (sqrt(list_dot_product(ea.ce, ea.ce)) * sqrt(list_dot_product(eb.ce, eb.ce))) END, 6) >= 0.4
-           GROUP BY a.vec_id)
+      s"""WITH ${pipeline.Similarity.semanticDedupOracleCtes("p", tau = 0.4)}
          SELECT af.vec_id, af.cell::INT AS cell,
                 p.dup_of IS NULL AS keep, p.dup_of
          FROM af LEFT JOIN p USING (vec_id)"""),
@@ -4162,32 +3802,15 @@ object SparkEntry {
     // class pairs (label-quality audit) ---
     Contract("knn_purity", (s, d) =>
       pipeline.Similarity.knnLabelConfusion(Tables.embeddings(s, d), k = 5),
-      // kNN label confusion: same planes/buckets as embed_neardup, BOTH
-      // directions (every vector is a probe); per probe rank candidates by
+      // kNN label confusion: the embed_neardup planes/buckets
+      // (Similarity.lshBucketOracleCtes), BOTH directions (every vector is a probe); per probe rank candidates by
       // (rounded cosine DESC, vec_id ASC) — a total order — keep rk ≤ 5,
       // then count (label_probe, label_neighbor) votes.
-      """WITH pl AS (
-           SELECT p, [(('0x' || substring(md5(p::VARCHAR || '_' || j::VARCHAR), 1, 15))::BIGINT
-                       % 2000001 - 1000000) / 1000000.0 for j in range(0, 64)] AS v
-           FROM range(0, 16) t(p)),
-         pls AS (SELECT list(v ORDER BY p) AS planes FROM pl),
-         e AS (SELECT vec_id, label, embedding::DOUBLE[] AS ce FROM embeddings),
-         bk AS (
-           SELECT vec_id, label, ce,
-             [8 * (CASE WHEN list_dot_product(ce, planes[b*4+1]) > 0 THEN 1 ELSE 0 END)
-            + 4 * (CASE WHEN list_dot_product(ce, planes[b*4+2]) > 0 THEN 1 ELSE 0 END)
-            + 2 * (CASE WHEN list_dot_product(ce, planes[b*4+3]) > 0 THEN 1 ELSE 0 END)
-            +     (CASE WHEN list_dot_product(ce, planes[b*4+4]) > 0 THEN 1 ELSE 0 END)
-              for b in range(0, 4)] AS bks
-           FROM e CROSS JOIN pls),
+      s"""WITH ${pipeline.Similarity.lshBucketOracleCtes("vec_id, label")},
          cand AS (
            SELECT a.vec_id AS query_id, a.label AS label_probe,
                   b.vec_id AS vec_id, b.label AS label_neighbor,
-                  round(CASE WHEN list_dot_product(a.ce, a.ce) = 0
-                               OR list_dot_product(b.ce, b.ce) = 0 THEN 0.0
-                             ELSE list_dot_product(a.ce, b.ce) /
-                                  (sqrt(list_dot_product(a.ce, a.ce)) *
-                                   sqrt(list_dot_product(b.ce, b.ce))) END, 6) AS cos_sim
+                  round(${duckdbCos("a.ce", "b.ce")}, 6) AS cos_sim
            FROM bk a JOIN bk b
              ON a.vec_id <> b.vec_id
             AND len([i for i in range(1, 5) if a.bks[i] = b.bks[i]]) > 0),
@@ -4292,7 +3915,7 @@ object SparkEntry {
                       CAST(length(text) AS BIGINT) AS n
                FROM graft_documents WHERE doc_id % 7 = 0""")
     },
-      """SELECT doc_id, ('0x' || substring(md5(text), 1, 15))::BIGINT AS h,
+      s"""SELECT doc_id, ${duckdbHash60("text")} AS h,
                 length(text)::BIGINT AS n
          FROM documents WHERE doc_id % 7 = 0"""),
     // --- Raco plan-text frontend (SURVEY §3.2, reference opt/raco/PTree.kt):
@@ -4340,21 +3963,17 @@ object SparkEntry {
       // REAL ImageIO decode: the engine encodes formula pixels to PNG,
       // decodes them back (plus a nearest-neighbor resize round trip through
       // resizeImages) and sums channels; the oracle evaluates the same
-      // integer formula analytically over a lateral pixel grid. `//` is
+      // integer formula (Multimodal.pngPixelSql) analytically over a
+      // lateral pixel grid. `//` is
       // DuckDB integer division — the exact resizeNN source-pixel mapping.
-      """WITH dims AS (SELECT doc_id AS media_id, 16 + doc_id % 5 AS w, 12 + doc_id % 3 AS h
-                       FROM documents),
+      s"""WITH ${pipeline.Multimodal.pngDimsCte("dims")},
          px AS (
            SELECT media_id,
-             (media_id*7 + x*3 + y*5) % 256 AS r,
-             (media_id*11 + x*5 + y*7) % 256 AS g,
-             (media_id*13 + x*7 + y*11) % 256 AS b
+             ${pipeline.Multimodal.pngPixelSql("x", "y")}
            FROM dims, LATERAL (SELECT unnest(range(w)) AS x), LATERAL (SELECT unnest(range(h)) AS y)),
          rs AS (
            SELECT media_id,
-             (media_id*7 + ((x2*w)//7)*3 + ((y2*h)//5)*5) % 256 AS r,
-             (media_id*11 + ((x2*w)//7)*5 + ((y2*h)//5)*7) % 256 AS g,
-             (media_id*13 + ((x2*w)//7)*7 + ((y2*h)//5)*11) % 256 AS b
+             ${pipeline.Multimodal.pngPixelSql("((x2*w)//7)", "((y2*h)//5)")}
            FROM dims, LATERAL (SELECT unnest(range(7)) AS x2), LATERAL (SELECT unnest(range(5)) AS y2)),
          o AS (SELECT media_id, sum(r)::BIGINT AS sum_r, sum(g)::BIGINT AS sum_g, sum(b)::BIGINT AS sum_b,
                       max(r)::BIGINT AS max_r, max(g)::BIGINT AS max_g, max(b)::BIGINT AS max_b
@@ -4439,21 +4058,10 @@ object SparkEntry {
     // → exact pixel-fingerprint dedup → portable split, one plan ---
     Contract("media_curate", (s, d) =>
       pipeline.Multimodal.curateMedia(Tables.documents(s, d)),
-      // Media curation capstone: the media_decode pixel formulas reduced to
-      // integer luminance + exact fingerprints, filtered/deduped/split with
-      // the same portable integer arithmetic the engine uses.
-      """WITH dims AS (SELECT doc_id AS media_id, 16 + doc_id % 5 AS w, 12 + doc_id % 3 AS h
-                       FROM documents),
-         px AS (
-           SELECT media_id, w, h,
-             (media_id*7 + x*3 + y*5) % 256 AS r,
-             (media_id*11 + x*5 + y*7) % 256 AS g,
-             (media_id*13 + x*7 + y*11) % 256 AS b
-           FROM dims, LATERAL (SELECT unnest(range(w)) AS x), LATERAL (SELECT unnest(range(h)) AS y)),
-         st AS (
-           SELECT media_id, max(w) AS w, max(h) AS h,
-                  sum(r)::BIGINT AS sr, sum(g)::BIGINT AS sg, sum(b)::BIGINT AS sb
-           FROM px GROUP BY media_id),
+      // Media curation capstone: the Multimodal.pngSumCtes pixel sums
+      // reduced to integer luminance + exact fingerprints, filtered/deduped/
+      // split with the same portable integer arithmetic the engine uses.
+      s"""WITH ${pipeline.Multimodal.pngSumCtes("")},
          q AS (
            SELECT media_id, w, h, sr, sg, sb,
                   (sr + sg + sb) // (3 * w * h) AS lum
@@ -4461,8 +4069,8 @@ object SparkEntry {
            WHERE (sr + sg + sb) // (3 * w * h) BETWEEN 100 AND 160),
          canon AS (SELECT min(media_id) AS media_id FROM q GROUP BY w, h, sr, sg, sb)
          SELECT q.media_id, q.lum::BIGINT AS lum,
-                CASE WHEN ('0x' || substring(md5('msplit_' || q.media_id::VARCHAR), 1, 15))::BIGINT % 100 < 80 THEN 'train'
-                     WHEN ('0x' || substring(md5('msplit_' || q.media_id::VARCHAR), 1, 15))::BIGINT % 100 < 90 THEN 'val'
+                CASE WHEN ${duckdbHash60("'msplit_' || q.media_id::VARCHAR")} % 100 < 80 THEN 'train'
+                     WHEN ${duckdbHash60("'msplit_' || q.media_id::VARCHAR")} % 100 < 90 THEN 'val'
                      ELSE 'test' END AS split
          FROM q JOIN canon USING (media_id)"""),
     // --- CROSS-SURFACE capstone: text boilerplate + embedding SemDedup +
@@ -4470,110 +4078,36 @@ object SparkEntry {
     Contract("multimodal_curate", (s, d) =>
       pipeline.TrainingData.curateMultimodal(
         Tables.documents(s, d), Tables.embeddings(s, d)),
-      // Cross-surface capstone replay: the three proven oracle fragments
-      // (duplicated-trigram fraction, the integer-Lloyd SemDedup chain,
-      // analytic pixel sums) joined on doc_id + the md5 split — one query.
-      """WITH toksx AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS t
+      // Cross-surface capstone replay: the duplicated-trigram fraction, the
+      // SemDedup chain (Similarity.semanticDedupOracleCtes) and the pixel
+      // sums (Multimodal.pngSumCtes), joined on doc_id + the md5 split —
+      // one query.
+      s"""WITH toksx AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
          shx AS (
            SELECT doc_id, list_distinct(
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)] END) AS s
+             ${pipeline.Dedup.shinglesSql(3)}) AS s
            FROM toksx),
-         ngx AS (SELECT doc_id, ('0x' || substring(md5(x), 1, 15))::BIGINT AS ng
+         ngx AS (SELECT doc_id, ${duckdbHash60("x")} AS ng
                  FROM shx, unnest(s) AS u(x)),
          dfx AS (SELECT ng, count(*)::BIGINT AS df FROM ngx GROUP BY ng),
          txt AS (
            SELECT doc_id FROM ngx JOIN dfx USING (ng)
            GROUP BY doc_id
            HAVING sum(CASE WHEN df > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*) <= 0.65),
-         e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS ce,
-                  list_transform(embedding::DOUBLE[], x -> floor(x * 1000 + 0.5)) AS qv
-           FROM embeddings),
-         c0 AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, qv AS cent
-           FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT 16)),
-         sim1 AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c0 c),
-         a1 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM sim1) WHERE rn = 1),
-         s1 AS (
-           SELECT a1.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
-           FROM a1 JOIN e USING (vec_id), LATERAL (SELECT unnest(range(64)) AS pos) p
-           GROUP BY a1.cell, p.pos),
-         c1l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM s1 GROUP BY cell),
-         c1 AS (SELECT c0.cell, coalesce(c1l.cent, c0.cent) AS cent
-                FROM c0 LEFT JOIN c1l USING (cell)),
-         sim2 AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c1 c),
-         a2 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM sim2) WHERE rn = 1),
-         s2 AS (
-           SELECT a2.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
-           FROM a2 JOIN e USING (vec_id), LATERAL (SELECT unnest(range(64)) AS pos) p
-           GROUP BY a2.cell, p.pos),
-         c2l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM s2 GROUP BY cell),
-         c2 AS (SELECT c1.cell, coalesce(c2l.cent, c1.cent) AS cent
-                FROM c1 LEFT JOIN c2l USING (cell)),
-         simf AS (
-           SELECT e.vec_id, c.cell,
-             CASE WHEN list_dot_product(e.qv, e.qv) = 0 OR list_dot_product(c.cent, c.cent) = 0 THEN 0.0
-                  ELSE list_dot_product(e.qv, c.cent)
-                       / (sqrt(list_dot_product(e.qv, e.qv)) * sqrt(list_dot_product(c.cent, c.cent))) END AS sim
-           FROM e CROSS JOIN c2 c),
-         af AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM simf) WHERE rn = 1),
-         pdup AS (
-           SELECT a.vec_id, min(b.vec_id) AS dup_of
-           FROM af a JOIN af b USING (cell)
-           JOIN e ea ON ea.vec_id = a.vec_id
-           JOIN e eb ON eb.vec_id = b.vec_id
-           WHERE b.vec_id < a.vec_id
-             AND round(CASE WHEN list_dot_product(ea.ce, ea.ce) = 0 OR list_dot_product(eb.ce, eb.ce) = 0 THEN 0.0
-                            ELSE list_dot_product(ea.ce, eb.ce)
-                                 / (sqrt(list_dot_product(ea.ce, ea.ce)) * sqrt(list_dot_product(eb.ce, eb.ce))) END, 6) >= 0.4
-           GROUP BY a.vec_id),
+         ${pipeline.Similarity.semanticDedupOracleCtes("pdup")},
          sem AS (
            SELECT af.vec_id AS doc_id FROM af LEFT JOIN pdup USING (vec_id)
            WHERE pdup.dup_of IS NULL),
-         dimsm AS (SELECT doc_id AS media_id, 16 + doc_id % 5 AS w, 12 + doc_id % 3 AS h
-                   FROM documents),
-         pxm AS (
-           SELECT media_id, w, h,
-             (media_id*7 + x*3 + y*5) % 256 AS r,
-             (media_id*11 + x*5 + y*7) % 256 AS g,
-             (media_id*13 + x*7 + y*11) % 256 AS b
-           FROM dimsm, LATERAL (SELECT unnest(range(w)) AS x), LATERAL (SELECT unnest(range(h)) AS y)),
-         stm AS (
-           SELECT media_id, max(w) AS w, max(h) AS h,
-                  sum(r)::BIGINT AS sr, sum(g)::BIGINT AS sg, sum(b)::BIGINT AS sb
-           FROM pxm GROUP BY media_id),
+         ${pipeline.Multimodal.pngSumCtes("m")},
          med AS (
            SELECT media_id AS doc_id, (sr + sg + sb) // (3 * w * h) AS lum
            FROM stm
            WHERE (sr + sg + sb) // (3 * w * h) BETWEEN 100 AND 160)
          SELECT d.doc_id, med.lum::BIGINT AS lum,
-                CASE WHEN ('0x' || substring(md5('mmsplit_' || d.doc_id::VARCHAR), 1, 15))::BIGINT % 100 < 80 THEN 'train'
-                     WHEN ('0x' || substring(md5('mmsplit_' || d.doc_id::VARCHAR), 1, 15))::BIGINT % 100 < 90 THEN 'val'
+                CASE WHEN ${duckdbHash60("'mmsplit_' || d.doc_id::VARCHAR")} % 100 < 80 THEN 'train'
+                     WHEN ${duckdbHash60("'mmsplit_' || d.doc_id::VARCHAR")} % 100 < 90 THEN 'val'
                      ELSE 'test' END AS split
          FROM documents d
          JOIN txt USING (doc_id)

@@ -114,4 +114,13 @@ object CosineSimilarity {
     val bd = b.cast(ArrayType(DoubleType))
     bridge.column(CosineSimilarity(bridge.expression(ad), bridge.expression(bd)))
   }
+
+  /** DuckDB twin of the kernel, for oracle SQL: the same sequential
+    * `list_dot_product` folds over `a` and `b` (DOUBLE[] expressions), and
+    * the same 0.0 when either norm is 0.
+    */
+  private[graft] def duckdbCos(a: String, b: String): String =
+    s"""CASE WHEN list_dot_product($a, $a) = 0 OR list_dot_product($b, $b) = 0 THEN 0.0
+             ELSE list_dot_product($a, $b)
+                  / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))) END"""
 }

@@ -95,6 +95,16 @@ object Dedup {
       .otherwise(slice(joined, lit(1), n - (k - 1)))
   }
 
+  /** DuckDB twin of [[shingles]] over the oracle's token list `t`: the
+    * whole token string when there are ≤ k tokens, else every k-token
+    * window (len(t) − k + 1 of them; the bound reads `len(t)` for k = 2).
+    */
+  private[graft] def shinglesSql(k: Int): String = {
+    val last = if (k == 2) "len(t)" else s"len(t) - ${k - 2}"
+    s"""CASE WHEN len(t) <= $k THEN [array_to_string(t, ' ')]
+                  ELSE [array_to_string(t[i:i+${k - 1}], ' ') for i in range(1, $last)] END"""
+  }
+
   /** k-shingle *hashes* without materializing shingle strings: hash each
     * token once, then combine k consecutive token hashes positionally
     * (zip with the array's own shifted tails). Equivalent to hashing the
@@ -152,6 +162,35 @@ object Dedup {
     import org.apache.spark.sql.graft.bridge
     bridge.column(graft.functions.MinHashSig(bridge.expression(baseHashes), numHashes))
   }
+
+  /** DuckDB twin of [[portableBaseHashes]] and [[minhashSignaturePortable]]
+    * over shingle lists `sh(doc_id, s)`: the CTEs `bs(doc_id, b)`, one
+    * 60-bit md5 hash per shingle, and `sig(doc_id, sg)`, the `numHashes`
+    * universal-hash minima with the same md5-salted coefficients.
+    */
+  private[graft] def minhashOracleCtes(numHashes: Int): String = {
+    val p = 2147483647L // 2^31 − 1
+    def h(x: String): String = PortableHash.duckdbHash60(x)
+    s"""bs AS (
+           SELECT doc_id, [${h("x")} for x in s] AS b
+           FROM sh),
+         sig AS (
+           SELECT doc_id,
+             [list_min([((${h("'a_' || i::VARCHAR")} % ${p - 1} + 1)
+                         * (h % $p)
+                         + ${h("'b_' || i::VARCHAR")} % $p)
+                        % $p
+                        for h in b])
+              for i in range(0, $numHashes)] AS sg
+           FROM bs)"""
+  }
+
+  /** DuckDB twin of the banding in [[minhashPairs]]: signatures `a.sg`
+    * and `b.sg` agree on every row of at least one of `bands` bands.
+    */
+  private[graft] def bandMatchSql(bands: Int, rows: Int): String =
+    s"""len([bb for bb in range(0, $bands)
+                    if a.sg[bb*$rows+1 : bb*$rows+$rows] = b.sg[bb*$rows+1 : bb*$rows+$rows]]) > 0"""
 
   /** HOF formulation of [[minhashSignaturePortable]] (identical values). */
   def minhashSignaturePortableHof(baseHashes: Column, numHashes: Int): Column = {

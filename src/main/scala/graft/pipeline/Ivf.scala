@@ -414,7 +414,7 @@ object Ivf {
                    FROM e ${(0 until m).map(j => s"JOIN af_$j USING (vec_id)").mkString(" ")}),
          qs AS (SELECT vec_id AS query_id, qv FROM e WHERE vec_id < $AnnQueryMax),
          sc AS (SELECT qs.query_id, v.vec_id,
-                       round(${oracleCos("qs.qv", s"($recon)")}, 6) AS cos_sim
+                       round(${CosineSimilarity.duckdbCos("qs.qv", s"($recon)")}, 6) AS cos_sim
                 FROM qs, codes v $joins
                 WHERE v.vec_id <> qs.query_id)
          SELECT query_id, vec_id, cos_sim, rk FROM (
@@ -423,24 +423,15 @@ object Ivf {
          WHERE rk <= $k"""
   }
 
-  private def oracleCos(a: String, b: String): String =
-    s"""CASE WHEN list_dot_product($a, $a) = 0 OR list_dot_product($b, $b) = 0 THEN 0.0
-             ELSE list_dot_product($a, $b)
-                  / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))) END"""
-
   /** Shared CTE chain of the PQ oracles: quantize, per-subspace seed book
     * `c0_j`, one-round assignment `a1_j`, integer-sum re-estimation
     * `c1_j`, final assignment `af_j`.
     */
   private def pqChainCtes(m: Int, subDim: Int, k: Int): String = {
-    def cos(a: String, b: String): String = oracleCos(a, b)
+    def cos(a: String, b: String): String = CosineSimilarity.duckdbCos(a, b)
     // ce (the exact double cast) rides along unused by the PQ chains; the
     // composed ivf_pq oracle re-ranks on it
-    val sb = new StringBuilder(
-      """WITH e AS (
-           SELECT vec_id, embedding::DOUBLE[] AS ce,
-                  list_transform(embedding::DOUBLE[], x -> floor(x * 1000 + 0.5)) AS qv
-           FROM embeddings)""")
+    val sb = new StringBuilder(s"WITH $quantizedCte")
     for (j <- 0 until m) {
       val lo = j * subDim + 1; val hi = (j + 1) * subDim
       sb.append(s""",
@@ -468,38 +459,54 @@ object Ivf {
     sb.toString
   }
 
-  /** Coarse-quantizer CTE chain (the ann_ivf oracle's training/assignment
-    * steps, generated): seed book `c0` = the `nCells` lowest vec_ids, one
-    * integer-sum Lloyd round (`a1`→`s1`→`c1`), final per-vector cell `af`.
-    * Assumes the quantize CTE `e(vec_id, ce, qv)` is already in scope.
+  /** DuckDB twin of [[quantized]], as the CTE `e(vec_id, ce, qv)` every
+    * portable IVF/PQ oracle starts from: `ce` is the exact double cast,
+    * `qv` the integer quantization.
     */
-  private def ivfChainCtes(nCells: Int, dim: Int): String = s""",
-         iv_c0 AS (
+  private[graft] def quantizedCte: String =
+    """e AS (
+           SELECT vec_id, embedding::DOUBLE[] AS ce,
+                  list_transform(embedding::DOUBLE[], x -> floor(x * 1000 + 0.5)) AS qv
+           FROM embeddings)"""
+
+  /** DuckDB twin of [[trainOnQuantized]] plus the final assignment, as a
+    * CTE chain (each name prefixed with `prefix`) that opens with a comma:
+    * seed book `c0` = the `nCells` lowest vec_ids, then per Lloyd round r
+    * the assignment `sim<r>`→`a<r>`, integer sums `s<r>`→`c<r>l` and the
+    * centroids `c<r>` (an empty cell keeps its previous centroid), then the
+    * final per-vector cell `af` (first-max ties → lowest cell) from the
+    * sims `simf`. `rounds` and `dim` must be the Spark plan's `iters` and
+    * embedding width. Assumes [[quantizedCte]] `e` is already in scope.
+    */
+  private[graft] def ivfChainCtes(nCells: Int, rounds: Int, dim: Int, prefix: String): String = {
+    def sims(name: String, cents: String): String = s""",
+         $prefix$name AS (
+           SELECT e.vec_id, c.cell, ${CosineSimilarity.duckdbCos("e.qv", "c.cent")} AS sim
+           FROM e CROSS JOIN $prefix$cents c)"""
+    def assign(sim: String, name: String): String = s""",
+         $prefix$name AS (
+           SELECT vec_id, cell FROM (
+             SELECT vec_id, cell,
+                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
+             FROM $prefix$sim) WHERE rn = 1)"""
+    val sb = new StringBuilder(s""",
+         ${prefix}c0 AS (
            SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, qv AS cent
-           FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT $nCells)),
-         iv_sim1 AS (
-           SELECT e.vec_id, c.cell, ${oracleCos("e.qv", "c.cent")} AS sim
-           FROM e CROSS JOIN iv_c0 c),
-         iv_a1 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM iv_sim1) WHERE rn = 1),
-         iv_s1 AS (
-           SELECT iv_a1.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
-           FROM iv_a1 JOIN e USING (vec_id), LATERAL (SELECT unnest(range($dim)) AS pos) p
-           GROUP BY iv_a1.cell, p.pos),
-         iv_c1l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM iv_s1 GROUP BY cell),
-         iv_c1 AS (SELECT iv_c0.cell, coalesce(iv_c1l.cent, iv_c0.cent) AS cent
-                FROM iv_c0 LEFT JOIN iv_c1l USING (cell)),
-         iv_simf AS (
-           SELECT e.vec_id, c.cell, ${oracleCos("e.qv", "c.cent")} AS sim
-           FROM e CROSS JOIN iv_c1 c),
-         iv_af AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-             FROM iv_simf) WHERE rn = 1)"""
+           FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT $nCells))""")
+    for (r <- 1 to rounds) {
+      val (a, c, prev) = (s"${prefix}a$r", s"${prefix}c$r", s"${prefix}c${r - 1}")
+      sb.append(sims(s"sim$r", s"c${r - 1}")).append(assign(s"sim$r", s"a$r"))
+      sb.append(s""",
+         ${prefix}s$r AS (
+           SELECT $a.cell, p.pos, sum(e.qv[p.pos + 1])::BIGINT AS s
+           FROM $a JOIN e USING (vec_id), LATERAL (SELECT unnest(range($dim)) AS pos) p
+           GROUP BY $a.cell, p.pos),
+         ${c}l AS (SELECT cell, list(s::DOUBLE ORDER BY pos) AS cent FROM ${prefix}s$r GROUP BY cell),
+         $c AS (SELECT $prev.cell, coalesce(${c}l.cent, $prev.cent) AS cent
+                FROM $prev LEFT JOIN ${c}l USING (cell))""")
+    }
+    sb.append(sims("simf", s"c$rounds")).append(assign("simf", "af")).toString
+  }
 
   /** DuckDB twin of [[ivfPqTopK]]: the PQ subspace chains and the coarse
     * IVF chain share one quantize CTE; `qp` probes each query's top-nProbe
@@ -520,7 +527,8 @@ object Ivf {
         "the PQ chain reconstructs exactly the concatenated subspaces")
     val recon = (0 until m).map(j => s"b$j.cent").mkString(" || ")
     val bookJoins = (0 until m).map(j => s"JOIN c1_$j b$j ON b$j.code = v.c$j").mkString(" ")
-    s"""${pqChainCtes(m, subDim, kCodes)}${ivfChainCtes(nCells, dim)},
+    // one Lloyd round: ivfPqTopK trains its coarse quantizer with iters = 1
+    s"""${pqChainCtes(m, subDim, kCodes)}${ivfChainCtes(nCells, rounds = 1, dim, "iv_")},
          codes AS (
            SELECT e.vec_id, iv_af.cell, ${(0 until m).map(j => s"c$j").mkString(", ")}
            FROM e JOIN iv_af USING (vec_id)
@@ -532,7 +540,7 @@ object Ivf {
              FROM iv_simf WHERE vec_id < $AnnQueryMax) WHERE rn <= $nProbe),
          adc AS (
            SELECT qp.query_id, v.vec_id,
-                  round(${oracleCos("q.qv", s"($recon)")}, 6) AS adc_sim
+                  round(${CosineSimilarity.duckdbCos("q.qv", s"($recon)")}, 6) AS adc_sim
            FROM qp JOIN codes v USING (cell)
            JOIN e q ON q.vec_id = qp.query_id
            $bookJoins
@@ -544,7 +552,7 @@ object Ivf {
              FROM adc) WHERE rn <= $shortlist),
          rer AS (
            SELECT s.query_id, s.vec_id,
-                  round(${oracleCos("q.ce", "c.ce")}, 6) AS cos_sim
+                  round(${CosineSimilarity.duckdbCos("q.ce", "c.ce")}, 6) AS cos_sim
            FROM short s
            JOIN e q ON q.vec_id = s.query_id
            JOIN e c ON c.vec_id = s.vec_id)

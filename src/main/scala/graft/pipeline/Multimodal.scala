@@ -379,6 +379,36 @@ object Multimodal {
   @inline private[pipeline] def pxG(id: Long, x: Int, y: Int): Int = ((id * 11 + x * 5 + y * 7) % 256).toInt
   @inline private[pipeline] def pxB(id: Long, x: Int, y: Int): Int = ((id * 13 + x * 7 + y * 11) % 256).toInt
 
+  /** DuckDB twin of [[pxR]], [[pxG]] and [[pxB]] at pixel (`x`, `y`) of
+    * image `media_id`, as the columns `r`, `g`, `b`.
+    */
+  private[graft] def pngPixelSql(x: String, y: String): String =
+    s"""(media_id*7 + $x*3 + $y*5) % 256 AS r,
+             (media_id*11 + $x*5 + $y*7) % 256 AS g,
+             (media_id*13 + $x*7 + $y*11) % 256 AS b"""
+
+  /** DuckDB twin of [[syntheticPngs]]' image sizes: the CTE
+    * `name(media_id, w, h)`, one row per document.
+    */
+  private[graft] def pngDimsCte(name: String): String =
+    s"""$name AS (SELECT doc_id AS media_id, 16 + doc_id % 5 AS w, 12 + doc_id % 3 AS h
+                       FROM documents)"""
+
+  /** Per-image channel sums of [[syntheticPngs]], analytically: the CTEs
+    * `dims<sfx>`, `px<sfx>` (one row per pixel) and
+    * `st<sfx>(media_id, w, h, sr, sg, sb)`.
+    */
+  private[graft] def pngSumCtes(sfx: String): String =
+    s"""${pngDimsCte(s"dims$sfx")},
+         px$sfx AS (
+           SELECT media_id, w, h,
+             ${pngPixelSql("x", "y")}
+           FROM dims$sfx, LATERAL (SELECT unnest(range(w)) AS x), LATERAL (SELECT unnest(range(h)) AS y)),
+         st$sfx AS (
+           SELECT media_id, max(w) AS w, max(h) AS h,
+                  sum(r)::BIGINT AS sr, sum(g)::BIGINT AS sg, sum(b)::BIGINT AS sb
+           FROM px$sfx GROUP BY media_id)"""
+
   /** Synthetic REAL PNGs, one per document id: `w = 16 + id%5`,
     * `h = 12 + id%3`, pixels from the shared formula, encoded with the
     * JDK PNG writer. Deterministic in `doc_id` only.

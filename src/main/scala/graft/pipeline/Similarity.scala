@@ -151,6 +151,32 @@ object Similarity {
         .reduceLeft((acc, bit) => acc * 2 + bit)
     }: _*)
 
+  /** DuckDB twin of [[plane]] and [[lshBandBuckets]], as CTEs: `pl`/`pls`
+    * hold the `bands`·`planesPerBand` md5-derived hyperplanes, `e` the
+    * embeddings (columns `cols` plus the DOUBLE[] cast `ce`), and `bk`
+    * adds each vector's `bands` bucket keys `bks` (sign bits, first plane
+    * most significant).
+    */
+  private[graft] def lshBucketOracleCtes(cols: String, bands: Int = 4,
+                                         planesPerBand: Int = 4, dim: Int = 64): String = {
+    val bits = (0 until planesPerBand).map { i =>
+      val w = 1 << (planesPerBand - 1 - i)
+      s"${if (w == 1) "" else s"$w * "}(CASE WHEN list_dot_product(ce, " +
+        s"planes[b*$planesPerBand+${i + 1}]) > 0 THEN 1 ELSE 0 END)"
+    }.mkString("\n            + ")
+    s"""pl AS (
+           SELECT p, [(${graft.functions.PortableHash.duckdbHash60("p::VARCHAR || '_' || j::VARCHAR")}
+                       % 2000001 - 1000000) / 1000000.0 for j in range(0, $dim)] AS v
+           FROM range(0, ${bands * planesPerBand}) t(p)),
+         pls AS (SELECT list(v ORDER BY p) AS planes FROM pl),
+         e AS (SELECT $cols, embedding::DOUBLE[] AS ce FROM embeddings),
+         bk AS (
+           SELECT $cols, ce,
+             [$bits
+              for b in range(0, $bands)] AS bks
+           FROM e CROSS JOIN pls)"""
+  }
+
   private def withBands(df: DataFrame, bands: Int, planesPerBand: Int, dim: Int): DataFrame =
     df.select(col("*"),
         posexplode(lshBandBuckets(col("embedding"), bands, planesPerBand, dim)))
@@ -379,4 +405,23 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         col("dup_of").isNull.as("keep"), col("dup_of"))
   }
+
+  /** DuckDB twin of [[semanticDedup]], generated from the same `tau`,
+    * `nCells` and `iters` (the anti-drift pattern): the quantize CTE `e`,
+    * the integer-Lloyd chain ending in the per-vector cell `af`, then
+    * `dupName(vec_id, dup_of)` — per vector the lowest same-cell lower
+    * vec_id at rounded cosine ≥ `tau`. `dim` is the embedding width.
+    */
+  private[graft] def semanticDedupOracleCtes(dupName: String, tau: Double = 0.4,
+                                             nCells: Int = 16, iters: Int = 2,
+                                             dim: Int = 64): String =
+    s"""${Ivf.quantizedCte}${Ivf.ivfChainCtes(nCells, iters, dim, prefix = "")},
+         $dupName AS (
+           SELECT a.vec_id, min(b.vec_id) AS dup_of
+           FROM af a JOIN af b USING (cell)
+           JOIN e ea ON ea.vec_id = a.vec_id
+           JOIN e eb ON eb.vec_id = b.vec_id
+           WHERE b.vec_id < a.vec_id
+             AND round(${graft.functions.CosineSimilarity.duckdbCos("ea.ce", "eb.ce")}, 6) >= $tau
+           GROUP BY a.vec_id)"""
 }

@@ -270,6 +270,18 @@ object TrainingData {
         aggregate(col("q"), lit(0L), (a, x) => a + x).as("q_sum"),
         array_min(col("q")).as("q_min"), array_max(col("q")).as("q_max"))
 
+  /** DuckDB twin of [[quantizeEmbeddings]]' scale rule, as the CTEs
+    * `e(key, e)` (the DOUBLE[] cast) and `s(key, e, scale)`, scale =
+    * maxabs/127 or 1.0 for a zero vector; `key` is the carried id column.
+    */
+  private[graft] def int8ScaleCtes(key: String): String =
+    s"""e AS (
+           SELECT $key, embedding::DOUBLE[] AS e FROM embeddings),
+         s AS (
+           SELECT $key, e,
+                  CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
+           FROM (SELECT $key, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e))"""
+
   /** The quantized int vector itself (array<long> in [-127, 127]). */
   def quantizedVector(e: Column, scale: Column): Column = quantized(e, scale)
 

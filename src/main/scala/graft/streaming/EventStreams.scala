@@ -699,7 +699,13 @@ object EventStreams {
     * before the final watermark, so all of them emit.
     */
   def streamingSessionsReplay(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    replayEvents(s, dir, "sessions_replay")(in => streamingSessionWindow(in.toDF()))
+    sessionsReplay(s, dir, "sessions_replay", None)
+
+  /** Body of both session replay twins: only tag and provider differ. */
+  private def sessionsReplay(s: org.apache.spark.sql.SparkSession, dir: String,
+                             tag: String, provider: Option[String]): DataFrame =
+    replayEvents(s, dir, tag, stateStoreProvider = provider)(in =>
+        streamingSessionWindow(in.toDF()))
       .filter(col("user_id") =!= -7L)
       .select(col("user_id"), col("session_start_us"), col("session_end_us"),
         col("n_events"), col("total_value"))
@@ -718,11 +724,7 @@ object EventStreams {
     * `session_window_agg`: the gate row certifies provider-equivalence.
     */
   def streamingSessionsReplayRocksDb(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    replayEvents(s, dir, "sessions_replay_rocksdb",
-        stateStoreProvider = Some(RocksDbProvider))(in => streamingSessionWindow(in.toDF()))
-      .filter(col("user_id") =!= -7L)
-      .select(col("user_id"), col("session_start_us"), col("session_end_us"),
-        col("n_events"), col("total_value"))
+    sessionsReplay(s, dir, "sessions_replay_rocksdb", Some(RocksDbProvider))
 
   /** Batch-replay certification of Spark's streaming WINDOWED-AGGREGATION
     * state store — the THIRD distinct streaming engine path certified in
@@ -763,7 +765,12 @@ object EventStreams {
     * own far-future windows and are filtered by type.
     */
   def streamingDedupReplay(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    replayEvents(s, dir, "dedup_replay") { in =>
+    dedupReplay(s, dir, "dedup_replay", None)
+
+  /** Body of both dedup→agg replay twins: only tag and provider differ. */
+  private def dedupReplay(s: org.apache.spark.sql.SparkSession, dir: String,
+                          tag: String, provider: Option[String]): DataFrame =
+    replayEvents(s, dir, tag, stateStoreProvider = provider) { in =>
       in.toDF()
         .withWatermark("ts", "1 hour")
         .withColumn("w", window(col("ts"), "1 day"))
@@ -781,18 +788,7 @@ object EventStreams {
     * DuckDB oracle as the default-provider twin.
     */
   def streamingDedupReplayRocksDb(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    replayEvents(s, dir, "dedup_replay_rocksdb",
-        stateStoreProvider = Some(RocksDbProvider)) { in =>
-      in.toDF()
-        .withWatermark("ts", "1 hour")
-        .withColumn("w", window(col("ts"), "1 day"))
-        .dropDuplicates("user_id", "event_type", "w")
-        .groupBy(col("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_users"))
-        .select(unix_timestamp(col("w.start")).as("day"), col("event_type"),
-          col("n_users"))
-    }.filter(col("event_type") =!= "__wm")
-      .select(col("day"), col("event_type"), col("n_users"))
+    dedupReplay(s, dir, "dedup_replay_rocksdb", Some(RocksDbProvider))
 
   /** Batch-replay certification of the STREAM-STREAM join state store —
     * the fifth distinct streaming engine path in the driver's gate (after

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The contract lookup Bench (`SPARK_GRAFT_ONLY`) and Verify (extra args)
   * share: it selects in the order both have always run in, and a name that
-  * is no contract fails instead of silently selecting nothing.
+  * is no contract fails instead of silently selecting nothing. Also pins
+  * that each streaming replay is certified by its batch twin's oracle.
   */
 class ContractsSpec extends AnyFunSuite {
   test("no names select every contract, in queries' key order") {
@@ -18,6 +19,19 @@ class ContractsSpec extends AnyFunSuite {
     got.foreach { c =>
       assert(c.plan eq SparkEntry.queries(c.name))
       assert(c.oracle == SparkEntry.oracleSql(c.name))
+    }
+  }
+
+  test("each streaming replay holds exactly its batch twin's oracle") {
+    val twins = Seq(
+      "streaming_ohlc_replay" -> "ohlc_downsample",
+      "streaming_bin_replay" -> "events_bin",
+      "streaming_join_replay" -> "click_purchase_join",
+      "streaming_sessions_replay" -> "session_window_agg",
+      "streaming_sessions_replay_rocksdb" -> "session_window_agg",
+      "streaming_dedup_replay_rocksdb" -> "streaming_dedup_replay")
+    twins.foreach { case (replay, batch) =>
+      assert(SparkEntry.oracleSql(replay) == SparkEntry.oracleSql(batch), s"$replay vs $batch")
     }
   }
 
