@@ -23,7 +23,6 @@ object Num {
   def e4SumExact(c: Column): Column =
     sum(round(c * 10000).cast("long")) / 10000.0
 
-  /** Exact per-row snap of a 2-/4-decimal expression. */
-  def centsExact(c: Column): Column = round(c * 100).cast("long") / 100.0
+  /** Exact per-row snap of a 4-decimal expression. */
   def e4Exact(c: Column): Column = round(c * 10000).cast("long") / 10000.0
 }

@@ -351,8 +351,8 @@ object RelationalQueries {
   }
 
   /** Batch sessionization over the events table: gap-based session ids via
-    * lag + running sum windows — the batch twin of
-    * `graft.streaming.EventStreams.sessionize`, fully SQL-expressible so it
+    * lag + running sum windows — the batch twin of the spec-side
+    * `streaming.StreamingTwins.sessionize`, fully SQL-expressible so it
     * is oracle-checked. Timestamps are handled at millisecond grain on both
     * engines so the gap decisions agree bit-for-bit.
     */
@@ -494,7 +494,7 @@ object RelationalQueries {
     events.groupBy(col("user_id")).agg(funnelFold(stages))
 
   /** The greedy funnel fold as an aggregate column — shared by the batch
-    * query above and the streaming twin (`EventStreams.windowedFunnel`)
+    * query above and the spec-side streaming twin (`StreamingTwins.windowedFunnel`)
     * so the two can never drift.
     */
   private[graft] def funnelFold(stages: Seq[String]): org.apache.spark.sql.Column = {
@@ -988,7 +988,7 @@ object RelationalQueries {
 
   /** The per-type [vlo, vhi] discrete-percentile band of [[winsorize]],
     * exposed as its own frame (|types| rows) so the streaming
-    * clip-at-ingest twin (`EventStreams.streamingClip`) can broadcast the
+    * clip-at-ingest twin (spec-side `StreamingTwins.streamingClip`) can broadcast the
     * SAME thresholds into a stream-static join — batch and stream cannot
     * drift. Same histogram-decomposed plan as documented on [[winsorize]].
     */
@@ -1430,8 +1430,8 @@ object RelationalQueries {
     * Scale shape: no distinct pre-shuffle — partial KMV buffers build
     * map-side on raw rows (duplicates collapse in the buffer) and only
     * ≤ k longs per group cross the shuffle. The HLL++ variant (engine-
-    * specific internals, no oracle possible) lives on as
-    * [[approxDistinctHll]], spec-gated within 10% of exact.
+    * specific internals, no oracle possible) is spec-gated within 10% of
+    * exact in `RecallGatesSpec`.
     * `exact_users` stays in the result as the oracle-side accuracy
     * witness (a real 100 TB run would drop it — it is the expensive
     * distinct the sketch exists to avoid).
@@ -1512,16 +1512,6 @@ object RelationalQueries {
         Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
         "measure", "val")
 
-  /** HLL sketch surface (spec-gated twin of [[approxDistinct]]): Spark's
-    * HLL++ and any other engine's sketch give different estimates by
-    * design, so this variant is not oracle-checkable — `RecallGatesSpec`
-    * pins the error bound instead.
-    */
-  def approxDistinctHll(s: SparkSession, d: String): DataFrame =
-    events(s, d).groupBy(col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), 0.02).as("approx_users"),
-           countDistinct(col("user_id")).as("exact_users"))
-
   /** Scalar string function coverage (the reference's entire scalar library
     * is user lambdas — SURVEY §2.6; here they are codegen'd built-ins).
     */
@@ -1577,41 +1567,9 @@ object RelationalQueries {
       round(expr("percentile(value, 0.95)"), 6).as("p95"),
       min(col("value")).as("vmin"), max(col("value")).as("vmax"))
 
-  /** Grouping sets / rollup (absent in reference, completes the agg surface).
-    * Nulls from rollup are made explicit so the oracle hash matches.
-    */
-  /** Batch twin of `streaming.EventStreams.windowedCovariance`: per
-    * event-time window, the covariance matrix of per-(bin, type) mean
-    * values — same in-window semantics as `LaraQueries.covariance`
-    * grouped by window. Keeps the streaming operator's math under the
-    * DuckDB correctness gate.
-    */
-  def windowedCovarianceBatch(s: SparkSession, d: String,
-                              windowSec: Long = 21600L, binSec: Long = 3600L): DataFrame = {
-    val binned = events(s, d)
-      .withColumn("w", (floor(unix_timestamp(col("ts")) / windowSec) * windowSec).cast("long"))
-      .withColumn("t", (floor(unix_timestamp(col("ts")) / binSec) * binSec).cast("long"))
-      .groupBy(col("w"), col("t"), col("event_type").as("c"))
-      .agg(avg(col("value")).as("v"))
-      .cache() // reused: means, bin counts, both self-join sides
-    pipeline.InternalCaches.register(binned)
-    val m = binned.groupBy(col("w"), col("c")).agg(avg(col("v")).as("mean"))
-    val nb = binned.groupBy(col("w")).agg(countDistinct(col("t")).as("nb"))
-    val u = binned.join(m, Seq("w", "c"))
-      .select(col("w"), col("t"), col("c"), (col("v") - col("mean")).as("v"))
-    val u2 = u.select(col("w"), col("t"), col("c").as("c2"), col("v").as("v2"))
-    u.join(u2, Seq("w", "t"))
-      .filter(col("c") <= col("c2"))
-      .groupBy(col("w"), col("c"), col("c2"))
-      .agg(sum(col("v") * col("v2")).as("sp"))
-      .join(nb, Seq("w")).filter(col("nb") > 1)
-      .select(col("w").as("win_start"), col("c"), col("c2"),
-        round(col("sp") / (col("nb") - 1.0), 6).as("cov"))
-  }
-
   /** PORTABLE windowed covariance — the oracle-checkable contract for the
-    * windowed-covariance family ([[windowedCovarianceBatch]] and its
-    * streaming twin stay double-based for each other's differential spec).
+    * windowed-covariance family (its double-based batch and streaming
+    * twins are test-side references).
     * Two tricks make it engine-exact:
     *  - values are cent-quantized at ingest, so per-bin aggregation — the
     *    UNBOUNDED part at 100 TB — is an exact associative integer sum

@@ -74,35 +74,17 @@ object SparkEntry {
     3L -> Seq("customer", "query", "window", "sort"))
 
   /** Generated DuckDB oracle for retrieval_eval: the bm25_score CTE chain
-    * instantiated per query in [[evalQueries]], then the engine's exact
-    * count-above-best-relevant rank arithmetic (LEFT JOIN ON TRUE keeps
-    * the one aggregate row when no doc is relevant, like Spark's agg over
-    * an empty frame).
+    * ([[pipeline.Ranking.bm25TermCtes]]) instantiated per query in
+    * [[evalQueries]], then the engine's exact count-above-best-relevant
+    * rank arithmetic (LEFT JOIN ON TRUE keeps the one aggregate row when
+    * no doc is relevant, like Spark's agg over an empty frame).
     */
   private def retrievalEvalOracle: String = {
     val per = evalQueries.map { case (qid, terms) =>
-      // SQL-escape embedded quotes — harmless for the hardcoded batch,
-      // load-bearing for any future term containing '
-      val in = terms.map(t => s"'${t.replace("'", "''")}'").mkString(", ")
       val nt = terms.size
-      s"""p$qid AS (
-           SELECT doc_id, len(t)::BIGINT AS dl, x AS term, count(*)::BIGINT AS tf
-           FROM toks, unnest(t) AS u(x)
-           WHERE x IN ($in)
-           GROUP BY 1, 2, 3),
-         d$qid AS (SELECT term, count(*)::BIGINT AS df FROM p$qid GROUP BY term),
-         s$qid AS (
-           SELECT p.doc_id, p.term,
-             ln(1.0 + (st.n - d.df + 0.5) / (d.df + 0.5))
-               * (p.tf * (1.2 + 1.0))
-               / (p.tf + 1.2 * (1.0 - 0.75 + 0.75 * p.dl / (st.sdl::DOUBLE / st.n))) AS sc
-           FROM p$qid p JOIN d$qid d USING (term) CROSS JOIN stats st),
+      s"""${pipeline.Ranking.bm25TermCtes(terms, qid.toString)},
          b$qid AS (
-           SELECT doc_id, count(*)::BIGINT AS n_matched,
-             round(list_reduce(list_prepend(0.0::DOUBLE,
-                 [z.sc for z in list_sort(list(struct_pack(term := term, sc := sc)))]),
-               (a, h) -> a + h), 6) AS bm25
-           FROM s$qid GROUP BY doc_id),
+           ${pipeline.Ranking.bm25OracleAgg(qid.toString)}),
          best$qid AS (
            SELECT bm25 AS bb, doc_id AS bid FROM b$qid WHERE n_matched = $nt
            ORDER BY bm25 DESC, doc_id LIMIT 1),
@@ -116,10 +98,7 @@ object SparkEntry {
     }.mkString(",\n         ")
     val union = evalQueries.map { case (qid, _) => s"SELECT * FROM e$qid" }
       .mkString(" UNION ALL ")
-    s"""WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
-           FROM documents),
-         stats AS (SELECT count(*)::BIGINT AS n, sum(len(t))::BIGINT AS sdl FROM toks),
+    s"""WITH ${pipeline.Ranking.bm25CorpusCtes},
          $per
          SELECT query_id, n_scored, n_rel,
                 CASE WHEN n_rel = 0 THEN 0 ELSE n_above + 1 END::BIGINT AS first_rel_rank,
@@ -2908,7 +2887,7 @@ object SparkEntry {
       // scores in sorted-term order (both engines sequential-fold — SUM()
       // combine order would not be portable); round(6) absorbs ln() ulps.
       s"""WITH ${pipeline.Ranking.bm25OracleCtes(SearchTerms)}
-         ${pipeline.Ranking.bm25OracleAgg}"""),
+         ${pipeline.Ranking.bm25OracleAgg()}"""),
     // --- RAG composition: BM25 top-100 retrieve → exact cosine rerank
     // against doc 7's embedding → top-20 ---
     Contract("hybrid_search", (s, d) =>
@@ -2920,7 +2899,7 @@ object SparkEntry {
       // identical tie-breaks.
       s"""WITH ${pipeline.Ranking.bm25OracleCtes(SearchTerms)},
          bm AS (
-           ${pipeline.Ranking.bm25OracleAgg}),
+           ${pipeline.Ranking.bm25OracleAgg()}),
          cand AS (
            SELECT doc_id, n_matched, bm25 FROM (
              SELECT *, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rk FROM bm)
@@ -2944,19 +2923,10 @@ object SparkEntry {
       pipeline.Dedup.duplicatedNgramStats(Tables.documents(s, d)),
       // Cross-doc duplicated-trigram fraction: identical portable trigram
       // hashes on both engines (collisions included), exact integer division.
-      s"""WITH toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(
-             ${pipeline.Dedup.shinglesSql(3)}) AS s
-           FROM toks),
-         ng AS (SELECT doc_id, ${duckdbHash60("x")} AS ng
-                FROM sh, unnest(s) AS u(x)),
-         dfreq AS (SELECT ng, count(*)::BIGINT AS df FROM ng GROUP BY ng)
+      s"""WITH ${pipeline.Dedup.dupNgramOracleCtes("documents")}
          SELECT doc_id, count(*)::BIGINT AS n_ngrams,
                 sum(CASE WHEN df > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dup,
-                sum(CASE WHEN df > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*) AS dup_frac
+                ${pipeline.Dedup.dupFracSql} AS dup_frac
          FROM ng JOIN dfreq USING (ng)
          GROUP BY doc_id"""),
     // --- duplicated-span REMOVAL (rewriting, not just scoring): tokens
@@ -3384,19 +3354,9 @@ object SparkEntry {
                '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g'),
                '\\b\\d{3}-\\d{3}-\\d{4}\\b', '<PHONE>', 'g') AS text
            FROM sampled),
-         toks AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
-           FROM clean),
-         sh AS (
-           SELECT doc_id, list_distinct(
-             ${pipeline.Dedup.shinglesSql(3)}) AS s
-           FROM toks),
-         ng AS (SELECT doc_id, ${duckdbHash60("x")} AS ng
-                FROM sh, unnest(s) AS u(x)),
-         dfreq AS (SELECT ng, count(*)::BIGINT AS df FROM ng GROUP BY ng),
+         ${pipeline.Dedup.dupNgramOracleCtes("clean")},
          stats AS (
-           SELECT doc_id,
-                  sum(CASE WHEN df > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*) AS dup_frac
+           SELECT doc_id, ${pipeline.Dedup.dupFracSql} AS dup_frac
            FROM ng JOIN dfreq USING (ng)
            GROUP BY doc_id)
          SELECT doc_id,
@@ -3665,8 +3625,7 @@ object SparkEntry {
     // converges in one round and every extra round is a full-corpus
     // assignment pass; centroids = exact integer sum vectors — cosine is
     // scale-invariant so the mean's division never happens), fully
-    // replayed by the DuckDB oracle. The non-portable float-mean variant
-    // (Ivf.ivfTopK) stays spec-gated.
+    // replayed by the DuckDB oracle.
     Contract("ann_ivf", (s, d) => {
       val emb = Tables.embeddings(s, d)
       pipeline.Ivf.ivfTopKPortable(emb, pipeline.Ivf.annQueries(emb), 5,
@@ -3876,8 +3835,6 @@ object SparkEntry {
     // oracle CTE chain generated from the same parameters ---
     Contract("hits_scores", (s, d) =>
       sources.GraphLoader.hitsPortable(hashGraph(s, d), iters = 2),
-      // Integer-mass PageRank, 3 unrolled rounds: same directed hash-derived
-      // edges as the engine, floor-division contributions, exact BIGINT sums.
       // Portable HITS: unrolled hub/authority half-rounds with floor-division
       // renormalization, generated from the same parameters as the engine.
       s"""WITH ed AS (SELECT DISTINCT s, t FROM ($HashEdgesSql) WHERE s <> t),
@@ -3961,8 +3918,8 @@ object SparkEntry {
       pipeline.Multimodal.decodePixelStats(
         pipeline.Multimodal.syntheticPngs(Tables.documents(s, d)), rw = 7, rh = 5),
       // REAL ImageIO decode: the engine encodes formula pixels to PNG,
-      // decodes them back (plus a nearest-neighbor resize round trip through
-      // resizeImages) and sums channels; the oracle evaluates the same
+      // decodes them back (plus a nearest-neighbor resize round trip) and
+      // sums channels; the oracle evaluates the same
       // integer formula (Multimodal.pngPixelSql) analytically over a
       // lateral pixel grid. `//` is
       // DuckDB integer division — the exact resizeNN source-pixel mapping.
@@ -4082,20 +4039,11 @@ object SparkEntry {
       // SemDedup chain (Similarity.semanticDedupOracleCtes) and the pixel
       // sums (Multimodal.pngSumCtes), joined on doc_id + the md5 split —
       // one query.
-      s"""WITH toksx AS (
-           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
-           FROM documents),
-         shx AS (
-           SELECT doc_id, list_distinct(
-             ${pipeline.Dedup.shinglesSql(3)}) AS s
-           FROM toksx),
-         ngx AS (SELECT doc_id, ${duckdbHash60("x")} AS ng
-                 FROM shx, unnest(s) AS u(x)),
-         dfx AS (SELECT ng, count(*)::BIGINT AS df FROM ngx GROUP BY ng),
+      s"""WITH ${pipeline.Dedup.dupNgramOracleCtes("documents", "x")},
          txt AS (
-           SELECT doc_id FROM ngx JOIN dfx USING (ng)
+           SELECT doc_id FROM ngx JOIN dfreqx USING (ng)
            GROUP BY doc_id
-           HAVING sum(CASE WHEN df > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*) <= 0.65),
+           HAVING ${pipeline.Dedup.dupFracSql} <= 0.65),
          ${pipeline.Similarity.semanticDedupOracleCtes("pdup")},
          sem AS (
            SELECT af.vec_id AS doc_id FROM af LEFT JOIN pdup USING (vec_id)

@@ -106,8 +106,8 @@ final class KmvSampleBuffer(val k: Int) {
   * estimate — are bit-identical when the DuckDB oracle replays the sketch
   * with `row_number() OVER (ORDER BY hash) <= k`: an *approximate*
   * operator with an *exact* correctness contract, unlike HLL sketches
-  * whose internals are engine-specific (that variant remains as the
-  * spec-gated `approxDistinctHll`).
+  * whose internals are engine-specific (that variant is spec-gated in
+  * `RecallGatesSpec`).
   */
 case class KmvSmallest(child: Expression, k: Int,
                        mutableAggBufferOffset: Int = 0,

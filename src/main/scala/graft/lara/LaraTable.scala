@@ -42,10 +42,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
   def keys: Seq[String] = schema.keys
   def vals: Seq[ValSpec] = schema.vals
 
-  /** Project to exactly the schema's columns in canonical order. */
-  private def canonical(d: DataFrame): DataFrame =
-    d.select(schema.allNames.map(col): _*)
-
   // ---------------------------------------------------------------- Ext/Map
 
   /** Ext: per input tuple emit 0..n tuples. Parent keys are kept, `newKeys`

@@ -16,9 +16,7 @@ import org.apache.spark.sql.types._
   * "attribute absent" (column missing from one side of a union/join), never
   * `isNull`, to decide when to substitute the default.
   */
-final case class ValSpec(name: String, dataType: DataType, default: Any) {
-  def defaultLit: Column = if (default == null) lit(null).cast(dataType) else lit(default).cast(dataType)
-}
+final case class ValSpec(name: String, dataType: DataType, default: Any)
 
 /** Ordered key attributes + value attributes with defaults.
   *

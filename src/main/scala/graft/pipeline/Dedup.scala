@@ -765,6 +765,31 @@ object Dedup {
         (col("n_dup").cast("double") / col("n_ngrams")).as("dup_frac"))
   }
 
+  /** DuckDB twin of [[duplicatedNgramStats]]' n-gram table over the
+    * relation `src(doc_id, text)`: the CTEs `toks<sfx>`, `sh<sfx>`
+    * (distinct trigram lists), `ng<sfx>(doc_id, ng)` (portable 60-bit
+    * hashes) and `dfreq<sfx>(ng, df)`. A document's duplicated fraction is
+    * [[dupFracSql]] over `ng<sfx> JOIN dfreq<sfx> USING (ng)` grouped by
+    * doc_id.
+    */
+  private[graft] def dupNgramOracleCtes(src: String, sfx: String = ""): String =
+    s"""toks$sfx AS (
+           SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
+           FROM $src),
+         sh$sfx AS (
+           SELECT doc_id, list_distinct(
+             ${shinglesSql(3)}) AS s
+           FROM toks$sfx),
+         ng$sfx AS (SELECT doc_id, ${graft.functions.PortableHash.duckdbHash60("x")} AS ng
+                FROM sh$sfx, unnest(s) AS u(x)),
+         dfreq$sfx AS (SELECT ng, count(*)::BIGINT AS df FROM ng$sfx GROUP BY ng)"""
+
+  /** [[duplicatedNgramStats]]' `dup_frac` as a DuckDB aggregate over rows
+    * carrying `df`: one division of exact integers.
+    */
+  private[graft] val dupFracSql: String =
+    "sum(CASE WHEN df > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)"
+
   /** Duplicated-SPAN removal — the REWRITING sibling of
     * [[duplicatedNgramStats]] (which only scores): every token covered by
     * an n-gram that appears in ≥ `minDf` distinct documents is removed

@@ -70,26 +70,6 @@ object Layout {
       s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})")
       .mkString(" + ")
 
-  /** Rows annotated with their z-value over (`xCol`, `yCol`). The layout
-    * primitive: sort or range-partition by `zval` before writing and every
-    * file's min/max footer becomes a bounding box in BOTH dimensions.
-    */
-  def zorderLayout(df: DataFrame, xCol: Column, yCol: Column, bits: Int = 10): DataFrame =
-    df.withColumn("zval", zValue(xCol, yCol, bits))
-
-  /** Write `df` clustered by z-order over (`xCol`, `yCol`): range-partition
-    * on the z-value into `nFiles` output files, each sorted within. The
-    * shuffle carries the rows once (the cost any clustering rewrite pays);
-    * after it, both-dimension pruning is free forever. Boundaries come from
-    * range sampling, so file SIZES balance even when the z-space is skewed.
-    */
-  def zorderWrite(df: DataFrame, xCol: Column, yCol: Column, path: String,
-                  bits: Int = 10, nFiles: Int = 8): Unit =
-    zorderLayout(df, xCol, yCol, bits)
-      .repartitionByRange(nFiles, col("zval"))
-      .sortWithinPartitions(col("zval"))
-      .write.mode("overwrite").parquet(path)
-
   /** Per-bucket layout statistics over the events table: bucket = top
     * `bucketBits` bits of the z-value over (user_id, hour-of-epoch), with
     * each bucket's row count and bounding box in both (masked) dimensions.

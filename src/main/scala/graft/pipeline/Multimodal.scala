@@ -85,70 +85,6 @@ object Multimodal {
         (lit(1000L) + col("doc_id")).as("duration_ms"))
         .cast(mediaSchema("meta").dataType).as("meta"))
 
-  /** REAL file ingestion: a directory of raw media files → the media frame
-    * via Spark's `binaryFile` source — the on-cluster path for an actual
-    * image/audio/video corpus (one row per file; Spark parallelizes across
-    * files and packs small files into read tasks). Kind comes from the
-    * magic sniff, metadata from REAL header parsing — image dimensions via
-    * the `MediaKernels.imageHeader` byte parser (no pixel decode in the
-    * ingest pass), WAV rate/duration via the real JDK codec, AVI frame
-    * count via the RIFF walk — all partition-local; payloads never
-    * shuffle, and `media_id` is a portable hash of the file NAME so the
-    * oracle (or a re-run anywhere) derives identical ids.
-    * Unrecognized payloads ingest as kind='binary' with zeroed meta — at
-    * corpus scale rejects are data, not errors.
-    */
-  def mediaFromFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(dir)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val id = graft.functions.PortableHash.local60(name)
-        if (looksLikeImage(bytes)) {
-          val h = graft.functions.MediaKernels.imageHeader(bytes)
-          val (w, ht) = if (h != null) (h.getInt(1), h.getInt(2)) else (0, 0)
-          // a multi-frame GIF is a video; the frame count is one real
-          // container parse (the same price every classifier pays)
-          val gifFrames =
-            if (bytes.length >= 3 && bytes(0) == 'G' && bytes(1) == 'I' && bytes(2) == 'F')
-              extractGifFrames(bytes).map(_.length).getOrElse(0)
-            else 0
-          if (gifFrames > 1) MediaRow(id, "video", bytes, w, ht, 0, gifFrames * 100L)
-          else MediaRow(id, "image", bytes, w, ht, 0, 0L)
-        } else if (looksLikeAvi(bytes)) { // before WAV: both are RIFF
-          val nf = extractAviFrames(bytes).map(_.length).getOrElse(0)
-          MediaRow(id, "video", bytes, 0, 0, 0, nf * 100L)
-        } else if (looksLikeWav(bytes)) {
-          decodeWav(bytes) match {
-            case Some((rate, samples)) =>
-              MediaRow(id, "audio", bytes, 0, 0, rate,
-                if (rate > 0) samples.length * 1000L / rate else 0L)
-            case None => MediaRow(id, "audio", bytes, 0, 0, 0, 0L)
-          }
-        } else MediaRow(id, "binary", bytes, 0, 0, 0, 0L)
-      }).toDF()
-      .select(col("media_id"), col("kind"), col("bytes"),
-        struct(col("width"), col("height"), col("sample_rate"), col("duration_ms"))
-          .cast(mediaSchema("meta").dataType).as("meta"))
-  }
-
-  /** REAL header inspection (not a stub — pure byte parsing, see
-    * `graft.functions.MediaKernels`): container format + pixel dimensions
-    * from PNG/JPEG/GIF/BMP headers, null for unrecognized payloads. The
-    * triage/validation projection a multimodal ingest runs in the scan
-    * stage — reject or route blobs before any expensive decode.
-    * Output: (media_id, kind, format, width, height, recognized).
-    */
-  def imageInfo(media: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.bridge
-    val hdr = bridge.column(graft.functions.ImageHeader(bridge.expression(col("bytes"))))
-    media.select(col("media_id"), col("kind"), hdr.as("h"))
-      .select(col("media_id"), col("kind"),
-        col("h.format").as("format"), col("h.width").as("width"),
-        col("h.height").as("height"), col("h").isNotNull.as("recognized"))
-  }
-
   /** STUB decode kernel: a real implementation would hand `bytes` to an
     * image/audio codec here. The fake is deterministic in the payload so
     * tests can assert on it: feature[j] = normalized byte statistics of
@@ -177,7 +113,7 @@ object Multimodal {
     * reader probe for payloads that are obviously not images. At corpus
     * scale most undecodable blobs are rejected here for free.
     */
-  @inline private def looksLikeImage(b: Array[Byte]): Boolean =
+  @inline private[pipeline] def looksLikeImage(b: Array[Byte]): Boolean =
     b.length >= 8 && (
       (b(0) == 0x89.toByte && b(1) == 'P' && b(2) == 'N' && b(3) == 'G') ||   // PNG
       (b(0) == 0xFF.toByte && b(1) == 0xD8.toByte) ||                         // JPEG
@@ -186,13 +122,9 @@ object Multimodal {
       (b(0) == 'I' && b(1) == 'I' && b(2) == 0x2A.toByte && b(3) == 0) ||     // TIFF LE
       (b(0) == 'M' && b(1) == 'M' && b(2) == 0 && b(3) == 0x2A.toByte))       // TIFF BE
 
-  @inline private def looksLikeWav(b: Array[Byte]): Boolean =
+  @inline private[pipeline] def looksLikeWav(b: Array[Byte]): Boolean =
     b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
-
-  @inline private def looksLikeAvi(b: Array[Byte]): Boolean =
-    b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-      b(8) == 'A' && b(9) == 'V' && b(10) == 'I' && b(11) == ' '
 
   private[pipeline] def decodeImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
     if (!looksLikeImage(bytes)) None
@@ -310,57 +242,6 @@ object Multimodal {
       y += 1
     }
     Array.tabulate(dim)(i => if (counts(i) == 0) 0f else (sums(i).toDouble / counts(i) / 255.0).toFloat)
-  }
-
-  /** Frame-sample a video payload every `everyMs` ms: 1→n rows per input —
-    * the Lara Ext shape, expressed through the DSL's typed escape hatch
-    * (`LaraTable.extF`, the reference `ExtFun` in full generality,
-    * `api/Schema.kt:229-250`): a real codec's frame extraction is arbitrary
-    * imperative logic no generator expression can state. Frame payload is
-    * STUB-sliced from the source bytes.
-    */
-  def sampleFrames(media: DataFrame, everyMs: Long = 250L): DataFrame = {
-    import graft.lara.{LaraTable, LaraSchema, ValSpec}
-    val videos = media.filter(col("kind") === "video")
-      .select(col("media_id"), col("bytes"), col("meta.duration_ms").as("duration_ms"))
-    val t = LaraTable(videos, LaraSchema(Seq("media_id"),
-      Seq(ValSpec("bytes", BinaryType, null), ValSpec("duration_ms", LongType, null))))
-    t.extF(Seq("frame_idx" -> IntegerType),
-      Seq(ValSpec("frame_ms", LongType, null), ValSpec("frame_bytes", BinaryType, null))) { row =>
-      val bytes = row.getAs[Array[Byte]]("bytes")
-      val durationMs = row.getAs[Long]("duration_ms")
-      val nFrames = math.max(1, (durationMs / everyMs).toInt)
-      (0 until nFrames).iterator.map { f =>
-        val start = (f * bytes.length / nFrames) min (bytes.length - 1)
-        val end = ((f + 1) * bytes.length / nFrames) min bytes.length
-        Row(f, f * everyMs, bytes.slice(start, end)) // STUB frame decode
-      }
-    }.df
-  }
-
-  /** Resize images — REAL: `ImageIO` decode → nearest-neighbor resample
-    * (`resizeNN`, SQL-portable integer mapping) → lossless PNG re-encode.
-    * Payloads that are not decodable images (and non-image kinds) pass
-    * through unchanged — the fallback guard that keeps a 100 TB batch alive
-    * when a blob is corrupt.
-    */
-  def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val ds = media.select(
-      col("media_id"), col("kind"), col("bytes"),
-      col("meta.width"), col("meta.height"), col("meta.sample_rate"), col("meta.duration_ms"))
-      .as[MediaRow]
-    ds.map { m =>
-      if (m.kind != "image") m
-      else decodeImage(m.bytes) match {
-        case Some(img) => m.copy(bytes = encodePng(resizeNN(img, w, h)), width = w, height = h)
-        case None      => m // undecodable blob: pass through, don't kill the batch
-      }
-    }.toDF()
-      .select(col("media_id"), col("kind"), col("bytes"),
-        struct(col("width"), col("height"), col("sample_rate"), col("duration_ms"))
-          .cast(mediaSchema("meta").dataType).as("meta")) // canonical (nullable) meta type
   }
 
   // ---------------------------------------------------------------------
@@ -705,7 +586,7 @@ object Multimodal {
     * compressed-video stub to H.264-class only — MJPEG-in-AVI (the
     * ubiquitous capture/webcam format) decodes for real end to end.
     * Lossy ⇒ spec-gated (deterministic single-decoder fixture,
-    * `MjpegSpec`), not a DuckDB contract — the CompressionKernel precedent.
+    * `MjpegSpec`), not a DuckDB contract.
     */
   private[pipeline] def decodeVideoFrame(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
     if (payload.length >= 2 && payload(0) == 0xFF.toByte && payload(1) == 0xD8.toByte)
@@ -959,15 +840,15 @@ object Multimodal {
     * pixel statistics — per-channel sum and max of the decoded image, plus
     * the same stats after a round trip through the REAL resize kernel
     * (decode → nearest-neighbor `(rw,rh)` via `resizeNN` → PNG encode →
-    * decode — the exact transform `resizeImages` applies, run inline).
+    * decode).
     * Undecodable payloads yield null stats (accounted, not dropped).
     *
     * ONE `mapPartitions` pass, ZERO shuffle: each payload is decoded once
     * and both original and resized statistics are computed locally. (An
-    * earlier formulation joined the corpus with `resizeImages(corpus)` on
-    * media_id — two corpus-sized frames of PNG bytes through a shuffle, a
-    * scale-killer at 100 TB; `resizeImages` keeps its own spec coverage,
-    * and the differential spec pins this fused pass to its output.)
+    * earlier formulation joined the corpus with a resized copy of itself
+    * on media_id — two corpus-sized frames of PNG bytes through a
+    * shuffle, a scale-killer at 100 TB; the differential spec pins this
+    * fused pass to the separate resize transform's output.)
     */
   def decodePixelStats(media: DataFrame, rw: Int, rh: Int): DataFrame = {
     val spark = media.sparkSession
@@ -996,8 +877,8 @@ object Multimodal {
         }
         it.map { case (id, orig) =>
           val res = decodeImage(orig).flatMap { img =>
-            // resized stats go through the SAME lossy-free round trip the
-            // resizeImages operator ships: resample → PNG encode → decode
+            // resized stats go through a lossless round trip:
+            // resample → PNG encode → decode
             decodeImage(encodePng(resizeNN(img, rw, rh))).map(rs => (stats(img), stats(rs)))
           }
           res match {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** BM25 relevance scoring over a document corpus — the retrieval-side
@@ -83,40 +83,56 @@ object Ranking {
   }
 
   /** DuckDB twin of [[bm25]] up to the per-(doc, term) scores, generated
-    * from the same terms and constants: the CTEs `toks`, `stats`,
-    * `postings` (query terms only), `dfreq` and `sc`. [[bm25OracleAgg]]
-    * folds `sc` into the per-doc rows.
+    * from the same terms and constants: the CTEs `toks`, `stats`
+    * ([[bm25CorpusCtes]]) and `postings`, `dfreq`, `sc`
+    * ([[bm25TermCtes]]). [[bm25OracleAgg]] folds `sc` into the per-doc
+    * rows.
     */
-  private[graft] def bm25OracleCtes(queryTerms: Seq[String],
-                                    k1: Double = 1.2, b: Double = 0.75): String = {
-    val in = queryTerms.map(t => s"'${t.replace("'", "''")}'").mkString(", ")
+  private[graft] def bm25OracleCtes(queryTerms: Seq[String]): String =
+    s"""$bm25CorpusCtes,
+         ${bm25TermCtes(queryTerms, "")}"""
+
+  /** The corpus statistics every [[bm25]] query shares: the CTEs `toks`
+    * (whitespace tokens per doc) and `stats(n, sdl)` (doc count, exact
+    * total length).
+    */
+  private[graft] def bm25CorpusCtes: String =
     s"""toks AS (
            SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS t
            FROM documents),
-         stats AS (SELECT count(*)::BIGINT AS n, sum(len(t))::BIGINT AS sdl FROM toks),
-         postings AS (
+         stats AS (SELECT count(*)::BIGINT AS n, sum(len(t))::BIGINT AS sdl FROM toks)"""
+
+  /** The per-query half of [[bm25OracleCtes]] over `toks` and `stats`:
+    * the CTEs `postings<sfx>` (query terms only), `dfreq<sfx>` and
+    * `sc<sfx>(doc_id, term, sc)`, with [[bm25]]'s default k1 and b.
+    */
+  private[graft] def bm25TermCtes(queryTerms: Seq[String], sfx: String,
+                                  k1: Double = 1.2, b: Double = 0.75): String = {
+    val in = queryTerms.map(t => s"'${t.replace("'", "''")}'").mkString(", ")
+    s"""postings$sfx AS (
            SELECT doc_id, len(t)::BIGINT AS dl, x AS term, count(*)::BIGINT AS tf
            FROM toks, unnest(t) AS u(x)
            WHERE x IN ($in)
            GROUP BY 1, 2, 3),
-         dfreq AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY term),
-         sc AS (
+         dfreq$sfx AS (SELECT term, count(*)::BIGINT AS df FROM postings$sfx GROUP BY term),
+         sc$sfx AS (
            SELECT p.doc_id, p.term,
              ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5))
                * (p.tf * ($k1 + 1.0))
                / (p.tf + $k1 * (1.0 - $b + $b * p.dl / (s.sdl::DOUBLE / s.n))) AS sc
-           FROM postings p JOIN dfreq d USING (term) CROSS JOIN stats s)"""
+           FROM postings$sfx p JOIN dfreq$sfx d USING (term) CROSS JOIN stats s)"""
   }
 
-  /** The per-doc fold of [[bm25OracleCtes]]' `sc`: (doc_id, n_matched,
-    * bm25), term scores summed in sorted-term order as [[bm25]] does.
+  /** The per-doc fold of `sc<sfx>` ([[bm25TermCtes]]): (doc_id,
+    * n_matched, bm25), term scores summed in sorted-term order as
+    * [[bm25]] does.
     */
-  private[graft] def bm25OracleAgg: String =
-    """SELECT doc_id, count(*)::BIGINT AS n_matched,
+  private[graft] def bm25OracleAgg(sfx: String = ""): String =
+    s"""SELECT doc_id, count(*)::BIGINT AS n_matched,
            round(list_reduce(list_prepend(0.0::DOUBLE,
                [z.sc for z in list_sort(list(struct_pack(term := term, sc := sc)))]),
              (a, h) -> a + h), 6) AS bm25
-         FROM sc GROUP BY doc_id"""
+         FROM sc$sfx GROUP BY doc_id"""
 
   /** Global top-k by BM25 (ties broken by doc_id) — compiles to
     * TakeOrdered: per-partition heads, no full sort.

@@ -435,25 +435,8 @@ object TextAnalysis {
       .select(col("w1"), col("w2"), col("n_pair"), col("n_w1"), col("n_w2"), col("n_tokens"))
   }
 
-  /** The raw CMS summary of a corpus: (row, bucket, cnt) counter cells,
-    * ≤ depth·width rows total. Sketches are MERGEABLE by cellwise count
-    * addition — which is exactly the Lara ⊕-union over key (row, bucket)
-    * with `PlusFn.sumLong`: the sketch family plugs straight into the
-    * reference's core algebra (law spec-pinned in `CorpusSignalsSpec`:
-    * sketch(A) ⊕ sketch(B) == sketch(A ∪ B)). At 100 TB this is how
-    * per-partition/per-day sketches roll up without touching raw text.
-    */
-  def cmsSketch(docs: DataFrame, n: Int = 3, depth: Int = 4, width: Int = 1024): DataFrame =
-    docs.select(explode(Dedup.shingles(Dedup.tokens(col("text")), n)).as("ngram"))
-      .select(explode(cmsSites(col("ngram"), depth, width)).as("rb"))
-      .select(col("rb.row").as("row"), col("rb.bucket").as("bucket"))
-      .groupBy(col("row"), col("bucket")).agg(count(lit(1)).as("cnt"))
-
   /** The CMS landing sites of one n-gram: array of `depth` (row, bucket)
-    * structs, bucket = portable salted hash mod `width`. Shared by the
-    * batch sketch above and the streaming twin
-    * (`streaming.EventStreams.windowedHeavyHitterSketch`) so the two can
-    * never drift.
+    * structs, bucket = portable salted hash mod `width`.
     */
   private[graft] def cmsSites(ngram: Column, depth: Int, width: Int): Column =
     array((0 until depth).map(j => struct(

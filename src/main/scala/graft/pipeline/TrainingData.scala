@@ -257,8 +257,7 @@ object TrainingData {
     * maxabs/127, q_j = floor(x_j / scale + 0.5) (explicit tie rule — both
     * engines evaluate the identical double formula). Emits scalar digests
     * of the quantized vector (sum/min/max) alongside the scale, so results
-    * stay hash-comparable; `quantizedVector` returns the array itself for
-    * pipeline use.
+    * stay hash-comparable.
     */
   def quantizeEmbeddings(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
@@ -281,9 +280,6 @@ object TrainingData {
            SELECT $key, e,
                   CASE WHEN m = 0.0 THEN 1.0 ELSE m / 127.0 END AS scale
            FROM (SELECT $key, e, list_max(list_transform(e, x -> abs(x))) AS m FROM e))"""
-
-  /** The quantized int vector itself (array<long> in [-127, 127]). */
-  def quantizedVector(e: Column, scale: Column): Column = quantized(e, scale)
 
   /** Embedding-norm outlier audit: per-corpus robust (median/MAD) screen
     * of RAW vector magnitudes — the degenerate-embedding detector (zero

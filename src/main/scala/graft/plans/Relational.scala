@@ -23,15 +23,11 @@ object Relational {
 
   // ---- scalar expression AST (reference Expr / RacoExpression) ----
   sealed trait Expr {
-    /** Lower to a Catalyst Column — type coercion is Catalyst's
-      * (the reference hand-rolls LONG/DOUBLE coercion at
-      * `opt/RacoToAccumulo.kt:70-85,170-186`).
-      */
-    def toColumn: Column = toColumnIn(Nil)
-
-    /** Lower with the child's column list in scope — required to resolve
-      * positional refs (reference `UnnamedAttributeRef`,
-      * `opt/raco/RacoOperators.kt:54-59`, resolved against the child scheme).
+    /** Lower to a Catalyst Column with the child's column list in scope —
+      * required to resolve positional refs (reference `UnnamedAttributeRef`,
+      * `opt/raco/RacoOperators.kt:54-59`, resolved against the child
+      * scheme). Type coercion is Catalyst's (the reference hand-rolls
+      * LONG/DOUBLE coercion at `opt/RacoToAccumulo.kt:70-85,170-186`).
       */
     def toColumnIn(cols: Seq[String]): Column = this match {
       case Lit(v)         => lit(v)

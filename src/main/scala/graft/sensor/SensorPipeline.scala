@@ -1,6 +1,6 @@
 package graft.sensor
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.lara._
@@ -60,9 +60,6 @@ object SensorPipeline {
       .filter(col("t").isNotNull && col("v").isNotNull)
     LaraTable(parsed, LaraSchema(Seq("t", "c"), Seq(vn)))
   }
-
-  def loadFile(spark: SparkSession, path: String): LaraTable =
-    parse(spark.read.text(path))
 
   /** Bin to nearest BIN_SIZE and average per (t′, c): filter → bin ext →
     * (v,cnt) → ⊕-agg → divide, = the A/B prefix of `SensorQuery.kt:79-96`.

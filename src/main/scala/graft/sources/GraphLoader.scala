@@ -1,64 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
-import graft.lara._
 import graft.pipeline.{InternalCaches, Loops}
 import graft.pipeline.Loops.Round
 
-/** Graph fixtures as associative tables — the reference's Graph500 /
-  * D4M-adjacency surface (`util/TripleFileWriter.kt:19-25`, fixture files
-  * `10Ar.txt`/`10Ac.txt`: single-line comma-separated row and column index
-  * lists of a sparse matrix; `README.md:77-78`).
-  *
-  * The sparse matrix is a Lara table keyed (row, col) with `v: UINT
-  * default 0` (FIXTURES.md §5) — multi-edges aggregate by ⊕=+ on load.
-  *
-  * Scale note: the fixture format (one giant line) is inherently
-  * unsplittable — fine for index files that fit one executor; real edge
-  * data should land as parquet triples, which `fromTriples` accepts.
+/** Graph operators over edge frames — triangles, k-core, k-truss, BFS
+  * levels, PageRank, HITS, label propagation and the rest — each a
+  * Catalyst plan or a [[graft.pipeline.Loops.fixpoint]] round loop, most
+  * with a generated DuckDB oracle beside it.
   */
 object GraphLoader {
-
-  /** Parse the two single-line index files into an adjacency table.
-    * Values sum multi-edges (the D4M convention).
-    */
-  def loadIndexFiles(spark: SparkSession, rowFile: String, colFile: String): LaraTable = {
-    def indices(path: String, name: String): DataFrame =
-      spark.read.text(path).limit(1)
-        .select(posexplode(split(trim(col("value")), ",")))
-        .select(col("pos"), col("col").cast("long").as(name))
-    val rows = indices(rowFile, "row")
-    val cols = indices(colFile, "col")
-    fromTriples(rows.join(cols, "pos").select(col("row"), col("col"), lit(1).as("v")))
-  }
-
-  /** Adjacency table from an edge-triple DataFrame (row, col, v). */
-  def fromTriples(edges: DataFrame): LaraTable =
-    LaraTable(
-      edges.groupBy(col("row"), col("col")).agg(sum(col("v")).cast("int").as("v")),
-      LaraSchema(Seq("row", "col"), Seq(ValSpec("v", IntegerType, 0))))
-
-  /** Out-degree table: Agg over the col key (⊕=+). */
-  def outDegrees(adj: LaraTable): LaraTable =
-    adj.agg(Seq("row"), Map("v" -> PlusFn(0, c => sum(c).cast("int"), _ + _)))
-
-  /** A·A — two-hop path counts via the Lara Join∘Agg pair (the reference's
-    * Graphulo `TableMult`, `sensor/SensorCalc.kt:678-741`): join on the
-    * shared middle dimension with ⊗=×, aggregate the middle key away
-    * with ⊕=+, ZeroDiscard keeps the product sparse.
-    */
-  def twoHop(adj: LaraTable): LaraTable = {
-    // A keyed (col, row) ⋈ A' keyed (col, col2): shared prefix = middle dim
-    val left = adj.sortKeys(Seq("col", "row")).rename(Map("col" -> "mid"))
-    val right = adj.rename(Map("row" -> "mid", "col" -> "col2"))
-    left.join(right, Map("v" -> TimesFn(0, 0, 0, _ * _)), zeroDiscard = true)
-      .sortKeys(Seq("row", "col2", "mid"))
-      .agg(Seq("row", "col2"), Map("v" -> PlusFn(0, c => sum(c).cast("int"), _ + _)))
-  }
 
   /** Triangle counting via degree-ordered edge orientation — the standard
     * bounded-fan-out formulation: each undirected edge is directed from its

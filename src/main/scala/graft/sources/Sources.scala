@@ -215,8 +215,4 @@ object Sources {
     */
   def orc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
-
-  /** ORC sink. */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
 }

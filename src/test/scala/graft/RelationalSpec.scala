@@ -86,7 +86,7 @@ class RelationalSpec extends AnyFunSuite {
     // observed covariances are O(100))
     val p = RelationalQueries.windowedCovariancePortable(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
-    val b = RelationalQueries.windowedCovarianceBatch(spark, sf).collect()
+    val b = streaming.StreamingTwins.windowedCovarianceBatch(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
     assert(p.nonEmpty && p.keySet == b.keySet)
     p.foreach { case (k, v) =>

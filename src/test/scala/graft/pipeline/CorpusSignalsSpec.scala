@@ -224,6 +224,16 @@ class CorpusSignalsSpec extends AnyFunSuite {
     assert(tiny("b c d") >= 2L)
   }
 
+  /** The raw CMS summary of a corpus: (row, bucket, cnt) counter cells
+    * over the `heavyHitters` landing sites, ≤ depth·width rows.
+    */
+  private def cmsSketch(docs: org.apache.spark.sql.DataFrame, n: Int = 3, depth: Int = 4,
+                        width: Int = 1024): org.apache.spark.sql.DataFrame =
+    docs.select(explode(Dedup.shingles(Dedup.tokens(col("text")), n)).as("ngram"))
+      .select(explode(TextAnalysis.cmsSites(col("ngram"), depth, width)).as("rb"))
+      .select(col("rb.row").as("row"), col("rb.bucket").as("bucket"))
+      .groupBy(col("row"), col("bucket")).agg(count(lit(1)).as("cnt"))
+
   test("CMS sketches merge via Lara ⊕-union: sketch(A) ⊕ sketch(B) == sketch(A ∪ B)") {
     import graft.lara.{LaraSchema, LaraTable, PlusFn, ValSpec}
     val a = Seq(1L -> "a b c d e", 2L -> "a b c x y")
@@ -231,10 +241,10 @@ class CorpusSignalsSpec extends AnyFunSuite {
     val sch = LaraSchema(Seq("row", "bucket"), Seq(ValSpec("cnt", LongType, 0L)))
     def cells(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val merged = LaraTable(TextAnalysis.cmsSketch(docs(a: _*), width = 64), sch)
-      .union(LaraTable(TextAnalysis.cmsSketch(docs(b: _*), width = 64), sch),
+    val merged = LaraTable(cmsSketch(docs(a: _*), width = 64), sch)
+      .union(LaraTable(cmsSketch(docs(b: _*), width = 64), sch),
         Map("cnt" -> PlusFn.sumLong))
-    val whole = TextAnalysis.cmsSketch(docs(a ++ b: _*), width = 64)
+    val whole = cmsSketch(docs(a ++ b: _*), width = 64)
     assert(cells(merged.df.select(col("row"), col("bucket"), col("cnt"))) == cells(whole))
     assert(cells(whole).nonEmpty)
   }

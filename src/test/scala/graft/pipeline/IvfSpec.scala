@@ -12,9 +12,9 @@ class IvfSpec extends AnyFunSuite {
   private val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").cache()
 
   test("every corpus vector is assigned exactly one valid cell") {
-    val cents = Ivf.trainCentroids(emb, k = 8)
+    val cents = IvfFloat.trainCentroids(emb, k = 8)
     assert(cents.length == 8 && cents.forall(_.length == 64))
-    val cells = emb.withColumn("cell", Ivf.assignCell(col("embedding"), cents))
+    val cells = emb.withColumn("cell", IvfFloat.assignCell(col("embedding"), cents))
     val stats = cells.agg(count(lit(1)), min(col("cell")), max(col("cell")),
       countDistinct(col("cell"))).collect().head
     assert(stats.getLong(0) == emb.count())
@@ -84,7 +84,7 @@ class IvfSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val bruteAll = Similarity.bruteForceTopK(emb, queries, 500).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val ivf = Ivf.ivfTopK(emb, queries, 5, nCells = 8, nProbe = 3).collect()
+    val ivf = IvfFloat.ivfTopK(emb, queries, 5, nCells = 8, nProbe = 3).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
     assert(ivf.nonEmpty)
     // scores must agree exactly with brute force for any returned pair

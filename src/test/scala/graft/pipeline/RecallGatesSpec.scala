@@ -17,7 +17,7 @@ class RecallGatesSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 10)
     val brute = Similarity.bruteForceTopK(emb, queries, 5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Ivf.ivfTopK(emb, queries, 5, nCells = 16, nProbe = 4).collect()
+    val ivf = IvfFloat.ivfTopK(emb, queries, 5, nCells = 16, nProbe = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & ivf).size.toDouble / brute.size
     assert(recall >= 0.9, s"IVF recall@5 = $recall < 0.9")
@@ -108,10 +108,10 @@ class RecallGatesSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01").cache()
     def objective(cents: Array[Array[Float]]): Double =
       emb.select(graft.functions.CosineSimilarity(col("embedding"),
-          Ivf.centroidOf(cents, Ivf.assignCell(col("embedding"), cents))).as("s"))
+          IvfFloat.centroidOf(cents, IvfFloat.assignCell(col("embedding"), cents))).as("s"))
         .agg(avg(col("s"))).collect().head.getDouble(0)
-    val sampled = Ivf.trainCentroids(emb, k = 16, sampleN = 64) // deliberately starved sample
-    val full = Ivf.trainCentroidsDistributed(emb, k = 16)
+    val sampled = IvfFloat.trainCentroids(emb, k = 16, sampleN = 64) // deliberately starved sample
+    val full = IvfFloat.trainCentroidsDistributed(emb, k = 16)
     assert(objective(full) >= objective(sampled),
       "full-corpus Lloyd must not be worse than a starved driver sample")
     emb.unpersist()
@@ -146,7 +146,9 @@ class RecallGatesSpec extends AnyFunSuite {
   }
 
   test("approx_count_distinct (HLL twin) stays within 10% of exact (sf0.01 events)") {
-    val r = graft.RelationalQueries.approxDistinctHll(spark, "/root/testdata/sf0.01").collect()
+    val r = graft.Tables.events(spark, "/root/testdata/sf0.01").groupBy(col("event_type"))
+      .agg(approx_count_distinct(col("user_id"), 0.02), countDistinct(col("user_id")))
+      .collect()
     assert(r.nonEmpty)
     r.foreach { row =>
       val approx = row.getLong(1).toDouble

@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.lara.{LaraSchema, LaraTable, PlusFn, TimesFn, ValSpec}
 
 /** Graph500/D4M-style loader + Lara matrix ops on a small known graph. */
 class GraphLoaderSpec extends AnyFunSuite {
@@ -17,7 +21,7 @@ class GraphLoaderSpec extends AnyFunSuite {
 
   test("index files load into an aggregated adjacency table") {
     val (r, c) = fixture()
-    val adj = GraphLoader.loadIndexFiles(spark, r, c)
+    val adj = GraphLoaderSpec.loadIndexFiles(spark, r, c)
     assert(rowSet(adj.df) == Set(
       Seq[Any](0L, 1L, 2), // duplicate edge summed
       Seq[Any](1L, 2L, 1), Seq[Any](0L, 2L, 1), Seq[Any](2L, 0L, 1)))
@@ -25,7 +29,8 @@ class GraphLoaderSpec extends AnyFunSuite {
 
   test("out-degrees via Lara agg") {
     val (r, c) = fixture()
-    val deg = GraphLoader.outDegrees(GraphLoader.loadIndexFiles(spark, r, c))
+    val deg = GraphLoaderSpec.loadIndexFiles(spark, r, c)
+      .agg(Seq("row"), Map("v" -> PlusFn(0, c => sum(c).cast("int"), _ + _)))
     assert(rowSet(deg.df) == Set(Seq[Any](0L, 3), Seq[Any](1L, 1), Seq[Any](2L, 1)))
   }
 
@@ -84,8 +89,15 @@ class GraphLoaderSpec extends AnyFunSuite {
 
   test("two-hop path counts = A·A via Join∘Agg (TableMult analog)") {
     val (r, c) = fixture()
-    val adj = GraphLoader.loadIndexFiles(spark, r, c)
-    val hops = GraphLoader.twoHop(adj)
+    val adj = GraphLoaderSpec.loadIndexFiles(spark, r, c)
+    // A keyed (col, row) ⋈ A' keyed (col, col2): join on the shared middle
+    // dimension with ⊗=×, aggregate it away with ⊕=+ (Graphulo `TableMult`,
+    // `sensor/SensorCalc.kt:678-741`); ZeroDiscard keeps the product sparse
+    val left = adj.sortKeys(Seq("col", "row")).rename(Map("col" -> "mid"))
+    val right = adj.rename(Map("row" -> "mid", "col" -> "col2"))
+    val hops = left.join(right, Map("v" -> TimesFn(0, 0, 0, _ * _)), zeroDiscard = true)
+      .sortKeys(Seq("row", "col2", "mid"))
+      .agg(Seq("row", "col2"), Map("v" -> PlusFn(0, c => sum(c).cast("int"), _ + _)))
     // A[0,1]=2: paths 0→1→2 count 2; 0→2→0 = 1; 1→2→0 = 1; 2→0→{1×2, 2}
     assert(rowSet(hops.df) == Set(
       Seq[Any](0L, 2L, 2), Seq[Any](0L, 0L, 1), Seq[Any](1L, 0L, 1),
@@ -476,5 +488,22 @@ class GraphLoaderSpec extends AnyFunSuite {
       "single-file scan must spread to defaultParallelism partitions")
     assert(r.groupBy().count().collect()(0).getLong(0) == before)
     assert(r.select("doc_id").distinct().count() == before, "ids preserved")
+  }
+}
+
+object GraphLoaderSpec {
+  /** Parses the reference's two single-line Graph500 index files
+    * (`10Ar.txt`/`10Ac.txt`: comma-separated row and column indices of a
+    * sparse matrix) into an adjacency table; values sum multi-edges (the
+    * D4M convention).
+    */
+  def loadIndexFiles(spark: SparkSession, rowFile: String, colFile: String): LaraTable = {
+    def indices(path: String, name: String): DataFrame =
+      spark.read.text(path).limit(1)
+        .select(posexplode(split(trim(col("value")), ",")))
+        .select(col("pos"), col("col").cast("long").as(name))
+    val edges = indices(rowFile, "row").join(indices(colFile, "col"), "pos")
+      .groupBy(col("row"), col("col")).agg(count(lit(1)).cast("int").as("v"))
+    LaraTable(edges, LaraSchema(Seq("row", "col"), Seq(ValSpec("v", IntegerType, 0))))
   }
 }

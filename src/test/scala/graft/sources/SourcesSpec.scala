@@ -66,7 +66,7 @@ class SourcesSpec extends AnyFunSuite {
     val p = writeTemp(Seq("a,1,1.5", "b,2,2.5", "c,3,3.5"))
     val d = Sources.csv(spark, p, schema)
     val out = java.nio.file.Files.createTempDirectory("orc_out").toString + "/t"
-    Sources.writeOrc(d, out)
+    d.write.mode("overwrite").orc(out)
     val back = Sources.orc(spark, out)
     assert(rowSet(back) == rowSet(d))
     val filtered = back.filter(org.apache.spark.sql.functions.col("n") > 1)

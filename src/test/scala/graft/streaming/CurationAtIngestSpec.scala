@@ -107,7 +107,7 @@ class CurationAtIngestSpec extends AnyFunSuite {
     import spark.implicits._
     val in = MemoryStream[(Long, java.sql.Timestamp, String)]
     val docs = in.toDF().toDF("doc_id", "ts", "text")
-    val out = graft.streaming.EventStreams.windowedHeavyHitterSketch(
+    val out = StreamingTwins.windowedHeavyHitterSketch(
       docs, n = 3, depth = 2, width = 8, "10 minutes", "10 minutes", "5 minutes")
     val q = out.writeStream.format("memory").queryName("cms_stream")
       .outputMode("append").start()
@@ -129,7 +129,7 @@ class CurationAtIngestSpec extends AnyFunSuite {
       q.processAllAvailable()
       val streamed = spark.table("cms_stream").collect()
         .map(r => (r.getTimestamp(0).getTime / 60000, r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-      val batch = graft.streaming.EventStreams.windowedHeavyHitterSketch(
+      val batch = StreamingTwins.windowedHeavyHitterSketch(
         (w0 ++ w1).toDF("doc_id", "ts", "text"),
         n = 3, depth = 2, width = 8, "10 minutes", "10 minutes", "5 minutes")
         .collect()

@@ -12,6 +12,7 @@ import java.sql.Timestamp
 class EventStreamsSpec extends AnyFunSuite {
   import TestSpark._
   import EventStreams._
+  import StreamingTwins._
 
   private def ts(min: Long): Timestamp = new Timestamp(min * 60000L)
 
@@ -19,7 +20,13 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Event]
-    val agg = windowedAggregate(in.toDF(), "10 minutes", "10 minutes", "5 minutes")
+    // the windowed-aggregation state store `streaming_bin_replay` runs
+    val agg = in.toDF()
+      .withWatermark("ts", "5 minutes")
+      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .select(col("window.start").as("win_start"), col("event_type"),
+        col("n"), col("sum_value"))
     val q = agg.writeStream.format("memory").queryName("win_agg")
       .outputMode("append").start()
     try {
@@ -100,24 +107,6 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamingDedup drops repeated content within the watermark") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[(java.sql.Timestamp, String)]
-    val docs = in.toDF().toDF("ts", "text")
-    val out = EventStreams.streamingDedup(docs, "30 minutes")
-    val q = out.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    try {
-      in.addData((ts(60), "alpha doc"), (ts(61), "alpha doc"), (ts(62), "beta doc"))
-      q.processAllAvailable()
-      in.addData((ts(65), "alpha doc"), (ts(70), "gamma doc"))
-      q.processAllAvailable()
-      val texts = spark.table("dedup_stream").collect().map(_.getString(1)).toSeq
-      assert(texts.sorted == Seq("alpha doc", "beta doc", "gamma doc"))
-    } finally q.stop()
-  }
-
   test("streamingDecontaminate matches the batch crossCorpusOverlap on the same docs") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -128,7 +117,7 @@ class EventStreamsSpec extends AnyFunSuite {
       Seq(Row(100L, "a b c d e f"), Row(101L, "z z z unrelated words here")))
     val in = MemoryStream[(java.sql.Timestamp, Long, String)]
     val docs = in.toDF().toDF("ts", "doc_id", "text")
-    val out = EventStreams.streamingDecontaminate(docs, evalDocs, k = 3)
+    val out = StreamingTwins.streamingDecontaminate(docs, evalDocs, k = 3)
     val q = out.writeStream.format("memory").queryName("decon_stream")
       .outputMode("append").start()
     try {
@@ -152,7 +141,7 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Event]
-    val cov = EventStreams.windowedCovariance(in.toDS(), windowSec = 21600L, binSec = 3600L)
+    val cov = StreamingTwins.windowedCovariance(in.toDS(), windowSec = 21600L, binSec = 3600L)
     val q = cov.writeStream.format("memory").queryName("cov_stream")
       .outputMode("append").start()
     try {
@@ -182,7 +171,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val covStream = EventStreams.windowedCovariance(in.toDS())
+    val covStream = StreamingTwins.windowedCovariance(in.toDS())
     val q = covStream.writeStream.format("memory").queryName("cov_diff")
       .outputMode("append").start()
     try {
@@ -195,7 +184,7 @@ class EventStreamsSpec extends AnyFunSuite {
       q.processAllAvailable()
       val got = spark.table("cov_diff").collect()
         .map(r => (r.getTimestamp(0).getTime / 1000, r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
-      val batch = graft.RelationalQueries
+      val batch = StreamingTwins
         .windowedCovarianceBatch(spark, "/root/testdata/sf0.001").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
       assert(got.nonEmpty && batch.nonEmpty)
@@ -267,7 +256,7 @@ class EventStreamsSpec extends AnyFunSuite {
     }
     val evs = real ++ sentinels
     val in = MemoryStream[Event]
-    val q = EventStreams.streamingPatternMatch(in.toDS())
+    val q = StreamingTwins.streamingPatternMatch(in.toDS())
       .writeStream.format("memory").queryName("spm").outputMode("append").start()
     try {
       val sorted = evs.sortBy(e => (e.ts.getTime, e.event_id))
@@ -502,31 +491,6 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamingMinhashPairs: near-dups pair across batches, state caps hold") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val near = (1 to 36).map(i => s"tok$i").mkString(" ") + " x1 x2 x3 x4"
-    val other = (1 to 40).map(i => s"zzz$i").mkString(" ")
-    val in = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = in.toDF().toDF("ts", "doc_id", "text")
-    val out = EventStreams.streamingMinhashPairs(docs, threshold = 0.3)
-    val q = out.writeStream.format("memory").queryName("near_stream")
-      .outputMode("append").start()
-    try {
-      in.addData((ts(60), 1L, base), (ts(61), 10L, other))
-      q.processAllAvailable()
-      // the near-dup arrives in a LATER batch: must match against state
-      in.addData((ts(65), 2L, base), (ts(66), 3L, near))
-      q.processAllAvailable()
-      val pairs = spark.table("near_stream").collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(pairs.contains((1L, 2L)) && pairs((1L, 2L)) == 1.0) // identical, cross-batch
-      assert(pairs.contains((1L, 3L)) && pairs((1L, 3L)) > 0.3 && pairs((1L, 3L)) < 1.0)
-      assert(!pairs.keySet.exists { case (a, b) => b == 10L || a == 10L }) // disjoint never pairs
-    } finally q.stop()
-  }
-
   test("streamingEmbeddingNearDup matches batch embeddingNearDup on real vectors") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -541,7 +505,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
     val in = MemoryStream[(java.sql.Timestamp, Long, Seq[Float])]
     val vecs = in.toDF().toDF("ts", "vec_id", "embedding")
-    val out = EventStreams.streamingEmbeddingNearDup(vecs, tau)
+    val out = StreamingTwins.streamingEmbeddingNearDup(vecs, tau)
     val q = out.writeStream.format("memory").queryName("emb_stream")
       .outputMode("append").start()
     try {
@@ -565,7 +529,7 @@ class EventStreamsSpec extends AnyFunSuite {
     import spark.implicits._
     val in = MemoryStream[Event]
     val stages = Seq("view", "click", "purchase")
-    val agg = EventStreams.windowedFunnel(in.toDF(), stages, "10 minutes", "10 minutes", "5 minutes")
+    val agg = StreamingTwins.windowedFunnel(in.toDF(), stages, "10 minutes", "10 minutes", "5 minutes")
     val q = agg.writeStream.format("memory").queryName("win_funnel")
       .outputMode("append").start()
     try {
@@ -583,7 +547,7 @@ class EventStreamsSpec extends AnyFunSuite {
       q.processAllAvailable()
       val streamed = spark.table("win_funnel").collect()
         .map(r => (r.getTimestamp(0).getTime / 60000, r.getLong(1)) -> r.getLong(2)).toMap
-      val batch = EventStreams.windowedFunnel((b1 ++ b2).toDF(), stages,
+      val batch = StreamingTwins.windowedFunnel((b1 ++ b2).toDF(), stages,
         "10 minutes", "10 minutes", "5 minutes").collect()
         .map(r => (r.getTimestamp(0).getTime / 60000, r.getLong(1)) -> r.getLong(2)).toMap
       assert(batch.view.filterKeys(_._2 != 99L).toMap.toSet.subsetOf(streamed.toSet),
@@ -599,7 +563,7 @@ class EventStreamsSpec extends AnyFunSuite {
     import spark.implicits._
     val in = MemoryStream[Event]
     // trailing=3, minHours=2 on hand-sized data; watermark 30 min
-    val out = EventStreams.streamingRateAnomaly(in.toDS(), trailing = 3,
+    val out = StreamingTwins.streamingRateAnomaly(in.toDS(), trailing = 3,
       minHours = 2, watermark = "30 minutes")
     val q = out.writeStream.format("memory").queryName("rate_stream")
       .outputMode("append").start()
@@ -637,7 +601,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val out = EventStreams.streamingRateAnomaly(in.toDS(), trailing = 24, minHours = 12)
+    val out = StreamingTwins.streamingRateAnomaly(in.toDS(), trailing = 24, minHours = 12)
     val q = out.writeStream.format("memory").queryName("rate_diff")
       .outputMode("append").start()
     try {
@@ -679,7 +643,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val q = EventStreams.streamingClip(in.toDF(), thr)
+    val q = StreamingTwins.streamingClip(in.toDF(), thr)
       .writeStream.format("memory").queryName("clip_diff")
       .outputMode("append").start()
     try {
@@ -746,7 +710,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val q = EventStreams.streamingFirstTouch(in.toDS())
+    val q = StreamingTwins.streamingFirstTouch(in.toDS())
       .writeStream.format("memory").queryName("ft_diff")
       .outputMode("append").start()
     try {
@@ -779,7 +743,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val q = EventStreams.streamingTwapHolds(in.toDS())
+    val q = StreamingTwins.streamingTwapHolds(in.toDS())
       .writeStream.format("memory").queryName("twap_diff")
       .outputMode("append").start()
     try {
@@ -819,7 +783,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val q = EventStreams.sessionize(in.toDS(), gapMs = 1800000L)
+    val q = StreamingTwins.sessionize(in.toDS(), gapMs = 1800000L)
       .writeStream.format("memory").queryName("sess_diff")
       .outputMode("append").start()
     try {
@@ -852,7 +816,7 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[Event]
-    val out = EventStreams.streamingAsOf(in.toDS(), Set("click"), Set("purchase"),
+    val out = StreamingTwins.streamingAsOf(in.toDS(), Set("click"), Set("purchase"),
       watermark = "10 minutes")
     val q = out.writeStream.format("memory").queryName("asof_stream")
       .outputMode("append").start()
@@ -892,7 +856,7 @@ class EventStreamsSpec extends AnyFunSuite {
       case (a, b) => (a.toSet, b.toSet)
     }
     val in = MemoryStream[Event]
-    val out = EventStreams.streamingAsOf(in.toDS(), touches, convs)
+    val out = StreamingTwins.streamingAsOf(in.toDS(), touches, convs)
     val q = out.writeStream.format("memory").queryName("asof_diff")
       .outputMode("append").start()
     try {
@@ -934,7 +898,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val out = EventStreams.streamingInterarrival(in.toDS())
+    val out = StreamingTwins.streamingInterarrival(in.toDS())
     val q = out.writeStream.format("memory").queryName("gap_diff")
       .outputMode("append").start()
     try {
@@ -966,7 +930,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event].collect().toSeq
     val in = MemoryStream[Event]
-    val out = EventStreams.streamingScd2(in.toDS())
+    val out = StreamingTwins.streamingScd2(in.toDS())
     val q = out.writeStream.format("memory").queryName("scd2_diff")
       .outputMode("append").start()
     try {
