@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 import graft.functions.{CosineSimilarity, ImageHeader, KmvSampleAgg, KmvSmallest, LshBuckets, MinHashSig, PortableHash60, SimHash64, TopKByScore}

@@ -129,14 +129,14 @@ object LaraQueries {
 
   /** The flagship workload: covariance matrix, the reference's benchmark
     * query (`examples/sensor/SensorQuery.kt:79-117`, `sensor/SensorCalc.kt:134-144`)
-    * re-targeted at the events table:
-    *   X(t,c) = mean event value per (hour-bin, event_type)   [bin + avg]
-    *   U(t,c) = X − colMean(X)                                 [mean-center]
-    *   C(c,c') = Σ_t U(t,c)·U(t,c') / (n−1), upper triangle    [⊗-join + agg]
-    * Exercises: binning, CSE (X and N reused — cached, the reference's
-    * `ReuseSource`/`instMap`), ⊗-join as matrix multiply Uᵀ·U
-    * (`TableMult`, `sensor/SensorCalc.kt:678-741`), symmetric-covariance
-    * rewrite (`SensorOpt.S`: only c ≤ c′), divide-by-(n−1).
+    * re-targeted at the events table, through the same Lara core as the
+    * sensor pipeline (`SensorPipeline.covarianceOf`):
+    *   X(t,c) = ⊕-mean event value per (hour-bin, event_type)   [bin + avg]
+    *   N      = ⊕-count of hour bins                             [keyless]
+    *   C(c,c′) = Σ_t U(t,c)·U(t,c′) / (N−1), U = X − ⊕-mean_c(X) [⊗-join + agg]
+    * then the upper triangle (`SensorOpt.S`: only c ≤ c′, pushed into the
+    * t self-join), rounded to 6 places. X has three consumers (N, M, U) and
+    * is persisted once by auto-cache — the reference's `ReuseSource`.
     *
     * Scale shape: |t-bins| grows with data, |c| (event types) is small — so
     * X is tall-skinny; the self-join on t shuffles X once (or broadcasts at
@@ -144,23 +144,18 @@ object LaraQueries {
     * TableMult at any SF.
     */
   def covariance(s: SparkSession, d: String): DataFrame = {
-    val binned = events(s, d)
-      .withColumn("t", (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long"))
-      .groupBy(col("t"), col("event_type").as("c"))
-      .agg(avg(col("value")).as("v"))
-      .cache() // X reused by colMean and the self-join (ReuseSource analog)
-    val n = binned.groupBy(col("c")).agg(count(lit(1)).as("n"), avg(col("v")).as("mean"))
-    val u = binned.join(broadcast(n), Seq("c"))
-      .select(col("t"), col("c"), (col("v") - col("mean")).as("v"))
-    val u2 = u.select(col("t"), col("c").as("c2"), col("v").as("v2"))
-    // n−1 computed inside the plan (1-row broadcast) — no extra driver job.
-    val nBins = binned.select(countDistinct(col("t")).as("nb"))
-    u.join(u2, Seq("t"))
-      .filter(col("c") <= col("c2")) // SymmetricCovariance 'S'
-      .groupBy(col("c"), col("c2"))
-      .agg(sum(col("v") * col("v2")).as("sp"))
-      .crossJoin(broadcast(nBins))
-      .select(col("c"), col("c2"), round(col("sp") / (col("nb") - 1.0), 6).as("cov"))
+    import graft.sensor.SensorPipeline.{countBins, covarianceOf, meanOver}
+    val ev = LaraTable(
+      events(s, d).select(col("event_id"),
+        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("t"),
+        col("event_type").as("c"), col("value").as("v")),
+      LaraSchema(Seq("event_id", "t", "c"), Seq(ValSpec("v", DoubleType, null))))
+    val x = meanOver(ev, Seq("t", "c"))
+    covarianceOf(x, countBins(x, lit(true)))
+      .where(col("c") <= col("cp"))
+      .mapVals(Seq(ValSpec("cov", DoubleType, null)), Map("cov" -> round(col("v"), 6)))
+      .rename(Map("cp" -> "c2"))
+      .df
   }
 
   /** Driver-certified store/access-path contract — the reference's DAP/LAP

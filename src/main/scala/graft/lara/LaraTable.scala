@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   *    in [[graft.pipeline.InternalCaches]]). See [[LaraTable.noteUse]].
   *
   * `shuffled` tracks whether this table's plan contains a shuffle boundary
-  * (union/agg/join output) — the auto-cache trigger. Narrow ops propagate
+  * (union/agg/join output; a broadcast-right join only over an unpersisted
+  * shuffled left side) — the auto-cache trigger. Narrow ops propagate
   * it; leaves (`load`/`empty`/raw scans) start false, so a bare scan
   * consumed twice is re-read (columnar parquet re-scan is cheaper than
   * caching raw data at 100 TB), while a shared aggregate/join is computed
@@ -297,7 +298,13 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
       val keeps = outVals.filter(_.default != null).map(v => col(v.name) =!= lit(v.default))
       if (keeps.nonEmpty) res = res.filter(keeps.reduce(_ || _))
     }
-    LaraTable(res, LaraSchema(resultKeys, outVals.toList), shuffled = true)
+    // A broadcast-right join over a persisted (or unshuffled) left side
+    // recomputes as a scan plus a hash probe against a small right side, so
+    // it is no auto-cache candidate: persisting it would pin the broadcast
+    // relation inside its cached plan for the cache's lifetime.
+    val boundary = !broadcastRight ||
+      (shuffled && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    LaraTable(res, LaraSchema(resultKeys, outVals.toList), shuffled = boundary)
   }
 
   // ----------------------------------------------------------------- Sinks
@@ -389,16 +396,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
       .sortBy(schema.keys.head, schema.keys.tail: _*)
       .saveAsTable(table)
   }
-
-  /** Explicitly mark for reuse across plan branches. Since r11 shared
-    * shuffle-bearing subtrees are cached automatically at second use
-    * ([[LaraTable.noteUse]] — the reference's `instMap`/pipeline dedup,
-    * `api/TupleOp.kt:25-26`, `api/Lower.kt:118-127`); this hint remains for
-    * the cases the fan-out counter deliberately skips: narrow subtrees
-    * (scan+filter reused many times over a small input) and first-use
-    * caching ahead of a known re-consumption in a LATER query.
-    */
-  def cached: LaraTable = copy(df = df.cache())
 }
 
 object LaraTable {

@@ -132,14 +132,6 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature over *base hashes* (one xxhash64 per shingle): the
-    * fast engine-local family h_i(x) = xxhash64(base(x), i). Use when the
-    * signature is internal (not part of an oracle-checked result).
-    */
-  def minhashSignature(baseHashes: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(baseHashes, h => xxhash64(h, i))))
-
   /** Engine-portable base hashes: one 60-bit md5 hash per shingle string.
     * Materialize this as a column before feeding [[minhashSignaturePortable]]
     * — an inlined subexpression would re-tokenize, re-shingle and re-hash
@@ -235,24 +227,18 @@ object Dedup {
     * Output: (doc_a, doc_b, est_jaccard) with doc_a < doc_b, est_jaccard =
     * fraction of agreeing minhashes. Pair dedup (a pair may collide in
     * several bands) shuffles only (doc_a, doc_b, est) — the signature
-    * arrays stay on the map side.
-    *
-    * `portable=true` (the oracle-checked contract path) uses the md5-based
-    * signature family; `false` the cheaper xxhash64 family.
+    * arrays stay on the map side. Signatures are the engine-portable
+    * md5-based family, so the pairs are oracle-checkable.
     */
   def minhashPairs(docs: DataFrame, k: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-                   maxBucket: Int = 100000, portable: Boolean = true): DataFrame = {
+                   maxBucket: Int = 100000): DataFrame = {
     val numHashes = bands * rowsPerBand
     // Materialize base hashes, then the signature, each as a column before
     // the next multi-pass HOF consumes them: an inlined subexpression would
     // re-tokenize/re-hash once per family member (numHashes×) or per band.
     val sigs = InternalCaches.register(rebalance(docs)
-      .select(col("doc_id"),
-        (if (portable) portableBaseHashes(shingles(tokens(col("text")), k))
-         else shingleHashes(tokens(col("text")), k)).as("bh"))
-      .select(col("doc_id"),
-        (if (portable) minhashSignaturePortable(col("bh"), numHashes)
-         else minhashSignature(col("bh"), numHashes)).as("sig"))
+      .select(col("doc_id"), portableBaseHashes(shingles(tokens(col("text")), k)).as("bh"))
+      .select(col("doc_id"), minhashSignaturePortable(col("bh"), numHashes).as("sig"))
       .cache()) // consumed by both sides of the bucket self-join; released via InternalCaches
     val banded = sigs.select(col("doc_id"), col("sig"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -866,17 +852,15 @@ object Dedup {
     * is *exactly* the set of pairs within the Hamming radius — which is why
     * the DuckDB oracle can check it by brute force.
     *
-    * Pair dedup shuffles (doc_a, doc_b, hamming) scalars only.
-    * `portable=true` hashes tokens with the md5-based portable hash (60
-    * effective bits); `false` uses xxhash64 (full 64).
+    * Pair dedup shuffles (doc_a, doc_b, hamming) scalars only. Tokens are
+    * hashed with the md5-based portable hash (60 effective bits).
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   maxBucket: Int = 100000, portable: Boolean = true): DataFrame = {
+                   maxBucket: Int = 100000): DataFrame = {
     // Token hashes materialized as a column first — simhash scans them 64
     // times (once per bit); inlining the tokenizer would re-tokenize 64×.
-    val th = if (portable) (t: Column) => PortableHash.hash60(t) else (t: Column) => xxhash64(t)
     val sigs = InternalCaches.register(rebalance(docs)
-      .select(col("doc_id"), transform(tokens(col("text")), th).as("th"))
+      .select(col("doc_id"), transform(tokens(col("text")), t => PortableHash.hash60(t)).as("th"))
       .select(col("doc_id"), simhash(col("th")).as("sig")).cache())
     val banded = sigs.select(col("doc_id"), col("sig"),
         posexplode(transform(sequence(lit(0), lit(3)),

@@ -1,6 +1,6 @@
 package graft.sensor
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.lara._
@@ -62,52 +62,68 @@ object SensorPipeline {
   }
 
   /** Bin to nearest BIN_SIZE and average per (t′, c): filter → bin ext →
-    * (v,cnt) → ⊕-agg → divide, = the A/B prefix of `SensorQuery.kt:79-96`.
+    * [[meanOver]] (t′, c), = the A/B prefix of `SensorQuery.kt:79-96`.
     */
   def binAndAvg(table: LaraTable, minTime: Long = 0L, maxTime: Long = Long.MaxValue): LaraTable = {
     val tm = col("t") % BIN_SIZE
     val tb = (col("t") - tm + when(tm >= BIN_SIZE / 2, BIN_SIZE).otherwise(0L)).as("tp")
-    table
+    meanOver(table
       .where(col("t").between(minTime, maxTime)) // filterFun
-      .ext(Seq("tp"), Seq(vn), explode(array(struct(tb, col("v"))))) // binFun
-      .mapVals(Seq(vn, cnt), Map( // createCntFun
+      .ext(Seq("tp"), Seq(vn), explode(array(struct(tb, col("v"))))), // binFun
+      Seq("tp", "c"))
+  }
+
+  /** ⊕-mean of the nullable double `v` per `keys`: (v, cnt) ⊕-summed over
+    * the other keys, then divided — createCntFun → ⊕ → divideVnCntFun
+    * (`SensorQuery.kt:87-96`). Null v stays null; an all-null group
+    * (cnt = 0) is null.
+    */
+  def meanOver(table: LaraTable, keys: Seq[String]): LaraTable =
+    table
+      .mapVals(Seq(vn, cnt), Map(
         "v" -> col("v"),
         "cnt" -> when(col("v").isNotNull, 1).otherwise(0)))
-      .sortKeys(Seq("tp", "c", "t"))
-      .agg(Seq("tp", "c"), Map("v" -> plusDoubleNull, "cnt" -> plusInt))
-      // divideVnCntFun: null v stays null; cnt=0 (all-null group) → null
+      .sortKeys(keys ++ table.keys.filterNot(keys.contains))
+      .agg(keys, Map("v" -> plusDoubleNull, "cnt" -> plusInt))
       .mapVals(Seq(vn), Map("v" -> when(col("cnt") =!= 0, col("v") / col("cnt")).otherwise(lit(null))))
+
+  /** Keyless N: the number of t bins of X(t, c) in which `counted` holds
+    * for at least one c (notNullFun → ⊕-any per t → ⊕-count).
+    */
+  def countBins(x: LaraTable, counted: Column): LaraTable =
+    x.mapVals(Seq(v0), Map("v" -> when(counted, 1).otherwise(0)))
+      .agg(Seq("t"), Map("v" -> anyFn))
+      .agg(Seq(), Map("v" -> plusInt))
+
+  /** The covariance core: C(c, cp) = Σ_t U(t,c) ⊗× U(t,cp) ÷ (N−1), where
+    * U = X ⊗− M and M = [[meanOver]] c — over X(t, c) with nullable double
+    * v and a keyless N ([[countBins]]). Returns the full (c, cp) matrix; a
+    * caller that wants the symmetric half (`SensorOpt.S`) adds
+    * `where(c ≤ cp)`, which Catalyst pushes through the ⊕-agg into the t
+    * self-join. [[covariance]] runs it over A−B; the `lara_covariance`
+    * contract (`LaraQueries.covariance`) over hour-binned events.
+    *
+    * No cache hints: X (fan-out ≥ 2) is persisted by LaraTable's
+    * auto-cache; U, a broadcast-right join over the persisted X, is
+    * recomputed by each side of the self-join rather than cached with M's
+    * broadcast pinned inside it.
+    */
+  def covarianceOf(x: LaraTable, n: LaraTable): LaraTable = {
+    val m = meanOver(x, Seq("c"))
+    // U = X − M on the shared key prefix c (M is |c| rows: broadcast).
+    val u = x.sortKeys(Seq("c", "t")).join(m, Map("v" -> subtractVn), broadcastRight = true)
+      .sortKeys(Seq("t", "c"))
+    u.join(u.rename(Map("c" -> "cp")), Map("v" -> multiplyVn))
+      .sortKeys(Seq("c", "cp", "t"))
+      .agg(Seq("c", "cp"), Map("v" -> plusDoubleNull))
+      .join(n, Map("v" -> divideMinusOne), broadcastRight = true)
   }
 
   /** Full covariance query C over two parsed sensor tables. */
   def covariance(a: LaraTable, b: LaraTable): LaraTable = {
-    // X = A − B on shared keys (tp, c); null annihilators = null defaults.
-    // No explicit cache hints anywhere below: X (3 consumers) and U (2) are
-    // shuffle-bearing subtrees with fan-out > 1, so LaraTable.noteUse
-    // persists them automatically — the reference's shared-subtree dedup.
-    val x = binAndAvg(a).join(binAndAvg(b), Map("v" -> subtractVn))
-
-    // N = number of t′ bins with any non-null difference (scalar).
-    val n = x
-      .mapVals(Seq(v0), Map("v" -> when(col("v").isNotNull, 1).otherwise(0))) // notNullFun
-      .agg(Seq("tp"), Map("v" -> anyFn))
-      .agg(Seq(), Map("v" -> plusInt))
-
-    // M = per-column means of X.
-    val x0 = x.sortKeys(Seq("c", "tp"))
-    val m = x0
-      .mapVals(Seq(vn, cnt), Map("v" -> col("v"), "cnt" -> when(col("v").isNotNull, 1).otherwise(0)))
-      .agg(Seq("c"), Map("v" -> plusDoubleNull, "cnt" -> plusInt))
-      .mapVals(Seq(vn), Map("v" -> when(col("cnt") =!= 0, col("v") / col("cnt")).otherwise(lit(null))))
-
-    // U = X − M, mean-centered (shared key prefix c; M broadcast — tiny).
-    val u = x0.join(m, Map("v" -> subtractVn), broadcastRight = true)
-      .sortKeys(Seq("tp", "c"))
-
-    // C = Σ_t U ⊗ U′ per (c, c′), ÷ (N−1).
-    u.join(u.rename(Map("c" -> "cp")), Map("v" -> multiplyVn))
-      .sortKeys(Seq("c", "cp", "tp"))
-      .agg(Seq("c", "cp"), Map("v" -> plusDoubleNull))
-      .join(n, Map("v" -> divideMinusOne), broadcastRight = true)
+    // X = A − B on shared keys (t′, c); null annihilators = null defaults.
+    val x = binAndAvg(a).join(binAndAvg(b), Map("v" -> subtractVn)).rename(Map("tp" -> "t"))
+    // N = number of t′ bins with any non-null difference.
+    covarianceOf(x, countBins(x, col("v").isNotNull))
   }
 }

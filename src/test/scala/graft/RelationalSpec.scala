@@ -125,7 +125,6 @@ class RelationalSpec extends AnyFunSuite {
 
   test("funnelStages: greedy subsequence depth with strict time ordering") {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val schema = new StructType().add("user_id", LongType)
       .add("ts", TimestampType).add("event_type", StringType)
@@ -193,7 +192,6 @@ class RelationalSpec extends AnyFunSuite {
 
   test("rateAnomaly: trailing-window z from exact sums; degenerate windows null out") {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val schema = new StructType().add("ts", TimestampType).add("event_type", StringType)
     // type "a": hours 0..19 have 2 events each, hour 20 has 6 (a spike
@@ -235,7 +233,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("skyline: bucket decomposition equals brute-force dominance on random points") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // deterministic pseudo-random points, duplicates included on purpose
@@ -260,7 +257,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("ohlcDownsample: first/last by (ts, event_id); ONE shuffle serves windows + agg") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
@@ -405,7 +401,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("skyline3d: staircase decomposition equals brute-force 3-dim dominance") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def rv(key: Long): Long = Math.floorMod(
@@ -538,7 +533,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("eventTransitions: per-user lead pairs, ties broken by event_id") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
@@ -627,7 +621,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("attribution: purchases credit the strictly-prior non-purchase type; first → none") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
@@ -657,7 +650,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("minmaxNormalize: extremes map to 0/1, interior stays in band, degenerate → 0.5") {
-    import org.apache.spark.sql.functions._
     val rows = RelationalQueries.minmaxQuery(spark, sf).collect()
     assert(rows.nonEmpty)
     val byType = rows.groupBy(_.getString(1))
@@ -688,7 +680,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("ewmaSmooth: power-of-two lag weights over hourly closes — hand-checked") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def t(s: Long) = new java.sql.Timestamp(s * 1000)
@@ -709,7 +700,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("maxDrawdown: day-local max + prior-day carry equals the global running peak") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def t(ms: Long) = new java.sql.Timestamp(ms)
@@ -729,7 +719,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("jsonExtract: malformed and missing-key payloads count as rows, not parses") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val st = new StructType().add("event_type", StringType).add("props", StringType)
@@ -788,7 +777,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q11ImportantParts: every emitted pair beats 0.1% of its nation; none missed") {
-    import org.apache.spark.sql.functions._
     val got = RelationalQueries.q11ImportantParts(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     graft.pipeline.InternalCaches.release()
@@ -937,7 +925,6 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("interarrivalHist: bucket counts equal a brute-force gap fold; total = rows − users") {
-    import org.apache.spark.sql.functions._
     val raw = Tables.events(spark, sf)
       .select("user_id", "ts", "event_id", "event_type").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2), r.getString(3)))

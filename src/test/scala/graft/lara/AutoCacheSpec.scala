@@ -101,41 +101,72 @@ class AutoCacheSpec extends AnyFunSuite {
   test("covariance pins one computation of the shared subtrees, no hints") {
     withCleanCaches {
       import graft.sensor.SensorPipeline
+      import org.apache.spark.sql.DataFrame
+      import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+      import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
       val lines = df(new StructType().add("value", StringType),
         Seq("2020-01-01 00:00:10.000000;n;C1;f;1.5;u",
             "2020-01-01 00:00:20.000000;n;C2;f;2.5;u",
             "2020-01-01 00:02:10.000000;n;C1;f;3.5;u",
             "2020-01-01 00:02:20.000000;n;C2;f;4.5;u").map(Row(_)))
-      import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-      import org.apache.spark.sql.execution.columnar.InMemoryRelation
       // Raw (non-cache) leaf scans in the optimized logical plan — cache
       // substitution (withCachedData) runs before optimization, and
       // InMemoryRelation is a LeafNode, so traversal counts only scans the
       // final query recomputes itself.
-      def rawLeaves(d: org.apache.spark.sql.DataFrame): Int =
+      def rawLeaves(d: DataFrame): Int =
         d.queryExecution.optimizedPlan.collect {
           case l: LeafNode if !l.isInstanceOf[InMemoryRelation] => l
         }.size
-      def build() = SensorPipeline.covariance(
-        SensorPipeline.parse(lines), SensorPipeline.parse(lines))
-      // Control: with auto-cache off, X's subtree (and its two parse
-      // leaves) is inlined into every consumer — the parse inputs are
-      // re-scanned many times.
-      val offLeaves = LaraTable.withAutoCache(false) {
-        val cov = build(); assert(cov.df.count() == 4); rawLeaves(cov.df)
+      // The cached physical plans of the cache entries a plan reads (the
+      // CacheManager's InMemoryRelations), nested entries included. One that
+      // holds a broadcast exchange pins the broadcast relation for the
+      // cache's lifetime.
+      object aqe extends AdaptiveSparkPlanHelper
+      def cachedPlans(p: SparkPlan): Seq[SparkPlan] =
+        aqe.collect(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan }
+          .flatMap(c => c +: cachedPlans(c))
+      def broadcastPinning(d: DataFrame): Seq[SparkPlan] =
+        cachedPlans(d.queryExecution.executedPlan).distinct
+          .filter(c => aqe.find(c)(_.isInstanceOf[BroadcastExchangeLike]).isDefined)
+      // (name, plan, rows, minimum inlined leaves of the recompute plan)
+      val cases = Seq[(String, () => DataFrame, Long, Int)](
+        // the full 2x2 (c, c') matrix
+        ("sensor", () => SensorPipeline.covariance(
+          SensorPipeline.parse(lines), SensorPipeline.parse(lines)).df, 4L, 6),
+        // the sf0.001 tables, relative to the build root: 5 event types,
+        // so 15 (c ≤ c′) entries
+        ("lara_covariance", () => graft.LaraQueries.covariance(spark, "perfbench/fixture"), 15L, 4))
+      for ((name, build, rows, minOffLeaves) <- cases) {
+        // Control: with auto-cache off, X's subtree (and its scan leaves) is
+        // inlined into every consumer — the inputs are re-scanned many times.
+        val (offLeaves, offRows) = LaraTable.withAutoCache(false) {
+          val cov = build(); (rawLeaves(cov), cov.count())
+        }
+        val before = InternalCaches.registeredCount
+        val cov = build()
+        // Only X (consumed by N, M and U) is persisted. U, a broadcast-right
+        // join over the persisted X, is recomputed by both sides of the t
+        // self-join instead of being cached with M's broadcast inside it.
+        assert(InternalCaches.registeredCount == before + 1, name)
+        assert(offRows == rows && cov.count() == rows, name)
+        // One scan of each shared input: every path in the final plan goes
+        // through a cached subtree — ZERO raw leaf scans remain, vs the
+        // recompute plan's inlined re-scans.
+        assert(offLeaves >= minOffLeaves,
+          s"$name: control plan expected >=$minOffLeaves inlined leaves, got $offLeaves")
+        assert(rawLeaves(cov) == 0,
+          s"$name: shared input scanned directly ${rawLeaves(cov)} times (recompute leaked past the cache)")
+        // The contract's X is an aggregate over one scan, so none of its
+        // cache entries may hold a broadcast; the sensor's X is itself the
+        // A−B join, which AQE turns into a broadcast join at this size.
+        if (name == "lara_covariance") {
+          val pinning = broadcastPinning(cov)
+          assert(pinning.isEmpty, s"cached plans holding a broadcast exchange:\n${pinning.mkString("\n")}")
+        }
       }
-      val before = InternalCaches.registeredCount
-      val cov = build()
-      // X (A−B, 3 consumers) and U (mean-centered, 2 consumers) — exactly
-      // the two subtrees the pre-r11 code marked with explicit `.cached`.
-      assert(InternalCaches.registeredCount == before + 2)
-      assert(cov.df.count() == 4) // 2x2 (c, c') matrix
-      // One scan of each shared input: every path in the final plan goes
-      // through a cached subtree — ZERO raw leaf scans remain, vs the
-      // recompute plan's inlined re-scans.
-      assert(offLeaves >= 6, s"control plan expected >=6 inlined leaves, got $offLeaves")
-      assert(rawLeaves(cov.df) == 0,
-        s"shared input scanned directly ${rawLeaves(cov.df)} times (recompute leaked past the cache)")
     }
   }
 }
