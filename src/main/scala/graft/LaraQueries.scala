@@ -30,10 +30,6 @@ object LaraQueries {
       .df
   }
 
-  /** Map (1:1 Ext) + Rename: the RainySunny golden query shape
-    * (`examples/rainysunny/RainySunnyQuery.kt:27-36`) — string replace over a
-    * val attribute, then rename.
-    */
   /** MinMaxFilter ∘ D4mRangeFilter as a driver-checked contract (SURVEY §2
     * rows 24–25, previously spec-only): a lineitem LaraTable keyed
     * (l_orderkey, l_linenumber) takes a key-RANGE cut (the reference's
@@ -56,6 +52,10 @@ object LaraQueries {
       .df
   }
 
+  /** Map (1:1 Ext) + Rename: the RainySunny golden query shape
+    * (`examples/rainysunny/RainySunnyQuery.kt:27-36`) — string replace over a
+    * val attribute, then rename.
+    */
   def mapReplace(s: SparkSession, d: String): DataFrame = {
     val docs = LaraTable(documents(s, d), LaraSchema(Seq("doc_id"), Seq(ValSpec("text", StringType, ""))))
     docs

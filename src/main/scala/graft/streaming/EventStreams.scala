@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -302,15 +303,15 @@ object EventStreams {
     * (argmax via struct-max — each update of a key adds rows, so n is a
     * valid version stamp), and must equal the batch per-type count and
     * exact cents sum. State is |event_types| rows — no watermark needed,
-    * nothing ever expires.
+    * nothing ever expires. Without a watermark the replay feeds no
+    * sentinels: the events are its one micro-batch.
     */
   def streamingCountsReplay(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     replayEvents(s, dir, "counts_replay", mode = "update") { in =>
       in.toDF()
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), graft.Num.centsSumExact(col("value")).as("sum_cents"))
-    }.filter(col("event_type") =!= "__wm")
-      .groupBy(col("event_type"))
+    }.groupBy(col("event_type"))
       .agg(max(struct(col("n"), col("sum_cents"))).as("fin"))
       .select(col("event_type"), col("fin.n").as("n"), col("fin.sum_cents").as("sum_cents"))
 
@@ -323,10 +324,10 @@ object EventStreams {
     * streaming plan — Spark re-resolves the batch side per micro-batch —
     * then aggregates (market segment, event type) counts and exact cents
     * in UPDATE mode. No watermark and no join state (the static side is
-    * not a stream); the far-future sentinel rows fall out of the inner
-    * join (user −7 has no dimension row). Certified against the plain
-    * batch join+aggregate DuckDB oracle, so the stream-static path must
-    * land on exactly the batch answer.
+    * not a stream), so the replay feeds no sentinels and runs one
+    * micro-batch. Certified against the plain batch join+aggregate DuckDB
+    * oracle, so the stream-static path must land on exactly the batch
+    * answer.
     *
     * Scale: the dimension broadcasts once per micro-batch (production
     * shape for stream enrichment — no shuffle of the stream side); the
@@ -339,8 +340,7 @@ object EventStreams {
       in.toDF().join(dim, Seq("user_id"))
         .groupBy(col("segment"), col("event_type"))
         .agg(count(lit(1)).as("n"), graft.Num.centsSumExact(col("value")).as("sum_cents"))
-    }.filter(col("event_type") =!= "__wm")
-      .groupBy(col("segment"), col("event_type"))
+    }.groupBy(col("segment"), col("event_type"))
       .agg(max(struct(col("n"), col("sum_cents"))).as("fin"))
       .select(col("segment"), col("event_type"),
         col("fin.n").as("n"), col("fin.sum_cents").as("sum_cents"))
@@ -410,18 +410,23 @@ object EventStreams {
 
   /** Shared machinery of the streaming-replay contract queries: run
     * `build`'s streaming plan over a file stream of the staged events
-    * ([[stageEventsShared]]) into a memory sink, then feed the two
-    * far-future sentinel files so the watermark sweeps every real window
-    * closed (two, because a watermark-gated emission fires only in a batch
-    * AFTER the watermark advanced — the differential specs' proven sentinel
-    * pattern). Returns the sink as a batch frame on `s0`; callers filter
-    * the sentinel rows. A replay collects nothing; sink contents are
-    * aggregate-sized.
+    * ([[stageEventsShared]]) into a memory sink. A plan that holds an
+    * event-time watermark is then fed the two far-future sentinel files, so
+    * the watermark sweeps every real window closed (two, because a
+    * watermark-gated emission fires only in a batch AFTER the watermark
+    * advanced — the differential specs' proven sentinel pattern); a plan
+    * without one emits everything in its first batch, which is then its
+    * only one. Returns the sink as a batch frame on `s0`; callers of
+    * watermarked plans filter the sentinel rows. A replay collects
+    * nothing; sink contents are aggregate-sized.
     *
-    * Every replay runs on a private clone of `s0` (own SQLConf, shared
-    * SparkContext) that starts with a copy of `s0`'s runtime conf, so a
-    * replay and its provider twin compare two providers, not two configs,
-    * and no conf is ever set on `s0`. The clone writes its checkpoint
+    * Every replay runs on a private clone of `s0` (`bridge.cloneSession`:
+    * own SQLConf, shared SparkContext, and the executor's default class
+    * loader when `s0` holds no artifacts, so a warm replay reuses the
+    * classes earlier replays compiled) that starts with a copy of `s0`'s
+    * runtime conf, so a replay and its provider twin compare two
+    * providers, not two configs, and no conf is ever set on `s0`. The
+    * clone writes its checkpoint
     * through [[LocalCheckpointFileManager]]; `stateStoreProvider`
     * overrides `spark.sql.streaming.stateStore.providerClass` on it. The
     * production choice at 100 TB streaming state is RocksDB (state
@@ -463,13 +468,16 @@ object EventStreams {
     val listeners = s0.streams.listListeners()
     listeners.foreach(s.streams.addListener)
     try {
-      val q = build(in).writeStream.format("memory").queryName(qname)
+      val plan = build(in)
+      val watermarked = plan.queryExecution.logical.exists(_.isInstanceOf[EventTimeWatermark])
+      val q = plan.writeStream.format("memory").queryName(qname)
         .outputMode(mode).option("checkpointLocation", s"$tmp/ckpt").start()
       try {
         q.processAllAvailable() // the real events
         // the first sentinel moves the watermark past every real window; the
         // second fires the emissions that expired with it
-        inputs.sentinels.foreach { wm => linkParts(wm, src); q.processAllAvailable() }
+        if (watermarked)
+          inputs.sentinels.foreach { wm => linkParts(wm, src); q.processAllAvailable() }
       } finally q.stop()
     } finally if (listeners.nonEmpty) {
       bridge.drainListeners(s)

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{Harness, SparkEntry}
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -19,7 +20,9 @@ import scala.util.control.NonFatal
   *    measurement subsets objectively (a skew rehearsal that mutates only
   *    events.user_id affects exactly the queries that read events);
   *  - with `reps > 0`, `[probe]` the time of each of `reps` timed noop
-  *    writes after one untimed warm-up, and one `[stage …]` line per stage
+  *    writes after one untimed warm-up, the number of classes Janino
+  *    compiled in the last rep (`janino=`; a warm query that regenerates
+  *    its code shows a nonzero count), and one `[stage …]` line per stage
   *    of the last rep: tasks, wall, executor time, shuffle read/write —
   *    "one giant task" vs "many small tasks", shuffle- vs CPU-bound;
   *  - `[rows]` the output row count (one untimed `count()`), which
@@ -55,9 +58,12 @@ object Profile {
     "streaming_counts_replay" -> Seq("events"),
     "streaming_enrich_replay" -> Seq("customer", "events"))
 
-  /** What one query's pass measured; `plan` is its formatted explain. */
+  /** What one query's pass measured; `plan` is its formatted explain and
+    * `compiled` the classes Janino compiled in the last rep.
+    */
   final case class Report(query: String, plan: String, tables: Seq[String],
-                          times: Seq[Double], stages: Seq[String], rows: Long) {
+                          times: Seq[Double], compiled: Long, stages: Seq[String],
+                          rows: Long) {
     /** Exchanges, sort-merge / broadcast-hash / shuffled-hash joins,
       * generators and parquet scans in [[plan]].
       */
@@ -71,7 +77,10 @@ object Profile {
       Seq(f"[audit] $query%-34s " + counts.map(c => f"$c%4d").mkString(" ") +
           " " + (if (pushed) "yes" else "-"),
         s"[tables] $query\t${tables.mkString(",")}") ++
-      times.zipWithIndex.map { case (t, i) => f"[probe] $query rep${i + 1} $t%.2f s" } ++
+      times.zipWithIndex.map { case (t, i) =>
+        f"[probe] $query rep${i + 1} $t%.2f s" +
+          (if (i == times.size - 1) s" janino=$compiled" else "")
+      } ++
       stages ++
       (if (times.isEmpty) Nil
        else Seq(f"[probe] $query BEST ${times.min}%.2f s over ${times.size} reps")) :+
@@ -91,28 +100,29 @@ object Profile {
     }
     val tables = staticTables.getOrElse(query, scannedTables(df)).sorted
     val rows = df.count()
-    val (times, stages) =
-      if (reps <= 0) (Nil, Nil)
+    val (times, compiled, stages) =
+      if (reps <= 0) (Nil, 0L, Nil)
       else {
         Harness.noop(df) // warm-up (JIT + codegen), untimed
         val log = new StageLog
+        def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         try {
-          val times = (1 to reps).map { r =>
+          val runs = (1 to reps).map { r =>
             Harness.release(spark)
             System.gc()
             if (r == reps) { // log the last rep only
               bridge.drainListeners(spark)
               spark.sparkContext.addSparkListener(log)
             }
-            val t0 = System.nanoTime()
+            val (c0, t0) = (compilations, System.nanoTime())
             Harness.noop(fn(spark, sfDir))
-            (System.nanoTime() - t0) / 1e9
+            ((System.nanoTime() - t0) / 1e9, compilations - c0)
           }
           bridge.drainListeners(spark)
-          (times, log.lines)
+          (runs.map(_._1), runs.last._2, log.lines)
         } finally spark.sparkContext.removeSparkListener(log)
       }
-    Report(query, plan, tables, times, stages, rows)
+    Report(query, plan, tables, times, compiled, stages, rows)
   }
 
   private def scannedTables(df: DataFrame): Seq[String] =

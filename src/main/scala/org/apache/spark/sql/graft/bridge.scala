@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.artifact.sessionArtifacts
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Predicate}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Bridge into `private[sql]` surface: Column ↔ Expression conversion for
   * custom Catalyst expressions, an eager local checkpoint fused with its
@@ -20,9 +22,25 @@ object bridge {
     * `spark`'s runtime conf, temp views and registered functions; confs set
     * on the clone never reach `spark`. (`newSession()` starts from the
     * context conf only.)
+    *
+    * When `spark` holds no session-scoped artifacts (no added jars,
+    * classes, files or archives), the clone also turns artifact isolation
+    * off. An isolated session runs its tasks under an executor class loader
+    * of its own UUID, and the codegen cache is keyed by class loader, so
+    * every fresh clone would compile its generated classes again; with
+    * nothing to isolate, the clone, and any session cloned from it, runs
+    * under the executor's default loader and reuses classes compiled for
+    * earlier clones. A parent with artifacts keeps an isolated clone, which
+    * sees them. The conf is set before anything reads the clone's artifact
+    * state, which fixes isolation on first use.
     */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+  def cloneSession(spark: SparkSession): SparkSession = {
+    val parent = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val clone = parent.cloneSession()
+    if (!sessionArtifacts.any(parent.artifactManager))
+      clone.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
+    clone
+  }
 
   /** `df`'s analyzed plan as a frame of `spark`. That plan already holds
     * what `df`'s temp views resolved to, so it stays valid on a session

@@ -65,4 +65,16 @@ class BridgeSpec extends AnyFunSuite {
     val expect = a.join(b, Seq("v")).groupBy(col("d")).count()
     assert(TestSpark.rowSet(joined) === TestSpark.rowSet(expect))
   }
+
+  test("cloneSession shares the default class loader only when the parent holds no artifacts") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val plain = spark.newSession()
+    assert(bridge.cloneSession(plain).conf.get(key) == "false")
+    assert(plain.conf.get(key) == "true", "the parent's conf must not change")
+    // a session-scoped class must stay visible to the clone's tasks
+    val withClass = spark.newSession()
+    val name = getClass.getSimpleName + ".class"
+    withClass.addArtifact(getClass.getResourceAsStream(name).readAllBytes(), name)
+    assert(bridge.cloneSession(withClass).conf.get(key) == "true")
+  }
 }

@@ -35,7 +35,7 @@ class SkewSpec extends AnyFunSuite {
     val salted = Skew.saltedJoin(left, right, Seq("k"), saltFactor = 8, uniqueId = Some("uid"))
     assert(salted.count() == 1000)
     val spread = left.select(Skew.salt(Seq(col("uid")), 8).as("s"))
-      .agg(countDistinct(col("s"))).head.getLong(0)
+      .agg(countDistinct(col("s"))).head().getLong(0)
     assert(spread == 8, s"expected all 8 sub-keys used, got $spread")
     // without a uniqueId the result is still exactly the plain join —
     // only the spread of byte-identical rows degrades (documented)

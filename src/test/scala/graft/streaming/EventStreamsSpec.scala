@@ -355,11 +355,12 @@ class EventStreamsSpec extends AnyFunSuite {
       assert(rows(EventStreams.streamingCountsReplay(spark, sf)).nonEmpty)
     } finally spark.streams.removeListener(listener)
     // each replay returns only after the listener bus has delivered its
-    // batches, and the listener sees each batch once: the counts replay
-    // runs three (events, two sentinels); a watermarked replay adds a
-    // no-data batch after each, on either provider
+    // batches, and the listener sees each batch once: the counts plan has
+    // no watermark, so it gets no sentinels and runs one batch; a
+    // watermarked replay runs the events, two sentinels and a no-data
+    // batch after each, on either provider
     def batches(tag: String): Seq[Long] = seen.synchronized(seen.collect { case (`tag`, b) => b }.toSeq)
-    assert(batches("counts_replay").sorted == Seq(0L, 1L, 2L), seen)
+    assert(batches("counts_replay").sorted == Seq(0L), seen)
     val twin = batches("dedup_replay_rocksdb")
     assert(twin.size >= 3 && twin.sorted == (0L until twin.size.toLong), seen)
     assert(twin.size == batches("dedup_replay").size, seen)
@@ -398,6 +399,25 @@ class EventStreamsSpec extends AnyFunSuite {
       rec.close()
       java.nio.file.Files.deleteIfExists(jfr)
     }
+  }
+
+  test("a warm replay compiles no generated class") {
+    // its clone runs under the executor's default class loader, so the
+    // codegen cache still holds what the previous replay compiled
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sf = "perfbench/fixture"
+    EventStreams.streamingCountsReplay(spark, sf).collect()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    EventStreams.streamingCountsReplay(spark, sf).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"$compiled classes compiled again")
+  }
+
+  test("a replay leaves the caller's artifact isolation as it was") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val before = spark.conf.getOption(key)
+    EventStreams.streamingCountsReplay(spark, "perfbench/fixture").collect()
+    assert(spark.conf.getOption(key) == before)
   }
 
   test("checkpoint restart recovery: a killed windowed-agg query resumes exactly-once into a file sink") {

@@ -39,6 +39,8 @@ class ProfileSpec extends AnyFunSuite {
       assert(r.rows > 0, r.query)
       assert(r.times.size == 1 && r.times.head > 0.0, r.query)
       assert(r.stages.nonEmpty && r.stages.forall(_.startsWith("[stage ")), r.query)
+      assert(r.compiled >= 0L && r.lines.exists(l =>
+        l.startsWith(s"[probe] ${r.query} rep1 ") && l.endsWith(s" janino=${r.compiled}")), r.query)
       // kcore's final plan reads only its checkpointed last round
       assert(r.tables == Map("kcore" -> Nil, "lara_covariance" -> Seq("events"))(r.query))
     }
