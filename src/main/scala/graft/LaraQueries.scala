@@ -186,7 +186,8 @@ object LaraQueries {
     val t = LaraTable(li, LaraSchema(Seq("ok", "ln"), Seq(ValSpec("qty", LongType, 0L))))
     val tmp = graft.sources.Sources.stagingDir(s, "graft_lstore")
     t.store(s"$tmp/t", numFiles = 8)
-    val perFile = s.read.parquet(s"$tmp/t")
+    // read back with the schema just written: no inference job
+    val perFile = s.read.schema(t.df.schema).parquet(s"$tmp/t")
       .select(input_file_name().as("f"), col("ok"), col("ln"), col("qty"))
       .groupBy(col("f"))
       .agg(min(struct(col("ok"), col("ln"))).as("lo"),

@@ -1,13 +1,20 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
 
 /** Parquet table loaders for the driver testdata layout
   * (`/root/testdata/sfN/NAME.parquet`, see TESTDATA.md).
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of `dir`, read with the schema of its parquet footer
+    * (`bridge.parquetSchema`): building a plan over it runs no Spark job,
+    * where schema inference runs one per read.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    bridge.parquetSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = t(s, d, "orders")

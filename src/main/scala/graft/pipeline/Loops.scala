@@ -19,10 +19,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Once a round has materialized, the frames that backed the previous
   *    round's state are released.
   *  - The round loop runs with AQE off by default: each round is a
-  *    sub-second job over frames whose size and partitioning the operator
-  *    already knows (vertex-bounded broadcasts, pre-partitioned cached
-  *    adjacency), so there is nothing to adapt and AQE would only re-plan
-  *    every exchange as its own query stage. Loops whose per-round join
+  *    sub-second job over frames whose partitioning the operator already
+  *    knows (a checkpointed adjacency partitioned on its key, or kCore's
+  *    round that moves its rows to w with one exchange), so there is
+  *    nothing to adapt, AQE would only re-plan every exchange as its own
+  *    query stage, and only a non-adaptive plan hands its partitioning to
+  *    the checkpoint, where the next round's exchange-free window or
+  *    aggregate needs it. Some loops still force vertex-bounded broadcasts
+  *    of a round's small side (ROADMAP item 2). Loops whose per-round join
   *    sizes are data-dependent and not hinted keep AQE on. The caller's
   *    final plan, built after the loop, runs under the session setting.
   *  - `localCheckpoint` trades executor-loss tolerance for speed; a long

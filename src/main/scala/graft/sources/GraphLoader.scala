@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.storage.StorageLevel
@@ -54,10 +55,15 @@ object GraphLoader {
     * predicate below it that re-evaluates the caller's src/dst expressions
     * once more per comparison side.
     */
-  private def canonical(edges: DataFrame): DataFrame = edges
+  private def canonical(edges: DataFrame): DataFrame =
+    undirectedPairs(edges).distinct().filter(col("a") =!= col("b"))
+
+  /** `(a, b)` = (least, greatest) endpoint of every edge, duplicates and
+    * self-loops kept.
+    */
+  private def undirectedPairs(edges: DataFrame): DataFrame = edges
     .select(least(col("src"), col("dst")).cast("long").as("a"),
       greatest(col("src"), col("dst")).cast("long").as("b"))
-    .distinct().filter(col("a") =!= col("b"))
 
   /** The loop adjacency: [[bothDirections]] of canonical edges (plus any
     * `carry` columns), partitioned on v and checkpointed once, reused by
@@ -461,41 +467,47 @@ object GraphLoader {
     * (`/root/reference/README.md:77-78` Graph500 fixtures) point at.
     *
     * CONTRACT SHAPE: peeling is MONOTONE — the vertex set only ever
-    * shrinks, so an unchanged survivor count IS the fixpoint. The engine
-    * runs at most `rounds` rounds with an early exit exactly at the
-    * fixpoint; the DuckDB oracle ([[kCoreOracleCtes]], generated from the
-    * same parameters so the dialects cannot drift) unrolls exactly
-    * `rounds` rounds — past the fixpoint each round is the identity, so
-    * both land on the identical set whether or not the budget sufficed.
+    * shrinks, and a state with no vertex of degree < k IS the fixpoint.
+    * The engine runs at most `rounds` peel rounds with an early exit
+    * exactly at the fixpoint; the DuckDB oracle ([[kCoreOracleCtes]],
+    * generated from the same parameters so the dialects cannot drift)
+    * unrolls exactly `rounds` rounds — past the fixpoint each round is the
+    * identity, so both land on the identical set whether or not the budget
+    * sufficed.
     *
-    * Plan per round: one map-side-combined degree aggregation + two
-    * left-semi joins, every shuffle carrying id longs only; the peeled
-    * adjacency is checkpointed per round. Returns (vertex, core_deg) —
-    * survivors with their induced degree.
+    * Plan: the loop's first round builds the adjacency — the canonical
+    * pairs in both directions, ONE exchange on v, the within-partition
+    * dedup — and gives every row `deg`, v's degree, from a window over v
+    * that needs no exchange either. A peel round moves the rows to w (the
+    * round's one exchange), where a window over w counts w's degree (the
+    * adjacency is symmetric), keeps the rows whose endpoints both have
+    * degree ≥ k and swaps the pair: the survivors keyed by w ARE the new
+    * adjacency keyed by v, and `deg` is recounted there. Every round's
+    * state is checkpointed with the count of its rows of `deg < k` in the
+    * same job, and zero such rows is the fixpoint (the next peel keeps
+    * every row), so a round is one Spark job and nothing is broadcast.
+    * Returns (vertex, core_deg) — survivors with their induced degree.
     */
   def kCore(edges: DataFrame, k: Int = 3, rounds: Int = 8): DataFrame = {
-    val adj0 = adjacency(canonical(edges))
-    // the adjacency is partitioned on v, so the degree aggregate is
-    // exchange-free, and the vertex-bounded keep set BROADCASTS into both
-    // semi-joins (the communityStats rationale) so the peeled adjacency
-    // never shuffles either
-    val ((adj, _), _) = Loops.fixpoint(edges.sparkSession,
-        Round((adj0, -1L), progress = true, Seq(adj0)), rounds) { case ((adj, survivors), _) =>
-      val (keep, n) = bridge.localCheckpointCounted(
-        adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("v")))
-      if (n == survivors) Round((adj, n), progress = false, Seq(adj)) // monotone ⇒ same set
-      else {
-        val peeled = adj
-          .join(broadcast(keep), Seq("v"), "left_semi")
-          .join(broadcast(keep.select(col("v").as("w"))), Seq("w"), "left_semi")
-          .select(col("v"), col("w")) // keep (v, w) column order
-          .localCheckpoint(true)
-        Round((peeled, n), progress = true, Seq(peeled))
-      }
+    val byV = Window.partitionBy(col("v"))
+    def counted(adj: DataFrame): Round[DataFrame] = {
+      val (state, low) = bridge.localCheckpointCounted(
+        adj.withColumn("deg", count(lit(1)).over(byV)), col("deg") < k)
+      Round(state, progress = low > 0, Seq(state))
     }
-    adj.groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
-      .select(col("v").as("vertex"), col("core_deg"))
+    // round 1 builds the first state; self-loops are dropped on the
+    // explode's output, where the filter is not pushed down to re-evaluate
+    // the caller's src/dst expressions (see [[canonical]])
+    val (adj, _) = Loops.fixpoint(edges.sparkSession,
+        Round[DataFrame](null, progress = true), rounds + 1) {
+      case (_, 1) => counted(bothDirections(undirectedPairs(edges))
+        .filter(col("v") =!= col("w")).repartition(col("v")).dropDuplicates("v", "w"))
+      case (adj, _) => counted(adj.repartition(col("w"))
+        .withColumn("dw", count(lit(1)).over(Window.partitionBy(col("w"))))
+        .filter(col("deg") >= k && col("dw") >= k)
+        .select(col("w").as("v"), col("v").as("w")))
+    }
+    adj.dropDuplicates("v").select(col("v").as("vertex"), col("deg").as("core_deg"))
   }
 
   /** The DuckDB twin of [[kCore]]'s loop, generated by the same Scala code

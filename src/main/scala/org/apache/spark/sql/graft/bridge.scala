@@ -2,17 +2,21 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.artifact.sessionArtifacts
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Predicate}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.datasources.parquet.footerSchema
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
 
 /** Bridge into `private[sql]` surface: Column ↔ Expression conversion for
   * custom Catalyst expressions, an eager local checkpoint fused with its
-  * materialization count, session cloning, and a listener-bus drain for
-  * profiling tools and streaming replays. Namespaced under org.apache.spark.sql by
-  * necessity (the standard pattern for Spark extension libraries);
-  * contains no query logic.
+  * materialization count, session cloning, parquet footer schemas, and a
+  * listener-bus drain for profiling tools and streaming replays.
+  * Namespaced under org.apache.spark.sql by necessity (the standard
+  * pattern for Spark extension libraries); contains no query logic.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -50,6 +54,14 @@ object bridge {
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.asInstanceOf[Dataset[Row]].queryExecution.analyzed)
 
+  /** The schema `spark.read.parquet(path)` would infer, read from a parquet
+    * footer on the driver instead of by an inference job; None where only
+    * inference gives it (schema merging, partition columns, a missing
+    * path).
+    */
+  def parquetSchema(spark: SparkSession, path: String): Option[StructType] =
+    footerSchema(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], path)
+
   /** Blocks until every event posted so far has reached every listener. */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
@@ -58,13 +70,20 @@ object bridge {
     * job. `Dataset.localCheckpoint(eager = true)` already materializes the
     * checkpoint by running `rdd.count()` and THROWS THE RESULT AWAY, so an
     * iterative operator that needs its per-round row count (a convergence
-    * probe: kCore/kTruss survivor counts, a frontier's isEmpty) pays a
-    * SECOND driver-synchronized job per round on top of the checkpoint
-    * job. This mirrors the Dataset.checkpoint internals — same
-    * `executedPlan.execute().map(_.copy())`, same `localCheckpoint()`,
-    * same `LogicalRDD.fromDataset` result (output partitioning/ordering
-    * preserved, lineage cut) — but surfaces the count, halving the
-    * driver round-trips of every fixed-point loop.
+    * probe: kCore/kTruss peel counts, a frontier's isEmpty) pays a SECOND
+    * driver-synchronized job per round on top of the checkpoint job. This
+    * follows the Dataset.checkpoint internals — the executed plan's rows,
+    * `localCheckpoint()`, the same `LogicalRDD.fromDataset` result (output
+    * partitioning/ordering preserved, lineage cut) — but surfaces the
+    * count, halving the driver round-trips of every fixed-point loop.
+    *
+    * Storage: each partition is stored as packed row bytes, not as one JVM
+    * object per row. Its `UnsafeRow`s are copied back to back into byte
+    * chunks of at most [[ChunkBytes]] (a larger row gets a chunk of its
+    * own), each chunk `[rows: 8 bytes][len: 8 bytes][row bytes]…`, so the
+    * block manager sizes a partition by its few arrays instead of walking
+    * every row, and readers point one reused `UnsafeRow` into the chunks
+    * without copying.
     *
     * `pred`: optional Boolean column evaluated DURING the materialization
     * pass and counted via an accumulator; the second element of the result
@@ -88,23 +107,83 @@ object bridge {
       }
     }
     SQLExecution.withNewExecutionId(qe, Some("graftLocalCheckpointCounted")) {
-      val base = qe.executedPlan.execute()
       val output = qe.executedPlan.output
-      val (rdd, acc) = cond match {
-        case None => (base.map(_.copy()), None)
-        case Some(c) =>
-          val acc = spark.sparkContext.longAccumulator("graft.checkpointPredCount")
-          (base.mapPartitionsWithIndex { (i, rows) =>
-            val p = Predicate.create(c, output)
-            p.initialize(i)
-            rows.map { r => if (p.eval(r)) acc.add(1L); r.copy() }
-          }, Some(acc))
+      val acc = cond.map(_ => spark.sparkContext.longAccumulator("graft.checkpointPredCount"))
+      val packed = qe.executedPlan.execute().mapPartitionsWithIndex { (i, rows) =>
+        lazy val toUnsafe = UnsafeProjection.create(output, output)
+        val counted = cond.fold(rows) { c =>
+          val p = Predicate.create(c, output)
+          p.initialize(i)
+          rows.map { r => if (p.eval(r)) acc.get.add(1L); r }
+        }
+        pack(counted.map {
+          case u: UnsafeRow => u
+          case r => toUnsafe(r)
+        })
       }
-      rdd.localCheckpoint()
-      val total = rdd.count() // ONE job: materializes the checkpoint AND counts
+      packed.localCheckpoint()
+      // ONE job: materializes the checkpoint AND counts its rows
+      val total = spark.sparkContext.runJob(packed,
+        (chunks: Iterator[Array[Byte]]) => chunks.map(rowsIn).sum).sum
+      val rows = packed.mapPartitions(unpack(output.length), preservesPartitioning = true)
       val out = Dataset.ofRows(spark,
-        LogicalRDD.fromDataset(rdd, ds, isStreaming = false).newInstance())
+        LogicalRDD.fromDataset(rows, ds, isStreaming = false).newInstance())
       (out, acc.fold(total)(_.value))
+    }
+  }
+
+  /** The most bytes a stored checkpoint chunk holds, unless one row alone
+    * is larger.
+    */
+  final val ChunkBytes: Int = 4 << 20
+
+  private val Base = Platform.BYTE_ARRAY_OFFSET
+
+  private def rowsIn(chunk: Array[Byte]): Long = Platform.getLong(chunk, Base)
+
+  /** `rows` packed into chunks of the [[localCheckpointCounted]] layout;
+    * 8-byte prefixes keep every row 8-byte aligned.
+    */
+  private def pack(rows: Iterator[UnsafeRow]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
+    private var pending: UnsafeRow = null // read, did not fit the last chunk
+    def hasNext: Boolean = pending != null || rows.hasNext
+    def next(): Array[Byte] = {
+      var buf = new Array[Byte](64 << 10)
+      var pos = 8
+      var n = 0L
+      var row = if (pending != null) pending else rows.next()
+      pending = null
+      while (row != null) {
+        val end = pos + 8 + row.getSizeInBytes
+        if (end > ChunkBytes && n > 0) { pending = row; row = null }
+        else {
+          if (end > buf.length)
+            buf = java.util.Arrays.copyOf(buf, math.max(end, math.min(ChunkBytes, buf.length * 2)))
+          Platform.putLong(buf, Base + pos, row.getSizeInBytes.toLong)
+          row.writeToMemory(buf, Base + pos + 8)
+          pos = end
+          n += 1
+          row = if (rows.hasNext) rows.next() else null
+        }
+      }
+      Platform.putLong(buf, Base, n)
+      if (pos == buf.length) buf else java.util.Arrays.copyOf(buf, pos)
+    }
+  }
+
+  /** The rows of packed chunks, each a view of its chunk through one reused
+    * `UnsafeRow` (the scan over the checkpoint copies what it emits).
+    */
+  private def unpack(numFields: Int)(chunks: Iterator[Array[Byte]]): Iterator[InternalRow] = {
+    val row = new UnsafeRow(numFields)
+    chunks.flatMap { chunk =>
+      var pos = 8L
+      Iterator.fill(rowsIn(chunk).toInt) {
+        val len = Platform.getLong(chunk, Base + pos).toInt
+        row.pointTo(chunk, Base + pos + 8, len)
+        pos += 8 + len
+        row
+      }
     }
   }
 }

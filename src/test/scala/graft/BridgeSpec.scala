@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,6 +65,31 @@ class BridgeSpec extends AnyFunSuite {
     val joined = ck.join(b, Seq("v")).groupBy(col("d")).count()
     val expect = a.join(b, Seq("v")).groupBy(col("d")).count()
     assert(TestSpark.rowSet(joined) === TestSpark.rowSet(expect))
+  }
+
+  test("a checkpoint spanning several stored chunks per partition round-trips row for row") {
+    // 2 partitions of 6000 rows × ≥ 2 KiB: every partition spans at least
+    // three chunks of bridge.ChunkBytes. The plan is not adaptive, as in a
+    // loop round: an adaptive plan reports no partitioning to keep.
+    val rows = 12000L
+    val plain = spark.newSession()
+    plain.conf.set("spark.sql.adaptive.enabled", "false")
+    val df = plain.range(0L, rows, 1L, 2)
+      .selectExpr("id % 97 AS v", "id", "concat(repeat('x', 2048), id) AS pad", "id % 10 = 0 AS tenth")
+      .repartition(2, col("v"))
+    assert(rows / 2 * 2048 > 2L * bridge.ChunkBytes)
+    val (out, n) = bridge.localCheckpointCounted(df)
+    assert(n === rows)
+    val (_, tenths) = bridge.localCheckpointCounted(df, col("tenth"))
+    assert(tenths === rows / 10)
+    def sorted(d: org.apache.spark.sql.DataFrame) = d.orderBy(col("id")).collect().toSeq
+    assert(sorted(out) === sorted(df))
+    assert(out.count() === rows)
+    // the checkpoint keeps the partitioning on v: grouping by it shuffles nothing
+    val grouped = out.groupBy(col("v")).agg(count(lit(1)).as("n"))
+    assert(grouped.collect().map(_.getLong(1)).sum === rows)
+    val plan = grouped.queryExecution.executedPlan
+    assert(plan.collectFirst { case e: ShuffleExchangeExec => e }.isEmpty, plan.treeString)
   }
 
   test("cloneSession shares the default class loader only when the parent holds no artifacts") {

@@ -469,7 +469,7 @@ class RelationalSpec extends AnyFunSuite {
     val byType = Tables.events(spark, sf)
       .select(col("event_type"), col("value")).collect()
       .map(r => (r.getString(0), r.getDouble(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     def lowerMedian(vs: Seq[Double]): Double = vs.sorted.apply((vs.size + 1) / 2 - 1)
     val exp = byType.map { case (t, vs) =>
       val med = lowerMedian(vs)

@@ -52,4 +52,33 @@ class TablesSpec extends AnyFunSuite {
     // and both equal the source-of-truth micros
     assert(ia == micros.map(m => m -> m).toMap)
   }
+
+  test("tables read with their footer schema have the schema inference gives") {
+    for (dir <- Seq("perfbench/fixture", "/root/testdata/sf0.001")) {
+      val names = new java.io.File(dir).list().filter(_.endsWith(".parquet")).sorted
+      assert(names.length >= 10, s"$dir: ${names.mkString(", ")}")
+      for (n <- names) {
+        val name = n.stripSuffix(".parquet")
+        assert(Tables.t(spark, dir, name).schema == spark.read.parquet(s"$dir/$n").schema,
+          s"$dir/$n")
+      }
+    }
+  }
+
+  test("a contract that only reads tables builds with no Spark job") {
+    val q1 = SparkEntry.contracts.find(_.name == "q1_agg").get
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val plan = q1.plan(spark, "perfbench/fixture")
+      plan.queryExecution.executedPlan // planned too, not run
+      org.apache.spark.sql.graft.bridge.drainListeners(spark)
+      assert(jobs.get == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

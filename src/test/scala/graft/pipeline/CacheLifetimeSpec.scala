@@ -33,7 +33,7 @@ class CacheLifetimeSpec extends AnyFunSuite {
     InternalCaches.release()
     assert(InternalCaches.registeredCount == 0)
     assert(persisted.subsetOf(baseline),
-      s"leaked persistent RDDs: ${persisted -- baseline}")
+      s"leaked persistent RDDs: ${persisted.diff(baseline)}")
   }
 
   test("release() before result consumption is safe — lineage recomputes") {

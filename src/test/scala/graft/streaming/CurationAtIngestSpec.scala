@@ -33,7 +33,7 @@ class CurationAtIngestSpec extends AnyFunSuite {
     val rows = batchMedia.collect()
     val in = MemoryStream[Int]
     val streamMedia = in.toDF().join(broadcast(batchMedia), lit(true)) // carrier join: re-emit blobs through a stream
-      .select(batchMedia.columns.map(col): _*)
+      .select(batchMedia.columns.toSeq.map(col): _*)
     val feats = Multimodal.extractFeatures(streamMedia, dim = 8)
     val q = feats.writeStream.format("memory").queryName("media_stream")
       .outputMode("append").start()

@@ -531,9 +531,9 @@ class EventStreamsSpec extends AnyFunSuite {
     try {
       // two batches: later arrivals must match against retained state
       val (first, second) = emb.splitAt(emb.length / 2)
-      in.addData(first.map { case (id, e) => (ts(60 + id), id, e) }: _*)
+      in.addData(first.toSeq.map { case (id, e) => (ts(60 + id), id, e) }: _*)
       q.processAllAvailable()
-      in.addData(second.map { case (id, e) => (ts(60 + id), id, e) }: _*)
+      in.addData(second.toSeq.map { case (id, e) => (ts(60 + id), id, e) }: _*)
       q.processAllAvailable()
       val streamed = spark.table("emb_stream").collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
