@@ -136,7 +136,8 @@ object LaraQueries {
     *   C(c,c′) = Σ_t U(t,c)·U(t,c′) / (N−1), U = X − ⊕-mean_c(X) [⊗-join + agg]
     * then the upper triangle (`SensorOpt.S`: only c ≤ c′, pushed into the
     * t self-join), rounded to 6 places. X has three consumers (N, M, U) and
-    * is persisted once by auto-cache — the reference's `ReuseSource`.
+    * is computed once by [[graft.lara.LaraTable.shared]] — the reference's
+    * `ReuseSource`.
     *
     * Scale shape: |t-bins| grows with data, |c| (event types) is small — so
     * X is tall-skinny; the self-join on t shuffles X once (or broadcasts at
@@ -150,7 +151,7 @@ object LaraQueries {
         (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("t"),
         col("event_type").as("c"), col("value").as("v")),
       LaraSchema(Seq("event_id", "t", "c"), Seq(ValSpec("v", DoubleType, null))))
-    val x = meanOver(ev, Seq("t", "c"))
+    val x = meanOver(ev, Seq("t", "c")).shared
     covarianceOf(x, countBins(x, lit(true)))
       .where(col("c") <= col("cp"))
       .mapVals(Seq(ValSpec("cov", DoubleType, null)), Map("cov" -> round(col("v"), 6)))

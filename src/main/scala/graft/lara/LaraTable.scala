@@ -13,28 +13,19 @@ import org.apache.spark.sql.functions._
   * work the reference implements by hand (`api/Lower.kt:63-153`).
   *
   * Scale notes (100 TB design stance):
-  *  - No operator here collects to the driver or materializes; everything is
-  *    a Catalyst plan. Shuffles appear only at union/agg/join boundaries.
+  *  - Operators build Catalyst plans: only the sinks (`store*`,
+  *    `reduceScalar`) and [[shared]] run Spark jobs. Shuffles appear only
+  *    at union/agg/join boundaries.
   *  - `union` pre-aggregates map-side automatically (hash partial agg).
   *  - `join` is a plain equi-join on the shared key prefix, so Catalyst is
   *    free to choose broadcast / shuffle-hash / sort-merge and AQE can
   *    re-plan at runtime, including skew-join splitting.
-  *  - Shared subtrees are cached AUTOMATICALLY: the reference dedups
-  *    pipelines that feed multiple consumers at lowering time
-  *    (`api/TupleOp.kt:25-26`, `api/Lower.kt:107-127`); here every operator
-  *    notes its inputs' fan-out at plan-build time and the second consumer
-  *    of a shuffle-bearing subtree persists it (MEMORY_AND_DISK, registered
-  *    in [[graft.pipeline.InternalCaches]]). See [[LaraTable.noteUse]].
-  *
-  * `shuffled` tracks whether this table's plan contains a shuffle boundary
-  * (union/agg/join output; a broadcast-right join only over an unpersisted
-  * shuffled left side) — the auto-cache trigger. Narrow ops propagate
-  * it; leaves (`load`/`empty`/raw scans) start false, so a bare scan
-  * consumed twice is re-read (columnar parquet re-scan is cheaper than
-  * caching raw data at 100 TB), while a shared aggregate/join is computed
-  * once.
+  *  - [[shared]] is the one eager operator, the reference's `ReuseSource`
+  *    ('R', `sensor/SensorCalc.kt:275,322`): a table read by several
+  *    consumers is computed once, where the caller says so, instead of
+  *    being inlined into each of them.
   */
-final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean = false) {
+final case class LaraTable(df: DataFrame, schema: LaraSchema) {
   import LaraTable._
 
   require(schema.allNames.forall(df.columns.contains),
@@ -58,12 +49,11 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     require(newKeys.intersect(schema.keys).isEmpty,
       s"ext: new keys $newKeys must be disjoint from parent keys ${schema.keys}")
     val out = LaraSchema(schema.keys ++ newKeys, newVals)
-    LaraTable.noteUse(this)
     val exploded = df.select(schema.keys.map(col) :+ gen.as("__ext"): _*)
     val flat = (newKeys ++ newVals.map(_.name)).foldLeft(exploded) {
       (d, n) => d.withColumn(n, col(s"__ext.$n"))
     }.drop("__ext")
-    LaraTable(flat.select(out.allNames.map(col): _*), out, shuffled)
+    LaraTable(flat.select(out.allNames.map(col): _*), out)
   }
 
   /** Ext with an *arbitrary* row function — the reference `ExtFun` in full
@@ -94,7 +84,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
         newKeys.map { case (n, t) => StructField(n, t) } ++
         newVals.map(v => StructField(v.name, v.dataType)))
     val genWidth = newKeys.length + newVals.length
-    LaraTable.noteUse(this)
     val flat = df.flatMap { row =>
       val keyVals = keyIdx.map(row.get(_)).toSeq
       f(row).iterator.map { gen =>
@@ -103,7 +92,7 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
         Row.fromSeq(keyVals ++ gen.toSeq)
       }
     }(Encoders.row(outStruct))
-    LaraTable(flat.toDF(), out, shuffled)
+    LaraTable(flat.toDF(), out)
   }
 
   /** Map: 1:1 value transform; keys unchanged. Reference `MapFun`
@@ -114,19 +103,15 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     require(newVals.map(_.name).toSet == exprs.keySet,
       s"mapVals: declared ${newVals.map(_.name)} != computed ${exprs.keySet}")
     val out = LaraSchema(schema.keys, newVals)
-    LaraTable.noteUse(this)
     val cols = schema.keys.map(col) ++ newVals.map(v => exprs(v.name).cast(v.dataType).as(v.name))
-    LaraTable(df.select(cols: _*), out, shuffled)
+    LaraTable(df.select(cols: _*), out)
   }
 
   /** Filter idiom: the reference filters by mapping to the default tuple and
     * letting ZeroDiscard drop it (`examples/sensor/SensorQuery.kt:40-42`).
     * Spark-first, that is just a predicate — pushed down to the scan.
     */
-  def where(cond: Column): LaraTable = {
-    LaraTable.noteUse(this)
-    copy(df = df.filter(cond))
-  }
+  def where(cond: Column): LaraTable = copy(df = df.filter(cond))
 
   /** Key-range filter — reference `MinMaxFilter` (`sensor/MinMaxFilter.kt:
     * 18-77`) / `RowRangeIterator` (`opt/Operators.kt:332-368`). On a
@@ -151,8 +136,7 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     val out = LaraSchema(
       schema.keys.map(k => m.getOrElse(k, k)),
       schema.vals.map(v => v.copy(name = m.getOrElse(v.name, v.name))))
-    LaraTable.noteUse(this)
-    LaraTable(df.withColumnsRenamed(m), out, shuffled)
+    LaraTable(df.withColumnsRenamed(m), out)
   }
 
   // ------------------------------------------------------------------- Sort
@@ -180,11 +164,20 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     * *stronger* than the access-path contract needs: partitions are globally
     * ordered, so key-prefix locality is preserved too.
     */
-  def sortedDf: DataFrame = {
-    LaraTable.noteUse(this)
+  def sortedDf: DataFrame =
     df.repartitionByRange(schema.keys.map(col): _*)
       .sortWithinPartitions(schema.keys.map(col): _*)
-  }
+
+  // ----------------------------------------------------------------- Shared
+
+  /** Reference `ReuseSource` ('R', `sensor/SensorCalc.kt:275,322`): this
+    * table computed once, now, for the consumers the caller builds on it.
+    * The one eager operator: one Spark job runs the adaptively executed
+    * plan into stored rows that every consumer reads
+    * ([[graft.pipeline.InternalCaches.checkpoint]], freed with the operator
+    * caches).
+    */
+  def shared: LaraTable = copy(df = graft.pipeline.InternalCaches.checkpoint(df))
 
   // ------------------------------------------------------------------ Union
 
@@ -206,7 +199,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     val effective = outVals.map(v =>
       v.name -> plusFns.getOrElse(v.name, PlusFn.errorFn(v.default, v.dataType))).toMap
     checkIdentityLaw(schema, plusFns); checkIdentityLaw(other.schema, plusFns)
-    LaraTable.noteUse(this); LaraTable.noteUse(other)
 
     def pad(t: LaraTable): DataFrame = {
       val cols = commonKeys.map(col) ++ outVals.map { v =>
@@ -216,8 +208,7 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
       t.df.select(cols: _*)
     }
     val unioned = pad(this).unionByName(pad(other))
-    LaraTable(aggregate(unioned, commonKeys, outVals, effective), LaraSchema(commonKeys, outVals),
-      shuffled = true)
+    LaraTable(aggregate(unioned, commonKeys, outVals, effective), LaraSchema(commonKeys, outVals))
   }
 
   /** N-ary ⊕-union (left fold; ⊕ associativity makes the shape free). */
@@ -241,9 +232,7 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     val keptOrdered = schema.keys.filter(keysKept.contains)
     val outVals = schema.vals.filter(v => plusFns.contains(v.name))
       .map(v => v.copy(default = plusFns(v.name).identity))
-    LaraTable.noteUse(this)
-    LaraTable(aggregate(df, keptOrdered, outVals, plusFns), LaraSchema(keptOrdered, outVals),
-      shuffled = true)
+    LaraTable(aggregate(df, keptOrdered, outVals, plusFns), LaraSchema(keptOrdered, outVals))
   }
 
   // ------------------------------------------------------------------- Join
@@ -278,7 +267,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
       val spec = schema.valSpec(n)
       ValSpec(n, spec.dataType, timesFns(n).resultZero)
     }
-    LaraTable.noteUse(this); LaraTable.noteUse(other)
     val l = df.as("l")
     val r = (if (broadcastRight) broadcast(other.df) else other.df).as("r")
     // Empty shared prefix (e.g. joining a keyless global aggregate) is the
@@ -298,13 +286,7 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
       val keeps = outVals.filter(_.default != null).map(v => col(v.name) =!= lit(v.default))
       if (keeps.nonEmpty) res = res.filter(keeps.reduce(_ || _))
     }
-    // A broadcast-right join over a persisted (or unshuffled) left side
-    // recomputes as a scan plus a hash probe against a small right side, so
-    // it is no auto-cache candidate: persisting it would pin the broadcast
-    // relation inside its cached plan for the cache's lifetime.
-    val boundary = !broadcastRight ||
-      (shuffled && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    LaraTable(res, LaraSchema(resultKeys, outVals.toList), shuffled = boundary)
+    LaraTable(res, LaraSchema(resultKeys, outVals.toList))
   }
 
   // ----------------------------------------------------------------- Sinks
@@ -323,7 +305,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     * certifies exactly this through the driver's oracle gate.
     */
   def store(path: String, numFiles: Int): Unit = {
-    LaraTable.noteUse(this)
     df.repartitionByRange(numFiles, schema.keys.map(col): _*)
       .sortWithinPartitions(schema.keys.map(col): _*)
       .write.mode("overwrite").parquet(path)
@@ -377,7 +358,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     */
   def storePartitioned(path: String, nPartitionKeys: Int = 1): Unit = {
     val pkeys = schema.keys.take(nPartitionKeys)
-    LaraTable.noteUse(this)
     df.sortWithinPartitions(schema.keys.map(col): _*)
       .write.mode("overwrite").partitionBy(pkeys: _*).parquet(path)
   }
@@ -390,7 +370,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
     * 100 TB fact tables: pay the partitioning once at write.
     */
   def storeBucketed(table: String, nBuckets: Int): Unit = {
-    LaraTable.noteUse(this)
     df.write.mode("overwrite").format("parquet")
       .bucketBy(nBuckets, schema.keys.head, schema.keys.tail: _*)
       .sortBy(schema.keys.head, schema.keys.tail: _*)
@@ -399,52 +378,6 @@ final case class LaraTable(df: DataFrame, schema: LaraSchema, shuffled: Boolean 
 }
 
 object LaraTable {
-  /** Auto-cache toggle (default ON). Plan-build side effect only — results
-    * are identical either way; OFF reproduces the pre-r11 recompute plans.
-    */
-  @volatile var autoCache: Boolean = true
-
-  /** Run `body` with auto-caching forced to `enabled` (specs/bench A-Bs). */
-  def withAutoCache[A](enabled: Boolean)(body: => A): A = {
-    val prev = autoCache
-    autoCache = enabled
-    try body finally autoCache = prev
-  }
-
-  // Fan-out per underlying DataFrame *object* (identity — Dataset doesn't
-  // override equals): metadata-only ops (`sortKeys`) share their parent's
-  // wrapper, so all views of one plan count against one entry. Weak keys:
-  // entries die with the plan wrappers; persisted frames are kept alive by
-  // the CacheManager + InternalCaches registration, not by this map.
-  private val fanOut = new java.util.WeakHashMap[DataFrame, java.lang.Integer]()
-
-  /** Record one consumption of `t` at plan-build time; on the SECOND
-    * consumption of a shuffle-bearing subtree, persist it. The reference
-    * dedups shared subtrees when lowering (`api/TupleOp.kt:25-26` instance
-    * map, `api/Lower.kt:107-127` pipeline split); Spark's analogue is a
-    * plan-keyed cache: CacheManager matches on the canonicalized plan, so
-    * the first consumer's already-built plan ALSO picks up the
-    * InMemoryRelation at execution time — persisting at second use loses
-    * nothing. MEMORY_AND_DISK + InternalCaches registration per the cache
-    * policy (blocks evict to disk under pressure; `release()` can always
-    * drop them — an unpersisted frame recomputes from lineage).
-    */
-  private[lara] def noteUse(t: LaraTable): Unit = {
-    if (!autoCache || t.df.isStreaming) return
-    val n = fanOut.synchronized {
-      val c = Option(fanOut.get(t.df)).fold(1)(_.intValue + 1)
-      fanOut.put(t.df, c)
-      c
-    }
-    // >= 2 (not == 2): a table consumed again after InternalCaches.release()
-    // dropped it between queries gets re-persisted.
-    if (n >= 2 && t.shuffled &&
-        t.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      t.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.pipeline.InternalCaches.register(t.df)
-    }
-  }
-
   /** Reference `Load` (`api/TupleOp.kt:274-283`) over parquet. */
   def load(spark: SparkSession, path: String, keys: Seq[String], vals: Seq[ValSpec]): LaraTable = {
     // project the declared schema: stores written with partition

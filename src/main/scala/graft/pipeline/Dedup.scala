@@ -236,10 +236,10 @@ object Dedup {
     // Materialize base hashes, then the signature, each as a column before
     // the next multi-pass HOF consumes them: an inlined subexpression would
     // re-tokenize/re-hash once per family member (numHashes×) or per band.
-    val sigs = InternalCaches.register(rebalance(docs)
+    // computed once: both sides of the bucket self-join read the signatures
+    val sigs = InternalCaches.checkpoint(rebalance(docs)
       .select(col("doc_id"), portableBaseHashes(shingles(tokens(col("text")), k)).as("bh"))
-      .select(col("doc_id"), minhashSignaturePortable(col("bh"), numHashes).as("sig"))
-      .cache()) // consumed by both sides of the bucket self-join; released via InternalCaches
+      .select(col("doc_id"), minhashSignaturePortable(col("bh"), numHashes).as("sig")))
     val banded = sigs.select(col("doc_id"), col("sig"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(concat_ws("_", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
@@ -859,9 +859,10 @@ object Dedup {
                    maxBucket: Int = 100000): DataFrame = {
     // Token hashes materialized as a column first — simhash scans them 64
     // times (once per bit); inlining the tokenizer would re-tokenize 64×.
-    val sigs = InternalCaches.register(rebalance(docs)
+    // computed once: both sides of the bucket self-join read the signatures
+    val sigs = InternalCaches.checkpoint(rebalance(docs)
       .select(col("doc_id"), transform(tokens(col("text")), t => PortableHash.hash60(t)).as("th"))
-      .select(col("doc_id"), simhash(col("th")).as("sig")).cache())
+      .select(col("doc_id"), simhash(col("th")).as("sig")))
     val banded = sigs.select(col("doc_id"), col("sig"),
         posexplode(transform(sequence(lit(0), lit(3)),
           b => call_function("shiftright", col("sig"), b * 16).bitwiseAND(0xFFFFL))))

@@ -103,10 +103,11 @@ object SensorPipeline {
     * self-join. [[covariance]] runs it over A−B; the `lara_covariance`
     * contract (`LaraQueries.covariance`) over hour-binned events.
     *
-    * No cache hints: X (fan-out ≥ 2) is persisted by LaraTable's
-    * auto-cache; U, a broadcast-right join over the persisted X, is
-    * recomputed by each side of the self-join rather than cached with M's
-    * broadcast pinned inside it.
+    * X is read by M, by U and, through `n`, by N: a caller passes X
+    * [[LaraTable.shared]] to compute it once, or unshared to recompute it in
+    * every consumer (the reference with `ReuseSource` off). U, a
+    * broadcast-right join over X, is recomputed by each side of the
+    * self-join.
     */
   def covarianceOf(x: LaraTable, n: LaraTable): LaraTable = {
     val m = meanOver(x, Seq("c"))
@@ -122,7 +123,7 @@ object SensorPipeline {
   /** Full covariance query C over two parsed sensor tables. */
   def covariance(a: LaraTable, b: LaraTable): LaraTable = {
     // X = A − B on shared keys (t′, c); null annihilators = null defaults.
-    val x = binAndAvg(a).join(binAndAvg(b), Map("v" -> subtractVn)).rename(Map("tp" -> "t"))
+    val x = binAndAvg(a).join(binAndAvg(b), Map("v" -> subtractVn)).rename(Map("tp" -> "t")).shared
     // N = number of t′ bins with any non-null difference.
     covarianceOf(x, countBins(x, col("v").isNotNull))
   }

@@ -67,7 +67,7 @@ object FaultProbe {
     // survive task retry)
     "streaming_bin_replay", "streaming_sessions_replay",
     "streaming_dedup_replay", "streaming_join_replay",
-    // capstone + Lara DSL (auto-cached shared subtrees under retry)
+    // capstone + Lara DSL (a shared subtree computed once under retry)
     "corpus_prepare", "lara_covariance")
 
   /** Kills the first task attempt of every stage while enabled. Tracks

@@ -3,7 +3,8 @@ package graft.tools
 import graft.{Harness, SparkEntry}
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -20,9 +21,10 @@ import scala.util.control.NonFatal
   *    measurement subsets objectively (a skew rehearsal that mutates only
   *    events.user_id affects exactly the queries that read events);
   *  - with `reps > 0`, `[probe]` the time of each of `reps` timed noop
-  *    writes after one untimed warm-up, the number of classes Janino
-  *    compiled in the last rep (`janino=`; a warm query that regenerates
-  *    its code shows a nonzero count), and one `[stage …]` line per stage
+  *    writes after one untimed warm-up, the Spark jobs and tasks of the
+  *    last rep (`jobs=`, `tasks=`), the number of classes Janino compiled
+  *    in it (`janino=`; a warm query that regenerates its code shows a
+  *    nonzero count), and one `[stage …]` line per stage
   *    of the last rep: tasks, wall, executor time, shuffle read/write —
   *    "one giant task" vs "many small tasks", shuffle- vs CPU-bound;
   *  - `[rows]` the output row count (one untimed `count()`), which
@@ -31,7 +33,7 @@ import scala.util.control.NonFatal
   *    formatted explain.
   *
   * Building a query's frame EXECUTES its eager internal stages
-  * (localCheckpoint rounds, InternalCaches persists), so the plan shown is
+  * (localCheckpoint rounds, InternalCaches checkpoints), so the plan shown is
   * the final composed plan over those materialized leaves — the shape the
   * noop sink times. Run `all` at a small SF.
   *
@@ -42,7 +44,8 @@ import scala.util.control.NonFatal
 object Profile {
   /** Queries that materialize before returning — the csv/jsonl roundtrips
     * and lara_store_layout (a collected LocalRelation after
-    * `localizeAndClean`) and every streaming *_replay (a memory-sink
+    * `localizeAndClean`), the queries whose every scan feeds an
+    * `InternalCaches.checkpoint` and every streaming *_replay (a memory-sink
     * table) — show no LogicalRelation in their analyzed plan, so their
     * sources are listed here (kept in sync with the query bodies).
     */
@@ -50,6 +53,9 @@ object Profile {
     "csv_roundtrip" -> Seq("orders"),
     "jsonl_roundtrip" -> Seq("orders"),
     "lara_store_layout" -> Seq("lineitem"),
+    "lara_covariance" -> Seq("events"),
+    "dedup_minhash" -> Seq("documents"),
+    "dedup_simhash" -> Seq("documents"),
     "streaming_ohlc_replay" -> Seq("events"),
     "streaming_sessions_replay" -> Seq("events"),
     "streaming_bin_replay" -> Seq("events"),
@@ -58,12 +64,13 @@ object Profile {
     "streaming_counts_replay" -> Seq("events"),
     "streaming_enrich_replay" -> Seq("customer", "events"))
 
-  /** What one query's pass measured; `plan` is its formatted explain and
-    * `compiled` the classes Janino compiled in the last rep.
+  /** What one query's pass measured; `plan` is its formatted explain, and
+    * `jobs`, `tasks` and `compiled` the Spark jobs, the tasks and the
+    * classes Janino compiled in the last rep.
     */
   final case class Report(query: String, plan: String, tables: Seq[String],
-                          times: Seq[Double], compiled: Long, stages: Seq[String],
-                          rows: Long) {
+                          times: Seq[Double], jobs: Int, tasks: Int, compiled: Long,
+                          stages: Seq[String], rows: Long) {
     /** Exchanges, sort-merge / broadcast-hash / shuffled-hash joins,
       * generators and parquet scans in [[plan]].
       */
@@ -79,7 +86,7 @@ object Profile {
         s"[tables] $query\t${tables.mkString(",")}") ++
       times.zipWithIndex.map { case (t, i) =>
         f"[probe] $query rep${i + 1} $t%.2f s" +
-          (if (i == times.size - 1) s" janino=$compiled" else "")
+          (if (i == times.size - 1) s" jobs=$jobs tasks=$tasks janino=$compiled" else "")
       } ++
       stages ++
       (if (times.isEmpty) Nil
@@ -100,11 +107,11 @@ object Profile {
     }
     val tables = staticTables.getOrElse(query, scannedTables(df)).sorted
     val rows = df.count()
-    val (times, compiled, stages) =
-      if (reps <= 0) (Nil, 0L, Nil)
+    val log = new StageLog
+    val (times, compiled) =
+      if (reps <= 0) (Nil, 0L)
       else {
         Harness.noop(df) // warm-up (JIT + codegen), untimed
-        val log = new StageLog
         def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         try {
           val runs = (1 to reps).map { r =>
@@ -119,10 +126,10 @@ object Profile {
             ((System.nanoTime() - t0) / 1e9, compilations - c0)
           }
           bridge.drainListeners(spark)
-          (runs.map(_._1), runs.last._2, log.lines)
+          (runs.map(_._1), runs.last._2)
         } finally spark.sparkContext.removeSparkListener(log)
       }
-    Report(query, plan, tables, times, compiled, stages, rows)
+    Report(query, plan, tables, times, log.jobs.get, log.tasks.get, compiled, log.lines, rows)
   }
 
   private def scannedTables(df: DataFrame): Seq[String] =
@@ -132,11 +139,15 @@ object Profile {
     }.flatten.distinct
 
   /** One line per completed stage: tasks, wall, executor time, shuffle
-    * read/write bytes and the stage name.
+    * read/write bytes and the stage name; and the jobs started and the
+    * tasks ended.
     */
   private final class StageLog extends SparkListener {
     private val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs, tasks = new java.util.concurrent.atomic.AtomicInteger()
     def lines: Seq[String] = queue.asScala.toSeq.sorted
+    override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
       val ms = si.taskMetrics

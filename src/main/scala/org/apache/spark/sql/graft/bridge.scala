@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.artifact.sessionArtifacts
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,12 +10,14 @@ import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.parquet.footerSchema
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 
 /** Bridge into `private[sql]` surface: Column ↔ Expression conversion for
   * custom Catalyst expressions, an eager local checkpoint fused with its
-  * materialization count, session cloning, parquet footer schemas, and a
-  * listener-bus drain for profiling tools and streaming replays.
+  * materialization count and its lineage-keeping persisted twin, session
+  * cloning, parquet footer schemas, and a listener-bus drain for profiling
+  * tools and streaming replays.
   * Namespaced under org.apache.spark.sql by necessity (the standard
   * pattern for Spark extension libraries); contains no query logic.
   */
@@ -96,6 +99,29 @@ object bridge {
     * result value.
     */
   def localCheckpointCounted(df: DataFrame, pred: Column = null): (DataFrame, Long) = {
+    val (out, n, _) = packed(df, pred, "graftLocalCheckpointCounted")(_.localCheckpoint())
+    (out, n)
+  }
+
+  /** [[localCheckpointCounted]]'s packed rows, persisted MEMORY_AND_DISK
+    * with their lineage kept: one job computes `df`'s executed plan (its
+    * adaptive partition sizing included) into stored chunks, and the frame
+    * returned reads them. The second element is the stored RDD, whose
+    * `unpersist` frees them; the frame stays valid after that and
+    * recomputes from its lineage.
+    */
+  def persistPacked(df: DataFrame): (DataFrame, RDD[Array[Byte]]) = {
+    val (out, _, stored) =
+      packed(df, null, "graftPersistPacked")(_.persist(StorageLevel.MEMORY_AND_DISK))
+    (out, stored)
+  }
+
+  /** Runs `df`'s executed plan once, as the SQL execution `name`, into
+    * packed chunks that `store` marks for keeping; the frame over them,
+    * the count of `pred` (or of rows), and the chunk RDD.
+    */
+  private def packed(df: DataFrame, pred: Column, name: String)(
+      store: RDD[Array[Byte]] => Unit): (DataFrame, Long, RDD[Array[Byte]]) = {
     val ds = df.asInstanceOf[Dataset[Row]]
     val spark = ds.sparkSession
     val qe = ds.queryExecution
@@ -106,10 +132,10 @@ object bridge {
         case e => e
       }
     }
-    SQLExecution.withNewExecutionId(qe, Some("graftLocalCheckpointCounted")) {
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
       val output = qe.executedPlan.output
       val acc = cond.map(_ => spark.sparkContext.longAccumulator("graft.checkpointPredCount"))
-      val packed = qe.executedPlan.execute().mapPartitionsWithIndex { (i, rows) =>
+      val chunks = qe.executedPlan.execute().mapPartitionsWithIndex { (i, rows) =>
         lazy val toUnsafe = UnsafeProjection.create(output, output)
         val counted = cond.fold(rows) { c =>
           val p = Predicate.create(c, output)
@@ -121,14 +147,14 @@ object bridge {
           case r => toUnsafe(r)
         })
       }
-      packed.localCheckpoint()
-      // ONE job: materializes the checkpoint AND counts its rows
-      val total = spark.sparkContext.runJob(packed,
-        (chunks: Iterator[Array[Byte]]) => chunks.map(rowsIn).sum).sum
-      val rows = packed.mapPartitions(unpack(output.length), preservesPartitioning = true)
+      store(chunks)
+      // ONE job: materializes the stored chunks AND counts their rows
+      val total = spark.sparkContext.runJob(chunks,
+        (it: Iterator[Array[Byte]]) => it.map(rowsIn).sum).sum
+      val rows = chunks.mapPartitions(unpack(output.length), preservesPartitioning = true)
       val out = Dataset.ofRows(spark,
         LogicalRDD.fromDataset(rows, ds, isStreaming = false).newInstance())
-      (out, acc.fold(total)(_.value))
+      (out, acc.fold(total)(_.value), chunks)
     }
   }
 

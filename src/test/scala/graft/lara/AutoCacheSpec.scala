@@ -1,30 +1,35 @@
 package graft.lara
 
-import org.apache.spark.sql.Row
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import org.scalatest.time.SpanSugar._
+import graft.{SparkEntry, TestSpark}
 import graft.pipeline.InternalCaches
+import graft.sensor.SensorPipeline
 
-/** Automatic shared-subtree caching (`LaraTable.noteUse`) — the reference's
-  * lowering-time pipeline dedup (`api/TupleOp.kt:25-26` instance map,
-  * `api/Lower.kt:107-127`) re-expressed as plan-build fan-out counting plus
-  * Spark's plan-keyed CacheManager.
+/** Frames read by several consumers are computed once, through
+  * [[LaraTable.shared]] (the reference's `ReuseSource`,
+  * `sensor/SensorCalc.kt:275,322`) and `InternalCaches.checkpoint`: one
+  * eager job per shared frame at build time, and a final plan that reads
+  * its rows instead of a cached plan or a second scan of the source.
   */
 class AutoCacheSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val vd = ValSpec("v", DoubleType, null)
-  private val plus = PlusFn(null, c => sum(c), (a, b) => coalesce(a + b, a, b))
+  private val sf = "perfbench/fixture" // the sf0.001 tables, relative to the build root
 
-  private def base(): LaraTable = {
-    val d = df(
-      new StructType().add("k", StringType).add("j", StringType).add("v", DoubleType),
-      Seq(Row("a", "x", 1.0), Row("a", "y", 2.0), Row("b", "x", 3.0), Row("b", "y", 4.0)))
-    LaraTable(d, LaraSchema(Seq("k", "j"), Seq(vd)))
-  }
+  object aqe extends AdaptiveSparkPlanHelper
 
   private def withCleanCaches[A](body: => A): A =
     try body finally {
@@ -32,140 +37,108 @@ class AutoCacheSpec extends AnyFunSuite {
       spark.sharedState.cacheManager.clearCache()
     }
 
-  test("linear chains never auto-persist") {
-    withCleanCaches {
-      val before = InternalCaches.registeredCount
-      val g = base().agg(Seq("k"), Map("v" -> plus))
-      val out = g.mapVals(Seq(vd), Map("v" -> (col("v") * 2))).where(col("v") > 0)
-      assert(out.df.count() == 2)
-      assert(g.df.storageLevel == StorageLevel.NONE)
-      assert(InternalCaches.registeredCount == before)
+  /** `build`'s frame, the executed plans of the shared-frame executions it
+    * ran, and the RDDs it left persisted.
+    */
+  private def built(build: () => DataFrame): (DataFrame, Seq[QueryExecution], Set[Int]) = {
+    val runs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        runs.add(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        runs.add(funcName -> qe)
     }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.listenerManager.register(listener)
+    val d = try {
+      val d = build()
+      spark.range(1).collect()
+      // listener events arrive in order: once the marker collect is seen,
+      // every execution of `build` has been delivered
+      eventually(timeout(30.seconds)) { assert(runs.asScala.exists(_._1 == "collect")) }
+      d
+    } finally spark.listenerManager.unregister(listener)
+    val shared = runs.asScala.toSeq.collect { case ("graftPersistPacked", qe) => qe }
+    (d, shared, spark.sparkContext.getPersistentRDDs.keySet.diff(before).toSet)
   }
 
-  test("second consumption of a shuffle-bearing subtree auto-persists it") {
-    withCleanCaches {
-      val before = InternalCaches.registeredCount
-      val g = base().agg(Seq("k"), Map("v" -> plus)) // shuffle boundary
-      val left = g.where(col("k") === "a")
-      assert(g.df.storageLevel == StorageLevel.NONE, "single use must not persist")
-      val right = g.where(col("k") === "b")
-      assert(g.df.storageLevel != StorageLevel.NONE, "fan-out 2 must persist")
-      assert(InternalCaches.registeredCount == before + 1)
-      assert(left.df.count() == 1 && right.df.count() == 1)
-      // The FIRST consumer's plan (built before the persist) also reads the
-      // cache: CacheManager matches on the canonicalized plan at execution.
-      val plan = left.df.queryExecution.executedPlan.toString
-      assert(plan.contains("InMemory") || plan.contains("TableCacheQueryStage"), plan)
+  /** The RDDs the leaves of `d`'s optimized plan read; fails on a leaf
+    * that is not an RDD scan (a parquet relation, a cached plan).
+    */
+  private def leafRdds(d: DataFrame): Seq[RDD[_]] =
+    d.queryExecution.optimizedPlan.collectLeaves().map {
+      case l: LogicalRDD => l.rdd
+      case other => fail(s"leaf that is not an RDD scan: $other")
     }
+
+  /** `d`'s final plan reads only the one RDD that `stored` names, whose
+    * partitions are all stored, and holds no cached plan, so none pins a
+    * broadcast relation for a cache's lifetime (the sensor X is an A−B
+    * join that AQE plans as a broadcast join at this size).
+    */
+  private def readsOnlyShared(name: String, d: DataFrame, stored: Set[Int]): Unit = {
+    assert(stored.size == 1, s"$name: persisted RDDs the build added: $stored")
+    val leaves = leafRdds(d)
+    assert(leaves.nonEmpty && leaves.forall(_.dependencies.map(_.rdd.id) == Seq(stored.head)),
+      s"$name: leaves read ${leaves.map(_.dependencies.map(_.rdd.id))}, the stored RDD is $stored")
+    assert(d.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.isEmpty, name)
+    assert(aqe.find(d.queryExecution.executedPlan)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty, name)
+    assert(spark.sparkContext.getRDDStorageInfo.exists(i => i.id == stored.head &&
+      i.storageLevel != StorageLevel.NONE && i.numCachedPartitions == i.numPartitions), name)
   }
 
-  test("bare scans are never auto-persisted, regardless of fan-out") {
-    withCleanCaches {
-      val before = InternalCaches.registeredCount
-      val t = base()
-      val a = t.where(col("v") > 1)
-      val b = t.where(col("v") > 2)
-      val c = t.mapVals(Seq(vd), Map("v" -> (col("v") + 1)))
-      assert(a.df.count() + b.df.count() + c.df.count() > 0)
-      assert(t.df.storageLevel == StorageLevel.NONE)
-      assert(InternalCaches.registeredCount == before)
-    }
-  }
-
-  test("sortKeys views share their parent's fan-out count") {
-    withCleanCaches {
-      val g = base().agg(Seq("k"), Map("v" -> plus))
-      val v1 = g.sortKeys(Seq("k")) // metadata-only: same underlying df
-      v1.mapVals(Seq(vd), Map("v" -> (col("v") * 2))) // use 1
-      assert(g.df.storageLevel == StorageLevel.NONE)
-      g.where(col("k") === "a") // use 2, via the original wrapper
-      assert(g.df.storageLevel != StorageLevel.NONE)
-    }
-  }
-
-  test("withAutoCache(false) restores recompute plans") {
-    withCleanCaches {
-      LaraTable.withAutoCache(false) {
-        val before = InternalCaches.registeredCount
-        val g = base().agg(Seq("k"), Map("v" -> plus))
-        g.where(col("k") === "a").df.count()
-        g.where(col("k") === "b").df.count()
-        assert(g.df.storageLevel == StorageLevel.NONE)
-        assert(InternalCaches.registeredCount == before)
-      }
-      assert(LaraTable.autoCache)
-    }
-  }
+  private val lines = df(new StructType().add("value", StringType),
+    Seq("2020-01-01 00:00:10.000000;n;C1;f;1.5;u",
+        "2020-01-01 00:00:20.000000;n;C2;f;2.5;u",
+        "2020-01-01 00:02:10.000000;n;C1;f;3.5;u",
+        "2020-01-01 00:02:20.000000;n;C2;f;4.5;u").map(Row(_)))
 
   test("covariance pins one computation of the shared subtrees, no hints") {
     withCleanCaches {
-      import graft.sensor.SensorPipeline
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-      import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-      import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
-      val lines = df(new StructType().add("value", StringType),
-        Seq("2020-01-01 00:00:10.000000;n;C1;f;1.5;u",
-            "2020-01-01 00:00:20.000000;n;C2;f;2.5;u",
-            "2020-01-01 00:02:10.000000;n;C1;f;3.5;u",
-            "2020-01-01 00:02:20.000000;n;C2;f;4.5;u").map(Row(_)))
-      // Raw (non-cache) leaf scans in the optimized logical plan — cache
-      // substitution (withCachedData) runs before optimization, and
-      // InMemoryRelation is a LeafNode, so traversal counts only scans the
-      // final query recomputes itself.
-      def rawLeaves(d: DataFrame): Int =
-        d.queryExecution.optimizedPlan.collect {
-          case l: LeafNode if !l.isInstanceOf[InMemoryRelation] => l
-        }.size
-      // The cached physical plans of the cache entries a plan reads (the
-      // CacheManager's InMemoryRelations), nested entries included. One that
-      // holds a broadcast exchange pins the broadcast relation for the
-      // cache's lifetime.
-      object aqe extends AdaptiveSparkPlanHelper
-      def cachedPlans(p: SparkPlan): Seq[SparkPlan] =
-        aqe.collect(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan }
-          .flatMap(c => c +: cachedPlans(c))
-      def broadcastPinning(d: DataFrame): Seq[SparkPlan] =
-        cachedPlans(d.queryExecution.executedPlan).distinct
-          .filter(c => aqe.find(c)(_.isInstanceOf[BroadcastExchangeLike]).isDefined)
-      // (name, plan, rows, minimum inlined leaves of the recompute plan)
-      val cases = Seq[(String, () => DataFrame, Long, Int)](
-        // the full 2x2 (c, c') matrix
+      // (name, plan, rows): the full 2x2 sensor (c, c') matrix, and the
+      // contract's 5 event types, so 15 (c ≤ c′) entries
+      val cases = Seq[(String, () => DataFrame, Long)](
         ("sensor", () => SensorPipeline.covariance(
-          SensorPipeline.parse(lines), SensorPipeline.parse(lines)).df, 4L, 6),
-        // the sf0.001 tables, relative to the build root: 5 event types,
-        // so 15 (c ≤ c′) entries
-        ("lara_covariance", () => graft.LaraQueries.covariance(spark, "perfbench/fixture"), 15L, 4))
-      for ((name, build, rows, minOffLeaves) <- cases) {
-        // Control: with auto-cache off, X's subtree (and its scan leaves) is
-        // inlined into every consumer — the inputs are re-scanned many times.
-        val (offLeaves, offRows) = LaraTable.withAutoCache(false) {
-          val cov = build(); (rawLeaves(cov), cov.count())
-        }
-        val before = InternalCaches.registeredCount
-        val cov = build()
-        // Only X (consumed by N, M and U) is persisted. U, a broadcast-right
-        // join over the persisted X, is recomputed by both sides of the t
-        // self-join instead of being cached with M's broadcast inside it.
-        assert(InternalCaches.registeredCount == before + 1, name)
-        assert(offRows == rows && cov.count() == rows, name)
-        // One scan of each shared input: every path in the final plan goes
-        // through a cached subtree — ZERO raw leaf scans remain, vs the
-        // recompute plan's inlined re-scans.
-        assert(offLeaves >= minOffLeaves,
-          s"$name: control plan expected >=$minOffLeaves inlined leaves, got $offLeaves")
-        assert(rawLeaves(cov) == 0,
-          s"$name: shared input scanned directly ${rawLeaves(cov)} times (recompute leaked past the cache)")
-        // The contract's X is an aggregate over one scan, so none of its
-        // cache entries may hold a broadcast; the sensor's X is itself the
-        // A−B join, which AQE turns into a broadcast join at this size.
+          SensorPipeline.parse(lines), SensorPipeline.parse(lines)).df, 4L),
+        ("lara_covariance", () => SparkEntry.queries("lara_covariance")(spark, sf), 15L))
+      for ((name, build, rows) <- cases) {
+        val (cov, shared, stored) = built(build)
+        // X is computed once, while the plan is built; N, M and both
+        // sides of the U self-join read its stored rows
+        assert(shared.size == 1, s"$name: ${shared.size} shared-frame executions")
+        readsOnlyShared(name, cov, stored)
+        assert(cov.count() == rows, name)
         if (name == "lara_covariance") {
-          val pinning = broadcastPinning(cov)
-          assert(pinning.isEmpty, s"cached plans holding a broadcast exchange:\n${pinning.mkString("\n")}")
+          val scans = aqe.collect(shared.head.executedPlan) { case s: FileSourceScanExec => s }
+          assert(scans.size == 1, s"X scans events once: ${scans.mkString("\n")}")
         }
+      }
+    }
+  }
+
+  test("an unshared X is the reference with ReuseSource off: same rows, inlined re-scans") {
+    withCleanCaches {
+      val before = InternalCaches.registeredCount
+      val x = SensorPipeline.binAndAvg(SensorPipeline.parse(lines))
+        .join(SensorPipeline.binAndAvg(SensorPipeline.parse(lines)), Map("v" -> TimesFn(null, null, null, _ - _)))
+        .rename(Map("tp" -> "t"))
+      val cov = SensorPipeline.covarianceOf(x, SensorPipeline.countBins(x, col("v").isNotNull)).df
+      assert(InternalCaches.registeredCount == before)
+      // X's two input scans inlined into N, M and both sides of U
+      assert(cov.queryExecution.optimizedPlan.collectLeaves().size >= 6)
+      assert(cov.count() == 4L)
+    }
+  }
+
+  test("dedup signatures are computed once for both sides of the banded self-join") {
+    withCleanCaches {
+      // rows: the pair counts of the cached-signature plans on the same tables
+      for ((name, rows) <- Seq("dedup_simhash" -> 25L, "dedup_minhash" -> 28L)) {
+        val (pairs, shared, stored) = built(() => SparkEntry.queries(name)(spark, sf))
+        assert(shared.size == 1, s"$name: ${shared.size} shared-frame executions")
+        readsOnlyShared(name, pairs, stored)
+        assert(pairs.count() == rows, name)
+        InternalCaches.release()
       }
     }
   }

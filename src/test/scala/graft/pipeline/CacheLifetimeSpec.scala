@@ -44,4 +44,27 @@ class CacheLifetimeSpec extends AnyFunSuite {
     assert(pairs.collect().nonEmpty)     // plan recomputes from lineage
     InternalCaches.release()
   }
+
+  test("release() frees the stored rows of a checkpoint; its frame recomputes") {
+    InternalCaches.release()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val shared = InternalCaches.checkpoint(spark.range(0L, 1000L, 1L, 3).toDF("id"))
+    val stored = sc.getPersistentRDDs.keySet.diff(before)
+    assert(stored.size == 1)
+    assert(sc.getRDDStorageInfo.exists(i => stored(i.id) && i.numCachedPartitions == 3))
+    assert(InternalCaches.registeredCount == 1)
+
+    InternalCaches.release()
+    assert(InternalCaches.registeredCount == 0)
+    assert(sc.getPersistentRDDs.keySet.intersect(stored).isEmpty)
+    assert(!sc.getRDDStorageInfo.exists(i => stored(i.id)))
+    assert(shared.count() == 1000L)
+  }
+
+  test("a streaming frame cannot be checkpointed") {
+    val stream = spark.readStream.format("rate").load()
+    val e = intercept[IllegalArgumentException](InternalCaches.checkpoint(stream))
+    assert(e.getMessage.contains("streaming"), e.getMessage)
+  }
 }

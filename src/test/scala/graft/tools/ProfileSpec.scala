@@ -46,6 +46,14 @@ class ProfileSpec extends AnyFunSuite {
     }
   }
 
+  test("the last rep's probe line carries its Spark jobs and tasks") {
+    for (r <- reports) {
+      assert(r.jobs > 0 && r.tasks >= r.jobs, s"${r.query}: jobs=${r.jobs} tasks=${r.tasks}")
+      assert(r.lines.exists(l => l.startsWith(s"[probe] ${r.query} rep1 ") &&
+        l.endsWith(s" jobs=${r.jobs} tasks=${r.tasks} janino=${r.compiled}")), r.query)
+    }
+  }
+
   test("--plans writes one formatted explain per query") {
     for (r <- reports)
       assert(Files.readString(dir.resolve(s"${r.query}_t.txt")) == r.plan, r.query)
